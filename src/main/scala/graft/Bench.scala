@@ -30,16 +30,12 @@ object Bench {
     // (r21 verdict ask #2). Same harness condition RunOne/ProfOne and
     // the A/B canary already honor.
     val noHot = sys.env.get("SPARK_GRAFT_NO_HOT").contains("1")
-    val hotTables =
-      if (noHot) Seq.empty
-      else Seq("lineitem", "events", "documents", "embeddings")
-        .flatMap { t =>
-          try {
-            val df = Tables.spreadForSession(spark, sfDir, t).persist()
-            df.count() // materialize the cached batches up-front
-            Some(df)
-          } catch { case _: Throwable => None }
-        }
+    val hotTables = if (noHot) Seq.empty else Tables.loadHot(spark, sfDir)
+    // per-table load status for the JSON line ("off" under NO_HOT;
+    // loadHot fails the run before a table could read "missing")
+    val hotStatus = Tables.HotTables
+      .map(t => "\"" + t + "\":\"" + (if (noHot) "off" else "cached") + "\"")
+      .mkString("{", ",", "}")
     // environment stamp at START (to pair with the end-of-run load_avg:
     // box contention, not plan regressions, explained the r11 noise)
     val loadStart = java.lang.management.ManagementFactory
@@ -72,7 +68,7 @@ object Bench {
       (name, if (err.isDefined) -1.0 else secs, startMs, err,
         BuildPhase.taken())
     }
-    hotTables.foreach(_.unpersist())
+    hotTables.foreach(_._2.unpersist())
     Tables.clearSpreadOverlay() // nothing after the bench sees the spread
     // 3-decimal timings keep the JSON line compact: the harness that
     // collects stdout only retains a trailing window, so every byte of
@@ -99,7 +95,7 @@ object Bench {
     val loadAvg = d3(java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage)
     val env =
-      s""""cpus":"$cpus","host_cores":${Runtime.getRuntime.availableProcessors},"load_avg":$loadAvg,"load_avg_start":${d3(loadStart)},"uptime_sec":$uptimeSec,"hot_cache":${hotTables.nonEmpty}"""
+      s""""cpus":"$cpus","host_cores":${Runtime.getRuntime.availableProcessors},"load_avg":$loadAvg,"load_avg_start":${d3(loadStart)},"uptime_sec":$uptimeSec,"hot_cache":${hotTables.nonEmpty},"hot_tables":$hotStatus"""
     val line =
       s"""{"metric":"total","value":${d3(total)},"unit":"sec","queries":$qs,""" +
         s""""build_sec":$builds,"build_total":${d3(buildTotal)},""" +

@@ -38,11 +38,7 @@ object ProfOne {
       }
     })
     // mirror Bench's hot-table methodology (spread + persist)
-    if (!sys.env.get("SPARK_GRAFT_NO_HOT").contains("1"))
-      Seq("lineitem", "events", "documents", "embeddings").foreach { t =>
-        try Tables.spreadForSession(spark, sfDir, t).persist().count()
-        catch { case _: Throwable => () }
-      }
+    if (!sys.env.get("SPARK_GRAFT_NO_HOT").contains("1")) Tables.loadHot(spark, sfDir)
     val fn = SparkEntry.queries(name)
     (1 to reps).foreach { i =>
       done.clear()

@@ -14,11 +14,7 @@ object RunOne {
     // single-query loop measures the same condition the suite does;
     // SPARK_GRAFT_NO_HOT=1 turns it off (plan captures need the raw
     // parquet scans, not the substituted in-memory relation)
-    if (!sys.env.get("SPARK_GRAFT_NO_HOT").contains("1"))
-      Seq("lineitem", "events", "documents", "embeddings").foreach { t =>
-        try Tables.spreadForSession(spark, sfDir, t).persist().count()
-        catch { case _: Throwable => () }
-      }
+    if (!sys.env.get("SPARK_GRAFT_NO_HOT").contains("1")) Tables.loadHot(spark, sfDir)
     val fn = SparkEntry.queries(name)
     if (sys.env.get("SPARK_GRAFT_EXPLAIN").contains("1")) {
       println(s"[runone] $name plan:")

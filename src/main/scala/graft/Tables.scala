@@ -105,6 +105,27 @@ object Tables {
     spread
   }
 
+  /** The tables the bench mains hold in memory for a whole run. */
+  val HotTables: Seq[String] = Seq("lineitem", "events", "documents", "embeddings")
+
+  /** Spread, persist and materialize every [[HotTables]] entry — the
+    * hot-table methodology of [[graft.Bench]], [[graft.RunOne]] and
+    * [[graft.ProfOne]]. A table that does not load fails the run with
+    * its name: a silently missing table would change what a bench
+    * measures. */
+  def loadHot(spark: SparkSession, dir: String): Seq[(String, DataFrame)] =
+    HotTables.map { t =>
+      val df =
+        try {
+          val cached = spreadForSession(spark, dir, t).persist()
+          cached.count()
+          cached
+        } catch { case e: Exception =>
+          throw new IllegalStateException(s"hot table '$t' did not load from $dir", e)
+        }
+      t -> df
+    }
+
   def lineitem(s: SparkSession, dir: String): DataFrame = table(s, dir, "lineitem")
   def orders(s: SparkSession, dir: String): DataFrame = table(s, dir, "orders")
   def customer(s: SparkSession, dir: String): DataFrame = table(s, dir, "customer")

@@ -201,21 +201,28 @@ object Temporal {
       emissions: DataFrame,
       scalingFactors: DataFrame, // (category, substance, hour_of_day, sf)
       startTs: String,
-      hours: Int): DataFrame = {
-    val spine = explode(
-      sequence(
-        to_timestamp(lit(startTs)),
-        to_timestamp(lit(startTs)) + expr(s"INTERVAL ${hours - 1} HOURS"),
-        expr("INTERVAL 1 HOUR"))).as("ts")
+      hours: Int): DataFrame =
     emissions
-      .select(col("*"), spine)
+      .select(col("*"), hourSpine(startTs, hours))
       .withColumn("hour_of_day", hourOfDay(col("ts")))
       .join(broadcast(scalingFactors), Seq("category", "substance", "hour_of_day"), "left")
       .select(
         col("cell_id"), col("category"), col("substance"),
-        date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts_str"),
+        tsStr(col("ts")).as("ts_str"),
         (col("value") * coalesce(col("sf"), lit(1.0))).as("value"))
-  }
+
+  /** The time spine of [[temporalExplode]], a generator of `hours` hourly
+    * instants `ts` from `startTs`, which is read in the session time zone.
+    * Shared with callers that must reproduce the explode's hours exactly. */
+  private[graft] def hourSpine(startTs: String, hours: Int): Column =
+    explode(
+      sequence(
+        to_timestamp(lit(startTs)),
+        to_timestamp(lit(startTs)) + expr(s"INTERVAL ${hours - 1} HOURS"),
+        expr("INTERVAL 1 HOUR"))).as("ts")
+
+  /** `ts_str` of [[temporalExplode]]: the session-zone wall-clock hour. */
+  private[graft] def tsStr(ts: Column): Column = date_format(ts, "yyyy-MM-dd HH:mm:ss")
 
   /** T5 — piecewise-linear interpolation of monthly anchor values to a
     * daily curve (reference emiproc/profiles/temporal/operators.py:238-338

@@ -398,8 +398,10 @@ object Exports {
     * planes instead of a whole week's. Returns the written file names.
     *
     * @note hour counts above `distributedHoursThreshold` route to
-    *       [[hourlyExportNcDistributed]], whose TASKS write the .nc
-    *       files — on a multi-node cluster `outDir` must therefore be
+    *       [[hourlyExportNcDistributed]]: it caches only the input rows,
+    *       lists the variables from them, and runs the explode and the
+    *       fold over one exchange keyed by hour, whose TASKS write the
+    *       .nc files — on a multi-node cluster `outDir` must therefore be
     *       a shared filesystem (on a driver-local path the files land
     *       on executor disks). `chunkSize` applies only to the
     *       driver-side route. Pass `distributedHoursThreshold =
@@ -436,8 +438,6 @@ object Exports {
       return hourlyExportNcDistributed(
         emissions, scalingFactors, startTs, hours, grid, outDir, atts)
     }
-    val fmtOut = java.time.format.DateTimeFormatter
-      .ofPattern("yyyyMMdd'T'HHmmss'Z'").withZone(java.time.ZoneOffset.UTC)
     val t0 = java.time.LocalDateTime.parse(startTs.replace(' ', 'T'))
     val names = scala.collection.mutable.ArrayBuffer.empty[String]
     // hour-independent file furniture, built once (6.48M-element coord
@@ -508,28 +508,34 @@ object Exports {
             }
           val gatts = (if (atts.nonEmpty) atts
             else ncCfAttrs("graft hourly export")) :+ textAtt("valid_hour", ts)
-          val fname = fmtOut.format(java.time.LocalDateTime
-            .parse(ts.replace(' ', 'T')).toInstant(java.time.ZoneOffset.UTC))
-          writeNcStreamed(s"$outDir/$fname.nc", dims, gatts,
+          val fname = hourFileName(ts)
+          writeNcStreamed(s"$outDir/$fname", dims, gatts,
             coords ++ dataVars.toSeq)
-          names += s"$fname.nc"
+          names += fname
         }
       exploded.unpersist()
     }
     names.toSeq
   }
 
-  /** K2 at CLUSTER scale: distributed per-hour file fan-out. The hourly
-    * explode + (ts, var, cell) fold runs as one Spark job partitioned by
-    * hour, and each TASK streams its hours' `.nc` files from its own
-    * sorted partition — the one-task-per-file `foreachPartition` shape a
-    * 1000-executor cluster needs (8760 hour files encode concurrently
-    * instead of sequentially on the driver). The driver touches only
-    * metadata (the per-hour variable lists). `outDir` must be writable
-    * from every executor (a shared filesystem on a real cluster; any
-    * local dir under local[*]). Task memory is ONE plane: rows arrive
-    * sorted (ts, var, cell) and each variable's chunk consumes exactly
-    * its contiguous run off the shared cursor while the file streams.
+  /** K2 at CLUSTER scale: distributed per-hour file fan-out. Each TASK
+    * streams its hours' `.nc` files from its own sorted partition — the
+    * one-task-per-file `foreachPartition` shape a 1000-executor cluster
+    * needs (8760 hour files encode concurrently instead of sequentially
+    * on the driver). `outDir` must be writable from every executor (a
+    * shared filesystem on a real cluster; any local dir under local[*]).
+    *
+    * Plan: the un-exploded input `(cell_id, category, substance, var,
+    * value)` is the only cache, and one small `distinct` over it lists
+    * the variables — every input row reaches every hour, so every hour
+    * holds the same variables. The hour spine comes from
+    * [[hourKeys]]; the hour explode, the broadcast scaling-factor join,
+    * the (hour, var, cell) sum and the per-partition sort then run over
+    * ONE exchange keyed by the int hour ([[hourlyKeyed]]). The driver
+    * touches only metadata. Task memory is ONE plane: rows arrive sorted
+    * (hour, var, cell) and each variable's chunk consumes exactly its
+    * contiguous run off the shared cursor while the file streams. The
+    * cache is released even when a task write fails.
     * Output is byte-identical to [[hourlyExportNc]] (spec-pinned).
     * Returns the file names (sorted). */
   def hourlyExportNcDistributed(
@@ -540,64 +546,120 @@ object Exports {
       grid: RegularGrid,
       outDir: String,
       atts: Seq[NcAtt] = Nil): Seq[String] = {
-    val folded = Temporal.temporalExplode(emissions, scalingFactors, startTs, hours)
-      .withColumn("var", concat_ws("_", col("substance"), col("category")))
-      .groupBy(col("ts_str"), col("var"), col("cell_id").cast("long").as("cell_id"))
-      .agg(sum(col("value").cast("double")).as("value"))
-      .persist()
-    val varsByTs: Map[String, Seq[String]] = folded
-      .select("ts_str", "var").distinct()
-      .collect().map(r => r.getString(0) -> r.getString(1))
-      .groupBy(_._1).view.mapValues(_.map(_._2).distinct.sorted.toSeq).toMap
+    val input = hourlyInput(emissions).persist()
+    try {
+      val vars = input.select("var").distinct()
+        .collect().map(_.getString(0)).sorted.toSeq
+      if (vars.isEmpty) Nil
+      else {
+        val (tss, spine) = hourKeys(emissions.sparkSession, startTs, hours)
+        writeHourlyFiles(hourlyKeyed(input, scalingFactors, spine),
+          tss, vars, grid, outDir, atts)
+        tss.map(hourFileName)
+      }
+    } finally input.unpersist()
+  }
+
+  /** `yyyyMMdd'T'HHmmss'Z'.nc` of a `ts_str` (hourly.py:33). */
+  private def hourFileName(ts: String): String =
+    java.time.format.DateTimeFormatter
+      .ofPattern("yyyyMMdd'T'HHmmss'Z'").withZone(java.time.ZoneOffset.UTC)
+      .format(java.time.LocalDateTime.parse(ts.replace(' ', 'T'))
+        .toInstant(java.time.ZoneOffset.UTC)) + ".nc"
+
+  /** The input rows [[hourlyExportNcDistributed]] caches: `(cell_id,
+    * category, substance, var, value)`, un-exploded. */
+  private[graft] def hourlyInput(emissions: DataFrame): DataFrame =
+    emissions.select(
+      col("cell_id").cast("long").as("cell_id"), col("category"), col("substance"),
+      concat_ws("_", col("substance"), col("category")).as("var"), col("value"))
+
+  /** The hours of [[Temporal.temporalExplode]], evaluated once with its
+    * own session-zone expressions: the sorted distinct `ts_str`s, and per
+    * spine hour `(hour key, hour_of_day)`, where the key is the index of
+    * the hour's `ts_str` in that list. Hours whose local `ts_str`
+    * coincide (a DST fall-back) share a key, and so one file. */
+  private[graft] def hourKeys(
+      spark: SparkSession,
+      startTs: String,
+      hours: Int): (IndexedSeq[String], Seq[(Int, Int)]) = {
+    val spine = spark.range(1)
+      .select(Temporal.hourSpine(startTs, hours))
+      .select(Temporal.tsStr(col("ts")), Temporal.hourOfDay(col("ts")))
+      .collect().map(r => r.getString(0) -> r.getInt(1))
+    val tss = spine.map(_._1).distinct.sorted.toIndexedSeq
+    val keyOf = tss.zipWithIndex.toMap
+    (tss, spine.map { case (ts, hod) => keyOf(ts) -> hod }.toSeq)
+  }
+
+  /** The pre-writer relation of [[hourlyExportNcDistributed]]: `(hk, var,
+    * cell_id, value)` summed per (hour key, var, cell), clustered by `hk`
+    * and sorted within partitions. `input` is [[hourlyInput]]; `spine` is
+    * [[hourKeys]]. One exchange: `repartition(hk)` already satisfies the
+    * aggregate's clustered distribution. Exposed for PlanSpec. */
+  private[graft] def hourlyKeyed(
+      input: DataFrame,
+      scalingFactors: DataFrame,
+      spine: Seq[(Int, Int)]): DataFrame =
+    input
+      .select(col("*"), explode(typedLit(spine)).as("h"))
+      .select(col("cell_id"), col("category"), col("substance"), col("var"),
+        col("value"), col("h._1").as("hk"), col("h._2").as("hour_of_day"))
+      .join(broadcast(scalingFactors), Seq("category", "substance", "hour_of_day"), "left")
+      .select(col("hk"), col("var"), col("cell_id"),
+        (col("value") * coalesce(col("sf"), lit(1.0))).cast("double").as("value"))
+      .repartition(col("hk"))
+      .groupBy("hk", "var", "cell_id")
+      .agg(sum(col("value")).as("value"))
+      .sortWithinPartitions("hk", "var", "cell_id")
+
+  /** Task-side writer of [[hourlyExportNcDistributed]]: one file per hour
+    * key in `keyed`, holding every variable of `vars` (sorted). */
+  private def writeHourlyFiles(
+      keyed: DataFrame,
+      tss: IndexedSeq[String],
+      vars: Seq[String],
+      grid: RegularGrid,
+      outDir: String,
+      atts: Seq[NcAtt]): Unit = {
     val gatts = (if (atts.nonEmpty) atts else ncCfAttrs("graft hourly export"))
     val ncells = grid.ncells.toInt
     val (gxmin, gymin, gdx, gdy, gny) = (grid.xmin, grid.ymin, grid.dx, grid.dy, grid.ny)
-    def fnameOf(ts: String): String = {
-      val fmtOut = java.time.format.DateTimeFormatter
-        .ofPattern("yyyyMMdd'T'HHmmss'Z'").withZone(java.time.ZoneOffset.UTC)
-      fmtOut.format(java.time.LocalDateTime
-        .parse(ts.replace(' ', 'T')).toInstant(java.time.ZoneOffset.UTC)) + ".nc"
-    }
-    folded
-      .repartition(col("ts_str"))
-      .sortWithinPartitions("ts_str", "var", "cell_id")
-      .foreachPartition { (it: java.util.Iterator[org.apache.spark.sql.Row]) =>
-        import scala.jdk.CollectionConverters._
-        val buf = it.asScala.buffered
-        val dims = Seq(NcDim("cell", ncells))
-        lazy val coords = Seq(
-          WriteVar("lon", Seq("cell"), NetcdfClassicDouble,
-            atts = Seq(textAtt("standard_name", "longitude"),
-              textAtt("units", "degrees_east")),
-            doubles = Array.tabulate(ncells)(c => gxmin + (c / gny + 0.5) * gdx)),
-          WriteVar("lat", Seq("cell"), NetcdfClassicDouble,
-            atts = Seq(textAtt("standard_name", "latitude"),
-              textAtt("units", "degrees_north")),
-            doubles = Array.tabulate(ncells)(c => gymin + (c % gny + 0.5) * gdy)))
-        while (buf.hasNext) {
-          val ts = buf.head.getString(0)
-          def varChunk(v: String): Array[Double] = {
-            val arr = new Array[Double](ncells)
-            while (buf.hasNext && buf.head.getString(0) == ts &&
-              buf.head.getString(1) == v) {
-              val r = buf.next(); arr(r.getLong(2).toInt) += r.getDouble(3)
-            }
-            arr
+    keyed.foreachPartition { (it: java.util.Iterator[org.apache.spark.sql.Row]) =>
+      import scala.jdk.CollectionConverters._
+      val buf = it.asScala.buffered
+      val dims = Seq(NcDim("cell", ncells))
+      lazy val coords = Seq(
+        WriteVar("lon", Seq("cell"), NetcdfClassicDouble,
+          atts = Seq(textAtt("standard_name", "longitude"),
+            textAtt("units", "degrees_east")),
+          doubles = Array.tabulate(ncells)(c => gxmin + (c / gny + 0.5) * gdx)),
+        WriteVar("lat", Seq("cell"), NetcdfClassicDouble,
+          atts = Seq(textAtt("standard_name", "latitude"),
+            textAtt("units", "degrees_north")),
+          doubles = Array.tabulate(ncells)(c => gymin + (c % gny + 0.5) * gdy)))
+      while (buf.hasNext) {
+        val hk = buf.head.getInt(0)
+        def varChunk(v: String): Array[Double] = {
+          val arr = new Array[Double](ncells)
+          while (buf.hasNext && buf.head.getInt(0) == hk &&
+            buf.head.getString(1) == v) {
+            val r = buf.next(); arr(r.getLong(2).toInt) += r.getDouble(3)
           }
-          val dataVars = varsByTs(ts).map { v =>
-            WriteVar(v, Seq("cell"), NetcdfClassicDouble,
-              atts = Seq(textAtt("units", "kg h-1"), textAtt("long_name", v)),
-              chunks = () => Iterator(varChunk(v)))
-          }
-          writeNcStreamed(s"$outDir/${fnameOf(ts)}", dims,
-            gatts :+ textAtt("valid_hour", ts), coords ++ dataVars)
-          // defensive: skip any residue of this hour (none when varsByTs
-          // and the sorted rows agree)
-          while (buf.hasNext && buf.head.getString(0) == ts) buf.next()
+          arr
         }
+        val dataVars = vars.map { v =>
+          WriteVar(v, Seq("cell"), NetcdfClassicDouble,
+            atts = Seq(textAtt("units", "kg h-1"), textAtt("long_name", v)),
+            chunks = () => Iterator(varChunk(v)))
+        }
+        writeNcStreamed(s"$outDir/${hourFileName(tss(hk))}", dims,
+          gatts :+ textAtt("valid_hour", tss(hk)), coords ++ dataVars)
+        // defensive: skip any residue of this hour (none when vars and
+        // the sorted rows agree)
+        while (buf.hasNext && buf.head.getInt(0) == hk) buf.next()
       }
-    folded.unpersist()
-    varsByTs.keys.toSeq.sorted.map(fnameOf)
+    }
   }
 
   /** The totals block of the raster export (reference rasters.py:247-306):

@@ -180,8 +180,11 @@ object StreamingOps {
     *
     * Input: the output of [[hourlyCellWindows]]. Each batch shuffles
     * ONCE keyed by hour, then every closed hour is assembled and
-    * written INSIDE its task (the `Exports.hourlyExportNcDistributed`
-    * pattern) — a stalled stream that closes many hours in one
+    * written INSIDE its task — the pattern of
+    * `Exports.hourlyExportNcDistributed`, which runs its explode and
+    * fold over one exchange keyed by an int hour, caches only the
+    * un-exploded input rows and lists the variables from them. A stalled
+    * stream that closes many hours in one
     * catch-up batch writes them in parallel across executor threads,
     * and the driver never materializes a single plane. Task memory is
     * bounded by variables × cells for one hour.

@@ -369,12 +369,67 @@ class NetcdfWriterSpec extends SparkSpec {
       basicInv, sfs, "2023-01-01 00:00:00", 30, grid, dirA, chunkSize = 7)
     val dist = Exports.hourlyExportNcDistributed(
       basicInv, sfs, "2023-01-01 00:00:00", 30, grid, dirB)
+    assertSameHourFiles(driver, dist, dirA, dirB)
+  }
+
+  private def assertSameHourFiles(driver: Seq[String], dist: Seq[String],
+      dirA: String, dirB: String): Unit = {
     assert(dist == driver.sorted)
     driver.foreach { f =>
       val a = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$dirA/$f"))
       val b = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$dirB/$f"))
       assert(java.util.Arrays.equals(a, b), s"$f differs")
     }
+  }
+
+  test("hourlyExportNcDistributed stays byte-identical to the driver-side " +
+    "writer in a DST session zone (spring-forward and fall-back windows)") {
+    val grid = RegularGrid(5, 1, 0.0, 0.0, 1.0, 1.0)
+    val sfs = spark.createDataFrame(Seq(
+      ("adf", "CH4", 1, 2.0), ("adf", "CH4", 2, 4.0), ("adf", "CH4", 3, 8.0),
+      ("liku", "CO2", 2, 0.5)))
+      .toDF("category", "substance", "hour_of_day", "sf")
+    val key = "spark.sql.session.timeZone"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, "Europe/Zurich")
+    try {
+      // 2024-03-31 02:00 local does not exist; 2024-10-27 02:00 happens twice
+      Seq(("2024-03-31 00:00:00", 6), ("2024-10-27 00:00:00", 5)).foreach {
+        case (start, nfiles) =>
+          val (dirA, dirB) = (tmpDir(), tmpDir())
+          val driver = Exports.hourlyExportNc(
+            basicInv, sfs, start, 6, grid, dirA, distributedHoursThreshold = Int.MaxValue)
+          val dist = Exports.hourlyExportNcDistributed(
+            basicInv, sfs, start, 6, grid, dirB)
+          assert(dist.size == nfiles, s"$start: $dist")
+          assertSameHourFiles(driver, dist, dirA, dirB)
+      }
+    } finally spark.conf.set(key, saved)
+  }
+
+  test("hourlyExportNcDistributed on empty emissions writes no file") {
+    val grid = RegularGrid(5, 1, 0.0, 0.0, 1.0, 1.0)
+    val sfs = spark.createDataFrame(Seq(("adf", "CH4", 0, 2.0)))
+      .toDF("category", "substance", "hour_of_day", "sf")
+    val dir = tmpDir()
+    val files = Exports.hourlyExportNcDistributed(
+      basicInv.where(lit(false)), sfs, "2023-01-01 00:00:00", 24, grid, dir)
+    assert(files.isEmpty)
+    assert(new java.io.File(dir).list().isEmpty)
+  }
+
+  test("hourlyExportNcDistributed releases its cache when a task write fails") {
+    val grid = RegularGrid(5, 1, 0.0, 0.0, 1.0, 1.0)
+    val sfs = spark.createDataFrame(Seq(("adf", "CH4", 0, 2.0)))
+      .toDF("category", "substance", "hour_of_day", "sf")
+    // a directory below a regular file can never be created
+    val notADir = java.nio.file.Files.createTempFile("ncw", ".file").toString
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[Exception] {
+      Exports.hourlyExportNcDistributed(
+        basicInv, sfs, "2023-01-01 00:00:00", 4, grid, s"$notADir/out")
+    }
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
   }
 
   test("wrfChemiExport composite scaling: day-of-week survives a midnight " +

@@ -632,6 +632,41 @@ class PlanSpec extends SparkSpec {
     assert(out.count() == 2)
   }
 
+  test("hourlyExportNcDistributed: ONE exchange keyed by hour, no cache " +
+    "above the hour explode") {
+    import org.apache.spark.sql.catalyst.plans.QueryPlan
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import graft.sinks.Exports
+    // every node, descending into AQE and into cached plans
+    def nodes(p: QueryPlan[_]): Seq[QueryPlan[_]] = {
+      val kids = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case _ => (p.children ++ p.innerChildren).collect { case q: QueryPlan[_] => q }
+      }
+      p +: kids.flatMap(nodes)
+    }
+    val sfs = spark.createDataFrame(Seq(("adf", "CH4", 0, 2.0)))
+      .toDF("category", "substance", "hour_of_day", "sf")
+    val input = Exports.hourlyInput(basicInv).persist()
+    try {
+      val (tss, spine) = Exports.hourKeys(spark, "2023-01-01 00:00:00", 30)
+      assert(tss.size == 30 && spine.size == 30)
+      val all = nodes(Exports.hourlyKeyed(input, sfs, spine).queryExecution.executedPlan)
+      val exchanges = all.count(_.isInstanceOf[ShuffleExchangeExec])
+      assert(exchanges == 1, s"expected 1 shuffle exchange, got $exchanges")
+      assert(all.exists(_.isInstanceOf[GenerateExec]), "missing hour explode")
+      val caches = all.collect { case r: InMemoryRelation => r }
+      assert(caches.nonEmpty, "the input rows should be read from the cache")
+      caches.foreach { r =>
+        assert(!nodes(r.cachedPlan).exists(_.isInstanceOf[GenerateExec]),
+          s"cache over exploded rows:\n${r.cachedPlan}")
+      }
+    } finally input.unpersist()
+  }
+
   test("releaseManifest: ONE aggregation shuffle, no window, no broadcast") {
     val docs = spark.createDataFrame(
       (0L until 20L).map(i => (i, s"doc body $i"))).toDF("doc_id", "text")
