@@ -33,6 +33,23 @@ REF_DIR="${TMPDIR:-/tmp}/bench_pairs-${SHA:0:12}"
 OUT=".bench_build/pairs/$WORKLOAD-${SHA:0:12}-$(date +%s)"
 mkdir -p "$OUT"
 
+# sbt's boot server listens on a unix socket under the build's
+# temporary directory (run.py points it at <tree>/.bench_build/tmp;
+# $XDG_RUNTIME_DIR wins when set): <dir>/.sbt/sbt-socket<hash>/sbt-load.sock,
+# <hash> a signed 64-bit number of up to 20 characters. sbt 1.10's socket
+# library holds the name in a 104-byte buffer with its NUL, so a longer
+# name kills the build with ServerAlreadyBootingException, reported only
+# in build.log. Check both trees before building either.
+for tree in "$REF_DIR" "$PWD"; do
+  sock="${XDG_RUNTIME_DIR:-$tree/.bench_build/tmp}/.sbt/sbt-socket-0000000000000000000/sbt-load.sock"
+  if [ "$(printf %s "$sock" | LC_ALL=C wc -c)" -gt 103 ]; then
+    echo "$0: sbt's socket path $sock can exceed the 103-byte limit." \
+      "The ref tree goes under TMPDIR=${TMPDIR:-/tmp}: pick a shorter" \
+      "TMPDIR, or set XDG_RUNTIME_DIR to a short directory." >&2
+    exit 2
+  fi
+done
+
 if [ ! -d "$REF_DIR" ]; then
   mkdir -p "$REF_DIR.tmp"
   git archive "$SHA" | tar -x -C "$REF_DIR.tmp"

@@ -27,9 +27,22 @@ case class DotProductExpr(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "dot_product"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    DotProductExpr.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.DotProductExpr.dot($a, $b);")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): DotProductExpr =
+    copy(left = newLeft, right = newRight)
+}
+
+object DotProductExpr {
+
+  /** The kernel, shared by the interpreted and the generated path. */
+  def dot(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var s = 0.0
     var i = 0
@@ -40,26 +53,6 @@ case class DotProductExpr(left: Expression, right: Expression)
     s
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double ${ev.value}_acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  ${ev.value}_acc += $a.getDouble($i) * $b.getDouble($i);
-         |}
-         |${ev.value} = ${ev.value}_acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotProductExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-object DotProductExpr {
   def col(a: Column, b: Column): Column =
     GraftBridge.column(DotProductExpr(
       GraftBridge.expression(a), GraftBridge.expression(b)))

@@ -13,8 +13,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[graft.text.TextAnalysis.portableHash]] (and to the DuckDB
   * `list_reduce` oracle) for BMP strings, but with real `doGenCode`: the
   * builtin higher-order-function fold is CodegenFallback (interpreted,
-  * one closure call per char); this emits a tight Java loop inside
-  * whole-stage codegen.
+  * one closure call per char); this stays inside whole-stage codegen as
+  * one static call to [[PortableHashExpr.hash]], the loop `nullSafeEval`
+  * runs too.
   *
   * This is the preference-order case (b) from the build brief: a scalar
   * kernel the builtin function set can only express interpretively,
@@ -30,14 +31,7 @@ case class PortableHashExpr(child: Expression) extends UnaryExpression {
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c =>
-      s"""
-         |String ${ev.value}_s = $c.toString();
-         |long ${ev.value}_h = 0L;
-         |for (int ${ev.value}_i = 0; ${ev.value}_i < ${ev.value}_s.length(); ${ev.value}_i++) {
-         |  ${ev.value}_h = (${ev.value}_h * 31L + ${ev.value}_s.charAt(${ev.value}_i)) % 1000000007L;
-         |}
-         |${ev.value} = ${ev.value}_h;
-       """.stripMargin)
+      s"${ev.value} = graft.functions.PortableHashExpr.hash($c.toString());")
 
   override protected def withNewChildInternal(newChild: Expression): PortableHashExpr =
     copy(child = newChild)
@@ -47,7 +41,8 @@ object PortableHashExpr {
 
   val Prime = 1000000007L
 
-  private[graft] def hash(s: String): Long = {
+  /** The kernel, shared by the interpreted and the generated path. */
+  def hash(s: String): Long = {
     var h = 0L
     var i = 0
     while (i < s.length) {

@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.RegularGrid
 
@@ -37,13 +36,7 @@ object CountryMask {
     if (fractions)
       overlaps.select(col("cell_id"), col("country"),
         (col("w") / grid.cellArea).as("fraction"))
-    else {
-      val win = Window.partitionBy("cell_id").orderBy(col("w").desc, col("country").asc)
-      overlaps
-        .withColumn("rn", row_number().over(win))
-        .where(col("rn") === 1)
-        .select("cell_id", "country")
-    }
+    else dominant(overlaps, col("w"))
   }
 
   /** Regions as y-bands `(country, bymin, bymax)`; returns the argmax-area
@@ -64,12 +57,12 @@ object CountryMask {
       .where(col("w") > 0)
     if (fractions)
       overlaps.select(col("cell_id"), col("country"), (col("w") / grid.dy).as("fraction"))
-    else {
-      val win = Window.partitionBy("cell_id").orderBy(col("w").desc, col("country").asc)
-      overlaps
-        .withColumn("rn", row_number().over(win))
-        .where(col("rn") === 1)
-        .select("cell_id", "country")
-    }
+    else dominant(overlaps, col("w"))
   }
+
+  /** Per-cell argmax of `weight` with the (weight DESC, country ASC)
+    * tie-break: the `(cell_id, country)` mask of an overlap table. */
+  private[ops] def dominant(overlaps: DataFrame, weight: Column): DataFrame =
+    TopK.perGroup(overlaps, Seq(col("cell_id")), Seq(weight.desc, col("country").asc), 1)
+      .select("cell_id", "country")
 }

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Reciprocal-rank fusion of ranked retrieval legs — the standard way a
@@ -24,8 +23,10 @@ import org.apache.spark.sql.functions._
   * rows — query-scale, NOT corpus-scale; the corpus work happened inside
   * the leg operators, which carry their own scale proofs). Fusion is a
   * unionByName + one groupBy on (query_id, doc_id) and a per-query
-  * window over ≤ legs·kEach candidates — no salting needed because the
-  * per-query candidate count is bounded by construction, never by data.
+  * [[TopK.perGroup]] over ≤ legs·kEach candidates. The candidate count
+  * is bounded by construction, and the helper's stated bound (at most k
+  * rows per query from each map partition reach the final sort) holds
+  * as well.
   */
 object RankFusion {
 
@@ -58,11 +59,8 @@ object RankFusion {
       .groupBy("query_id", "doc_id")
       .agg(sum("contrib").as("rrf_nanos"),
         count(lit(1)).as("legs_hit"))
-    val win = Window.partitionBy("query_id")
-      .orderBy(col("rrf_nanos").desc, col("doc_id"))
-    fused
-      .withColumn("rank", row_number().over(win))
-      .where(col("rank") <= k)
+    TopK.perGroup(fused, Seq(col("query_id")),
+        Seq(col("rrf_nanos").desc, col("doc_id")), k)
       .select("query_id", "doc_id", "rank", "rrf_nanos", "legs_hit")
   }
 

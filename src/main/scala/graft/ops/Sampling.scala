@@ -27,9 +27,7 @@ object Sampling {
       stratumCols: Seq[String],
       idCol: String,
       perGroup: Int): DataFrame = {
-    val win = Window.partitionBy(stratumCols.map(col): _*).orderBy(col(idCol))
-    df.withColumn("_rn", row_number().over(win))
-      .where(col("_rn") <= perGroup)
+    TopK.perGroup(df, stratumCols.map(col), Seq(col(idCol)), perGroup, "_rn")
       .drop("_rn")
   }
 

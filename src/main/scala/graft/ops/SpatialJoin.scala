@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{ConvexClipAreaExpr, PolyAreaExpr, PolyClipAreaExpr}
 import graft.model.RegularGrid
@@ -321,12 +320,6 @@ object SpatialJoin {
     if (fractions)
       w.select(col("cell_id"), col("country"),
         (col("area") / grid.cellArea).as("fraction"))
-    else {
-      val win = Window.partitionBy("cell_id")
-        .orderBy(col("area").desc, col("country").asc)
-      w.withColumn("rn", row_number().over(win))
-        .where(col("rn") === 1)
-        .select("cell_id", "country")
-    }
+    else CountryMask.dominant(w, col("area"))
   }
 }

@@ -60,12 +60,7 @@ object Similarity {
       .join(broadcast(q), col("neighbor_id") =!= col("query_id"))
       .withColumn("cos_sim",
         round(dot(col("qv"), col("cv")) / (sqrt(col("qn")) * sqrt(col("cn"))), 6))
-    val win = Window.partitionBy("query_id")
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(win))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cos_sim")
+    cosTopK(scored, k)
   }
 
   /** Sign-random-projection LSH: `bits` pseudo-random ±1 hyperplanes
@@ -223,16 +218,12 @@ object Similarity {
     val candidates = vecs.join(assign, "vec_id")
       .select(col("vec_id").as("neighbor_id"), col("centroid_id"),
         col("v").as("cv"), col("n").as("cn"))
-    val win = Window.partitionBy("query_id")
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    candidates
+    val scored = candidates
       .join(broadcast(queries), Seq("centroid_id"))
       .where(col("neighbor_id") =!= col("query_id"))
       .withColumn("cos_sim",
         round(dot(col("qv"), col("cv")) / (sqrt(col("qn")) * sqrt(col("cn"))), 6))
-      .withColumn("rank", row_number().over(win))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cos_sim")
+    cosTopK(scored, k)
   }
 
   /** IVF-style coarse quantizer: a deterministic centroid subset
@@ -649,12 +640,7 @@ object Similarity {
       .join(broadcast(qv), "query_id")
       .withColumn("cos_sim",
         round(dot(col("qv"), col("cv")) / (sqrt(col("qn")) * sqrt(col("cn"))), 6))
-    val win = Window.partitionBy("query_id")
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    exact
-      .withColumn("rank", row_number().over(win))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cos_sim")
+    cosTopK(exact, k)
   }
 
   /** The IVF+PQ index relation: every vector's [[pqEncode]] codes plus
@@ -1648,12 +1634,7 @@ object Similarity {
       .join(qn, "query_id")
       .withColumn("cos_sim",
         round(dot(col("qv"), col("cv")) / (sqrt(col("qn")) * sqrt(col("cn"))), 6))
-    val win = Window.partitionBy("query_id")
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    exact
-      .withColumn("rank", row_number().over(win))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cos_sim")
+    cosTopK(exact, k)
   }
 
   /** Candidate relation of [[ivfPqSearchPersisted]] before top-k —
@@ -2086,18 +2067,7 @@ object Similarity {
           quantize(col("embedding")), books, ids, m, subDim).as("codes"))
     // probes: nprobe best trained lists per query (same rounded-cosine
     // + lower-index tie-break as the assignment)
-    val probeWin = Window.partitionBy("query_id")
-      .orderBy(col("cos_sim").desc, col("list_id"))
-    val probes = embeddings
-      .where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), quantize(col("embedding")).as("v"))
-      .withColumn("n", dot(col("v"), col("v")))
-      .crossJoin(broadcast(cents))
-      .withColumn("cos_sim",
-        round(dot(col("v"), col("cv")) / (sqrt(col("n")) * sqrt(col("cn"))), 6))
-      .withColumn("rn", row_number().over(probeWin))
-      .where(col("rn") <= nprobe)
-      .select("query_id", "list_id")
+    val probes = ivfProbesQ(prefixQueries(embeddings, nQueries), cents, nprobe)
     // per-query LUT from the trained books (indices, divisor 1)
     val bookRows = for { c <- books.indices; s <- 0 until m } yield
       (s, c.toLong, books(c).slice(s * subDim, (s + 1) * subDim).toSeq)
@@ -2163,15 +2133,13 @@ object Similarity {
       qv: DataFrame,
       cents: DataFrame,
       nprobe: Int): DataFrame = {
-    val probeWin = Window.partitionBy("query_id")
-      .orderBy(col("cos_sim").desc, col("list_id"))
-    qv
+    val scored = qv
       .withColumn("n", dot(col("v"), col("v")))
       .crossJoin(broadcast(cents))
       .withColumn("cos_sim",
         round(dot(col("v"), col("cv")) / (sqrt(col("n")) * sqrt(col("cn"))), 6))
-      .withColumn("rn", row_number().over(probeWin))
-      .where(col("rn") <= nprobe)
+    graft.ops.TopK.perGroup(scored, Seq(col("query_id")),
+        Seq(col("cos_sim").desc, col("list_id")), nprobe)
       .select("query_id", "list_id")
   }
 
@@ -2388,21 +2356,20 @@ object Similarity {
         (element_at(col("codes"), s + 1) / centroidMod).cast("int") + 1)
     }.reduce(_ + _).cast("long")
 
-  /** Deterministic (dist asc, neighbor_id) top-k per query in two
-    * phases (the Bm25 idiom): a salted window bounds every sort run,
-    * then the final per-query window ranks only 64·k survivors per
-    * query — no single-task sort of the corpus. */
-  private def adcTopK(scored: DataFrame, k: Int): DataFrame = {
-    val bySalt = Window
-      .partitionBy(col("query_id"), pmod(col("neighbor_id"), lit(64)))
-      .orderBy(col("adc_dist").asc, col("neighbor_id").asc)
-    val byQuery = Window.partitionBy("query_id")
-      .orderBy(col("adc_dist").asc, col("neighbor_id").asc)
-    scored
-      .withColumn("_sr", row_number().over(bySalt))
-      .where(col("_sr") <= k)
-      .withColumn("rank", row_number().over(byQuery))
-      .where(col("rank") <= k)
+  /** Deterministic (dist asc, neighbor_id) top-k per query through
+    * [[graft.ops.TopK.perGroup]]: every map partition of the scored
+    * relation ships at most k rows per query to the query-keyed sort
+    * (the helper's stated bound) — no single-task sort of the corpus. */
+  private def adcTopK(scored: DataFrame, k: Int): DataFrame =
+    graft.ops.TopK.perGroup(scored, Seq(col("query_id")),
+        Seq(col("adc_dist").asc, col("neighbor_id").asc), k)
       .select("query_id", "neighbor_id", "rank", "adc_dist")
-  }
+
+  /** Deterministic (cos_sim desc, neighbor_id) top-k per query of a
+    * scored (query_id, neighbor_id, cos_sim) relation — the exact-cosine
+    * tail of the brute-force, IVF and rerank searches. */
+  private def cosTopK(scored: DataFrame, k: Int): DataFrame =
+    graft.ops.TopK.perGroup(scored, Seq(col("query_id")),
+        Seq(col("cos_sim").desc, col("neighbor_id")), k)
+      .select("query_id", "neighbor_id", "rank", "cos_sim")
 }

@@ -1,7 +1,6 @@
 package graft.text
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** BM25 retrieval over the document corpus for a fixed query set — the
@@ -25,9 +24,9 @@ import org.apache.spark.sql.functions._
   * order-independent across partitions and bit-replayable by any engine
   * (the DuckDB oracle mirrors the arithmetic token-for-token).
   *
-  * Top-k is two-phase: a per-(query, doc_id mod 64) salt window keeps k
-  * candidates per salt, then the final window ranks ≤ 64·k rows — the
-  * global sort never sees more than 64·k rows per query, so a query
+  * Top-k is [[graft.ops.TopK.perGroup]] on (score desc, doc_id asc): each
+  * map partition of the score aggregate ships at most topK rows per query
+  * to the query-keyed sort (the helper's stated bound), so a query
   * matching half the corpus cannot funnel it into one task.
   */
 object Bm25 {
@@ -59,8 +58,8 @@ object Bm25 {
 
   /** The scoring tail shared by [[search]] and [[searchPersisted]]:
     * df/idf from the matched postings, the fixed-order contribution
-    * chain, the exact BIGINT per-doc sum, and the salted two-phase
-    * top-k. `withStat(df, c)` attaches the single corpus statistic
+    * chain, the exact BIGINT per-doc sum, and the per-query top-k.
+    * `withStat(df, c)` attaches the single corpus statistic
     * named `c` ("n" or "avgdl") to `df` — a crossJoin of the lazy
     * single-row stats relation for the in-plan search, a plain literal
     * column for the persisted path (whose stats are already
@@ -92,36 +91,12 @@ object Bm25 {
               (lit(1.0) - lit(b) + lit(b) * col("dl") / col("avgdl")))) *
           lit(1000.0)).cast("long").as("contrib_nanos"))
 
-    // ONE exchange for the score aggregate AND the salted window
-    // (r22, guide §2.4 "two operations keyed the same way can share
-    // one exchange"): the per-(query, doc) sum and the per-(query,
-    // salt) window used to pay separate exchanges — hashpartitioning
-    // (query_id, _salt) satisfies BOTH the aggregate's clustering
-    // (salt is a function of doc_id, so grouping by (query, salt,
-    // doc) ≡ (query, doc) — identical groups, identical sums) and the
-    // salt window's, so the explicit repartition is the only shuffle
-    // before the final ≤ 64·topK-row ranking. Shuffle bytes grow by
-    // at most the matched-terms-per-(query,doc) factor (bounded by
-    // the query length — map-side partial aggregation used to fold
-    // that constant), for one whole exchange + its AQE stage-job
-    // removed from every BM25 plan; the salt's scale-safety bound
-    // (global sort never sees > 64·topK rows per query) is unchanged.
-    val scores = contrib
-      .withColumn("_salt", pmod(col("doc_id"), lit(64)))
-      .repartition(col("query_id"), col("_salt"))
-      .groupBy("query_id", "_salt", "doc_id")
+    // the per-(query, doc) sum folds each doc's matched terms map-side
+    // (partial aggregation) before its exchange
+    val scores = contrib.groupBy("query_id", "doc_id")
       .agg(sum("contrib_nanos").as("score_nanos"))
-
-    val bySalt = Window
-      .partitionBy(col("query_id"), col("_salt"))
-      .orderBy(col("score_nanos").desc, col("doc_id").asc)
-    val byQuery = Window.partitionBy("query_id")
-      .orderBy(col("score_nanos").desc, col("doc_id").asc)
-    scores
-      .withColumn("_sr", row_number().over(bySalt))
-      .where(col("_sr") <= topK)
-      .withColumn("rank", row_number().over(byQuery))
-      .where(col("rank") <= topK)
+    graft.ops.TopK.perGroup(scores, Seq(col("query_id")),
+        Seq(col("score_nanos").desc, col("doc_id").asc), topK)
       .select(col("query_id"), col("rank"), col("doc_id"),
         col("score_nanos"),
         (col("score_nanos") / lit(1.0e9)).as("score"))

@@ -2,7 +2,6 @@ package graft.text
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** Distributed multinomial Naive Bayes — trained AND applied inside the
   * engine. This is the classic fastText-era corpus-curation classifier
@@ -86,11 +85,8 @@ object NaiveBayes {
         count(lit(1)).as("n_toks"))
       .join(broadcast(priors), Seq("cls"))
       .withColumn("score_micro", col("like_micro") + col("prior_micro"))
-    val win = Window.partitionBy("doc_id")
-      .orderBy(col("score_micro").desc, col("cls"))
-    perClass
-      .withColumn("rk", row_number().over(win))
-      .where(col("rk") === 1)
+    graft.ops.TopK.perGroup(perClass, Seq(col("doc_id")),
+        Seq(col("score_micro").desc, col("cls")), 1)
       .select(col("doc_id"), col("true_label"), col("cls").as("pred"),
         col("score_micro"), col("n_toks"),
         (col("cls") === col("true_label")).cast("int").as("correct"))

@@ -81,11 +81,8 @@ object TextAnalysis {
       .join(broadcast(lex), "word")
       .groupBy("doc_id", "cand_lang")
       .agg(count(lit(1)).as("score"))
-    val win = Window.partitionBy("doc_id")
-      .orderBy(col("score").desc, col("cand_lang").asc)
-    val best = scores
-      .withColumn("rn", row_number().over(win))
-      .where(col("rn") === 1)
+    val best = graft.ops.TopK.perGroup(scores, Seq(col("doc_id")),
+        Seq(col("score").desc, col("cand_lang").asc), 1, "rn")
       .drop("rn")
     docs.select("doc_id")
       .join(best, Seq("doc_id"), "left")
@@ -400,14 +397,12 @@ object TextAnalysis {
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf")))
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
-    val win = Window.partitionBy("doc_id")
-      .orderBy(col("tfidf").desc, col("term").asc)
-    tf.join(df, "term")
+    val scored = tf.join(df, "term")
       .crossJoin(broadcast(nDocs))
       .withColumn("tfidf",
         round(col("tf") * (col("n_docs") + 1) / (col("df") + 1), 6))
-      .withColumn("rank", row_number().over(win))
-      .where(col("rank") <= k)
+    graft.ops.TopK.perGroup(scored, Seq(col("doc_id")),
+        Seq(col("tfidf").desc, col("term").asc), k)
       .select("doc_id", "term", "tf", "df", "tfidf", "rank")
   }
 

@@ -13,6 +13,8 @@ import graft.profiles.Profiles
 class PlanSpec extends SparkSpec {
 
   import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+  import org.apache.spark.sql.execution.SparkPlan
+  import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
   /** Number of file-scan leaves over `tag` in df's optimized plan. */
   private def scansOf(df: DataFrame, tag: String): Int =
@@ -683,5 +685,88 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("partial_sum"), "missing map-side combine")
     val n = out.count()
     assert(n >= 1 && n <= 4)
+  }
+
+  /** Every physical node, descending into AQE and its query stages. */
+  private def physicalNodes(p: SparkPlan): Seq[SparkPlan] = {
+    val kids = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case _ => p.children
+    }
+    p +: kids.flatMap(physicalNodes)
+  }
+
+  /** The single-child chain from `p` down to its first node with more
+    * (or fewer) than one child — AQE wrappers and stages included. */
+  private def singleChildChain(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => singleChildChain(a.executedPlan)
+    case q: QueryStageExec => q +: singleChildChain(q.plan)
+    case _ if p.children.size == 1 => p +: singleChildChain(p.children.head)
+    case _ => Seq(p)
+  }
+
+  test("persisted ANN top-k: ONE exchange above the scored relation, " +
+    "bounded by a Partial WindowGroupLimit below it") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.{Partial, WindowGroupLimitExec}
+    val big = spark.range(60L).select(col("id").as("vec_id"),
+      transform(sequence(lit(0), lit(3)),
+        d => (((col("id") * 13 + d * 11) % 29) + (col("id") % 5) + 1)
+          .cast("float"))
+        .as("embedding"))
+    val dir = java.nio.file.Files.createTempDirectory("planspec_topk").toString
+    graft.similarity.Similarity.ivfPqWriteIndex(big, s"$dir/index",
+      numFiles = 3, m = 2, dims = 4, centroidMod = 7, coarseMod = 20)
+    val out = graft.similarity.Similarity.ivfPqSearchPersisted(spark,
+      s"$dir/index", big, nQueries = 5, k = 3, m = 2, dims = 4,
+      centroidMod = 7, nprobe = 2)
+    assert(out.count() > 0)
+    // the top-k tail: the single-child chain from the root down to the
+    // scored relation's broadcast join
+    val tail = singleChildChain(out.queryExecution.executedPlan)
+    val exchanges = tail.collect { case e: ShuffleExchangeExec => e }
+    assert(exchanges.size == 1,
+      s"expected 1 exchange in the top-k tail, got ${exchanges.size}:\n" +
+        tail.map(_.nodeName).mkString(" <- "))
+    assert(singleChildChain(exchanges.head.child).exists {
+      case w: WindowGroupLimitExec => w.mode == Partial
+      case _ => false
+    }, s"no Partial WindowGroupLimit below the exchange:\n${exchanges.head}")
+  }
+
+  test("Bm25.searchPersisted: no salt, one window, partial aggregation " +
+    "below the score aggregate's exchange") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{Final, Partial}
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import graft.text.Bm25
+    val docs = spark.createDataFrame((0L until 40L).map(i =>
+      (i, s"alpha w${i % 7} beta w${i % 11} " +
+        (if (i % 3 == 0) "gamma" else "delta"))))
+      .toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("planspec_bm25").toString
+    Bm25.writeIndex(spark, docs, dir, numFiles = 3)
+    val out = Bm25.searchPersisted(spark, dir,
+      Seq((0, "alpha w3"), (1, "gamma w5 beta"), (2, "w10 delta")))
+    assert(out.count() > 0)
+    val all = physicalNodes(out.queryExecution.executedPlan)
+    val salted = all.flatMap(n => n.output ++ n.references).filter(_.name == "_salt")
+    assert(salted.isEmpty, s"salt attribute in the plan: $salted")
+    val windows = all.count(_.isInstanceOf[WindowExec])
+    assert(windows == 1, s"expected 1 WindowExec, got $windows")
+    def scoreAgg(h: HashAggregateExec, mode: Any) =
+      h.groupingExpressions.map(_.name).toSet == Set("query_id", "doc_id") &&
+        h.aggregateExpressions.exists(_.mode == mode)
+    val finals = all.collect { case h: HashAggregateExec if scoreAgg(h, Final) => h }
+    assert(finals.size == 1, s"expected 1 final score aggregate, got ${finals.size}")
+    val below = singleChildChain(finals.head.child)
+    val exchangeAt = below.indexWhere(_.isInstanceOf[ShuffleExchangeExec])
+    assert(exchangeAt >= 0, "no exchange below the score aggregate")
+    assert(below.drop(exchangeAt).exists {
+      case h: HashAggregateExec => scoreAgg(h, Partial)
+      case _ => false
+    }, s"no partial score aggregate below its exchange:\n${finals.head}")
   }
 }

@@ -414,4 +414,45 @@ class PropertySpec extends SparkSpec {
       assert(nl == (if (nm.contains(id) && nm(id) != null) nm(id).length.toLong else -1L))
     }
   }
+
+  test("property: TopK.perGroup == per-group sortBy(order).take(k) with " +
+    "ranks 1..min(k, n), under heavy ties") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    import org.scalacheck.rng.Seed
+    import graft.ops.TopK
+    // mostly small groups (sizes below k included), few score values
+    // (heavy ties), unique ids that run against the input order
+    val rowsGen = for {
+      n <- Gen.choose(0, 120)
+      groups <- Gen.listOfN(n,
+        Gen.frequency(8 -> Gen.choose(0, 2), 1 -> Gen.choose(3, 9)))
+      scores <- Gen.listOfN(n, Gen.choose(0, 3))
+    } yield groups.zip(scores).zipWithIndex.map { case ((g, sc), i) =>
+      (g, sc, (n - i) * 31L)
+    }
+    val prop = Prop.forAll(rowsGen, Gen.oneOf(1, 3, 50)) { (rows, k) =>
+      val df = spark.createDataFrame(rows).toDF("g", "score", "id").repartition(8)
+      val got = TopK.perGroup(df, Seq(col("g")),
+          Seq(col("score").desc, col("id").asc), k)
+        .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getInt(3)))
+      val want = rows.groupBy(_._1).values.flatMap { grp =>
+        grp.sortBy(r => (-r._2, r._3)).take(k).zipWithIndex
+          .map { case ((g, sc, id), i) => (g, sc, id, i + 1) }
+      }
+      got.length == want.size && got.toSet == want.toSet
+    }
+    val res = Check.check(Check.Parameters.default
+      .withMinSuccessfulTests(15).withInitialSeed(Seed(42L)), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+
+    val df = spark.createDataFrame(Seq((0, 9, 1L), (0, 8, 2L), (1, 7, 3L)))
+      .toDF("g", "rank", "id")
+    intercept[IllegalArgumentException](
+      TopK.perGroup(df, Seq(col("g")), Seq(col("id")), 0))
+    // a custom rankCol numbers the rows and leaves a user `rank` as is
+    val named = TopK.perGroup(df, Seq(col("g")), Seq(col("id")), 1, "pos")
+    assert(named.columns.toSeq == Seq("g", "rank", "id", "pos"))
+    assert(named.collect().map(r => (r.getInt(1), r.getInt(3))).toSet ==
+      Set((9, 1), (7, 1)))
+  }
 }
