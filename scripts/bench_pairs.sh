@@ -17,8 +17,11 @@
 # won (ties count for neither), and whether the gain rule holds: the
 # change wins >= 9/10 of the pairs and the medians differ by more than
 # the ref's interquartile distance. Also prints failed output checks and
-# contended runs. Every run's JSON line is kept in
-# .bench_build/pairs/<workload>-<sha>-<time>/runs.txt.
+# contended runs, and each side's median and quartiles of the workload's
+# own figures (for maintain: bm25_cycle_p50_s, ann_cycle_p50_s, ...),
+# which are reported, not gated. Every run's JSON line is kept in
+# .bench_build/pairs/<workload>-<sha>-<time>/runs.txt, its figures in
+# figures.txt.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -32,6 +35,7 @@ SHA=$(git rev-parse --verify "$REF^{commit}")
 REF_DIR="${TMPDIR:-/tmp}/bench_pairs-${SHA:0:12}"
 OUT=".bench_build/pairs/$WORKLOAD-${SHA:0:12}-$(date +%s)"
 mkdir -p "$OUT"
+: >"$OUT/figures.txt"
 
 # sbt's boot server listens on a unix socket under the build's
 # temporary directory (run.py points it at <tree>/.bench_build/tmp;
@@ -78,6 +82,9 @@ run_side() { # $1=side (ref|change) $2=tree $3=seed
   local cond
   cond=$(sed -n 's/^\[bench\] conditions //p' "$log" | tail -n 1)
   echo "$1 $3 ${cond:-null}" >>"$OUT/conditions.txt"
+  # workload figures: "[bench] <workload> <name> = <value> <unit>"
+  sed -n "s/^\[bench\] $WORKLOAD \([A-Za-z0-9_]*\) = \([^ ]*\) .*/$1 $3 \1 \2/p" \
+    "$log" >>"$OUT/figures.txt"
   echo "[pairs] $1 seed=$3 ${line:-FAILED (see $log)}" >&2
 }
 
@@ -138,4 +145,21 @@ for m in spec:
     print(f"{name:<14} {fmt(r1, rm, r3):>30} {fmt(c1, cm, c3):>30} "
           f"{rel:>+10.1%} {m['bound']:>6} {wins:>3}/{len(pairs):<2}  "
           f"{'holds' if holds else 'no'}")
+
+figs = {}
+with open(f"{out}/figures.txt") as f:
+    for ln in f:
+        side, seed, name, value = ln.split()
+        if int(seed) in pairs:
+            figs.setdefault(name, {}).setdefault(side, []).append(float(value))
+if figs:
+    print("workload figures (reported, not gated):")
+for name, by in figs.items():
+    ref, chg = by.get("ref", []), by.get("change", [])
+    if not ref or not chg:
+        continue
+    (r1, rm, r3), (c1, cm, c3) = q(ref), q(chg)
+    rel = (cm - rm) / rm if rm else 0.0
+    print(f"{name:<22} {r1:.4g} / {rm:.4g} / {r3:.4g}  ->  "
+          f"{c1:.4g} / {cm:.4g} / {c3:.4g}  {rel:+.1%}")
 EOF

@@ -640,9 +640,10 @@ object Layout {
     * next gen-K (range-repartition + sort by `sortCols`), delete
     * exactly the compacted tail files, optionally consolidate past
     * `maxGenerations`. The z-order table uses it with `z_key`; the
-    * persisted IVF+PQ index ([[graft.similarity.Similarity]]) with
-    * `(list_id, neighbor_id)` — one lifecycle implementation, two
-    * cluster keys, because the layout math (generations prune
+    * persisted indexes through [[ClusteredIndex]], with each relation's
+    * declared keys (IVF+PQ codes by `(list_id, neighbor_id)`, BM25
+    * postings by `(term, doc_id)`, …) — one lifecycle implementation,
+    * many cluster keys, because the layout math (generations prune
     * independently; tails prune nothing until optimized) does not care
     * WHAT the key means. Same snapshot-pinning and single-OPTIMIZE-
     * writer contract as [[zorderOptimize]]. */

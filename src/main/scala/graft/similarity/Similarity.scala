@@ -825,51 +825,45 @@ object Similarity {
     // g rounds of corpus-scale crossJoin+argmax+join)
     val codes = ivfPqIndexG(embeddings, m, dims, centroidMod, coarseMod,
       spillG)
-    // the four relation writes are independent (disjoint dirs, shared
-    // read-only input) — overlapped on driver threads (guide §2.6)
-    graft.Par.run(
-      Seq(
-        () => {
-          graft.ops.Layout.clusterInto(codes, numFiles,
-            Seq("list_id", "neighbor_id"))
-            .write.mode("errorifexists").options(writerOptions)
-            .parquet(s"$dir/codes/gen-0")
-          graft.ops.Layout.sealInitial(embeddings.sparkSession, s"$dir/codes")
-        },
-        () => coarseCents(embeddings, coarseMod)
-          .coalesce(1).write.mode("errorifexists").parquet(s"$dir/cents"),
-        () => embeddings
-          .where(col("vec_id") % centroidMod === 0)
-          .select(col("vec_id").as("centroid_id"),
-            quantize(col("embedding")).as("v"))
-          .coalesce(1).write.mode("errorifexists").parquet(s"$dir/book")) ++
-        (if (storeVecs)
-          Seq(() => writeVecs(embeddings, dir, numFiles, writerOptions))
-        else Seq.empty): _*)
+    // the lifecycle relations and the two metadata relations are
+    // independent writes (disjoint dirs, shared read-only input) —
+    // overlapped on driver threads (guide §2.6)
+    Index.write(embeddings.sparkSession, dir,
+      Map("codes" -> codes) ++ vecsIf(storeVecs, embeddings),
+      numFiles, writerOptions,
+      () => coarseCents(embeddings, coarseMod)
+        .coalesce(1).write.mode("errorifexists").parquet(s"$dir/cents"),
+      () => embeddings
+        .where(col("vec_id") % centroidMod === 0)
+        .select(col("vec_id").as("centroid_id"),
+          quantize(col("embedding")).as("v"))
+        .coalesce(1).write.mode("errorifexists").parquet(s"$dir/book"))
     if (spillG > 1) writeSpillMarker(embeddings.sparkSession, dir, spillG)
   }
 
-  /** The raw-vector refine relation at `dir/vecs` — (vec_id, v)
-    * range-clustered by vec_id through the shared lifecycle, so the
-    * exact re-rank stage ([[ivfPqRerankPersistedQ]]) fetches ONLY its
-    * candidates' vectors (a pushed-down id IN over the clustering key)
-    * instead of touching the corpus: the FAISS `IndexRefineFlat`
-    * storage half. Doubles the index's byte footprint (codes are
-    * compressed, raw vectors are not) — which is exactly the
-    * IVFPQ+refine trade every production FAISS deployment makes for
-    * recall (Jégou 2011 §VII). */
-  private def writeVecs(
-      embeddings: DataFrame,
-      dir: String,
-      numFiles: Int,
-      writerOptions: Map[String, String]): Unit = {
-    graft.ops.Layout.clusterInto(
-      embeddings.select(col("vec_id"), quantize(col("embedding")).as("v")),
-      numFiles, Seq("vec_id"))
-      .write.mode("errorifexists").options(writerOptions)
-      .parquet(s"$dir/vecs/gen-0")
-    graft.ops.Layout.sealInitial(embeddings.sparkSession, s"$dir/vecs")
-  }
+  /** The persisted index's lifecycle relations
+    * ([[graft.ops.ClusteredIndex]]): `codes` (neighbor_id, list_id,
+    * codes), clustered by (list_id, neighbor_id) so the probed-list IN
+    * prunes at the scan; and the optional raw-vector refine relation
+    * `vecs` (vec_id, v), clustered by vec_id, so the exact re-rank
+    * stage ([[ivfPqRerankPersistedQ]]) fetches ONLY its candidates'
+    * vectors (a pushed-down id IN over the clustering key) instead of
+    * touching the corpus: the FAISS `IndexRefineFlat` storage half.
+    * vecs doubles the index's byte footprint (codes are compressed, raw
+    * vectors are not) — which is exactly the IVFPQ+refine trade every
+    * production FAISS deployment makes for recall (Jégou 2011 §VII). */
+  private val Index = graft.ops.ClusteredIndex("vec_id", "codes", Seq(
+    graft.ops.ClusteredIndex.Relation("codes", "neighbor_id",
+      Seq("list_id", "neighbor_id")),
+    graft.ops.ClusteredIndex.Relation("vecs", "vec_id", Seq("vec_id"),
+      optional = true)))
+
+  /** The vecs relation's rows for `embeddings`. */
+  private def vecsOf(embeddings: DataFrame): DataFrame =
+    embeddings.select(col("vec_id"), quantize(col("embedding")).as("v"))
+
+  private def vecsIf(store: Boolean, embeddings: DataFrame) =
+    if (store) Map("vecs" -> vecsOf(embeddings)) else Map.empty[String, DataFrame]
 
   /** Chunk budget for the probed-list scan: up to this many
     * ≤-threshold IN chunks stay exact-at-the-scan; past it the plan
@@ -960,12 +954,6 @@ object Similarity {
   // removable shuffles (guide §2.4). Iterated argmax-with-exclusion
   // equals top-g by (cos desc, list asc) exactly, ties included — the
   // kernel implements precisely that ordering.
-
-  /** True when the index at `dir` carries the refine relation. */
-  private def hasVecs(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/vecs")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
 
   // --- Retraining epochs --------------------------------------------------
   //
@@ -1059,7 +1047,7 @@ object Similarity {
       writerOptions: Map[String, String] = Map.empty,
       spillG: Int = 0): Unit = {
     val root = indexRoot(spark, indexDir)
-    require(hasVecs(spark, root),
+    require(Index.has(spark, root, "vecs"),
       s"no raw-vector relation at $root/vecs - retraining re-encodes " +
         "from the stored vectors; write the index with storeVecs = true")
     val g = if (spillG > 0) spillG else spillDegree(spark, root)
@@ -1185,40 +1173,31 @@ object Similarity {
     val coarse = ivfTrainCentroids(embeddings, dims, nlists, iters, trainMod)
     val books = pqTrainCodebooks(embeddings, m, dims, ksub, iters, trainMod)
     val cents = centsDf(spark, coarse)
-    // the four relation writes are independent (disjoint dirs; cents
-    // and books are already driver-resolved) — overlapped (guide §2.6)
-    graft.Par.run(
-      Seq(
-        () => {
-          // codes + g-nearest trained lists in ONE narrow projection
-          // (r22): the trained centroids are already driver arrays, so
-          // the former corpus-scale assign aggregate + vec_id join is
-          // the [[graft.functions.IvfTopListsExpr]] kernel riding the
-          // encode scan — bit-identical by its arithmetic contract
-          embeddings
-            .select(col("vec_id").as("neighbor_id"),
-              explode(graft.functions.IvfTopListsExpr.col(
-                quantize(col("embedding")), coarse,
-                Array.tabulate(nlists)(_.toLong), spillG)).as("list_id"),
-              graft.functions.PqEncodeExpr.col(
-                quantize(col("embedding")), books,
-                Array.tabulate(ksub)(_.toLong), m, subDim).as("codes"))
-            .transform(graft.ops.Layout.clusterInto(_, numFiles,
-              Seq("list_id", "neighbor_id")))
-            .write.mode("errorifexists").options(writerOptions)
-            .parquet(s"$dir/codes/gen-0")
-          graft.ops.Layout.sealInitial(spark, s"$dir/codes")
-        },
-        () => cents.coalesce(1).write.mode("errorifexists")
-          .parquet(s"$dir/cents"),
-        () => spark.createDataFrame(
-          books.toIndexedSeq.zipWithIndex
-            .map { case (b, i) => (i.toLong, b.toSeq) })
-          .toDF("centroid_id", "v")
-          .coalesce(1).write.mode("errorifexists").parquet(s"$dir/book")) ++
-        (if (storeVecs)
-          Seq(() => writeVecs(embeddings, dir, numFiles, writerOptions))
-        else Seq.empty): _*)
+    // codes + g-nearest trained lists in ONE narrow projection (r22):
+    // the trained centroids are already driver arrays, so the former
+    // corpus-scale assign aggregate + vec_id join is the
+    // [[graft.functions.IvfTopListsExpr]] kernel riding the encode scan
+    // — bit-identical by its arithmetic contract
+    val codes = embeddings
+      .select(col("vec_id").as("neighbor_id"),
+        explode(graft.functions.IvfTopListsExpr.col(
+          quantize(col("embedding")), coarse,
+          Array.tabulate(nlists)(_.toLong), spillG)).as("list_id"),
+        graft.functions.PqEncodeExpr.col(
+          quantize(col("embedding")), books,
+          Array.tabulate(ksub)(_.toLong), m, subDim).as("codes"))
+    // all relation writes are independent (disjoint dirs; cents and
+    // books are already driver-resolved) — overlapped (guide §2.6)
+    Index.write(spark, dir,
+      Map("codes" -> codes) ++ vecsIf(storeVecs, embeddings),
+      numFiles, writerOptions,
+      () => cents.coalesce(1).write.mode("errorifexists")
+        .parquet(s"$dir/cents"),
+      () => spark.createDataFrame(
+        books.toIndexedSeq.zipWithIndex
+          .map { case (b, i) => (i.toLong, b.toSeq) })
+        .toDF("centroid_id", "v")
+        .coalesce(1).write.mode("errorifexists").parquet(s"$dir/book"))
     if (spillG > 1) writeSpillMarker(spark, dir, spillG)
   }
 
@@ -1252,9 +1231,9 @@ object Similarity {
     * ([[ivfPqDeleteIndex]]) must not be re-appended — the reader would
     * mask the new row and the next compaction would drop it physically
     * (silent permanent loss), so this append REJECTS such ids loudly;
-    * run [[ivfPqConsolidateIndex]] first to retire the tombstones (the
-    * [[graft.ops.Layout.tombstone]] contract). The check costs nothing
-    * when no tombstones are pending. */
+    * run [[ivfPqConsolidateIndex]] first to retire the tombstones, or
+    * [[ivfPqUpsertIndex]] (the [[graft.ops.ClusteredIndex.append]]
+    * contract). The check costs nothing when no tombstones are pending. */
   def ivfPqAppendIndex(
       spark: SparkSession,
       indexDir: String,
@@ -1280,47 +1259,6 @@ object Similarity {
     val centRows = centRowsCached(spark, root).sortBy(_._1)
     val centIds = centRows.map(_._1).toArray
     val centVs = centRows.map(_._2.toArray).toArray
-    val pendingDel = graft.ops.Layout.pendingTombstoned(spark,
-      s"$root/codes", "neighbor_id",
-      newVecs.select(col("vec_id").as("neighbor_id")))
-    require(pendingDel == 0L,
-      s"$pendingDel incoming vec_ids have PENDING tombstones - appending " +
-        "them would be silently masked and dropped at the next compaction; " +
-        "run ivfPqConsolidateIndex first (delete-then-re-add contract)")
-    // fan the BATCH out to the session's parallelism before the heavy
-    // encode/assign work: a streaming micro-batch arrives as ONE file
-    // (one partition), and the nlists-way assign crossJoin inherits
-    // that — measured 19 min for 10 × 90k-vector batches at nlists
-    // 1024 on 32 cores, all on one core. Repartitioning the NEW rows
-    // only (a batch-scale shuffle) keeps the no-shuffle-of-existing-
-    // data ingest contract intact. localCheckpoint: the batch feeds up
-    // to TWO relation appends below (codes + vecs) — snapshot once
-    // instead of re-running the source per write (the Bm25.appendIndex
-    // idiom, minus its self-read hazard which the per-relation dedup
-    // joins below reintroduce: they READ the tables being written, so
-    // they too must be resolved against the snapshot).
-    // fan-out threshold min(parallelism, 8), not parallelism itself
-    // (r22, the Bm25.appendIndex rationale): only a SERIAL batch pays
-    // the ingest-time shuffle
-    val par = spark.sparkContext.defaultParallelism
-    val fanout = math.min(par, 8)
-    val batch =
-      (if (newVecs.rdd.getNumPartitions >= fanout) newVecs
-      else newVecs.repartition(par)).localCheckpoint()
-    // dedup is PER RELATION, each against its OWN visible table — NOT
-    // one shared filter from the codes side: a crash between the two
-    // appends leaves codes ahead of vecs, and a codes-derived dedup
-    // would make the replayed batch a no-op for BOTH relations,
-    // permanently desyncing the refine relation (the re-rank inner
-    // join would then silently drop those candidates). Independent
-    // anti-joins make each relation converge under at-least-once
-    // replay regardless of where the crash fell.
-    def deduped(sub: String, idCol: String): DataFrame =
-      if (!dedupAgainstIndex) batch
-      else graft.ops.Layout.clusteredTableIfAny(spark, s"$root/$sub")
-        .fold(batch)(vis => batch.join(
-          vis.select(col(idCol).as("vec_id")), Seq("vec_id"), "left_anti"))
-    val incoming = deduped("codes", "neighbor_id")
     // a spill-written index keeps its multi-assignment degree through
     // appends — resolved from the index's own marker, never a caller
     // argument that could desync the copies-per-vector invariant.
@@ -1328,106 +1266,62 @@ object Similarity {
     // (r22): the former g-round crossJoin/argmax/join chain is the
     // IvfTopListsExpr kernel riding the encode scan.
     val spillG = spillDegree(spark, root)
-    // the codes append and the vecs lockstep append are independent
-    // (disjoint dirs, both read the one checkpointed batch) —
-    // overlapped on driver threads (guide §2.6)
-    def appendCodes(): Unit = incoming
-      .select(col("vec_id").as("neighbor_id"),
-        explode(graft.functions.IvfTopListsExpr.col(
-          quantize(col("embedding")), centVs, centIds, spillG))
-          .as("list_id"),
-        graft.functions.PqEncodeExpr.col(
-          quantize(col("embedding")), books, ids, m, subDim).as("codes"))
-      .write.mode("append").parquet(s"$root/codes/tail")
     // a refine-enabled index keeps its raw-vector relation in lockstep
     // (same ids, same lifecycle) — the re-rank stage must be able to
     // fetch any candidate the codes relation can surface
-    def appendVecs(): Unit = {
-      val pendingVecs = graft.ops.Layout.pendingTombstoned(spark,
-        s"$root/vecs", "vec_id", batch.select("vec_id"))
-      require(pendingVecs == 0L,
-        s"$pendingVecs incoming vec_ids have PENDING tombstones in the " +
-          "vecs refine relation - run ivfPqConsolidateIndex first " +
-          "(delete-then-re-add contract)")
-      deduped("vecs", "vec_id")
-        .select(col("vec_id"), quantize(col("embedding")).as("v"))
-        .write.mode("append").parquet(s"$root/vecs/tail")
-    }
-    if (hasVecs(spark, root))
-      graft.Par.run(() => appendCodes(), () => appendVecs())
-    else appendCodes()
+    Index.append(spark, root, newVecs, dedupAgainstIndex, Map(
+      "codes" -> ((batch: DataFrame) => batch
+        .select(col("vec_id").as("neighbor_id"),
+          explode(graft.functions.IvfTopListsExpr.col(
+            quantize(col("embedding")), centVs, centIds, spillG))
+            .as("list_id"),
+          graft.functions.PqEncodeExpr.col(
+            quantize(col("embedding")), books, ids, m, subDim)
+            .as("codes"))),
+      "vecs" -> (vecsOf _)))
   }
 
-  /** OPTIMIZE pass for the persisted index: re-cluster the codes TAIL
-    * into the next generation by (list_id, neighbor_id) — the shared
-    * [[graft.ops.Layout.clusteredOptimize]] lifecycle with the index's
-    * cluster key. Returns rows compacted; `maxGenerations` > 0 folds
-    * generations together past the threshold (one full-index sort
-    * amortized over the cheap tail-only passes). */
+  /** OPTIMIZE pass for the persisted index: re-cluster the codes (and
+    * vecs) TAIL into the next generation by the relation's cluster key
+    * — [[graft.ops.ClusteredIndex.optimize]]. Returns codes rows
+    * compacted; `maxGenerations` > 0 folds generations together past
+    * the threshold (one full-index sort amortized over the cheap
+    * tail-only passes). */
   def ivfPqOptimizeIndex(
       spark: SparkSession,
       indexDir: String,
       numFiles: Int,
       maxGenerations: Int = 0,
-      writerOptions: Map[String, String] = Map.empty): Long = {
-    val root = indexRoot(spark, indexDir)
-    // codes and vecs maintain independently (disjoint dirs, own
-    // manifests) — overlapped on driver threads (guide §2.6)
-    var n = 0L
-    if (hasVecs(spark, root))
-      graft.Par.run(
-        () => n = graft.ops.Layout.clusteredOptimize(spark, s"$root/codes",
-          numFiles, Seq("list_id", "neighbor_id"), maxGenerations,
-          writerOptions),
-        () => graft.ops.Layout.clusteredOptimize(spark, s"$root/vecs",
-          numFiles, Seq("vec_id"), maxGenerations, writerOptions))
-    else
-      n = graft.ops.Layout.clusteredOptimize(spark, s"$root/codes",
-        numFiles, Seq("list_id", "neighbor_id"), maxGenerations,
-        writerOptions)
-    n
-  }
+      writerOptions: Map[String, String] = Map.empty): Long =
+    Index.optimize(spark, indexRoot(spark, indexDir), numFiles,
+      maxGenerations, writerOptions)
 
   /** CONSOLIDATE pass for the persisted index: fold every generation
     * into one freshly (list_id, neighbor_id)-clustered generation,
     * applying [[ivfPqDeleteIndex]] tombstones PHYSICALLY and retiring
     * them once no un-compacted tail remains — the compaction half of
     * FAISS `remove_ids`, after which reads pay no anti-join and no
-    * data file holds a deleted row. Returns rows rewritten (0 = single
-    * generation and no pending tombstones, no-op). Same single-
-    * OPTIMIZE-writer and reader-race contracts as
-    * [[graft.ops.Layout.clusteredConsolidate]]. */
+    * data file holds a deleted row. Returns codes rows rewritten (0 =
+    * single generation and no pending tombstones, no-op). Same single-
+    * maintenance-writer and reader-race contracts as
+    * [[graft.ops.ClusteredIndex.consolidate]]. */
   def ivfPqConsolidateIndex(
       spark: SparkSession,
       indexDir: String,
       numFiles: Int,
-      writerOptions: Map[String, String] = Map.empty): Long = {
-    val root = indexRoot(spark, indexDir)
-    // codes and vecs consolidate independently — overlapped (guide §2.6)
-    var n = 0L
-    if (hasVecs(spark, root))
-      graft.Par.run(
-        () => n = graft.ops.Layout.clusteredConsolidate(spark,
-          s"$root/codes", numFiles, Seq("list_id", "neighbor_id"),
-          writerOptions),
-        () => graft.ops.Layout.clusteredConsolidate(spark, s"$root/vecs",
-          numFiles, Seq("vec_id"), writerOptions))
-    else
-      n = graft.ops.Layout.clusteredConsolidate(spark, s"$root/codes",
-        numFiles, Seq("list_id", "neighbor_id"), writerOptions)
-    n
-  }
+      writerOptions: Map[String, String] = Map.empty): Long =
+    Index.consolidate(spark, indexRoot(spark, indexDir), numFiles,
+      writerOptions)
 
   /** UPSERT: replace-or-insert `newVecs` by vec_id — the supported
-    * form of delete-then-re-add (the [[ivfPqAppendIndex]] pending-
-    * tombstone require's escape hatch, same shape as
-    * [[graft.text.Bm25.upsertIndex]]): ids present in the visible
-    * index are tombstoned (absent ids are NOT — a blind tombstone of a
-    * new id would mask its own append), the tombstones are applied
-    * physically and retired (optimize folds the tail, consolidate
-    * rewrites), then the batch appends against the frozen codebooks.
-    * A batch of purely-new ids skips the rewrite entirely. Cost
-    * honesty + single-maintenance-writer contract as the BM25 twin. */
+    * form of delete-then-re-add ([[graft.ops.ClusteredIndex.upsert]]):
+    * ids present in the visible index are tombstoned, the tombstones —
+    * also any an earlier [[ivfPqDeleteIndex]] left pending on an
+    * incoming id — are applied physically and retired (optimize folds
+    * the tail, consolidate rewrites), then the batch appends against
+    * the frozen codebooks. A batch of purely-new ids skips the rewrite
+    * entirely. Cost honesty: a batch that replaces vectors pays one
+    * full-index consolidate. Single-maintenance-writer contract. */
   def ivfPqUpsertIndex(
       spark: SparkSession,
       indexDir: String,
@@ -1436,41 +1330,25 @@ object Similarity {
       m: Int = 8,
       dims: Int = 64,
       writerOptions: Map[String, String] = Map.empty): Unit = {
-    // the victim semi-join is materialized ONCE (localCheckpoint) so
-    // the emptiness probe and the tombstone write share one plan
-    // instead of running the join twice; the checkpointed relation is
-    // batch-scale (ids of the incoming rows at most)
-    val victims = newVecs.select(col("vec_id").cast("long").as("vec_id"))
-      .join(graft.ops.Layout.clusteredTable(spark,
-        s"${indexRoot(spark, indexDir)}/codes")
-        .select(col("neighbor_id").as("vec_id")), Seq("vec_id"),
-        "left_semi")
-      .localCheckpoint()
-    if (!victims.isEmpty) {
-      ivfPqDeleteIndex(spark, indexDir, victims)
-      ivfPqOptimizeIndex(spark, indexDir, numFiles,
-        writerOptions = writerOptions)
-      ivfPqConsolidateIndex(spark, indexDir, numFiles, writerOptions)
-    }
-    ivfPqAppendIndex(spark, indexDir, newVecs, m, dims)
+    val root = indexRoot(spark, indexDir)
+    Index.upsert(spark, root, newVecs, numFiles, writerOptions)(
+      delete = Index.delete(spark, root, newVecs)(),
+      consolidate = Index.consolidate(spark, root, numFiles, writerOptions),
+      append = ivfPqAppendIndex(spark, indexDir, newVecs, m, dims))
   }
 
   /** Immediately reclaim index files the manifests have retired (old
-    * generations, compacted tail, applied tombstones) instead of
-    * waiting one maintenance interval — [[graft.ops.Layout.vacuum]]
-    * over the index's lifecycle relations, with its retention guard:
-    * unforced calls no-op while the newest manifest is younger than
-    * the retention window; `force = true` reclaims now. */
+    * generations, compacted tail, applied tombstones, retired epochs)
+    * instead of waiting one maintenance interval —
+    * [[graft.ops.ClusteredIndex.vacuum]] over the index's lifecycle
+    * relations, with its retention guard: unforced calls no-op while
+    * the newest manifest is younger than the retention window;
+    * `force = true` reclaims now. */
   def ivfPqVacuumIndex(
       spark: SparkSession, indexDir: String,
-      force: Boolean = false): Long = {
-    val root = indexRoot(spark, indexDir)
-    graft.ops.Layout.vacuum(spark, s"$root/codes", force = force) +
-      (if (hasVecs(spark, root))
-        graft.ops.Layout.vacuum(spark, s"$root/vecs", force = force)
-      else 0L) +
+      force: Boolean = false): Long =
+    Index.vacuum(spark, indexRoot(spark, indexDir), force) +
       purgeEpochs(spark, indexDir, force)
-  }
 
   /** [[ivfPqSearch]] over a PERSISTED index ([[ivfPqWriteIndex]] or
     * [[ivfPqWriteIndexTrained]]): identical results (same probes, same
@@ -1595,7 +1473,7 @@ object Similarity {
     require(rerankR >= k, s"rerankR=$rerankR must be >= k=$k")
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
     val root = indexRoot(spark, indexDir)
-    require(hasVecs(spark, root),
+    require(Index.has(spark, root, "vecs"),
       s"no raw-vector relation at $root/vecs - write the index with " +
         "storeVecs = true to enable the exact re-rank stage")
     val qv = quantQueries(queries)
@@ -1730,30 +1608,21 @@ object Similarity {
   }
 
   /** Tombstone index entries by vector id — FAISS `remove_ids` as
-    * merge-on-read: `vecIds` (a `vec_id` column) land in
-    * `indexDir/codes/deletes`, every search masks them immediately, and
-    * the next [[ivfPqOptimizeIndex]] consolidation pass (triggered by
-    * `maxGenerations`, or [[graft.ops.Layout.clusteredConsolidate]]
-    * directly) rewrites them away and retires the tombstones. Deleting
-    * then re-appending the same vec_id requires a consolidate in
-    * between — the [[graft.ops.Layout.tombstone]] contract. */
+    * merge-on-read ([[graft.ops.ClusteredIndex.delete]]): the ids of
+    * `vecIds` (a `vec_id` column) that are VISIBLE in the codes
+    * relation land in the codes (and vecs) tombstones, every search
+    * masks them immediately, and the next [[ivfPqConsolidateIndex]]
+    * (or an [[ivfPqOptimizeIndex]] past `maxGenerations`) rewrites them
+    * away and retires the tombstones. Absent or already-deleted ids are
+    * skipped, so they never block a later append of the same id.
+    * Re-appending a deleted vec_id requires a consolidate in between —
+    * or use [[ivfPqUpsertIndex]]. Returns the number of visible ids
+    * deleted. */
   def ivfPqDeleteIndex(
       spark: SparkSession,
       indexDir: String,
-      vecIds: DataFrame): Unit = {
-    val root = indexRoot(spark, indexDir)
-    if (hasVecs(spark, root))
-      // disjoint tombstone dirs — overlapped (guide §2.6)
-      graft.Par.run(
-        () => graft.ops.Layout.tombstone(spark, s"$root/codes",
-          "neighbor_id",
-          vecIds.select(col("vec_id").cast("long").as("neighbor_id"))),
-        () => graft.ops.Layout.tombstone(spark, s"$root/vecs", "vec_id",
-          vecIds.select(col("vec_id").cast("long").as("vec_id"))))
-    else
-      graft.ops.Layout.tombstone(spark, s"$root/codes", "neighbor_id",
-        vecIds.select(col("vec_id").cast("long").as("neighbor_id")))
-  }
+      vecIds: DataFrame): Long =
+    Index.delete(spark, indexRoot(spark, indexDir), vecIds)()
 
   // --- Lloyd-trained PQ codebooks (fixed ksub) ---------------------------
   //

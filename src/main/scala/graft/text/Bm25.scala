@@ -134,14 +134,12 @@ object Bm25 {
   // IVF+PQ story, M70 — this is its lexical twin). Layout under `dir`:
   //
   //   postings/   (term, doc_id, dl, tf) range-clustered by
-  //               (term, doc_id) through the shared
-  //               [[graft.ops.Layout]] lifecycle (gen-K + tail +
-  //               deletes) — each parquet file owns a contiguous term
-  //               range, so the query-term IN (chunked to the session's
-  //               parquet pushdown threshold, like the ANN probed-list
-  //               union) drops non-matching row groups UNREAD: bytes
-  //               read ≈ the queried terms' postings, Lucene's
-  //               inverted-list contract as a parquet layout.
+  //               (term, doc_id) — each parquet file owns a contiguous
+  //               term range, so the query-term IN (chunked to the
+  //               session's parquet pushdown threshold, like the ANN
+  //               probed-list union) drops non-matching row groups
+  //               UNREAD: bytes read ≈ the queried terms' postings,
+  //               Lucene's inverted-list contract as a parquet layout.
   //   docstats/   (doc_id, dl) range-clustered by doc_id — the per-doc
   //               relation deletes are accounted against.
   //   stats/      ADDITIVE (n_docs, sum_dl) batch rows: every write/
@@ -154,13 +152,29 @@ object Bm25 {
   //               corpus (Lucene, by contrast, lets deleted docs skew
   //               df/avgdl until segment merge).
   //
-  // Appends are shuffle-free on existing data (new postings land in the
-  // tail, one narrow explode+aggregate of the NEW docs only); deletes
-  // are tombstones ([[graft.ops.Layout.tombstone]] on doc_id) masked by
-  // every read and applied physically at consolidate; df needs no
-  // stored relation at all — it is a per-term count over the (pruned,
-  // tombstone-masked) postings the search already reads, so it is
-  // always exactly the visible corpus's df.
+  // postings and docstats are the lifecycle relations of [[Index]]
+  // ([[graft.ops.ClusteredIndex]]: gen-K + tail + deletes, one shared
+  // append/delete/optimize/consolidate/vacuum/upsert); stats is this
+  // family's sidecar. Appends are shuffle-free on existing data (new
+  // postings land in the tail, one narrow explode+aggregate of the NEW
+  // docs only); deletes are tombstones on doc_id masked by every read
+  // and applied physically at consolidate; df needs no stored relation
+  // at all — it is a per-term count over the (pruned, tombstone-masked)
+  // postings the search already reads, so it is always exactly the
+  // visible corpus's df.
+
+  private val Index = graft.ops.ClusteredIndex("doc_id", "docstats", Seq(
+    graft.ops.ClusteredIndex.Relation("postings", "doc_id",
+      Seq("term", "doc_id")),
+    graft.ops.ClusteredIndex.Relation("docstats", "doc_id", Seq("doc_id"),
+      filesDivisor = 4)))
+
+  /** The rows of each lifecycle relation for a batch of `docs`. */
+  private val rowsOf: Map[String, DataFrame => DataFrame] = Map(
+    "postings" -> ((docs: DataFrame) => postingsOf(docs, None)
+      .select(col("term"), col("doc_id"), col("dl"), col("tf"))),
+    "docstats" -> ((docs: DataFrame) => docs.select(col("doc_id"),
+      size(split(col("text"), " ")).cast("long").as("dl"))))
 
   /** Build the persisted BM25 index of `docs` at `dir`. Paid once;
     * [[searchPersisted]] then serves any query workload reading ≈ the
@@ -170,26 +184,9 @@ object Bm25 {
       docs: DataFrame,
       dir: String,
       numFiles: Int,
-      writerOptions: Map[String, String] = Map.empty): Unit = {
-    // the three relation writes are independent (disjoint dirs, shared
-    // read-only input) — overlapped on driver threads, guide §2.6
-    graft.Par.run(
-      () => graft.ops.Layout.clusterInto(
-        postingsOf(docs, None)
-          .select(col("term"), col("doc_id"), col("dl"), col("tf")),
-        numFiles, Seq("term", "doc_id"))
-        .write.mode("errorifexists").options(writerOptions)
-        .parquet(s"$dir/postings/gen-0"),
-      () => graft.ops.Layout.clusterInto(
-        docs.select(col("doc_id"),
-          size(split(col("text"), " ")).cast("long").as("dl")),
-        math.max(1, numFiles / 4), Seq("doc_id"))
-        .write.mode("errorifexists").options(writerOptions)
-        .parquet(s"$dir/docstats/gen-0"),
-      () => appendStats(spark, dir, docs, sign = 1L))
-    graft.ops.Layout.sealInitial(spark, s"$dir/postings")
-    graft.ops.Layout.sealInitial(spark, s"$dir/docstats")
-  }
+      writerOptions: Map[String, String] = Map.empty): Unit =
+    Index.write(spark, dir, rowsOf.map { case (n, f) => n -> f(docs) },
+      numFiles, writerOptions, () => appendStats(spark, dir, docs, sign = 1L))
 
   /** One additive stats row for `docs` (sign = −1 for a delete batch). */
   private def appendStats(
@@ -200,134 +197,62 @@ object Bm25 {
       .coalesce(1).write.mode("append").parquet(s"$dir/stats")
 
   /** Incremental maintenance — add `docs` to the index without touching
-    * existing data (the [[graft.similarity.Similarity.ivfPqAppendIndex]]
-    * contract on the lexical leg): new postings land in the tail
-    * (term-unclustered — they prune poorly until [[optimizeIndex]]
-    * re-clusters them, the honest cost of shuffle-free ingest), the new
-    * docstats rows in theirs, and one additive stats row keeps N/avgdl
-    * exact. Blind to duplicate doc_ids by default, like the ANN append —
+    * existing data ([[graft.ops.ClusteredIndex.append]]): new postings
+    * land in the tail (term-unclustered — they prune poorly until
+    * [[optimizeIndex]] re-clusters them, the honest cost of shuffle-free
+    * ingest), the new docstats rows in theirs, and one additive stats
+    * row keeps N/avgdl exact. Blind to duplicate doc_ids by default —
     * re-adding a doc requires deleting it first — unless
-    * `dedupAgainstIndex` is set (see the inline note). */
+    * `dedupAgainstIndex` is set: incoming doc_ids are then anti-joined
+    * against each relation's visible ids, making a re-ingested batch a
+    * no-op for postings AND stats — the idempotence the streaming
+    * ingest sink relies on (foreachBatch replays a batch after a
+    * failure). Ids with pending tombstones are rejected. */
   def appendIndex(
       spark: SparkSession,
       dir: String,
       docs: DataFrame,
-      dedupAgainstIndex: Boolean = false): Unit = {
-    // dedupAgainstIndex = true anti-joins incoming doc_ids against the
-    // VISIBLE docstats (one bounded join of the new batch against a
-    // (doc_id, dl) relation), making a re-ingested batch a no-op for
-    // postings AND stats — the idempotence the streaming ingest sink
-    // relies on (foreachBatch replays a batch after a failure)
-    val pendingDel = graft.ops.Layout.pendingTombstoned(spark,
-      s"$dir/docstats", "doc_id", docs)
-    require(pendingDel == 0L,
-      s"$pendingDel incoming doc_ids have PENDING tombstones - appending " +
-        "them would be silently masked and dropped at the next compaction; " +
-        "run consolidateIndex first (delete-then-re-add contract)")
-    // clusteredTableIfAny: the dedup anti-join must also work on a
-    // FRESH dir (the streaming sink's first micro-batch bootstraps the
-    // index) where no docstats data exists yet
-    val incoming0 =
-      if (!dedupAgainstIndex) docs
-      else graft.ops.Layout.clusteredTableIfAny(spark, s"$dir/docstats")
-        .fold(docs)(vis =>
-          docs.join(vis.select("doc_id"), Seq("doc_id"), "left_anti"))
-    // SNAPSHOT before writing: the docstats write below lands on the
-    // very relation the dedup anti-join READS, and Spark's insert
-    // commit refreshes cached plans/file listings on the written path —
-    // a persist()ed incoming is invalidated by its OWN docstats write
-    // and re-evaluates the anti-join against the just-written rows,
-    // silently deduping the batch against itself (stats row = 0).
-    // localCheckpoint is an eager, lineage-free snapshot: evaluated
-    // ONCE (also fixing the triple tokenize/join evaluation), immune
-    // to the refresh, bounded by the ingest batch size. Fanned out
-    // first when the batch is SERIAL: a streaming micro-batch arrives
-    // as one file/partition and the snapshot would pin the tokenize
-    // explode to one core (the ANN append's measured pathology). The
-    // fan-out threshold is min(parallelism, 8), not parallelism
-    // itself (r22): a batch already ≥ 8-way parallel gains nothing
-    // from a full-batch shuffle at ingest (the r21 spread-width A/B —
-    // returns flatten past 8), and the shuffle is the costlier half.
-    val par = spark.sparkContext.defaultParallelism
-    val fanout = math.min(par, 8)
-    val incoming = (if (incoming0.rdd.getNumPartitions >= fanout) incoming0
-      else incoming0.repartition(par)).localCheckpoint()
-    // three independent appends over the one checkpointed snapshot —
-    // disjoint target dirs, overlapped on driver threads (guide §2.6)
-    graft.Par.run(
-      () => postingsOf(incoming, None)
-        .select(col("term"), col("doc_id"), col("dl"), col("tf"))
-        .write.mode("append").parquet(s"$dir/postings/tail"),
-      () => incoming.select(col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("dl"))
-        .write.mode("append").parquet(s"$dir/docstats/tail"),
-      () => appendStats(spark, dir, incoming, sign = 1L))
-  }
+      dedupAgainstIndex: Boolean = false): Unit =
+    // the stats row counts exactly the docs docstats admits
+    Index.append(spark, dir, docs, dedupAgainstIndex, rowsOf,
+      sidecar = appendStats(spark, dir, _, sign = 1L))
 
   /** Delete documents from the index by id — tombstones on BOTH
     * lifecycle relations (masked immediately by [[searchPersisted]],
     * applied physically at [[consolidateIndex]]) plus one NEGATIVE
     * stats row, so N/avgdl/df all reflect the visible corpus exactly:
     * a post-delete search is bit-identical to a rebuild without the
-    * deleted docs (spec-pinned), with no rewrite. Repeat-safe: the
-    * stats delta is computed against the VISIBLE docstats, so
-    * re-deleting an already-deleted (or absent) id contributes zero.
+    * deleted docs (spec-pinned), with no rewrite. Repeat-safe: only
+    * VISIBLE docs are deleted and counted, so re-deleting an
+    * already-deleted (or absent) id contributes zero.
     * Returns the number of visible documents deleted. */
   def deleteIndex(
       spark: SparkSession,
       dir: String,
-      docIds: DataFrame): Long = {
-    val victims = graft.ops.Layout
-      .clusteredTable(spark, s"$dir/docstats")
-      .join(docIds.select(col("doc_id").cast("long").as("doc_id"))
-        .distinct(), Seq("doc_id"), "left_semi")
-      .persist()
-    val d = victims.agg(count(lit(1)), coalesce(sum("dl"), lit(0L)))
-      .collect()(0)
-    val (nDel, dlDel) = (d.getLong(0), d.getLong(1))
-    if (nDel > 0L) {
-      // both tombstone writes read the already-materialized victims
-      // cache and land in disjoint dirs — overlapped (guide §2.6)
-      graft.Par.run(
-        () => graft.ops.Layout.tombstone(spark, s"$dir/postings", "doc_id",
-          victims.select("doc_id")),
-        () => graft.ops.Layout.tombstone(spark, s"$dir/docstats", "doc_id",
-          victims.select("doc_id")))
+      docIds: DataFrame): Long =
+    Index.delete(spark, dir, docIds,
+      Seq(count(lit(1)), coalesce(sum("dl"), lit(0L)))) { t =>
       // the NEGATIVE stats row commits strictly AFTER the tombstones:
       // it is the order-sensitive half of the delete (a stats row with
       // no tombstones = deleted docs visible in postings yet excluded
       // from N/avgdl — silently wrong scores), so a tombstone-write
-      // failure above leaves the index fully consistent (docs simply
-      // not deleted). The row is a 1-row literal write — micro-cost.
-      spark.range(1).select(lit(-nDel).as("n_docs"),
-        lit(-dlDel).as("sum_dl"))
+      // failure leaves the index fully consistent (docs simply not
+      // deleted). The row is a 1-row literal write — micro-cost.
+      spark.range(1).select(lit(-t.getLong(0)).as("n_docs"),
+        lit(-t.getLong(1)).as("sum_dl"))
         .coalesce(1).write.mode("append").parquet(s"$dir/stats")
     }
-    victims.unpersist()
-    nDel
-  }
 
   /** OPTIMIZE pass: re-cluster both tails into their next generations
-    * (term order for postings, doc order for docstats) — the shared
-    * [[graft.ops.Layout.clusteredOptimize]] lifecycle. Returns postings
-    * rows compacted. */
+    * (term order for postings, doc order for docstats). Returns
+    * postings rows compacted. */
   def optimizeIndex(
       spark: SparkSession,
       dir: String,
       numFiles: Int,
       maxGenerations: Int = 0,
-      writerOptions: Map[String, String] = Map.empty): Long = {
-    // the two relations' passes are independent (disjoint dirs, own
-    // manifests) — overlapped on driver threads (guide §2.6)
-    var n = 0L
-    graft.Par.run(
-      () => n = graft.ops.Layout.clusteredOptimize(spark, s"$dir/postings",
-        numFiles, Seq("term", "doc_id"), maxGenerations, writerOptions),
-      () => graft.ops.Layout.clusteredOptimize(spark, s"$dir/docstats",
-        math.max(1, numFiles / 4), Seq("doc_id"), maxGenerations,
-        writerOptions))
-    n
-  }
+      writerOptions: Map[String, String] = Map.empty): Long =
+    Index.optimize(spark, dir, numFiles, maxGenerations, writerOptions)
 
   /** The VISIBLE additive-stats files at `dir/stats`: directly-landed
     * parquet files (every maintenance op appends one — visible the
@@ -399,14 +324,7 @@ object Bm25 {
       dir: String,
       numFiles: Int,
       writerOptions: Map[String, String] = Map.empty): Long = {
-    // the two relations consolidate independently (disjoint dirs, own
-    // manifests) — overlapped on driver threads (guide §2.6)
-    var n = 0L
-    graft.Par.run(
-      () => n = graft.ops.Layout.clusteredConsolidate(spark,
-        s"$dir/postings", numFiles, Seq("term", "doc_id"), writerOptions),
-      () => graft.ops.Layout.clusteredConsolidate(spark, s"$dir/docstats",
-        math.max(1, numFiles / 4), Seq("doc_id"), writerOptions))
+    val n = Index.consolidate(spark, dir, numFiles, writerOptions)
     val statsPath = new org.apache.hadoop.fs.Path(s"$dir/stats")
     val fs = statsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     purgeStats(spark, dir)
@@ -440,15 +358,14 @@ object Bm25 {
   /** Immediately reclaim everything the index's manifests have retired
     * (old generations, applied tombstones, folded stats files) instead
     * of waiting for the next maintenance pass — trades the in-flight-
-    * reader grace window for disk space, like
-    * [[graft.ops.Layout.vacuum]], and like it guarded: an unforced
-    * call is a no-op while the newest manifest of a relation is
-    * younger than the retention window (its retired files may still
-    * have in-flight readers); pass `force = true` to reclaim now. */
+    * reader grace window for disk space, and guarded like
+    * [[graft.ops.ClusteredIndex.vacuum]]: an unforced call is a no-op
+    * while the newest manifest of a relation is younger than the
+    * retention window (its retired files may still have in-flight
+    * readers); pass `force = true` to reclaim now. */
   def vacuumIndex(
       spark: SparkSession, dir: String, force: Boolean = false): Long = {
-    val n = graft.ops.Layout.vacuum(spark, s"$dir/postings", force = force) +
-      graft.ops.Layout.vacuum(spark, s"$dir/docstats", force = force)
+    val n = Index.vacuum(spark, dir, force)
     val statsPath = new org.apache.hadoop.fs.Path(s"$dir/stats")
     val statsFs = statsPath.getFileSystem(
       spark.sparkContext.hadoopConfiguration)
@@ -461,14 +378,13 @@ object Bm25 {
 
   /** UPSERT: replace-or-insert `docs` by doc_id — the operation the
     * loud [[appendIndex]] pending-tombstone require converts from
-    * silent loss to a contract, made SUPPORTED: visible copies of the
+    * silent loss to a contract, made SUPPORTED
+    * ([[graft.ops.ClusteredIndex.upsert]]): visible copies of the
     * incoming ids are tombstoned, the tombstones are applied physically
-    * and retired (optimize folds any live tail so consolidate's
-    * retirement condition holds, then consolidate rewrites), and the
-    * new rows append — after which a search is bit-identical to an
-    * index over the corpus with those docs replaced (spec-pinned; the
-    * additive stats subtract the old rows and add the new, so N/avgdl
-    * stay exact through the swap).
+    * and retired, and the new rows append — after which a search is
+    * bit-identical to an index over the corpus with those docs replaced
+    * (spec-pinned; the additive stats subtract the old rows and add the
+    * new, so N/avgdl stay exact through the swap).
     *
     * Cost honesty: a batch that actually replaces documents pays ONE
     * full-index consolidate (the physical rewrite no tombstone design
@@ -481,19 +397,11 @@ object Bm25 {
       dir: String,
       docs: DataFrame,
       numFiles: Int,
-      writerOptions: Map[String, String] = Map.empty): Unit = {
-    // deleteIndex already counted the visible victims it tombstoned —
-    // re-scanning the tombstone relation (pendingTombstoned) is only
-    // needed when THIS batch deleted nothing but an EARLIER delete left
-    // one of its ids pending (the short-circuit keeps that edge exact)
-    val nDel = deleteIndex(spark, dir, docs.select("doc_id"))
-    if (nDel > 0L || graft.ops.Layout.pendingTombstoned(spark,
-      s"$dir/docstats", "doc_id", docs) > 0L) {
-      optimizeIndex(spark, dir, numFiles, writerOptions = writerOptions)
-      consolidateIndex(spark, dir, numFiles, writerOptions)
-    }
-    appendIndex(spark, dir, docs)
-  }
+      writerOptions: Map[String, String] = Map.empty): Unit =
+    Index.upsert(spark, dir, docs, numFiles, writerOptions)(
+      delete = deleteIndex(spark, dir, docs),
+      consolidate = consolidateIndex(spark, dir, numFiles, writerOptions),
+      append = appendIndex(spark, dir, docs))
 
   /** [[search]] served from a persisted index — identical output (the
     * scoring tail is the same code over the same relations; gate

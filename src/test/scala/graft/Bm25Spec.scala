@@ -266,4 +266,20 @@ class Bm25Spec extends SparkSpec {
     assert(corpusBcasts.isEmpty, "BM25 must broadcast only query/idf/stats tables")
     assert(out.count() == 10)
   }
+
+  test("deleteIndex releases its victims snapshot when a tombstone " +
+    "write fails") {
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("bm25leak").toString
+    Bm25.writeIndex(spark, corpus(), dir, numFiles = 1)
+    // a directory below a regular file can never be created: the
+    // postings tombstone write fails
+    java.nio.file.Files.createFile(
+      java.nio.file.Paths.get(s"$dir/postings/deletes"))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[Exception] {
+      Bm25.deleteIndex(spark, dir, corpus().where(col("doc_id") === 2L))
+    }
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+  }
 }

@@ -1021,4 +1021,67 @@ class PqSpec extends SparkSpec {
     assert(new java.io.File(s"$dir/index/epoch-1").isDirectory)
     assert(searchTrained(dir) == searchTrained(freshDir))
   }
+
+  test("ivfPqUpsertIndex of an id whose earlier delete is still PENDING " +
+    "compacts first and equals a rebuild over the replaced corpus") {
+    import org.apache.spark.sql.functions._
+    // id 17 is outside the trainMod=5 training subset, so the stale and
+    // the true corpus train identical books and only its codes differ
+    val stale = bigWithDup.withColumn("embedding",
+      when(col("vec_id") === 17L, transform(col("embedding"), x => -x))
+        .otherwise(col("embedding")))
+    val dir = java.nio.file.Files.createTempDirectory("ivfpqupd").toString
+    Similarity.ivfPqWriteIndexTrained(stale, s"$dir/index", numFiles = 3,
+      m = 2, dims = 4, ksub = 4, nlists = 3, iters = 1, trainMod = 5,
+      storeVecs = true)
+    assert(Similarity.ivfPqDeleteIndex(spark, s"$dir/index",
+      spark.createDataFrame(Seq(Tuple1(17L))).toDF("vec_id")) == 1L)
+    // the visible index no longer holds 17: the upsert must still see
+    // the pending tombstone and retire it before appending
+    Similarity.ivfPqUpsertIndex(spark, s"$dir/index",
+      bigWithDup.where(col("vec_id") === 17L), numFiles = 2, m = 2, dims = 4)
+    val rebuildDir = java.nio.file.Files.createTempDirectory("ivfpqupdr").toString
+    Similarity.ivfPqWriteIndexTrained(bigWithDup, s"$rebuildDir/index",
+      numFiles = 3, m = 2, dims = 4, ksub = 4, nlists = 3, iters = 1,
+      trainMod = 5, storeVecs = true)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
+      .toSet
+    def search(d: String) = rows(Similarity.ivfPqSearchPersisted(spark,
+      s"$d/index", bigWithDup, nQueries = 5, k = 4, m = 2, dims = 4,
+      centroidMod = 1, nprobe = 3))
+    assert(search(dir) == search(rebuildDir),
+      "upsert after a pending delete diverged from the rebuild")
+    for (rel <- Seq("codes", "vecs"))
+      assert(graft.ops.Layout.clusteredTable(spark, s"$dir/index/$rel")
+        .where(col(if (rel == "codes") "neighbor_id" else "vec_id") === 17L)
+        .count() == 1L, s"upserted id 17 not visible once in $rel")
+  }
+
+  test("ivfPqDeleteIndex of an ABSENT id is a no-op: a later append of " +
+    "that id lands and is served") {
+    import org.apache.spark.sql.functions._
+    // 900 is outside the trainMod=7 training subset, so appending it
+    // against the frozen books equals a rebuild over the corpus + 900
+    val extra = spark.createDataFrame(Seq((900L, Seq(3f, 1f, 4f, 1f))))
+      .toDF("vec_id", "embedding")
+    val dir = java.nio.file.Files.createTempDirectory("ivfpqabs").toString
+    Similarity.ivfPqWriteIndexTrained(bigWithDup, s"$dir/index",
+      numFiles = 2, m = 2, dims = 4, ksub = 4, nlists = 3, iters = 1,
+      trainMod = 7)
+    assert(Similarity.ivfPqDeleteIndex(spark, s"$dir/index",
+      spark.createDataFrame(Seq(Tuple1(900L))).toDF("vec_id")) == 0L)
+    Similarity.ivfPqAppendIndex(spark, s"$dir/index", extra, m = 2, dims = 4)
+    val rebuildDir = java.nio.file.Files.createTempDirectory("ivfpqabsr").toString
+    Similarity.ivfPqWriteIndexTrained(bigWithDup.unionByName(extra),
+      s"$rebuildDir/index", numFiles = 2, m = 2, dims = 4, ksub = 4,
+      nlists = 3, iters = 1, trainMod = 7)
+    def search(d: String) = Similarity.ivfPqSearchPersisted(spark,
+      s"$d/index", bigWithDup, nQueries = 5, k = 70, m = 2, dims = 4,
+      centroidMod = 1, nprobe = 3).collect().map(_.toSeq).toSet
+    val got = search(dir)
+    assert(got.exists(_(1) == 900L), "appended id 900 is not served")
+    assert(got == search(rebuildDir),
+      "append after an absent-id delete diverged from the rebuild")
+  }
 }
