@@ -22,6 +22,12 @@
 # which are reported, not gated. Every run's JSON line is kept in
 # .bench_build/pairs/<workload>-<sha>-<time>/runs.txt, its figures in
 # figures.txt.
+#
+# After the series, one traced pair (--trace 1) runs on seed
+# first_seed+pairs, continuing the alternation, and the per-layer
+# metrics of BENCHMARK.json are printed for both sides next to each
+# other (reported, not gated): the layer a change touched is where its
+# saving should show. Their JSON lines are kept in traced.txt.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -72,12 +78,19 @@ run.build(os.path.join(run.ROOT, ".bench_build"), env)
 }
 
 # one run; appends "<side> <seed> <json line>" to runs.txt
-run_side() { # $1=side (ref|change) $2=tree $3=seed
-  local log="$OUT/$1-$3.log" line
+run_side() { # $1=side (ref|change) $2=tree $3=seed [$4=trace]
+  local trace=${4:-0} line
+  local log="$OUT/$1-$3-trace$trace.log"
   (cd "$2" && python3 -B benchmark/run.py \
-    --workload "$WORKLOAD" --seed "$3" --seconds "$RUN_SECONDS" --trace 0) \
+    --workload "$WORKLOAD" --seed "$3" --seconds "$RUN_SECONDS" --trace "$trace") \
     >"$log" 2>&1 || true
   line=$(grep '^{' "$log" | tail -n 1 || true)
+  if [ "$trace" = 1 ]; then
+    echo "$1 $3 ${line:-null}" >>"$OUT/traced.txt"
+    if [ -n "$line" ]; then echo "[pairs] traced $1 seed=$3 done" >&2
+    else echo "[pairs] traced $1 seed=$3 FAILED (see $log)" >&2; fi
+    return
+  fi
   echo "$1 $3 ${line:-null}" >>"$OUT/runs.txt"
   local cond
   cond=$(sed -n 's/^\[bench\] conditions //p' "$log" | tail -n 1)
@@ -99,13 +112,21 @@ for ((i = 0; i < PAIRS; i++)); do
     run_side change . "$seed"; run_side ref "$REF_DIR" "$seed"
   fi
 done
+: >"$OUT/traced.txt"
+seed=$((SEED0 + PAIRS))
+if ((PAIRS % 2 == 0)); then
+  run_side ref "$REF_DIR" "$seed" 1; run_side change . "$seed" 1
+else
+  run_side change . "$seed" 1; run_side ref "$REF_DIR" "$seed" 1
+fi
 
 python3 -B - "$OUT" BENCHMARK.json <<'EOF'
 import json, statistics, sys
 
 out, spec_path = sys.argv[1], sys.argv[2]
 with open(spec_path) as f:
-    spec = json.load(f)["end_to_end"]
+    full_spec = json.load(f)
+spec = full_spec["end_to_end"]
 runs = {}
 with open(f"{out}/runs.txt") as f:
     for ln in f:
@@ -162,4 +183,24 @@ for name, by in figs.items():
     rel = (cm - rm) / rm if rm else 0.0
     print(f"{name:<22} {r1:.4g} / {rm:.4g} / {r3:.4g}  ->  "
           f"{c1:.4g} / {cm:.4g} / {c3:.4g}  {rel:+.1%}")
+
+traced = {}
+with open(f"{out}/traced.txt") as f:
+    for ln in f:
+        side, seed, js = ln.rstrip("\n").split(" ", 2)
+        traced[side] = (seed, json.loads(js))
+tr = {side: r["metrics"] for side, (_, r) in traced.items()
+      if r is not None and "metrics" in r}
+seeds = sorted({seed for seed, _ in traced.values()})
+print(f"traced pair, seed {'/'.join(seeds) or '-'} (reported, not gated): "
+      f"{'ok' if len(tr) == 2 else 'a side failed, see its trace1 log'}")
+if len(tr) == 2:
+    print(f"{'per-layer metric':<56} {'ref':>12} {'change':>12} {'chg':>8}")
+    for m in full_spec["per_layer"]:
+        name = m["name"]
+        if name not in tr["ref"] or name not in tr["change"]:
+            continue
+        r, c = tr["ref"][name]["value"], tr["change"][name]["value"]
+        rel = f"{(c - r) / r:+.1%}" if r else "-"
+        print(f"{name:<56} {r:>12.5g} {c:>12.5g} {rel:>8}")
 EOF

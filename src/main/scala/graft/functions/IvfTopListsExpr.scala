@@ -27,6 +27,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * the whole index relation becomes ONE narrow projection over the
   * corpus scan.
   *
+  * The arithmetic lives once, in [[IvfTopListsExpr.topLists]]: the
+  * interpreted path, the generated code (one call, the state passed as
+  * reference objects) and the persisted search's driver probe stage
+  * all call it.
+  *
   * Arithmetic contract (gate-hash compatible with the relational form
   * and the DuckDB oracle — every operation mirrors the Column chain
   * `round(dot(v, cv) / (sqrt(dot(v, v)) * sqrt(cn)), 6)`):
@@ -75,8 +80,36 @@ case class IvfTopListsExpr(
     out
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    new GenericArrayData(IvfTopListsExpr.topLists(
+      input.asInstanceOf[ArrayData], cents, sqrtCn, ids, g))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val centsRef = ctx.addReferenceObj("ivfCents", cents, "double[][]")
+    val idsRef = ctx.addReferenceObj("ivfIds", ids, "long[]")
+    val sqRef = ctx.addReferenceObj("ivfSqrtCn", sqrtCn, "double[]")
+    nullSafeCodeGen(ctx, ev, v =>
+      s"""${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
+         |  graft.functions.IvfTopListsExpr.topLists(
+         |    $v, $centsRef, $sqRef, $idsRef, $g));""".stripMargin)
+  }
+
+  override protected def withNewChildInternal(
+      newChild: Expression): IvfTopListsExpr = copy(child = newChild)
+}
+
+object IvfTopListsExpr {
+  def col(v: Column, cents: Array[Array[Double]], ids: Array[Long],
+      g: Int): Column =
+    GraftBridge.column(
+      IvfTopListsExpr(GraftBridge.expression(v), cents, ids, g))
+
+  /** The kernel, shared by the interpreted and the generated path and
+    * by the persisted search's driver probe stage: the ids of the `g`
+    * nearest of `cents` to `v` under the arithmetic contract above.
+    * `sqrtCn(c)` is sqrt of centroid c's self-dot, `ids` ascending. */
+  def topLists(v: ArrayData, cents: Array[Array[Double]],
+      sqrtCn: Array[Double], ids: Array[Long], g: Int): Array[Long] = {
     val nv = v.numElements()
     var vn = 0.0
     var d = 0
@@ -97,7 +130,7 @@ case class IvfTopListsExpr(
       if (div == 0.0) throw new ArithmeticException(
         "[DIVIDE_BY_ZERO] zero-magnitude vector or centroid in IVF " +
           "coarse assignment (the relational form fails the same way)")
-      cos(c) = IvfTopListsExpr.round6(dot / div)
+      cos(c) = round6(dot / div)
       c += 1
     }
     val k = java.lang.Math.min(g, n)
@@ -105,113 +138,19 @@ case class IvfTopListsExpr(
     val taken = new Array[Boolean](n)
     var r = 0
     while (r < k) {
+      // strict greater-than keeps the earlier (smaller) id on ties
       var bi = -1
       var ci = 0
       while (ci < n) {
-        if (!taken(ci) &&
-          (bi < 0 || IvfTopListsExpr.nanSafeGt(cos(ci), cos(bi)))) bi = ci
+        if (!taken(ci) && (bi < 0 || nanSafeGt(cos(ci), cos(bi)))) bi = ci
         ci += 1
       }
       taken(bi) = true
       out(r) = ids(bi)
       r += 1
     }
-    new GenericArrayData(out)
+    out
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val centsRef = ctx.addReferenceObj("ivfCents", cents, "double[][]")
-    val idsRef = ctx.addReferenceObj("ivfIds", ids, "long[]")
-    val sqRef = ctx.addReferenceObj("ivfSqrtCn", sqrtCn, "double[]")
-    val n = cents.length
-    nullSafeCodeGen(ctx, ev, v => {
-      val vn = ctx.freshName("vn")
-      val nv = ctx.freshName("nv")
-      val sqn = ctx.freshName("sqn")
-      val cos = ctx.freshName("cos")
-      val c = ctx.freshName("c")
-      val i = ctx.freshName("i")
-      val lim = ctx.freshName("lim")
-      val dot = ctx.freshName("dot")
-      val t = ctx.freshName("t")
-      val x = ctx.freshName("x")
-      val cv = ctx.freshName("cv")
-      val out = ctx.freshName("out")
-      val taken = ctx.freshName("taken")
-      val r = ctx.freshName("r")
-      val bi = ctx.freshName("bi")
-      val ci = ctx.freshName("ci")
-      val k = ctx.freshName("k")
-      val better = ctx.freshName("better")
-      val a = ctx.freshName("a")
-      val b = ctx.freshName("b")
-      s"""
-         |int $nv = $v.numElements();
-         |double $vn = 0.0;
-         |for (int $i = 0; $i < $nv; $i++) {
-         |  double $x = $v.getDouble($i);
-         |  $vn += $x * $x;
-         |}
-         |double $sqn = java.lang.Math.sqrt($vn);
-         |double[] $cos = new double[$n];
-         |for (int $c = 0; $c < $n; $c++) {
-         |  double[] $cv = $centsRef[$c];
-         |  int $lim = java.lang.Math.min($nv, $cv.length);
-         |  double $dot = 0.0;
-         |  for (int $i = 0; $i < $lim; $i++) {
-         |    $dot += $v.getDouble($i) * $cv[$i];
-         |  }
-         |  double ${t}_div = $sqn * $sqRef[$c];
-         |  if (${t}_div == 0.0) {
-         |    throw new ArithmeticException(
-         |      "[DIVIDE_BY_ZERO] zero-magnitude vector or centroid in IVF " +
-         |      "coarse assignment (the relational form fails the same way)");
-         |  }
-         |  double $t = $dot / ${t}_div;
-         |  // Spark Round(_, 6) double semantics verbatim
-         |  if (Double.isNaN($t) || Double.isInfinite($t)) { $cos[$c] = $t; }
-         |  else {
-         |    $cos[$c] = java.math.BigDecimal.valueOf($t)
-         |      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue();
-         |  }
-         |}
-         |int $k = java.lang.Math.min($g, $n);
-         |long[] $out = new long[$k];
-         |boolean[] $taken = new boolean[$n];
-         |for (int $r = 0; $r < $k; $r++) {
-         |  int $bi = -1;
-         |  for (int $ci = 0; $ci < $n; $ci++) {
-         |    if ($taken[$ci]) continue;
-         |    boolean $better;
-         |    if ($bi < 0) { $better = true; }
-         |    else {
-         |      double $a = $cos[$ci];
-         |      double $b = $cos[$bi];
-         |      // nan-safe strict greater-than (NaN biggest, NaN == NaN);
-         |      // strict keeps the earlier (smaller) id on ties
-         |      if (Double.isNaN($a)) { $better = !Double.isNaN($b); }
-         |      else if (Double.isNaN($b)) { $better = false; }
-         |      else { $better = $a > $b; }
-         |    }
-         |    if ($better) { $bi = $ci; }
-         |  }
-         |  $taken[$bi] = true;
-         |  $out[$r] = $idsRef[$bi];
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): IvfTopListsExpr = copy(child = newChild)
-}
-
-object IvfTopListsExpr {
-  def col(v: Column, cents: Array[Array[Double]], ids: Array[Long],
-      g: Int): Column =
-    GraftBridge.column(
-      IvfTopListsExpr(GraftBridge.expression(v), cents, ids, g))
 
   /** Spark `Round(_, 6)` on a double, verbatim (RoundBase semantics:
     * NaN/Infinity pass through; scala BigDecimal(double) is

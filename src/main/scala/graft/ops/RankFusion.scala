@@ -195,7 +195,11 @@ object RankFusion {
     * neither the corpus text nor the corpus embeddings are ever read.
     * Legs are pinned equal to their in-plan forms by their own gates,
     * so this composition shares the in-plan hybrid's oracle
-    * (q_hybrid_persisted). */
+    * (q_hybrid_persisted). The semantic leg builds its query stage on
+    * the driver (probes and ADC lookup tables from the cached index
+    * metadata, see [[graft.similarity.Similarity.ivfPqSearchPersistedQ]]):
+    * `queryEmbeddings` is collected once, and the leg adds one codes
+    * scan and its top-k to the fused plan. */
   /** `rerankR` > 0 upgrades the semantic leg to the exact-refine
     * serving path ([[graft.similarity.Similarity.ivfPqRerankPersistedQ]]
     * — requires an index written with `storeVecs = true`): the leg's

@@ -474,10 +474,11 @@ object Similarity {
   }
 
   /** Slice a (centroid_id, v) relation into per-subspace codebook rows
-    * (sub, centroid_id, cs, cn) — the ONE copy of the subspace split,
-    * shared by the in-plan path ([[pqCodebooks]]) and the persisted
-    * index's `book` relation so their arithmetic can never diverge. */
-  private def subspaceBooks(
+    * (sub, centroid_id, cs, cn) — the ONE relational copy of the
+    * subspace split, used by the in-plan path ([[pqCodebooks]]); the
+    * persisted search's driver stage ([[persistedProbeLuts]]) splits the
+    * cached `book` rows the same way and is pinned bit-equal to it. */
+  private[graft] def subspaceBooks(
       centRows: DataFrame, m: Int, subDim: Int): DataFrame = {
     val spark = centRows.sparkSession
     centRows
@@ -1110,8 +1111,9 @@ object Similarity {
 
   /** The persisted coarse-centroid relation, served from the driver
     * metadata cache ([[graft.ops.ServingCache]]): collected once per
-    * (dir, lifecycle fingerprint), rebuilt as a local relation per call
-    * — a repeat search pays a directory listing, not a parquet job.
+    * (dir, lifecycle fingerprint) and read in place by the search's
+    * driver query stage ([[persistedProbeLuts]]) — a repeat search
+    * pays a directory listing, not a parquet job.
     * Metadata-sized by construction (nlists rows). */
   private def centRowsCached(
       spark: SparkSession,
@@ -1123,12 +1125,8 @@ object Similarity {
           .toIndexedSeq
       }
 
-  private def centsCached(spark: SparkSession, indexDir: String): DataFrame =
-    spark.createDataFrame(centRowsCached(spark, indexDir))
-      .toDF("list_id", "cv", "cn")
-
   /** The persisted PQ codebook rows from the driver metadata cache —
-    * same contract as [[centsCached]]; the collect is bounded by the
+    * same contract as [[centRowsCached]]; the collect is bounded by the
     * same 16M-cell require as [[ivfPqAppendIndex]]'s. */
   private def bookRowsCached(
       spark: SparkSession,
@@ -1137,12 +1135,6 @@ object Similarity {
       graft.ops.ParquetIO.read(spark, Seq(s"$indexDir/book")).collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1))).toIndexedSeq
     }
-
-  /** [[bookRowsCached]] as the (centroid_id, v) relation the LUT build
-    * consumes. */
-  private def bookDfCached(spark: SparkSession, indexDir: String): DataFrame =
-    spark.createDataFrame(bookRowsCached(spark, indexDir))
-      .toDF("centroid_id", "v")
 
   /** Build the FULLY-TRAINED persisted index — [[ivfPqWriteIndex]]'s
     * layout (codes clustered by list_id + metadata centroid/codebook
@@ -1354,11 +1346,12 @@ object Similarity {
     * [[ivfPqWriteIndexTrained]]): identical results (same probes, same
     * LUTs, same ADC arithmetic — SimilaritySpec pins equality), but
     * every index relation comes from `dir`: the coarse centroids and PQ
-    * codebook are metadata-sized parquet reads, and the corpus-scale
-    * codes relation is filtered to the UNION of probed lists — a
-    * predicate the scan itself prunes with (the probed-list set is
-    * driver-collected to build the pushed-down IN: nQueries × nprobe
-    * longs, the same query-scale bound as the broadcast LUT table).
+    * codebook are metadata-sized reads held in the driver cache, and
+    * the corpus-scale codes relation is filtered to the UNION of probed
+    * lists — a predicate the scan itself prunes with. The query stage
+    * (probes and ADC lookup tables) runs on the driver
+    * ([[ivfPqScoredPersistedQ]]), so a call is one collect of the query
+    * vectors plus one codes-scan job and its top-k.
     * `embeddings` supplies ONLY the query vectors (vec_id < nQueries, a
     * pushed-down filter) — search cost is independent of corpus size
     * except for the pruned codes scan, which is the whole point.
@@ -1379,8 +1372,8 @@ object Similarity {
       nprobe: Int = 2): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
     adcTopK(ivfPqScoredPersistedQ(
-      spark, indexDir, prefixQueries(embeddings, nQueries), m, dims,
-      centroidMod, nprobe, excludeSelf = true), k)
+      spark, indexDir, queryRows(prefixQueries(embeddings, nQueries)), m,
+      dims, centroidMod, nprobe, excludeSelf = true), k)
   }
 
   /** [[ivfPqSearchPersisted]] serving a STANDALONE query relation — the
@@ -1389,7 +1382,11 @@ object Similarity {
     * corpus the index was built from. Identical probes/LUT/ADC
     * arithmetic (gate q_ivfpq_persisted_q pins it equal to the
     * vec_id-prefix form on the same fixture); what changes is only
-    * where the query vectors come from.
+    * where the query vectors come from. `queries` is evaluated ONCE:
+    * its quantized rows are collected (nQueries × dims doubles) and the
+    * driver query stage of [[ivfPqScoredPersistedQ]] builds the probes
+    * and lookup tables from them. A null `query_id`, a repeated
+    * `query_id` or a null embedding fails the call, naming the row.
     *
     * `excludeSelf` controls the fixture-era self-exclusion: the default
     * `false` is the FAISS contract (an indexed vector identical to the
@@ -1410,8 +1407,8 @@ object Similarity {
       excludeSelf: Boolean = false): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
     adcTopK(ivfPqScoredPersistedQ(
-      spark, indexDir, quantQueries(queries), m, dims, centroidMod,
-      nprobe, excludeSelf), k)
+      spark, indexDir, queryRows(quantQueries(queries)), m, dims,
+      centroidMod, nprobe, excludeSelf), k)
   }
 
   /** [[ivfPqSearchPersistedQ]] for LITERAL query vectors (id, values) —
@@ -1457,8 +1454,11 @@ object Similarity {
     * in lockstep); fails loudly otherwise. Scale shape: the candidate
     * relation (nQueries × rerankR rows) is the SAME query-scale driver
     * bound as the probed-list IN; the vecs scan reads ≈ the candidates'
-    * rows; the corpus is never shuffled. Output schema matches
-    * [[ivfPqRerank]]: (query_id, neighbor_id, rank, cos_sim). */
+    * rows; the corpus is never shuffled. The query rows are collected
+    * once and serve both stages: the ADC stage's driver probes and
+    * lookup tables, and the exact stage's broadcast (query_id, qv, qn)
+    * relation — `queries` is evaluated once per call. Output schema
+    * matches [[ivfPqRerank]]: (query_id, neighbor_id, rank, cos_sim). */
   def ivfPqRerankPersistedQ(
       spark: SparkSession,
       indexDir: String,
@@ -1476,7 +1476,7 @@ object Similarity {
     require(Index.has(spark, root, "vecs"),
       s"no raw-vector relation at $root/vecs - write the index with " +
         "storeVecs = true to enable the exact re-rank stage")
-    val qv = quantQueries(queries)
+    val qv = queryRows(quantQueries(queries))
     val cand = adcTopK(ivfPqScoredPersistedQ(spark, indexDir, qv, m, dims,
       centroidMod, nprobe, excludeSelf), rerankR)
       .select(col("query_id"), col("neighbor_id"))
@@ -1502,8 +1502,9 @@ object Similarity {
         graft.ops.Layout.chunkedIn(spark, vecsTable, "vec_id", candIds)
       else
         graft.ops.Layout.rangeCoverScan(spark, vecsTable, "vec_id", candIds)
-    val qn = broadcast(qv
-      .select(col("query_id"), col("v").as("qv"))
+    val qn = broadcast(spark.createDataFrame(
+      qv.map { case (id, v) => (id, v.toSeq) })
+      .toDF("query_id", "qv")
       .withColumn("qn", dot(col("qv"), col("qv"))))
     val exact = vecs
       .select(col("vec_id").as("neighbor_id"), col("v").as("cv"))
@@ -1528,42 +1529,51 @@ object Similarity {
       centroidMod: Int,
       nprobe: Int): DataFrame =
     ivfPqScoredPersistedQ(spark, indexDir,
-      prefixQueries(embeddings, nQueries), m, dims, centroidMod, nprobe,
-      excludeSelf = true)
+      queryRows(prefixQueries(embeddings, nQueries)), m, dims, centroidMod,
+      nprobe, excludeSelf = true)
 
-  /** The ONE copy of the persisted-index candidate scan, over an
-    * explicit (query_id, v) query relation. Index rows come from the
-    * lifecycle reader ([[graft.ops.Layout.clusteredTable]]), so
-    * tombstoned neighbors ([[ivfPqDeleteIndex]]) are masked, and the
-    * probed-list predicate is CHUNKED to the session's parquet
-    * IN-pushdown threshold: above
+  /** The ONE copy of the persisted-index candidate scan, over
+    * collected (query_id, v) query rows ([[queryRows]]).
+    *
+    * The query stage runs on the driver ([[persistedProbeLuts]]): the
+    * coarse centroids and the PQ codebook already sit in the driver
+    * metadata cache, and probes (nQueries × nprobe) and lookup tables
+    * (nQueries × m × ksub cells per probe) are query-scale — the same
+    * cells the broadcast probe/LUT relation always materialized on the
+    * driver — so they reach the scan as ONE broadcast local relation
+    * (query_id, list_id, luts), and the call runs no job before the
+    * codes scan.
+    *
+    * Index rows come from the lifecycle reader
+    * ([[graft.ops.Layout.clusteredTable]]), so tombstoned neighbors
+    * ([[ivfPqDeleteIndex]]) are masked, and the probed-list predicate is
+    * CHUNKED to the session's parquet IN-pushdown threshold: above
     * `spark.sql.parquet.pushdown.inFilterThreshold` values Spark
     * silently degrades a pushed In to a [min,max] range — which
     * un-prunes the scan exactly when a workload probes many lists — so
     * the scan is a union of ≤-threshold-sized In reads over the SORTED
     * probed lists (each chunk a contiguous list range, so its row-group
     * pruning stays tight). PlanSpec pins both the pushed In and the
-    * above-threshold chunking. */
+    * above-threshold chunking, and the plan's shape: one exchange (the
+    * top-k's), a local-relation broadcast side. */
   private[graft] def ivfPqScoredPersistedQ(
       spark: SparkSession,
       indexDir: String,
-      qv: DataFrame,
+      queries: Seq[(Long, Array[Double])],
       m: Int,
       dims: Int,
       centroidMod: Int,
       nprobe: Int,
       excludeSelf: Boolean): DataFrame = {
     require(dims % m == 0, s"dims=$dims not divisible by m=$m")
-    val subDim = dims / m
     val root = indexRoot(spark, indexDir)
-    val cents = centsCached(spark, root)
-    val probes = ivfProbesQ(qv, cents, nprobe)
-    // the probed-list UNION, driver-collected: nQueries × nprobe longs.
-    // isInCollection emits an In predicate the parquet source accepts,
-    // so row groups whose [min,max] list range misses every probed list
-    // are dropped at the scan — bytes read ≈ probed fraction.
-    val probedLists = probes.select("list_id").distinct()
-      .collect().map(_.getLong(0)).toIndexedSeq.sorted
+    val probeLut = persistedProbeLuts(queries, centRowsCached(spark, root),
+      bookRowsCached(spark, root), m, dims / m, centroidMod, nprobe)
+    // the probed-list UNION: nQueries × nprobe longs. isInCollection
+    // emits an In predicate the parquet source accepts, so row groups
+    // whose [min,max] list range misses every probed list are dropped
+    // at the scan — bytes read ≈ probed fraction.
+    val probedLists = probeLut.map(_._2).distinct.sorted
     require(probedLists.nonEmpty,
       "no probed lists - is the query relation empty?")
     // plan-size bound (r19): the chunked IN is exact at the scan but
@@ -1584,14 +1594,9 @@ object Similarity {
       else
         graft.ops.Layout.rangeCoverScan(spark, table, "list_id",
           probedLists)
-    val books = subspaceBooks(bookDfCached(spark, root), m, subDim)
-    // LUT side broadcast-hinted (r22): query-scale both sides, but the
-    // planner's estimates fall back to a sort-merge join of two tiny
-    // relations inside a subtree that is broadcast anyway
-    val probeLut = probes
-      .join(broadcast(adcLutFrom(qv, books, m, subDim, centroidMod)),
-        "query_id")
-    val joined = index.join(broadcast(probeLut), Seq("list_id"))
+    val lut = spark.createDataFrame(probeLut)
+      .toDF("query_id", "list_id", "luts")
+    val joined = index.join(broadcast(lut), Seq("list_id"))
     val kept =
       if (excludeSelf) joined.where(col("neighbor_id") =!= col("query_id"))
       else joined
@@ -1985,6 +1990,83 @@ object Similarity {
     queries.select(col("query_id").cast("long").as("query_id"),
       quantize(col("embedding")).as("v"))
 
+  /** A (query_id, v) query relation collected to the driver — the
+    * persisted search's ONE evaluation of the caller's queries
+    * (nQueries × dims doubles, query-scale). Fails loudly, naming the
+    * row, on inputs the relational query stage answered silently: a
+    * repeated query_id (its queries' candidates merged into ONE top-k)
+    * and a null embedding (neighbors ranked with a null adc_dist). */
+  private def queryRows(qv: DataFrame): IndexedSeq[(Long, Array[Double])] = {
+    val seen = scala.collection.mutable.HashSet.empty[Long]
+    qv.select("query_id", "v").collect().toIndexedSeq.map { r =>
+      require(!r.isNullAt(0), "a query row has a null query_id")
+      val id = r.getLong(0)
+      require(!r.isNullAt(1), s"query_id $id has a null embedding")
+      require(seen.add(id),
+        s"query_id $id appears more than once in the query relation")
+      (id, r.getSeq[Double](1).toArray)
+    }
+  }
+
+  /** The persisted search's query stage, on the driver: per query, its
+    * `nprobe` probed lists and its ADC lookup tables, as
+    * (query_id, list_id, luts) rows — one per probe, in probe order.
+    *
+    * Bit-equal to the relational stage (`ivfProbesQ` + `adcLutFrom` +
+    * `lutFold` over the same cents and book; PropertySpec pins it)
+    * because no arithmetic is written twice:
+    *  - probes are [[graft.functions.IvfTopListsExpr.topLists]], the
+    *    coarse-assignment kernel pinned equal to the relational probe
+    *    form, fed the stored `cn` (sqrt taken as Spark's `sqrt`);
+    *  - every dot is [[graft.functions.DotProductExpr.dot]] over Spark
+    *    `slice` semantics (a short query dots the common prefix), and a
+    *    LUT cell is `(vn − 2·dot(vs, cs)) + cn` in that order;
+    *  - the fold is `lutFold`'s: ci = `(centroid_id / centroidMod)` as a
+    *    double division cast to int, cells ordered by (ci, pd) under
+    *    Spark's double ordering, subspaces in order.
+    * Driver footprint: nQueries × nprobe rows of m × ksub doubles — the
+    * cells the broadcast probe/LUT relation holds. `cents` and `book`
+    * are the cached metadata rows, in any order. */
+  private[graft] def persistedProbeLuts(
+      queries: Seq[(Long, Array[Double])],
+      cents: Seq[(Long, Seq[Double], Double)],
+      book: Seq[(Long, Seq[Double])],
+      m: Int,
+      subDim: Int,
+      centroidMod: Int,
+      nprobe: Int): IndexedSeq[(Long, Long, Seq[Seq[Double]])] = {
+    import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
+    import graft.functions.{DotProductExpr, IvfTopListsExpr}
+    val byId = cents.sortBy(_._1)
+    val ids = byId.map(_._1).toArray
+    val cvs = byId.map(_._2.toArray).toArray
+    val sqrtCn = byId.map(c => math.sqrt(c._3)).toArray
+    // Spark `slice(v, s·subDim + 1, subDim)`: clamped, empty past the end
+    def sub(v: Array[Double], s: Int): ArrayData =
+      ArrayData.toArrayData(v.slice(s * subDim, s * subDim + subDim))
+    // subspaceBooks per subspace: (ci, cs, cn)
+    val books = Array.tabulate(m) { s =>
+      book.map { case (cid, bv) =>
+        val cs = sub(bv.toArray, s)
+        ((cid.toDouble / centroidMod).toInt, cs, DotProductExpr.dot(cs, cs))
+      }.toArray
+    }
+    val byCiPd: ((Int, Double), (Int, Double)) => Boolean = (a, b) =>
+      if (a._1 != b._1) a._1 < b._1
+      else SQLOrderingUtil.compareDoubles(a._2, b._2) < 0
+    queries.toIndexedSeq.flatMap { case (qid, v) =>
+      val luts = Vector.tabulate(m) { s =>
+        val vs = sub(v, s)
+        val vn = DotProductExpr.dot(vs, vs)
+        books(s).map { case (ci, cs, cn) =>
+          (ci, (vn - 2.0 * DotProductExpr.dot(vs, cs)) + cn)
+        }.sortWith(byCiPd).map(_._2).toSeq
+      }
+      IvfTopListsExpr.topLists(ArrayData.toArrayData(v), cvs, sqrtCn, ids,
+        nprobe).map(list => (qid, list, luts))
+    }
+  }
+
   /** nprobe nearest coarse lists per query (query_id, list_id) — the
     * ONE copy of the probe-selection contract: the same rounded-cosine
     * + (cos desc, list_id) tie-break arithmetic as [[ivfAssign]], kept
@@ -2188,10 +2270,10 @@ object Similarity {
       m, dims / m, centroidMod)
 
   /** Per-query LUTs from explicit (query_id, v) and codebook relations —
-    * the ONE copy of the LUT join, shared by the in-plan builder above
-    * and the persisted-index search (whose codebook comes from
-    * `dir/book`, not a corpus re-scan). */
-  private def adcLutFrom(
+    * the ONE copy of the relational LUT join, used by the in-plan
+    * builders; the persisted search's driver stage
+    * ([[persistedProbeLuts]]) is pinned bit-equal to it. */
+  private[graft] def adcLutFrom(
       queries: DataFrame,
       books: DataFrame,
       m: Int,

@@ -303,6 +303,74 @@ class PlanSpec extends SparkSpec {
     assert(scored.count() > 0)
   }
 
+  test("persisted IVF+PQ search plans the query stage on the driver: " +
+    "one exchange (the top-k's), a local-relation broadcast side, no " +
+    "window or aggregate below the join, the caller's queries absent") {
+    import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec}
+    import org.apache.spark.sql.execution.window.WindowExecBase
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val big = spark.range(60L).select(col("id").as("vec_id"),
+      transform(sequence(lit(0), lit(3)),
+        d => (((col("id") * 13 + d * 11) % 29) + (col("id") % 5) + 1)
+          .cast("float"))
+        .as("embedding"))
+    val dir = java.nio.file.Files.createTempDirectory("planspec_qstage").toString
+    graft.similarity.Similarity.ivfPqWriteIndex(big, s"$dir/index",
+      numFiles = 3, m = 2, dims = 4, centroidMod = 7, coarseMod = 20)
+    big.where(col("vec_id") < 5)
+      .select(col("vec_id").as("query_id"), col("embedding"))
+      .write.parquet(s"$dir/callers_queries")
+    val out = graft.similarity.Similarity.ivfPqSearchPersistedQ(spark,
+      s"$dir/index", spark.read.parquet(s"$dir/callers_queries"), k = 3,
+      m = 2, dims = 4, centroidMod = 7, nprobe = 2)
+    assert(out.collect().length == 15)
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case o => o +: o.children.flatMap(nodes)
+    }
+    val plan = out.queryExecution.executedPlan
+    val all = nodes(plan)
+    assert(all.count(_.isInstanceOf[ShuffleExchangeExec]) == 1,
+      s"expected exactly the top-k exchange:\n$plan")
+    val joins = all.collect { case j: BroadcastHashJoinExec => j }
+    assert(joins.length == 1, s"expected one broadcast join:\n$plan")
+    val below = nodes(joins.head)
+    assert(!below.exists(n => n.isInstanceOf[WindowExecBase] ||
+      n.isInstanceOf[BaseAggregateExec]),
+      s"window or aggregate below the scan join:\n$plan")
+    val build = nodes(joins.head.buildSide match {
+      case BuildLeft => joins.head.left
+      case BuildRight => joins.head.right
+    })
+    assert(build.exists(_.isInstanceOf[LocalTableScanExec]) &&
+      !build.exists(_.isInstanceOf[FileSourceScanExec]),
+      s"broadcast side is not a local relation:\n$plan")
+    assert(!plan.toString.contains("callers_queries"),
+      s"the caller's query plan is re-planned in the search:\n$plan")
+  }
+
+  test("ivf_top_lists compiles to ONE call of the shared kernel " +
+    "(no interpreted fallback)") {
+    import org.apache.spark.sql.execution.debug.codegenString
+    val key = "spark.sql.codegen.fallback"
+    val prior = spark.conf.get(key, "true")
+    try {
+      spark.conf.set(key, "false")
+      val df = spark.range(8L).select(graft.functions.IvfTopListsExpr.col(
+        array(col("id").cast("double") + 2.0, lit(2.0)),
+        Array(Array(1.0, 0.0), Array(0.0, 1.0)), Array(3L, 5L), 2)
+        .as("lists"))
+      val code = codegenString(df.queryExecution.executedPlan)
+      assert(code.contains("graft.functions.IvfTopListsExpr.topLists("),
+        s"generated code does not call the kernel:\n$code")
+      assert(df.collect().map(_.getSeq[Long](0)).forall(_ == Seq(3L, 5L)))
+    } finally spark.conf.set(key, prior)
+  }
+
   test("persisted search CHUNKS the probed-list IN above the session's " +
     "pushdown threshold: every scan keeps a pushed In and reads stay at " +
     "the probed fraction (no silent [min,max] degradation)") {

@@ -1084,4 +1084,43 @@ class PqSpec extends SparkSpec {
     assert(got == search(rebuildDir),
       "append after an absent-id delete diverged from the rebuild")
   }
+
+  /** ANN search of literal (query_id, embedding) rows over a small
+    * trained persisted index, k = 3. */
+  private lazy val badQueryIndex = {
+    val dir = java.nio.file.Files.createTempDirectory("ivfpqbad").toString
+    Similarity.ivfPqWriteIndexTrained(bigWithDup, s"$dir/index",
+      numFiles = 2, m = 2, dims = 4, ksub = 4, nlists = 3, iters = 1,
+      trainMod = 3)
+    s"$dir/index"
+  }
+  private def searchRows(rows: (Long, Seq[Float])*) =
+    Similarity.ivfPqSearchPersistedQ(spark, badQueryIndex,
+      spark.createDataFrame(rows).toDF("query_id", "embedding"), k = 3,
+      m = 2, dims = 4, centroidMod = 1, nprobe = 2).collect()
+
+  test("persisted search rejects a repeated query_id by name") {
+    // two queries under one id used to come back as ONE merged top-3
+    val e = intercept[IllegalArgumentException](searchRows(
+      (0L, Seq(1f, 2f, 3f, 4f)), (0L, Seq(4f, 3f, 2f, 1f))))
+    assert(e.getMessage.contains("query_id 0 appears more than once"),
+      e.getMessage)
+  }
+
+  test("persisted search rejects a null query embedding by name") {
+    // a null embedding used to rank 3 neighbors with adc_dist = null
+    val e = intercept[IllegalArgumentException](searchRows(
+      (5L, Seq(1f, 2f, 3f, 4f)), (7L, null)))
+    assert(e.getMessage.contains("query_id 7 has a null embedding"),
+      e.getMessage)
+    assert(searchRows((5L, Seq(1f, 2f, 3f, 4f))).length == 3)
+  }
+
+  test("persisted search of a zero-magnitude query fails with " +
+    "DIVIDE_BY_ZERO") {
+    val e = intercept[Throwable](searchRows((3L, Seq(0f, 0f, 0f, 0f))))
+    val messages = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString(" | ")
+    assert(messages.contains("DIVIDE_BY_ZERO"), messages)
+  }
 }

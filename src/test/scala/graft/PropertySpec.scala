@@ -455,4 +455,117 @@ class PropertySpec extends SparkSpec {
     assert(named.collect().map(r => (r.getInt(1), r.getInt(3))).toSet ==
       Set((9, 1), (7, 1)))
   }
+
+  test("property: the persisted search's driver query stage equals the " +
+    "relational probes + LUT fold bit for bit") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    import org.scalacheck.rng.Seed
+    import graft.similarity.Similarity
+    type Cents = Seq[(Long, Seq[Double], Double)]
+    type Book = Seq[(Long, Seq[Double])]
+    // the index-order self-dot the writers persist as cn
+    def selfDot(v: Seq[Double]) = v.foldLeft(0.0)((acc, x) => acc + x * x)
+    def bits(luts: collection.Seq[collection.Seq[Double]]): Seq[Seq[Long]] =
+      luts.map(_.map(java.lang.Double.doubleToRawLongBits).toList).toList
+    def driver(qs: Seq[(Long, Seq[Double])], cents: Cents, book: Book,
+        m: Int, subDim: Int, cmod: Int, nprobe: Int) =
+      Similarity.persistedProbeLuts(qs.map { case (i, v) => (i, v.toArray) },
+        cents, book, m, subDim, cmod, nprobe)
+        .map { case (q, l, luts) => (q, l, bits(luts)) }
+    def relational(qs: Seq[(Long, Seq[Double])], cents: Cents, book: Book,
+        m: Int, subDim: Int, cmod: Int, nprobe: Int) = {
+      val qv = spark.createDataFrame(qs).toDF("query_id", "v")
+      val books = Similarity.subspaceBooks(
+        spark.createDataFrame(book).toDF("centroid_id", "v"), m, subDim)
+      Similarity.ivfProbesQ(qv,
+          spark.createDataFrame(cents).toDF("list_id", "cv", "cn"), nprobe)
+        .join(Similarity.adcLutFrom(qv, books, m, subDim, cmod), "query_id")
+        .select("query_id", "list_id", "luts").collect()
+        .map(r => (r.getLong(0), r.getLong(1),
+          bits(r.getSeq[collection.Seq[Double]](2))))
+        .toSeq
+    }
+    def same(d: Seq[(Long, Long, Seq[Seq[Long]])],
+        r: Seq[(Long, Long, Seq[Seq[Long]])]) =
+      d.length == r.length && d.toSet == r.toSet
+
+    // integer-valued coordinates: small, or >= 2^27 where products and
+    // sums stop being exact and the LUT's operation order shows
+    def coord(big: Boolean): Gen[Double] =
+      if (big) Gen.zip(Gen.choose(1L << 27, 1L << 29), Gen.oneOf(-1.0, 1.0))
+        .map { case (x, sg) => sg * x }
+      else Gen.choose(-9, 9).map(_.toDouble)
+    def vec(n: Int, big: Boolean): Gen[Seq[Double]] =
+      Gen.listOfN(n, coord(big)).map { v =>
+        if (v.forall(_ == 0.0)) 1.0 +: v.tail else v
+      }
+    val caseGen = for {
+      m <- Gen.choose(1, 3)
+      subDim <- Gen.choose(1, 3)
+      dims = m * subDim
+      big <- Gen.oneOf(false, true)
+      cmod <- Gen.oneOf(1, 97)
+      nlists <- Gen.choose(1, 5)
+      listIds <- Gen.pick(nlists, 0L until 40L)
+      base <- Gen.listOfN(nlists, vec(dims, big))
+      // a list may repeat an earlier one's direction (x2 is exact):
+      // a cosine tie the (cos desc, list_id) order must break
+      twins <- Gen.listOfN(nlists, Gen.oneOf(false, true))
+      ksub <- Gen.choose(1, 5)
+      bookVs <- Gen.listOfN(ksub, vec(dims, big))
+      nq <- Gen.choose(1, 4)
+      qLens <- Gen.listOfN(nq, Gen.frequency(4 -> dims, 1 -> (dims - 1)))
+      qVs <- Gen.sequence[List[Seq[Double]], Seq[Double]](
+        qLens.map(n => vec(math.max(1, n), big)))
+      nprobe <- Gen.choose(1, nlists + 1)
+    } yield {
+      val cvs = base.indices.map { i =>
+        if (i > 0 && twins(i)) base(i - 1).map(_ * 2) else base(i)
+      }
+      // metadata rows arrive in parquet order, not id order
+      val cents = listIds.toSeq.zip(cvs).map { case (id, cv) =>
+        (id, cv, selfDot(cv)) }.reverse
+      val book = bookVs.zipWithIndex.map { case (v, i) =>
+        (i.toLong * cmod, v) }.reverse
+      val qs = qVs.zipWithIndex.map { case (v, i) => (100L + i, v) }
+      (qs, cents, book, m, subDim, cmod, nprobe)
+    }
+    // no shrinking: shrunk cases could break the generator's invariants
+    // (non-zero vectors, distinct ids)
+    val prop = Prop.forAllNoShrink(caseGen) {
+      case (qs, cents, book, m, subDim, cmod, nprobe) =>
+        same(driver(qs, cents, book, m, subDim, cmod, nprobe),
+          relational(qs, cents, book, m, subDim, cmod, nprobe))
+    }
+    val res = Check.check(Check.Parameters.default
+      .withMinSuccessfulTests(30).withInitialSeed(Seed(5L)), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+
+    // the metadata of a real spill-written index (spillG = 2, trained
+    // book, centroidMod 1), against random queries
+    val dir = java.nio.file.Files.createTempDirectory("propspill").toString
+    val corpus = spark.range(48L).select(col("id").as("vec_id"),
+      transform(sequence(lit(0), lit(3)),
+        d => (((col("id") * 13 + d * 11) % 29) - 14).cast("float"))
+        .as("embedding"))
+    Similarity.ivfPqWriteIndexTrained(corpus, s"$dir/index", numFiles = 2,
+      m = 2, dims = 4, ksub = 4, nlists = 4, iters = 1, trainMod = 3,
+      spillG = 2)
+    val root = Similarity.indexRoot(spark, s"$dir/index")
+    assert(Similarity.spillDegree(spark, root) == 2)
+    val cents = spark.read.parquet(s"$root/cents").collect().toSeq
+      .map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2)))
+    val book = spark.read.parquet(s"$root/book").collect().toSeq
+      .map(r => (r.getLong(0), r.getSeq[Double](1)))
+    val spillProp = Prop.forAllNoShrink(
+        Gen.choose(1, 4).flatMap(n => Gen.listOfN(n, vec(4, big = false))),
+        Gen.choose(1, 4)) { (vs, nprobe) =>
+      val qs = vs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+      same(driver(qs, cents, book, 2, 2, 1, nprobe),
+        relational(qs, cents, book, 2, 2, 1, nprobe))
+    }
+    val spillRes = Check.check(Check.Parameters.default
+      .withMinSuccessfulTests(6).withInitialSeed(Seed(6L)), spillProp)
+    assert(spillRes.passed, org.scalacheck.util.Pretty.pretty(spillRes))
+  }
 }
