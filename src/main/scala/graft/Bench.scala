@@ -104,12 +104,19 @@ object Bench {
     println(line)
     // Also persist the line to a file in the repo so per-query numbers
     // remain recoverable even when the stdout capture truncates
-    // (BENCH_r04/r05 artifacts lost leading bytes of the JSON).
-    try {
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get("BENCH_LAST.json"),
-        (line + "\n").getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
+    // (BENCH_r04/r05 artifacts lost leading bytes of the JSON). A failed
+    // write is loud: stderr, and the compact line names no full map —
+    // else the previous run's numbers stay under the name it points to.
+    val lastWriteError: Option[String] =
+      try {
+        java.nio.file.Files.write(
+          java.nio.file.Paths.get("BENCH_LAST.json"),
+          (line + "\n").getBytes("UTF-8"))
+        None
+      } catch { case scala.util.control.NonFatal(t) =>
+        System.err.println(s"[bench] FAILED writing BENCH_LAST.json: $t")
+        Some(t.getClass.getSimpleName)
+      }
     // A tagged run ALSO lands in a round-stamped file the driver never
     // writes (the driver sets no tag): BENCH_LAST.json gets clobbered
     // in place by the driver's own bench run, which in r14 overwrote
@@ -143,7 +150,9 @@ object Bench {
         s""""queries_shown":${top.size},"queries_total":${results.size},""" +
         s""""build_total":${d3(buildTotal)},"serve_total":${d3(total - buildTotal)},""" +
         s""""error_count":$errCount,""" +
-        s""""queries_full":"BENCH_LAST.json","sf":"$sfDir"}"""
+        lastWriteError.fold("\"queries_full\":\"BENCH_LAST.json\",")(e =>
+          s""""queries_full":null,"queries_full_error":"$e",""") +
+        s""""sf":"$sfDir"}"""
     println(compact)
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       System.out.println(compact)

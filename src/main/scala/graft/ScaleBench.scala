@@ -17,6 +17,24 @@ import graft.profiles.Temporal
   * run manually: sbt "runMain graft.ScaleBench".
   */
 object ScaleBench {
+
+  private val secRe = """"(b\w*_sec)":\s*([-+0-9.eE]+)""".r
+
+  /** Every `"b…_sec": x` entry of a result text, folded to its minimum
+    * per name (a result carries the current run and its `best`). */
+  private[graft] def secMinima(txt: String): Map[String, Double] =
+    secRe.findAllMatchIn(txt).toSeq
+      .groupMapReduce(_.group(1))(_.group(2).toDouble)(math.min)
+
+  /** The [[secMinima]] of the prior artifact at `path`. Only a missing
+    * file means "no prior series" (an empty map); any other failure to
+    * read it propagates, so a run never overwrites — and so erases — a
+    * committed `best` series it could not read. */
+  private[graft] def priorSecMinima(path: java.nio.file.Path): Map[String, Double] =
+    (try Some(new String(java.nio.file.Files.readAllBytes(path), "UTF-8"))
+    catch { case _: java.nio.file.NoSuchFileException => None })
+      .fold(Map.empty[String, Double])(secMinima)
+
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.build(cpus)
@@ -1868,16 +1886,8 @@ object ScaleBench {
     // current run and the series minima, so a re-run extends the series
     // instead of overwriting it (previously folded by hand after each
     // run — one missed fold would have lost the citable minima).
-    val secRe = """"(b\w*_sec)":\s*([-+0-9.eE]+)""".r
-    val prior: Map[String, Double] =
-      try {
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("BENCH_SCALE.json")), "UTF-8")
-        secRe.findAllMatchIn(txt).toSeq
-          .groupMapReduce(_.group(1))(_.group(2).toDouble)(math.min)
-      } catch { case _: Throwable => Map.empty }
-    val current = secRe.findAllMatchIn(json).toSeq
-      .groupMapReduce(_.group(1))(_.group(2).toDouble)(math.min)
+    val prior = priorSecMinima(java.nio.file.Paths.get("BENCH_SCALE.json"))
+    val current = secMinima(json)
     val bestObj = (prior.keySet ++ current.keySet).toSeq.sorted.map { k =>
       val v = math.min(prior.getOrElse(k, Double.MaxValue),
         current.getOrElse(k, Double.MaxValue))

@@ -81,6 +81,18 @@ object ScaleBenchEntries {
     (hits, scanned)
   }
 
+  /** (query_id, list_id) of each query's `nprobe` probed lists, nearest
+    * first — the searches' own driver probe stage
+    * ([[Similarity.probes]]) over the coarse-centroid relation `cents`
+    * (list_id, cv, cn) and the (query_id, v) query relation `qv`. */
+  private def probePairs(
+      qv: DataFrame, cents: DataFrame, nprobe: Int): IndexedSeq[(Long, Long)] = {
+    val cs = Similarity.cents(cents.select("list_id", "cv", "cn").collect()
+      .toSeq.map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2))))
+    Similarity.queryRows(qv).flatMap { case (q, v) =>
+      Similarity.probes(v, cs, nprobe).map(list => (q, list)) }
+  }
+
   // --- B42c: z-order lifecycle under an OPTIMIZE cadence ----------------
   //
   // B42 proves ONE optimize pass. A 100 TB table lives for years: this
@@ -178,9 +190,8 @@ object ScaleBenchEntries {
     require(b43wn == 1000100L, s"B43 index holds $b43wn rows, want 1000100")
     // exact probed-row expectation: the union of probed lists' sizes
     val cents = Similarity.coarseCents(vecs, 997)
-    val probes = Similarity.ivfProbes(vecs, cents, nQueries = 10, nprobe = 4)
-    val probedLists = probes.select("list_id").distinct()
-      .collect().map(_.getLong(0)).toSet
+    val probedLists =
+      probePairs(Similarity.prefixQueries(vecs, 10), cents, 4).map(_._2).toSet
     val probedRows = spark.read.parquet(s"$dir/index/codes/*")
       .groupBy("list_id").count().collect()
       .filter(r => probedLists(r.getLong(0))).map(_.getLong(1)).sum
@@ -249,9 +260,8 @@ object ScaleBenchEntries {
     }
     require(b43twn == 1000100L, s"B43t index holds $b43twn rows, want 1000100")
     val cents = spark.read.parquet(s"$dir/index/cents")
-    val probes = Similarity.ivfProbes(vecs, cents, nQueries = 10, nprobe = 4)
-    val probedLists = probes.select("list_id").distinct()
-      .collect().map(_.getLong(0)).toSet
+    val probedLists =
+      probePairs(Similarity.prefixQueries(vecs, 10), cents, 4).map(_._2).toSet
     val probedRows = spark.read.parquet(s"$dir/index/codes/*")
       .groupBy("list_id").count().collect()
       .filter(r => probedLists(r.getLong(0))).map(_.getLong(1)).sum
@@ -683,9 +693,8 @@ object ScaleBenchEntries {
     var prevRecall = -1.0
     var prevScan = -1L
     val points = Seq(1, 2, 4, 8, 16).map { np =>
-      val probedRows = Similarity.ivfProbes(vecs, cents, 10, np)
-        .select("list_id").distinct().collect().map(_.getLong(0))
-        .map(listCounts.getOrElse(_, 0L)).sum
+      val probedRows = probePairs(Similarity.prefixQueries(vecs, 10), cents, np)
+        .map(_._2).distinct.map(listCounts.getOrElse(_, 0L)).sum
       var hits = 0L
       val (sSec, _) = time {
         val res = Similarity.ivfPqSearchPersisted(spark, s"$dir/index",
@@ -722,8 +731,8 @@ object ScaleBenchEntries {
         rr.length.toLong
       }
       val recallR = hitsR / 100.0
-      val probesOfQ = Similarity.ivfProbes(vecs, cents, 10, np)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val probesOfQ =
+        probePairs(Similarity.prefixQueries(vecs, 10), cents, np).toSet
       val ceiling = exactCosSet.count { case (q, n) =>
         neighborList.get(n).exists(l => probesOfQ((q, l))) } / 100.0
       require(scanned <= 3L * probedRows,
@@ -1175,8 +1184,8 @@ object ScaleBenchEntries {
 
     val cents = spark.read.parquet(s"$dir/index/cents")
     val nprobe = 16
-    val probesOfQ = Similarity.ivfProbes(vecs, cents, 10, nprobe)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val probesOfQ =
+      probePairs(Similarity.prefixQueries(vecs, 10), cents, nprobe).toSet
     // each true neighbor's g assigned lists, read from the index itself
     val cosNeighborIds = exactCosSet.map(_._2).toSeq.sorted
     val neighborLists = graft.ops.Layout.chunkedIn(spark,
@@ -1193,9 +1202,8 @@ object ScaleBenchEntries {
       .where(col("vec_id").isInCollection(cosNeighborIds))
       .select(col("vec_id").as("query_id"),
         Similarity.quantize(col("embedding")).as("v"))
-    val neighborRanked = Similarity.ivfProbesQ(neighborVecs, cents, 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-      .groupBy(_._1).view.mapValues(_.map(_._2).toIndexedSeq).toMap
+    val neighborRanked = probePairs(neighborVecs, cents, 4)
+      .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
     def ceilAt(g: Int): Double = exactCosSet.count { case (q, n) =>
       neighborRanked.getOrElse(n, IndexedSeq.empty).take(g)
         .exists(l => probesOfQ((q, l))) } / 100.0

@@ -29,8 +29,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   *
   * The arithmetic lives once, in [[IvfTopListsExpr.topLists]]: the
   * interpreted path, the generated code (one call, the state passed as
-  * reference objects) and the persisted search's driver probe stage
-  * all call it.
+  * reference objects) and every ADC search's driver probe stage
+  * ([[graft.similarity.Similarity.probes]]) all call it.
   *
   * Arithmetic contract (gate-hash compatible with the relational form
   * and the DuckDB oracle — every operation mirrors the Column chain
@@ -105,7 +105,7 @@ object IvfTopListsExpr {
       IvfTopListsExpr(GraftBridge.expression(v), cents, ids, g))
 
   /** The kernel, shared by the interpreted and the generated path and
-    * by the persisted search's driver probe stage: the ids of the `g`
+    * by the searches' driver probe stage: the ids of the `g`
     * nearest of `cents` to `v` under the arithmetic contract above.
     * `sqrtCn(c)` is sqrt of centroid c's self-dot, `ids` ascending. */
   def topLists(v: ArrayData, cents: Array[Array[Double]],

@@ -18,8 +18,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * codebook is metadata-sized BY CONSTRUCTION (ksub = N/centroidMod,
   * chosen by the caller), so the scalable plan is one NARROW projection
   * with the codebook as a driver-collected reference object and the
-  * argmin as a generated triple loop — no join, no aggregate, no
+  * argmin as one kernel call per row — no join, no aggregate, no
   * shuffle; encode throughput scales with cores.
+  *
+  * The arithmetic lives once, in [[PqEncodeExpr.encode]]: the
+  * interpreted path and the generated code (one call, the state passed
+  * as reference objects) both call it.
   *
   * Arithmetic contract (gate-hash compatible with the relational form
   * and the DuckDB oracle): d² = vn − 2·dot + cn on quantized
@@ -64,79 +68,18 @@ case class PqEncodeExpr(
     out
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val codes = new Array[Long](m)
-    var s = 0
-    while (s < m) {
-      var vn = 0.0
-      var d = 0
-      while (d < subDim) {
-        val x = v.getDouble(s * subDim + d)
-        vn += x * x
-        d += 1
-      }
-      var best = Double.PositiveInfinity
-      var bestId = 0L
-      var c = 0
-      while (c < cents.length) {
-        var dot = 0.0
-        var i = 0
-        while (i < subDim) {
-          dot += v.getDouble(s * subDim + i) * cents(c)(s * subDim + i)
-          i += 1
-        }
-        val d2 = vn - 2.0 * dot + cn(s * cents.length + c)
-        if (d2 < best) { best = d2; bestId = ids(c) }
-        c += 1
-      }
-      codes(s) = bestId
-      s += 1
-    }
-    new GenericArrayData(codes)
-  }
+  override def nullSafeEval(input: Any): Any =
+    new GenericArrayData(PqEncodeExpr.encode(
+      input.asInstanceOf[ArrayData], cents, ids, cn, m, subDim))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val centsRef = ctx.addReferenceObj("pqCents", cents, "double[][]")
     val idsRef = ctx.addReferenceObj("pqIds", ids, "long[]")
     val cnRef = ctx.addReferenceObj("pqCn", cn, "double[]")
-    val ksub = cents.length
-    nullSafeCodeGen(ctx, ev, v => {
-      val codes = ctx.freshName("codes")
-      val s = ctx.freshName("s")
-      val c = ctx.freshName("c")
-      val d = ctx.freshName("d")
-      val vn = ctx.freshName("vn")
-      val dot = ctx.freshName("dot")
-      val d2 = ctx.freshName("d2")
-      val best = ctx.freshName("best")
-      val bestId = ctx.freshName("bestId")
-      val x = ctx.freshName("x")
-      val cc = ctx.freshName("cc")
-      s"""
-         |long[] $codes = new long[$m];
-         |for (int $s = 0; $s < $m; $s++) {
-         |  double $vn = 0.0;
-         |  for (int $d = 0; $d < $subDim; $d++) {
-         |    double $x = $v.getDouble($s * $subDim + $d);
-         |    $vn += $x * $x;
-         |  }
-         |  double $best = Double.POSITIVE_INFINITY;
-         |  long $bestId = 0L;
-         |  for (int $c = 0; $c < $ksub; $c++) {
-         |    double $dot = 0.0;
-         |    double[] $cc = $centsRef[$c];
-         |    for (int $d = 0; $d < $subDim; $d++) {
-         |      $dot += $v.getDouble($s * $subDim + $d) * $cc[$s * $subDim + $d];
-         |    }
-         |    double $d2 = $vn - 2.0 * $dot + $cnRef[$s * $ksub + $c];
-         |    if ($d2 < $best) { $best = $d2; $bestId = $idsRef[$c]; }
-         |  }
-         |  $codes[$s] = $bestId;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($codes);
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, v =>
+      s"""${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
+         |  graft.functions.PqEncodeExpr.encode(
+         |    $v, $centsRef, $idsRef, $cnRef, $m, $subDim));""".stripMargin)
   }
 
   override protected def withNewChildInternal(newChild: Expression): PqEncodeExpr =
@@ -148,4 +91,43 @@ object PqEncodeExpr {
       m: Int, subDim: Int): Column =
     GraftBridge.column(
       PqEncodeExpr(GraftBridge.expression(v), cents, ids, m, subDim))
+
+  /** The kernel, shared by the interpreted and the generated path: per
+    * subspace s, the id of the nearest of `cents` to `v`'s s-th
+    * subvector under the arithmetic contract above. `cn(s·ksub + c)` is
+    * centroid c's subspace-s self-dot, `ids` ascending. */
+  def encode(v: ArrayData, cents: Array[Array[Double]], ids: Array[Long],
+      cn: Array[Double], m: Int, subDim: Int): Array[Long] = {
+    val ksub = cents.length
+    val codes = new Array[Long](m)
+    var s = 0
+    while (s < m) {
+      val off = s * subDim
+      var vn = 0.0
+      var d = 0
+      while (d < subDim) {
+        val x = v.getDouble(off + d)
+        vn += x * x
+        d += 1
+      }
+      var best = Double.PositiveInfinity
+      var bestId = 0L
+      var c = 0
+      while (c < ksub) {
+        val cc = cents(c)
+        var dot = 0.0
+        d = 0
+        while (d < subDim) {
+          dot += v.getDouble(off + d) * cc(off + d)
+          d += 1
+        }
+        val d2 = vn - 2.0 * dot + cn(s * ksub + c)
+        if (d2 < best) { best = d2; bestId = ids(c) }
+        c += 1
+      }
+      codes(s) = bestId
+      s += 1
+    }
+    codes
+  }
 }

@@ -1,8 +1,10 @@
 package graft.similarity
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.{DotProductExpr, IvfTopListsExpr}
 
 /** Similarity search over an embedding column (`Array[Float]`):
   * brute-force cosine top-k as the exact baseline, sign-random-projection
@@ -457,8 +459,9 @@ object Similarity {
 
   /** PQ codebooks: one row per (subspace, centroid) with the centroid's
     * subvector and its squared norm. `dims` must divide into `m` equal
-    * subspaces. Metadata-sized (m × N/centroidMod rows) — always
-    * broadcast. */
+    * subspaces. Metadata-sized (m × N/centroidMod rows). The searches
+    * cut the same cells from their collected codebook on the driver
+    * ([[adcBook]]). */
   def pqCodebooks(
       embeddings: DataFrame,
       m: Int = 8,
@@ -474,10 +477,9 @@ object Similarity {
   }
 
   /** Slice a (centroid_id, v) relation into per-subspace codebook rows
-    * (sub, centroid_id, cs, cn) — the ONE relational copy of the
-    * subspace split, used by the in-plan path ([[pqCodebooks]]); the
-    * persisted search's driver stage ([[persistedProbeLuts]]) splits the
-    * cached `book` rows the same way and is pinned bit-equal to it. */
+    * (sub, centroid_id, cs, cn) — [[pqCodebooks]]' relational form. No
+    * search reads it: every ADC search cuts the same cells from its
+    * collected codebook rows on the driver ([[adcBook]]). */
   private[graft] def subspaceBooks(
       centRows: DataFrame, m: Int, subDim: Int): DataFrame = {
     val spark = centRows.sparkSession
@@ -509,42 +511,61 @@ object Similarity {
       embeddings: DataFrame,
       m: Int = 8,
       dims: Int = 64,
-      centroidMod: Int = 97): DataFrame =
-    embeddings.select(col("vec_id"),
-      pqEncodeCol(embeddings, m, dims, centroidMod).as("codes"))
-
-  /** The [[pqEncode]] codes as a bare Column (the codebook collect +
-    * the [[graft.functions.PqEncodeExpr]] kernel) — split out so
-    * [[ivfPqIndexG]] can compute codes AND coarse list in ONE corpus
-    * projection instead of joining two corpus-scale relations. */
-  private def pqEncodeCol(
-      embeddings: DataFrame, m: Int, dims: Int, centroidMod: Int): Column = {
+      centroidMod: Int = 97): DataFrame = {
     require(m >= 1 && dims % m == 0, s"dims=$dims not divisible by m=$m")
-    val subDim = dims / m
-    val centRows = embeddings
-      .where(col("vec_id") % centroidMod === 0)
+    embeddings.select(col("vec_id"), encodeCol(quantize(col("embedding")),
+      codebook(embeddings, dims, centroidMod), m, dims / m).as("codes"))
+  }
+
+  /** The subset codebook (vec_id ≡ 0 mod centroidMod, quantized)
+    * collected ONCE to the driver as (centroid_id, v) rows, ids
+    * ascending: the [[graft.functions.PqEncodeExpr]] kernel's reference
+    * object and, in a search, the lookup-table book ([[adcBook]]) — one
+    * scan of the centroid subset serves both. */
+  private def codebook(
+      embeddings: DataFrame,
+      dims: Int,
+      centroidMod: Int): IndexedSeq[(Long, Array[Double])] = {
+    val rows = subsetRows(embeddings, centroidMod)
+    require(rows.nonEmpty, "empty PQ codebook")
+    require(rows.length.toLong * dims <= (16L << 20),
+      s"codebook ${rows.length}x$dims exceeds the driver bound; " +
+        "raise centroidMod")
+    rows
+  }
+
+  /** The codes column of `v` against collected (centroid_id, v) book
+    * rows, ids ascending — the [[graft.functions.PqEncodeExpr]] kernel. */
+  private def encodeCol(v: Column, book: IndexedSeq[(Long, Array[Double])],
+      m: Int, subDim: Int): Column =
+    graft.functions.PqEncodeExpr.col(v, book.map(_._2).toArray,
+      book.map(_._1).toArray, m, subDim)
+
+  /** The rows vec_id ≡ 0 (mod `mod`) as (vec_id, quantized v), collected
+    * and sorted by id — the deterministic centroid subsets. */
+  private def subsetRows(
+      embeddings: DataFrame, mod: Int): IndexedSeq[(Long, Array[Double])] =
+    embeddings
+      .where(col("vec_id") % mod === 0)
       .select(col("vec_id"), quantize(col("embedding")).as("v"))
       .collect()
-      .sortBy(_.getLong(0))
-    require(centRows.nonEmpty, "empty PQ codebook")
-    require(centRows.length.toLong * dims <= (16L << 20),
-      s"codebook ${centRows.length}x$dims exceeds the driver bound; " +
-        "raise centroidMod")
-    val ids = centRows.map(_.getLong(0))
-    val cents = centRows.map(_.getSeq[Double](1).toArray)
-    graft.functions.PqEncodeExpr.col(
-      quantize(col("embedding")), cents, ids, m, subDim)
-  }
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+      .sortBy(_._1)
+      .toIndexedSeq
 
   /** PQ/ADC search: queries (vec_id < nQueries) rank the ENCODED corpus
     * by asymmetric distance — per query, a lookup table of
     * (subspace, centroid) partial distances is built against the raw
-    * query subvector (nQueries × m × ksub rows, broadcast), and a
-    * candidate's distance estimate is the m-term SUM of its codes'
-    * table entries: the scan never touches raw corpus vectors. Exact
-    * BIGINT arithmetic end-to-end; deterministic (dist asc,
-    * neighbor_id) top-k. Approximate by construction (quantization
-    * error) — certified against exact top-k recall in ScaleBench. */
+    * query subvector on the driver ([[luts]]: nQueries × m × ksub
+    * doubles, from the query rows and the codebook rows the encode
+    * collects anyway), and a candidate's distance estimate is the
+    * m-term SUM of its codes' table entries: the scan ([[adcScan]],
+    * every codes row against the broadcast tables) never touches raw
+    * corpus vectors. Exact BIGINT arithmetic end-to-end; deterministic
+    * (dist asc, neighbor_id) top-k. Approximate by construction
+    * (quantization error) — certified against exact top-k recall in
+    * ScaleBench. The query rows are collected at call time
+    * ([[queryRows]]). */
   def pqSearch(
       embeddings: DataFrame,
       nQueries: Int,
@@ -552,14 +573,15 @@ object Similarity {
       m: Int = 8,
       dims: Int = 64,
       centroidMod: Int = 97): DataFrame = {
-    val lutArr = adcLutArr(embeddings, nQueries, m, dims, centroidMod)
-    val scored = pqEncode(embeddings, m, dims, centroidMod)
-      .select(col("vec_id").as("neighbor_id"), col("codes"))
-      .crossJoin(broadcast(lutArr))
-      .where(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        adcSum(m, centroidMod).as("adc_dist"))
-    adcTopK(scored, k)
+    require(m >= 1 && dims % m == 0, s"dims=$dims not divisible by m=$m")
+    val subDim = dims / m
+    val queries = queryRows(prefixQueries(embeddings, nQueries))
+    val book = codebook(embeddings, dims, centroidMod)
+    val index = embeddings.select(col("vec_id").as("neighbor_id"),
+      encodeCol(quantize(col("embedding")), book, m, subDim).as("codes"))
+    adcTopK(adcScan(index, flatLuts(embeddings.sparkSession, queries,
+      adcBook(book, m, subDim, centroidMod)), m, centroidMod,
+      excludeSelf = true), k)
   }
 
   /** IVF+PQ composed search — the FAISS IVFPQ shape (Jégou 2011 §IV,
@@ -570,11 +592,11 @@ object Similarity {
     *
     * Index side (built once, persisted in production): every vector
     * carries its [[pqEncode]] codes AND its [[ivfAssign]] coarse list.
-    * Query side: each query ranks the metadata-sized coarse-centroid
-    * table (broadcast) and probes its `nprobe` nearest lists; the ADC
-    * scan is an EQUI-JOIN of the encoded corpus against the broadcast
-    * (query, probed-list, LUT) table on `list_id` — so the fraction of
-    * the corpus scanned per query is Σ probed-list sizes / N
+    * Query side, on the driver ([[probeLuts]]): each query ranks the
+    * metadata-sized coarse centroids and probes its `nprobe` nearest
+    * lists; the ADC scan is an EQUI-JOIN of the encoded corpus against
+    * the broadcast (query, probed-list, LUT) rows on `list_id` — so the
+    * fraction of the corpus scanned per query is Σ probed-list sizes / N
     * ≈ nprobe/nlists, the pruning lever [[pqSearch]]'s full linear ADC
     * scan lacks (its cost is strictly linear in corpus size; this is
     * what makes billion-vector search affordable). ScaleBench B40
@@ -644,31 +666,11 @@ object Similarity {
     cosTopK(exact, k)
   }
 
-  /** The IVF+PQ index relation: every vector's [[pqEncode]] codes plus
-    * its [[ivfAssign]] coarse list — `(neighbor_id, list_id, codes)`.
-    * ONE narrow corpus projection (r22): both halves are pure per-row
-    * functions of the embedding against metadata-sized driver-resident
-    * centroid sets, so the former build shape — a corpus-scale
-    * `groupBy(vec_id)` argmax exchange JOINED back onto the encoded
-    * corpus on vec_id (a corpus self-join: two N-row exchanges + a
-    * sort-merge, purely to attach a derivable value) — is replaced by
-    * the [[graft.functions.IvfTopListsExpr]] kernel riding the encode
-    * scan (guide §2.4, remove shuffles outright). Bit-identical by the
-    * expression's arithmetic contract; this IS the stored index layout
-    * a production deployment persists ([[ivfPqWriteIndex]]). */
-  private[graft] def ivfPqIndex(
-      embeddings: DataFrame,
-      m: Int,
-      dims: Int,
-      centroidMod: Int,
-      coarseMod: Int): DataFrame =
-    ivfPqIndexG(embeddings, m, dims, centroidMod, coarseMod, g = 1)
-
-  /** [[ivfPqIndex]] with coarse-spill degree `g` (each vector's codes
-    * row lands in its g nearest lists — `trainedAssignG` semantics,
-    * single-pass): one projection + one Generate, zero joins, zero
-    * shuffles. Empty coarse subset ⇒ empty index, exactly like the
-    * relational form (the explode drops every row). */
+  /** The IVF+PQ index relation `(neighbor_id, list_id, codes)` with
+    * coarse-spill degree `g`: every vector's [[pqEncode]] codes plus its
+    * g nearest coarse lists ([[ivfAssign]] arithmetic; g = 1 is the
+    * classic single assignment) — this IS the stored index layout a
+    * production deployment persists ([[ivfPqWriteIndex]]). */
   private[graft] def ivfPqIndexG(
       embeddings: DataFrame,
       m: Int,
@@ -676,32 +678,32 @@ object Similarity {
       centroidMod: Int,
       coarseMod: Int,
       g: Int): DataFrame = {
-    val (ids, cvs) = coarseCentArrays(embeddings, coarseMod)
-    embeddings.select(
-      col("vec_id").as("neighbor_id"),
-      explode(graft.functions.IvfTopListsExpr.col(
-        quantize(col("embedding")), cvs, ids, g)).as("list_id"),
-      pqEncodeCol(embeddings, m, dims, centroidMod).as("codes"))
+    require(m >= 1 && dims % m == 0, s"dims=$dims not divisible by m=$m")
+    indexFrom(embeddings, coarseSet(embeddings, coarseMod),
+      codebook(embeddings, dims, centroidMod), m, dims / m, g)
   }
 
-  /** The [[coarseCents]] subset collected to the driver (ids
-    * ascending) — metadata-sized by the same contract that lets every
-    * search broadcast it; bounded by the [[pqEncodeCol]]-style driver
-    * require. */
-  private def coarseCentArrays(
-      embeddings: DataFrame,
-      coarseMod: Int): (Array[Long], Array[Array[Double]]) = {
-    val rows = embeddings
-      .where(col("vec_id") % coarseMod === 0)
-      .select(col("vec_id"), quantize(col("embedding")).as("v"))
-      .collect()
-      .sortBy(_.getLong(0))
-    val cells = rows.iterator.map(_.getSeq[Double](1).length.toLong).sum
-    require(cells <= (16L << 20),
-      s"coarse centroid set ${rows.length} rows / $cells cells exceeds " +
-        "the driver bound; raise coarseMod")
-    (rows.map(_.getLong(0)), rows.map(_.getSeq[Double](1).toArray))
-  }
+  /** The index rows of `vecs` (vec_id, embedding) in ONE narrow
+    * projection: both halves are pure per-row functions of the
+    * embedding against driver-resident centroid sets — the
+    * [[graft.functions.IvfTopListsExpr]] kernel (exploded, each
+    * vector's row lands in its g nearest lists) riding the
+    * [[graft.functions.PqEncodeExpr]] encode scan; no join, no
+    * aggregate, no shuffle. An empty coarse set gives an empty index
+    * (the explode drops every row). Shared by every writer, the append
+    * and the in-plan searches. */
+  private def indexFrom(
+      vecs: DataFrame,
+      coarse: Cents,
+      book: IndexedSeq[(Long, Array[Double])],
+      m: Int,
+      subDim: Int,
+      g: Int): DataFrame =
+    vecs.select(
+      col("vec_id").as("neighbor_id"),
+      explode(graft.functions.IvfTopListsExpr.col(
+        quantize(col("embedding")), coarse.vs, coarse.ids, g)).as("list_id"),
+      encodeCol(quantize(col("embedding")), book, m, subDim).as("codes"))
 
   /** The (query_id, neighbor_id, adc_dist) candidate relation of
     * [[ivfPqSearch]] BEFORE top-k — exposed so ScaleBench can count
@@ -715,41 +717,32 @@ object Similarity {
       centroidMod: Int,
       coarseMod: Int,
       nprobe: Int): DataFrame =
-    ivfPqScoredQ(embeddings, prefixQueries(embeddings, nQueries), m, dims,
-      centroidMod, coarseMod, nprobe, excludeSelf = true)
+    ivfPqScoredQ(embeddings, queryRows(prefixQueries(embeddings, nQueries)),
+      m, dims, centroidMod, coarseMod, nprobe, excludeSelf = true)
 
-  /** The ONE copy of the in-plan IVF+PQ candidate scan, over an explicit
-    * (query_id, v) query relation — shared by the vec_id-prefix form
-    * above and the standalone-query form ([[ivfPqSearchQ]]). */
+  /** The ONE copy of the in-plan IVF+PQ candidate scan, over collected
+    * (query_id, v) query rows ([[queryRows]]) — shared by the
+    * vec_id-prefix form above and the standalone-query form
+    * ([[ivfPqSearchQ]]). The coarse centroids and the codebook are
+    * collected once and serve both the index projection and the
+    * driver query stage ([[probeLuts]]); the scan is [[adcScan]]. */
   private[graft] def ivfPqScoredQ(
       embeddings: DataFrame,
-      qv: DataFrame,
+      queries: Seq[(Long, Array[Double])],
       m: Int,
       dims: Int,
       centroidMod: Int,
       coarseMod: Int,
       nprobe: Int,
       excludeSelf: Boolean): DataFrame = {
-    require(dims % m == 0, s"dims=$dims not divisible by m=$m")
-    val index = ivfPqIndex(embeddings, m, dims, centroidMod, coarseMod)
-    val cents = coarseCents(embeddings, coarseMod)
-    val probes = ivfProbesQ(qv, cents, nprobe)
-    // (query, probed list, LUT): nQueries × nprobe rows — broadcast;
-    // the corpus-side join key is list_id, so unprobed lists never leave
-    // the scan. The LUT side of THIS assembly join is broadcast-hinted
-    // too (r22): both sides are query-scale by construction, but the
-    // window output defeats size estimation and the planner fell back
-    // to a sort-merge join — two exchanges + two sorts of query-scale
-    // relations inside a subtree that is immediately broadcast anyway.
-    val probeLut = probes.join(
-      broadcast(adcLutFrom(qv, pqCodebooks(embeddings, m, dims, centroidMod),
-        m, dims / m, centroidMod)), "query_id")
-    val joined = index.join(broadcast(probeLut), Seq("list_id"))
-    val kept =
-      if (excludeSelf) joined.where(col("neighbor_id") =!= col("query_id"))
-      else joined
-    kept.select(col("query_id"), col("neighbor_id"),
-      adcSum(m, centroidMod).as("adc_dist"))
+    require(m >= 1 && dims % m == 0, s"dims=$dims not divisible by m=$m")
+    val subDim = dims / m
+    val coarse = coarseSet(embeddings, coarseMod)
+    val book = codebook(embeddings, dims, centroidMod)
+    adcScan(indexFrom(embeddings, coarse, book, m, subDim, 1),
+      probeLutRelation(embeddings.sparkSession, probeLuts(queries, coarse,
+        adcBook(book, m, subDim, centroidMod), nprobe)),
+      m, centroidMod, excludeSelf)
   }
 
   /** [[ivfPqSearch]] serving a STANDALONE (query_id, embedding) query
@@ -766,8 +759,8 @@ object Similarity {
       nprobe: Int = 2,
       excludeSelf: Boolean = false): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    adcTopK(ivfPqScoredQ(embeddings, quantQueries(queries), m, dims,
-      centroidMod, coarseMod, nprobe, excludeSelf), k)
+    adcTopK(ivfPqScoredQ(embeddings, queryRows(quantQueries(queries)), m,
+      dims, centroidMod, coarseMod, nprobe, excludeSelf), k)
   }
 
   // --- Persisted IVF+PQ index (the 100 TB storage shape) ----------------
@@ -1109,31 +1102,30 @@ object Similarity {
     }
   }
 
-  /** The persisted coarse-centroid relation, served from the driver
-    * metadata cache ([[graft.ops.ServingCache]]): collected once per
-    * (dir, lifecycle fingerprint) and read in place by the search's
-    * driver query stage ([[persistedProbeLuts]]) — a repeat search
+  /** The persisted coarse centroids, served from the driver metadata
+    * cache ([[graft.ops.ServingCache]]): collected once per (dir,
+    * lifecycle fingerprint) with their stored `cn` and read in place by
+    * the search's probes and the append's assignment — a repeat search
     * pays a directory listing, not a parquet job.
     * Metadata-sized by construction (nlists rows). */
-  private def centRowsCached(
-      spark: SparkSession,
-      indexDir: String): IndexedSeq[(Long, Seq[Double], Double)] =
-    graft.ops.ServingCache
-      .cached("cents", spark, s"$indexDir/cents") {
-        graft.ops.ParquetIO.read(spark, Seq(s"$indexDir/cents")).collect()
-          .map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2)))
-          .toIndexedSeq
-      }
+  private def centsCached(spark: SparkSession, indexDir: String): Cents =
+    graft.ops.ServingCache.cached("cents", spark, s"$indexDir/cents") {
+      cents(graft.ops.ParquetIO.read(spark, Seq(s"$indexDir/cents"))
+        .collect().toSeq
+        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2))))
+    }
 
-  /** The persisted PQ codebook rows from the driver metadata cache —
-    * same contract as [[centRowsCached]]; the collect is bounded by the
-    * same 16M-cell require as [[ivfPqAppendIndex]]'s. */
-  private def bookRowsCached(
+  /** The persisted PQ codebook rows (centroid_id, v), ids ascending,
+    * from the driver metadata cache — same contract as [[centsCached]];
+    * the append bounds them with the same 16M-cell require as
+    * [[pqEncode]]. */
+  private def bookCached(
       spark: SparkSession,
-      indexDir: String): IndexedSeq[(Long, Seq[Double])] =
+      indexDir: String): IndexedSeq[(Long, Array[Double])] =
     graft.ops.ServingCache.cached("book", spark, s"$indexDir/book") {
       graft.ops.ParquetIO.read(spark, Seq(s"$indexDir/book")).collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1))).toIndexedSeq
+        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+        .sortBy(_._1).toIndexedSeq
     }
 
   /** Build the FULLY-TRAINED persisted index — [[ivfPqWriteIndex]]'s
@@ -1160,35 +1152,27 @@ object Similarity {
       spillG: Int = 1): Unit = {
     require(dims % m == 0, s"dims=$dims not divisible by m=$m")
     require(spillG >= 1, s"spillG must be >= 1, got $spillG")
-    val subDim = dims / m
     val spark = embeddings.sparkSession
-    val coarse = ivfTrainCentroids(embeddings, dims, nlists, iters, trainMod)
-    val books = pqTrainCodebooks(embeddings, m, dims, ksub, iters, trainMod)
-    val cents = centsDf(spark, coarse)
+    val coarse = indexed(
+      ivfTrainCentroids(embeddings, dims, nlists, iters, trainMod))
+    val book = indexed(
+      pqTrainCodebooks(embeddings, m, dims, ksub, iters, trainMod))
     // codes + g-nearest trained lists in ONE narrow projection (r22):
-    // the trained centroids are already driver arrays, so the former
-    // corpus-scale assign aggregate + vec_id join is the
-    // [[graft.functions.IvfTopListsExpr]] kernel riding the encode scan
-    // — bit-identical by its arithmetic contract
-    val codes = embeddings
-      .select(col("vec_id").as("neighbor_id"),
-        explode(graft.functions.IvfTopListsExpr.col(
-          quantize(col("embedding")), coarse,
-          Array.tabulate(nlists)(_.toLong), spillG)).as("list_id"),
-        graft.functions.PqEncodeExpr.col(
-          quantize(col("embedding")), books,
-          Array.tabulate(ksub)(_.toLong), m, subDim).as("codes"))
+    // the trained centroids are already driver arrays
+    val codes = indexFrom(embeddings, centsOf(coarse), book, m, dims / m,
+      spillG)
+    def rel(rows: IndexedSeq[(Long, Array[Double])], id: String, v: String) =
+      spark.createDataFrame(rows.map { case (i, x) => (i, x.toSeq) })
+        .toDF(id, v)
     // all relation writes are independent (disjoint dirs; cents and
     // books are already driver-resolved) — overlapped (guide §2.6)
     Index.write(spark, dir,
       Map("codes" -> codes) ++ vecsIf(storeVecs, embeddings),
       numFiles, writerOptions,
-      () => cents.coalesce(1).write.mode("errorifexists")
-        .parquet(s"$dir/cents"),
-      () => spark.createDataFrame(
-        books.toIndexedSeq.zipWithIndex
-          .map { case (b, i) => (i.toLong, b.toSeq) })
-        .toDF("centroid_id", "v")
+      () => rel(coarse, "list_id", "cv")
+        .withColumn("cn", dot(col("cv"), col("cv")))
+        .coalesce(1).write.mode("errorifexists").parquet(s"$dir/cents"),
+      () => rel(book, "centroid_id", "v")
         .coalesce(1).write.mode("errorifexists").parquet(s"$dir/book"))
     if (spillG > 1) writeSpillMarker(spark, dir, spillG)
   }
@@ -1234,42 +1218,27 @@ object Similarity {
       dims: Int = 64,
       dedupAgainstIndex: Boolean = false): Unit = {
     require(dims % m == 0, s"dims=$dims not divisible by m=$m")
-    val subDim = dims / m
     val root = indexRoot(spark, indexDir)
-    val bookRows = bookRowsCached(spark, root).sortBy(_._1)
-    require(bookRows.nonEmpty, s"no codebook at $root/book")
+    val book = bookCached(spark, root)
+    require(book.nonEmpty, s"no codebook at $root/book")
     // same driver bound as pqEncode: a subset-writer book is
     // N/centroidMod rows (grows with the corpus) and this collect must
     // never become a driver OOM at production scale
-    require(bookRows.length.toLong * dims <= (16L << 20),
-      s"codebook ${bookRows.length}x$dims exceeds the driver bound; " +
+    require(book.length.toLong * dims <= (16L << 20),
+      s"codebook ${book.length}x$dims exceeds the driver bound; " +
         "raise centroidMod (or use the trained writer's fixed ksub)")
-    val ids = bookRows.map(_._1).toArray
-    val books = bookRows.map(_._2.toArray).toArray
-    // the coarse centroids are driver-resident (ServingCache) — the
-    // assignment below is the narrow kernel, not a relational join
-    val centRows = centRowsCached(spark, root).sortBy(_._1)
-    val centIds = centRows.map(_._1).toArray
-    val centVs = centRows.map(_._2.toArray).toArray
     // a spill-written index keeps its multi-assignment degree through
     // appends — resolved from the index's own marker, never a caller
-    // argument that could desync the copies-per-vector invariant.
-    // Codes + g nearest lists in ONE narrow projection over the batch
-    // (r22): the former g-round crossJoin/argmax/join chain is the
-    // IvfTopListsExpr kernel riding the encode scan.
+    // argument that could desync the copies-per-vector invariant. The
+    // coarse centroids are driver-resident (ServingCache), so codes +
+    // g nearest lists are ONE narrow projection over the batch.
     val spillG = spillDegree(spark, root)
     // a refine-enabled index keeps its raw-vector relation in lockstep
     // (same ids, same lifecycle) — the re-rank stage must be able to
     // fetch any candidate the codes relation can surface
     Index.append(spark, root, newVecs, dedupAgainstIndex, Map(
-      "codes" -> ((batch: DataFrame) => batch
-        .select(col("vec_id").as("neighbor_id"),
-          explode(graft.functions.IvfTopListsExpr.col(
-            quantize(col("embedding")), centVs, centIds, spillG))
-            .as("list_id"),
-          graft.functions.PqEncodeExpr.col(
-            quantize(col("embedding")), books, ids, m, subDim)
-            .as("codes"))),
+      "codes" -> ((batch: DataFrame) => indexFrom(batch,
+        centsCached(spark, root), book, m, dims / m, spillG)),
       "vecs" -> (vecsOf _)))
   }
 
@@ -1535,14 +1504,10 @@ object Similarity {
   /** The ONE copy of the persisted-index candidate scan, over
     * collected (query_id, v) query rows ([[queryRows]]).
     *
-    * The query stage runs on the driver ([[persistedProbeLuts]]): the
-    * coarse centroids and the PQ codebook already sit in the driver
-    * metadata cache, and probes (nQueries × nprobe) and lookup tables
-    * (nQueries × m × ksub cells per probe) are query-scale — the same
-    * cells the broadcast probe/LUT relation always materialized on the
-    * driver — so they reach the scan as ONE broadcast local relation
-    * (query_id, list_id, luts), and the call runs no job before the
-    * codes scan.
+    * The query stage runs on the driver ([[probeLuts]]): the coarse
+    * centroids and the PQ codebook already sit in the driver metadata
+    * cache, so the call runs no job before the codes scan; the scan is
+    * [[adcScan]] plus, on a spill-written index, a min-dedup.
     *
     * Index rows come from the lifecycle reader
     * ([[graft.ops.Layout.clusteredTable]]), so tombstoned neighbors
@@ -1567,8 +1532,8 @@ object Similarity {
       excludeSelf: Boolean): DataFrame = {
     require(dims % m == 0, s"dims=$dims not divisible by m=$m")
     val root = indexRoot(spark, indexDir)
-    val probeLut = persistedProbeLuts(queries, centRowsCached(spark, root),
-      bookRowsCached(spark, root), m, dims / m, centroidMod, nprobe)
+    val probeLut = probeLuts(queries, centsCached(spark, root),
+      adcBook(bookCached(spark, root), m, dims / m, centroidMod), nprobe)
     // the probed-list UNION: nQueries × nprobe longs. isInCollection
     // emits an In predicate the parquet source accepts, so row groups
     // whose [min,max] list range misses every probed list are dropped
@@ -1594,14 +1559,8 @@ object Similarity {
       else
         graft.ops.Layout.rangeCoverScan(spark, table, "list_id",
           probedLists)
-    val lut = spark.createDataFrame(probeLut)
-      .toDF("query_id", "list_id", "luts")
-    val joined = index.join(broadcast(lut), Seq("list_id"))
-    val kept =
-      if (excludeSelf) joined.where(col("neighbor_id") =!= col("query_id"))
-      else joined
-    val scored = kept.select(col("query_id"), col("neighbor_id"),
-      adcSum(m, centroidMod).as("adc_dist"))
+    val scored = adcScan(index, probeLutRelation(spark, probeLut), m,
+      centroidMod, excludeSelf)
     // a spill-written index surfaces a vector once per probed copy —
     // identical adc_dist each time (non-residual codes are shared), so
     // a min-dedup (partial-aggregatable map-side) restores one row per
@@ -1723,10 +1682,12 @@ object Similarity {
   }
 
   /** [[pqSearch]] over the TRAINED codebooks: same ADC shape (per-query
-    * LUT broadcast against the encoded corpus, m-term exact BIGINT
-    * sum), codebook entries indexed directly (codes are indices, so the
-    * LUT fold runs with divisor 1). ScaleBench B33t REQUIREs recall ≥
-    * the subset-codebook pqSearch at the same ksub. */
+    * LUTs built on the driver from the trained books, broadcast against
+    * the encoded corpus, m-term exact BIGINT sum), codebook entries
+    * indexed directly (codes are indices, so the LUT divisor is 1).
+    * The query rows are collected at call time, before training.
+    * ScaleBench B33t REQUIREs recall ≥ the subset-codebook pqSearch at
+    * the same ksub. */
   def pqSearchTrained(
       embeddings: DataFrame,
       nQueries: Int,
@@ -1736,8 +1697,9 @@ object Similarity {
       ksub: Int = 256,
       iters: Int = 3,
       trainMod: Int = 1): DataFrame =
-    pqSearchTrainedCore(embeddings, prefixQueries(embeddings, nQueries), k,
-      m, dims, ksub, iters, trainMod, excludeSelf = true)
+    pqSearchTrainedCore(embeddings,
+      queryRows(prefixQueries(embeddings, nQueries)), k, m, dims, ksub,
+      iters, trainMod, excludeSelf = true)
 
   /** [[pqSearchTrained]] serving a STANDALONE (query_id, embedding)
     * query relation — see [[ivfPqSearchPersistedQ]] for the signature
@@ -1752,12 +1714,12 @@ object Similarity {
       iters: Int = 3,
       trainMod: Int = 1,
       excludeSelf: Boolean = false): DataFrame =
-    pqSearchTrainedCore(embeddings, quantQueries(queries), k, m, dims,
-      ksub, iters, trainMod, excludeSelf)
+    pqSearchTrainedCore(embeddings, queryRows(quantQueries(queries)), k, m,
+      dims, ksub, iters, trainMod, excludeSelf)
 
   private def pqSearchTrainedCore(
       embeddings: DataFrame,
-      qv: DataFrame,
+      queries: Seq[(Long, Array[Double])],
       k: Int,
       m: Int,
       dims: Int,
@@ -1766,32 +1728,12 @@ object Similarity {
       trainMod: Int,
       excludeSelf: Boolean): DataFrame = {
     val subDim = dims / m
-    val spark = embeddings.sparkSession
-    val books = pqTrainCodebooks(embeddings, m, dims, ksub, iters, trainMod)
-    val ids = Array.tabulate(ksub)(_.toLong)
-    // trained books as a metadata relation for the LUT build
-    val bookRows = for { c <- books.indices; s <- 0 until m } yield
-      (s, c.toLong, books(c).slice(s * subDim, (s + 1) * subDim).toSeq)
-    val booksDf = spark.createDataFrame(bookRows).toDF("sub", "centroid_id", "cs")
-      .withColumn("cn", dot(col("cs"), col("cs")))
-    val perEntry = qv
-      .withColumn("sub", explode(lit((0 until m).toArray)))
-      .withColumn("vs", slice(col("v"), col("sub") * subDim + 1, lit(subDim)))
-      .withColumn("vn", dot(col("vs"), col("vs")))
-      .join(broadcast(booksDf), Seq("sub"))
-      .select(col("query_id"), col("sub"), col("centroid_id"),
-        (col("vn") - lit(2) * dot(col("vs"), col("cs")) + col("cn")).as("pd"))
-    val lutArr = lutFold(perEntry, Seq("query_id"), 1)
-    val joined = embeddings
-      .select(col("vec_id").as("neighbor_id"),
-        graft.functions.PqEncodeExpr.col(
-          quantize(col("embedding")), books, ids, m, subDim).as("codes"))
-      .crossJoin(broadcast(lutArr))
-    val kept =
-      if (excludeSelf) joined.where(col("neighbor_id") =!= col("query_id"))
-      else joined
-    adcTopK(kept.select(col("query_id"), col("neighbor_id"),
-      adcSum(m, 1).as("adc_dist")), k)
+    val book = indexed(
+      pqTrainCodebooks(embeddings, m, dims, ksub, iters, trainMod))
+    val index = embeddings.select(col("vec_id").as("neighbor_id"),
+      encodeCol(quantize(col("embedding")), book, m, subDim).as("codes"))
+    adcTopK(adcScan(index, flatLuts(embeddings.sparkSession, queries,
+      adcBook(book, m, subDim, 1)), m, 1, excludeSelf), k)
   }
 
   // --- Lloyd-trained coarse quantizer (fixed nlists) ---------------------
@@ -1873,14 +1815,6 @@ object Similarity {
         Array.tabulate(nlists)(_.toLong), 1), 1).as("list_id"))
   }
 
-  /** Trained centroids as a metadata relation (list_id, cv, cn). */
-  private def centsDf(
-      spark: SparkSession, cents: Array[Array[Double]]): DataFrame =
-    spark.createDataFrame(
-      cents.toIndexedSeq.zipWithIndex.map { case (c, i) => (i.toLong, c.toSeq) })
-      .toDF("list_id", "cv")
-      .withColumn("cn", dot(col("cv"), col("cv")))
-
   /** FULLY-trained IVF+PQ search — [[ivfPqSearch]] with BOTH index
     * halves scale-invariant: trained coarse lists ([[ivfTrainCentroids]],
     * fixed nlists) and trained PQ codebooks ([[pqTrainCodebooks]], fixed
@@ -1888,9 +1822,12 @@ object Similarity {
     * per-subspace k-means, Jégou 2011 §III–IV, by_residual=false). Scan
     * shape identical to [[ivfPqSearch]]: encoded corpus equi-joined on
     * `list_id` against a broadcast (query, probed list, LUT) relation,
-    * ~nprobe/nlists of the corpus scored. Same determinism contract as
-    * every trained path; gate q_ivfpq_trained replays both trainings +
-    * the composed search in DuckDB. */
+    * ~nprobe/nlists of the corpus scored. Probes and LUTs come from the
+    * driver stage ([[probeLuts]]) over the trained centroids (list ids
+    * 0..nlists−1) and books (divisor 1) the trainers already return as
+    * driver arrays; the query rows are collected at call time. Same
+    * determinism contract as every trained path; gate q_ivfpq_trained
+    * replays both trainings + the composed search in DuckDB. */
   def ivfPqSearchTrainedFull(
       embeddings: DataFrame,
       nQueries: Int,
@@ -1921,50 +1858,18 @@ object Similarity {
       nprobe: Int): DataFrame = {
     require(dims % m == 0, s"dims=$dims not divisible by m=$m")
     val subDim = dims / m
-    val spark = embeddings.sparkSession
-    val coarse = ivfTrainCentroids(embeddings, dims, nlists, iters, trainMod)
-    val books = pqTrainCodebooks(embeddings, m, dims, ksub, iters, trainMod)
-    val ids = Array.tabulate(ksub)(_.toLong)
-    val cents = centsDf(spark, coarse)
-    // index: trained codes + trained coarse list per vector — ONE
-    // corpus pass for BOTH halves (r22: the assign kernel rides the
-    // encode projection; the former broadcast-assign aggregate paid a
-    // corpus-scale groupBy exchange plus a vec_id self-join); in
-    // production this is what ivfPqWriteIndex persists (same
-    // (neighbor_id, list_id, codes) schema)
-    val index = embeddings
-      .select(col("vec_id").as("neighbor_id"),
-        element_at(graft.functions.IvfTopListsExpr.col(
-          quantize(col("embedding")), coarse,
-          Array.tabulate(nlists)(_.toLong), 1), 1).as("list_id"),
-        graft.functions.PqEncodeExpr.col(
-          quantize(col("embedding")), books, ids, m, subDim).as("codes"))
-    // probes: nprobe best trained lists per query (same rounded-cosine
-    // + lower-index tie-break as the assignment)
-    val probes = ivfProbesQ(prefixQueries(embeddings, nQueries), cents, nprobe)
-    // per-query LUT from the trained books (indices, divisor 1)
-    val bookRows = for { c <- books.indices; s <- 0 until m } yield
-      (s, c.toLong, books(c).slice(s * subDim, (s + 1) * subDim).toSeq)
-    val booksDf = spark.createDataFrame(bookRows).toDF("sub", "centroid_id", "cs")
-      .withColumn("cn", dot(col("cs"), col("cs")))
-    val perEntry = embeddings
-      .where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), quantize(col("embedding")).as("v"))
-      .withColumn("sub", explode(lit((0 until m).toArray)))
-      .withColumn("vs", slice(col("v"), col("sub") * subDim + 1, lit(subDim)))
-      .withColumn("vn", dot(col("vs"), col("vs")))
-      .join(broadcast(booksDf), Seq("sub"))
-      .select(col("query_id"), col("sub"), col("centroid_id"),
-        (col("vn") - lit(2) * dot(col("vs"), col("cs")) + col("cn")).as("pd"))
-    // broadcast-hinted for the same reason as ivfPqScoredQ's assembly
-    // join (query-scale both sides; estimates defeated by the window)
-    val probeLut = probes.join(
-      broadcast(lutFold(perEntry, Seq("query_id"), 1)), "query_id")
-    index
-      .join(broadcast(probeLut), Seq("list_id"))
-      .where(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        adcSum(m, 1).as("adc_dist"))
+    val queries = queryRows(prefixQueries(embeddings, nQueries))
+    val coarse = centsOf(indexed(
+      ivfTrainCentroids(embeddings, dims, nlists, iters, trainMod)))
+    val book = indexed(
+      pqTrainCodebooks(embeddings, m, dims, ksub, iters, trainMod))
+    // index: trained codes + trained coarse list per vector in ONE
+    // corpus pass — what ivfPqWriteIndexTrained persists; probes and
+    // LUTs (indices, divisor 1) from the same driver arrays
+    adcScan(indexFrom(embeddings, coarse, book, m, subDim, 1),
+      probeLutRelation(embeddings.sparkSession, probeLuts(queries, coarse,
+        adcBook(book, m, subDim, 1), nprobe)),
+      m, 1, excludeSelf = true)
   }
 
   /** Coarse-centroid relation (list_id, cv, cn) — metadata-sized,
@@ -1978,7 +1883,8 @@ object Similarity {
   /** The query-prefix convention as a (query_id, v) relation: queries
     * are the corpus rows vec_id < nQueries, quantized — the fixture
     * form every `nQueries`-taking operator uses. */
-  private def prefixQueries(embeddings: DataFrame, nQueries: Int): DataFrame =
+  private[graft] def prefixQueries(
+      embeddings: DataFrame, nQueries: Int): DataFrame =
     embeddings
       .where(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), quantize(col("embedding")).as("v"))
@@ -1990,13 +1896,14 @@ object Similarity {
     queries.select(col("query_id").cast("long").as("query_id"),
       quantize(col("embedding")).as("v"))
 
-  /** A (query_id, v) query relation collected to the driver — the
-    * persisted search's ONE evaluation of the caller's queries
-    * (nQueries × dims doubles, query-scale). Fails loudly, naming the
-    * row, on inputs the relational query stage answered silently: a
+  /** A (query_id, v) query relation collected to the driver — every
+    * ADC search's ONE evaluation of the caller's queries (nQueries ×
+    * dims doubles, query-scale), at call time. Fails loudly, naming the
+    * row, on inputs a relational query stage answered silently: a
     * repeated query_id (its queries' candidates merged into ONE top-k)
     * and a null embedding (neighbors ranked with a null adc_dist). */
-  private def queryRows(qv: DataFrame): IndexedSeq[(Long, Array[Double])] = {
+  private[graft] def queryRows(
+      qv: DataFrame): IndexedSeq[(Long, Array[Double])] = {
     val seen = scala.collection.mutable.HashSet.empty[Long]
     qv.select("query_id", "v").collect().toIndexedSeq.map { r =>
       require(!r.isNullAt(0), "a query row has a null query_id")
@@ -2008,108 +1915,153 @@ object Similarity {
     }
   }
 
-  /** The persisted search's query stage, on the driver: per query, its
-    * `nprobe` probed lists and its ADC lookup tables, as
-    * (query_id, list_id, luts) rows — one per probe, in probe order.
-    *
-    * Bit-equal to the relational stage (`ivfProbesQ` + `adcLutFrom` +
-    * `lutFold` over the same cents and book; PropertySpec pins it)
-    * because no arithmetic is written twice:
-    *  - probes are [[graft.functions.IvfTopListsExpr.topLists]], the
-    *    coarse-assignment kernel pinned equal to the relational probe
-    *    form, fed the stored `cn` (sqrt taken as Spark's `sqrt`);
-    *  - every dot is [[graft.functions.DotProductExpr.dot]] over Spark
-    *    `slice` semantics (a short query dots the common prefix), and a
-    *    LUT cell is `(vn − 2·dot(vs, cs)) + cn` in that order;
-    *  - the fold is `lutFold`'s: ci = `(centroid_id / centroidMod)` as a
-    *    double division cast to int, cells ordered by (ci, pd) under
-    *    Spark's double ordering, subspaces in order.
-    * Driver footprint: nQueries × nprobe rows of m × ksub doubles — the
-    * cells the broadcast probe/LUT relation holds. `cents` and `book`
-    * are the cached metadata rows, in any order. */
-  private[graft] def persistedProbeLuts(
-      queries: Seq[(Long, Array[Double])],
-      cents: Seq[(Long, Seq[Double], Double)],
-      book: Seq[(Long, Seq[Double])],
-      m: Int,
-      subDim: Int,
-      centroidMod: Int,
-      nprobe: Int): IndexedSeq[(Long, Long, Seq[Seq[Double]])] = {
-    import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
-    import graft.functions.{DotProductExpr, IvfTopListsExpr}
-    val byId = cents.sortBy(_._1)
-    val ids = byId.map(_._1).toArray
-    val cvs = byId.map(_._2.toArray).toArray
-    val sqrtCn = byId.map(c => math.sqrt(c._3)).toArray
-    // Spark `slice(v, s·subDim + 1, subDim)`: clamped, empty past the end
-    def sub(v: Array[Double], s: Int): ArrayData =
-      ArrayData.toArrayData(v.slice(s * subDim, s * subDim + subDim))
-    // subspaceBooks per subspace: (ci, cs, cn)
-    val books = Array.tabulate(m) { s =>
+  // --- The ADC query stage, on the driver -------------------------------
+  //
+  // Every PQ and IVF+PQ search — persisted or in-plan, subset or trained
+  // books, raw or residual — builds its probes and lookup tables HERE,
+  // from query rows collected once ([[queryRows]]) and centroid sets the
+  // index build or the metadata cache already holds on the driver. Both
+  // are query-scale: probes are nQueries × nprobe ids, and the lookup
+  // tables nQueries × nprobe × m × ksub doubles (nQueries × m × ksub
+  // for the flat and raw forms, whose probes share one table) — the
+  // cells a broadcast LUT relation would hold anyway. They reach the
+  // scan as ONE broadcast local relation ([[adcScan]]), so the engine
+  // runs only the data-parallel codes scan and its top-k. No arithmetic
+  // is written twice: probes are [[graft.functions.IvfTopListsExpr.topLists]]
+  // and every dot is [[graft.functions.DotProductExpr.dot]].
+  // PropertySpec pins the stage bit-equal to the relational probes +
+  // LUT fold kept in src/test as the reference.
+
+  /** A centroid set on the driver, ids ascending: each id's vector and
+    * sqrt of its `cn` (the cosine denominator of [[probes]]). */
+  private[graft] final case class Cents(
+      ids: Array[Long], vs: Array[Array[Double]], sqrtCn: Array[Double])
+
+  /** [[Cents]] from (id, v, cn) rows in any order — `cn` as stored. */
+  private[graft] def cents(rows: Seq[(Long, Array[Double], Double)]): Cents = {
+    val byId = rows.sortBy(_._1)
+    Cents(byId.map(_._1).toArray, byId.map(_._2).toArray,
+      byId.map(r => math.sqrt(r._3)).toArray)
+  }
+
+  /** [[Cents]] from (id, v) rows, each `cn` the vector's index-order
+    * self-dot — the value both writers store and [[coarseCents]]
+    * computes. */
+  private def centsOf(rows: Seq[(Long, Array[Double])]): Cents =
+    cents(rows.map { case (id, v) =>
+      val a = ArrayData.toArrayData(v)
+      (id, v, DotProductExpr.dot(a, a))
+    })
+
+  /** The coarse subset (vec_id ≡ 0 mod coarseMod) collected to the
+    * driver — metadata-sized by the same contract that lets the
+    * [[coarseCents]] relation broadcast, bounded like [[codebook]]. */
+  private def coarseSet(embeddings: DataFrame, coarseMod: Int): Cents = {
+    val rows = subsetRows(embeddings, coarseMod)
+    val cells = rows.iterator.map(_._2.length.toLong).sum
+    require(cells <= (16L << 20),
+      s"coarse centroid set ${rows.length} rows / $cells cells exceeds " +
+        "the driver bound; raise coarseMod")
+    centsOf(rows)
+  }
+
+  /** Trained centroids or books as (index, v) rows — their ids ARE the
+    * indices 0..n−1 (so the LUT divisor is 1). */
+  private def indexed(vs: Array[Array[Double]]): IndexedSeq[(Long, Array[Double])] =
+    vs.indices.map(i => (i.toLong, vs(i)))
+
+  /** A query's `nprobe` probed lists, nearest first — the probe
+    * decision: rounded cosine against every centroid, ordered (cos
+    * desc, list_id), exactly [[ivfAssign]]'s arithmetic. It IS the
+    * coarse-assignment kernel [[graft.functions.IvfTopListsExpr.topLists]],
+    * fed the centroids' `cn`; a zero-magnitude query throws
+    * `ArithmeticException` (DIVIDE_BY_ZERO), as the relational cosine
+    * does. */
+  private[graft] def probes(v: Array[Double], cs: Cents, nprobe: Int): Array[Long] =
+    IvfTopListsExpr.topLists(ArrayData.toArrayData(v), cs.vs, cs.sqrtCn,
+      cs.ids, nprobe)
+
+  /** Codebook rows cut for [[luts]]: per subspace s, each row's (ci, cs,
+    * cn) — ci = `(centroid_id / divisor)` as a double division cast to
+    * int (the code → LUT-slot map [[adcSum]] applies: the subset
+    * writer's ids are multiples of its centroidMod, trained ids are
+    * indices with divisor 1), cs the s-th subvector under Spark `slice`
+    * semantics, cn its self-dot. Rows in any order. */
+  private[graft] final case class AdcBook(
+      m: Int, subDim: Int, cells: Array[Array[(Int, ArrayData, Double)]])
+
+  private[graft] def adcBook(book: Seq[(Long, Array[Double])], m: Int,
+      subDim: Int, divisor: Int): AdcBook =
+    AdcBook(m, subDim, Array.tabulate(m) { s =>
       book.map { case (cid, bv) =>
-        val cs = sub(bv.toArray, s)
-        ((cid.toDouble / centroidMod).toInt, cs, DotProductExpr.dot(cs, cs))
+        val cs = subvector(bv, s, subDim)
+        ((cid.toDouble / divisor).toInt, cs, DotProductExpr.dot(cs, cs))
       }.toArray
+    })
+
+  // Spark `slice(v, s·subDim + 1, subDim)`: clamped, empty past the end
+  private def subvector(v: Array[Double], s: Int, subDim: Int): ArrayData =
+    ArrayData.toArrayData(v.slice(s * subDim, s * subDim + subDim))
+
+  private val byCiPd: ((Int, Double), (Int, Double)) => Boolean = (a, b) =>
+    if (a._1 != b._1) a._1 < b._1
+    else SQLOrderingUtil.compareDoubles(a._2, b._2) < 0
+
+  /** The ADC lookup tables of query vector `v`: luts(s)(ci) is the
+    * squared distance of v's s-th subvector to codebook slot ci,
+    * `(vn − 2·dot(vs, cs)) + cn` in that order on quantized
+    * integer-valued doubles, each subspace's cells ordered by (ci, pd)
+    * under Spark's double ordering. Footprint: m × ksub doubles per
+    * call. */
+  private[graft] def luts(v: Array[Double], book: AdcBook): Seq[Seq[Double]] =
+    Vector.tabulate(book.m) { s =>
+      val vs = subvector(v, s, book.subDim)
+      val vn = DotProductExpr.dot(vs, vs)
+      book.cells(s).map { case (ci, cs, cn) =>
+        (ci, (vn - 2.0 * DotProductExpr.dot(vs, cs)) + cn)
+      }.sortWith(byCiPd).map(_._2).toSeq
     }
-    val byCiPd: ((Int, Double), (Int, Double)) => Boolean = (a, b) =>
-      if (a._1 != b._1) a._1 < b._1
-      else SQLOrderingUtil.compareDoubles(a._2, b._2) < 0
-    queries.toIndexedSeq.flatMap { case (qid, v) =>
-      val luts = Vector.tabulate(m) { s =>
-        val vs = sub(v, s)
-        val vn = DotProductExpr.dot(vs, vs)
-        books(s).map { case (ci, cs, cn) =>
-          (ci, (vn - 2.0 * DotProductExpr.dot(vs, cs)) + cn)
-        }.sortWith(byCiPd).map(_._2).toSeq
+
+  /** Raw IVF+PQ: each query's probes, each carrying the query's ONE set
+    * of lookup tables — (query_id, list_id, luts) rows in probe order.
+    * nQueries × nprobe rows sharing nQueries × m × ksub doubles. */
+  private[graft] def probeLuts(queries: Seq[(Long, Array[Double])],
+      cs: Cents, book: AdcBook,
+      nprobe: Int): IndexedSeq[(Long, Long, Seq[Seq[Double]])] =
+    queries.toIndexedSeq.flatMap { case (q, v) =>
+      val t = luts(v, book)
+      probes(v, cs, nprobe).map(list => (q, list, t))
+    }
+
+  /** Residual IVF+PQ: per (query, probed list) the lookup tables of the
+    * query RESIDUAL v − c(list) — (query_id, list_id, luts) rows,
+    * nQueries × nprobe × m × ksub doubles. A query whose length differs
+    * from its probed centroid's has no residual: it fails, naming the
+    * query_id (a relational `zip_with` pads the shorter side with null,
+    * which the dot kernel reads as 0.0 — a silently wrong table). */
+  private[graft] def residualLuts(queries: Seq[(Long, Array[Double])],
+      cs: Cents, book: AdcBook,
+      nprobe: Int): IndexedSeq[(Long, Long, Seq[Seq[Double]])] =
+    queries.toIndexedSeq.flatMap { case (q, v) =>
+      probes(v, cs, nprobe).map { list =>
+        val c = cs.vs(java.util.Arrays.binarySearch(cs.ids, list))
+        require(v.length == c.length, s"query_id $q has ${v.length} " +
+          s"elements, its probed list $list's centroid ${c.length}")
+        (q, list, luts(Array.tabulate(v.length)(i => v(i) - c(i)), book))
       }
-      IvfTopListsExpr.topLists(ArrayData.toArrayData(v), cvs, sqrtCn, ids,
-        nprobe).map(list => (qid, list, luts))
     }
-  }
 
-  /** nprobe nearest coarse lists per query (query_id, list_id) — the
-    * ONE copy of the probe-selection contract: the same rounded-cosine
-    * + (cos desc, list_id) tie-break arithmetic as [[ivfAssign]], kept
-    * to rank ≤ nprobe, shared by the raw and residual IVF+PQ paths so
-    * a tie-break or rounding change can never diverge them. */
-  private[graft] def ivfProbes(
-      embeddings: DataFrame,
-      cents: DataFrame,
-      nQueries: Int,
-      nprobe: Int): DataFrame =
-    ivfProbesQ(prefixQueries(embeddings, nQueries), cents, nprobe)
+  /** Per-probe LUT rows as the broadcast side of [[adcScan]]. */
+  private def probeLutRelation(spark: SparkSession,
+      rows: Seq[(Long, Long, Seq[Seq[Double]])]): DataFrame =
+    spark.createDataFrame(rows).toDF("query_id", "list_id", "luts")
 
-  /** [[ivfProbes]] over an explicit (query_id, v) query relation. */
-  private[graft] def ivfProbesQ(
-      qv: DataFrame,
-      cents: DataFrame,
-      nprobe: Int): DataFrame = {
-    val scored = qv
-      .withColumn("n", dot(col("v"), col("v")))
-      .crossJoin(broadcast(cents))
-      .withColumn("cos_sim",
-        round(dot(col("v"), col("cv")) / (sqrt(col("n")) * sqrt(col("cn"))), 6))
-    graft.ops.TopK.perGroup(scored, Seq(col("query_id")),
-        Seq(col("cos_sim").desc, col("list_id")), nprobe)
-      .select("query_id", "list_id")
-  }
-
-  /** Fold per-(group, sub, centroid) distances into nested positional
-    * LUT arrays luts[s][ci] — the ONE copy of the array_sort/
-    * collect_list fold, shared by the per-query (raw) and
-    * per-(query, list) (residual) LUT builders. Input needs columns
-    * `sub`, `centroid_id`, `pd`. */
-  private def lutFold(
-      pd: DataFrame, groupCols: Seq[String], centroidMod: Int): DataFrame =
-    pd.withColumn("ci", (col("centroid_id") / centroidMod).cast("int"))
-      .groupBy((groupCols :+ "sub").map(col): _*)
-      .agg(transform(
-        array_sort(collect_list(struct(col("ci"), col("pd")))),
-        x => x.getField("pd")).as("subArr"))
-      .groupBy(groupCols.map(col): _*)
-      .agg(transform(
-        array_sort(collect_list(struct(col("sub"), col("subArr")))),
-        x => x.getField("subArr")).as("luts"))
+  /** Flat PQ: one (query_id, luts) row per query — no probes, every
+    * codes row is scored against every query. */
+  private def flatLuts(spark: SparkSession,
+      queries: Seq[(Long, Array[Double])], book: AdcBook): DataFrame =
+    spark.createDataFrame(queries.map { case (q, v) => (q, luts(v, book)) })
+      .toDF("query_id", "luts")
 
   /** IVF+PQ with RESIDUAL quantization — the FAISS IVFPQ DEFAULT
     * (`by_residual=true`, Jégou 2011 §IV.C): codes quantize x − c(list)
@@ -2121,11 +2073,17 @@ object Similarity {
     * Structural consequence: the ADC lookup table becomes PER
     * (query, probed list) — the table is built against the query
     * residual q − c(list), which differs per probed list — and that is
-    * EXACTLY the (query, list) relation the composed join already
-    * broadcasts ([[ivfPqScored]]'s probeLut), so the scan shape is
+    * EXACTLY the (query, list) row shape the composed join already
+    * broadcasts ([[ivfPqScored]]'s probe LUTs), so the scan shape is
     * unchanged: an equi-join of the residual-encoded corpus against
     * nQueries·nprobe broadcast LUT rows on `list_id`, scanning
-    * ~nprobe/nlists of the corpus. Residual codebooks are trained on
+    * ~nprobe/nlists of the corpus. Those rows are built on the driver
+    * ([[residualLuts]]: nQueries × nprobe × m × ksub doubles) from the
+    * query rows, collected at call time, and the coarse centroids and
+    * residual codebook rows the index build collects
+    * ([[buildResidualIndex]]); a query of another length than the
+    * centroids has no residual and fails, naming its query_id.
+    * Residual codebooks are trained on
     * the residuals of the same deterministic subset (vec_id ≡ 0 mod
     * centroidMod). All arithmetic stays exact: quantized milli-unit
     * integers are closed under subtraction, so residual vectors,
@@ -2147,14 +2105,16 @@ object Similarity {
       embeddings, nQueries, m, dims, centroidMod, coarseMod, nprobe), k)
   }
 
-  /** The relations of a residual IVF+PQ index: coarse centroids
-    * (metadata-sized, broadcast), per-vector residuals, and the
-    * residual-encoded index — split out so specs can pin the index
-    * contents (codes trained on RESIDUALS, not raw vectors)
-    * independently of the search join. In production the `index`
+  /** A residual IVF+PQ index: the residual-encoded index relation plus
+    * the driver-resident coarse centroids and residual codebook rows it
+    * was built from — split out so specs can pin the index contents
+    * (codes trained on RESIDUALS, not raw vectors) independently of the
+    * search join, and so the search builds its lookup tables from the
+    * rows the build already collected. In production the `index`
     * relation is what gets persisted. */
   private[graft] final case class ResidualIndex(
-      cents: DataFrame, resid: DataFrame, index: DataFrame, subDim: Int)
+      index: DataFrame, coarse: Cents,
+      book: IndexedSeq[(Long, Array[Double])], subDim: Int)
 
   private[graft] def buildResidualIndex(
       embeddings: DataFrame,
@@ -2164,8 +2124,6 @@ object Similarity {
       coarseMod: Int): ResidualIndex = {
     require(dims % m == 0, s"dims=$dims not divisible by m=$m")
     val subDim = dims / m
-    // coarse lists: the shared [[coarseCents]] relation (metadata-sized)
-    val cents = coarseCents(embeddings, coarseMod)
     // residual per vector vs its assigned list's centroid — the
     // assignment is the narrow kernel (r22: the former corpus-scale
     // assign aggregate + vec_id self-join removed); only the
@@ -2173,32 +2131,33 @@ object Similarity {
     // remains. `get` (null past the end) keeps the degenerate
     // empty-centroid case identical to the old inner-join-empty form:
     // null list_id matches nothing, resid comes out empty.
-    val (cIds, cVs) = coarseCentArrays(embeddings, coarseMod)
+    val coarse = coarseSet(embeddings, coarseMod)
     val resid = embeddings
       .select(col("vec_id"), quantize(col("embedding")).as("v"))
       .withColumn("list_id", get(graft.functions.IvfTopListsExpr.col(
-        col("v"), cVs, cIds, 1), lit(0)))
-      .join(broadcast(cents.select("list_id", "cv")), "list_id")
+        col("v"), coarse.vs, coarse.ids, 1), lit(0)))
+      .join(broadcast(coarseCents(embeddings, coarseMod)
+        .select("list_id", "cv")), "list_id")
       .withColumn("rv", zip_with(col("v"), col("cv"), (a, b) => a - b))
       .select("vec_id", "list_id", "rv")
     // residual codebooks: the deterministic subset's RESIDUALS
-    val centRows = resid
+    val book = resid
       .where(col("vec_id") % centroidMod === 0)
       .select("vec_id", "rv")
       .collect()
-      .sortBy(_.getLong(0))
-    require(centRows.nonEmpty, "empty residual PQ codebook")
-    require(centRows.length.toLong * dims <= (16L << 20),
-      s"codebook ${centRows.length}x$dims exceeds the driver bound; " +
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+      .sortBy(_._1)
+      .toIndexedSeq
+    require(book.nonEmpty, "empty residual PQ codebook")
+    require(book.length.toLong * dims <= (16L << 20),
+      s"codebook ${book.length}x$dims exceeds the driver bound; " +
         "raise centroidMod")
-    val ids = centRows.map(_.getLong(0))
-    val cbooks = centRows.map(_.getSeq[Double](1).toArray)
     // index: residual codes + coarse list per vector (one narrow
     // codegen'd projection — the pqEncode kernel, fed residuals)
     val index = resid.select(
       col("vec_id").as("neighbor_id"), col("list_id"),
-      graft.functions.PqEncodeExpr.col(col("rv"), cbooks, ids, m, subDim).as("codes"))
-    ResidualIndex(cents, resid, index, subDim)
+      encodeCol(col("rv"), book, m, subDim).as("codes"))
+    ResidualIndex(index, coarse, book, subDim)
   }
 
   /** Candidate relation of [[ivfPqResidualSearch]] before top-k —
@@ -2212,82 +2171,34 @@ object Similarity {
       centroidMod: Int,
       coarseMod: Int,
       nprobe: Int): DataFrame = {
-    val spark = embeddings.sparkSession
+    val queries = queryRows(prefixQueries(embeddings, nQueries))
     val ri = buildResidualIndex(embeddings, m, dims, centroidMod, coarseMod)
-    val ResidualIndex(cents, resid, index, subDim) = ri
-    // residual codebook subvectors, relational (metadata-sized)
-    val rbooks = resid
-      .where(col("vec_id") % centroidMod === 0)
-      .select(col("vec_id").as("centroid_id"), col("rv"))
-      .withColumn("sub", explode(lit((0 until m).toArray)))
-      .withColumn("cs", slice(col("rv"), col("sub") * subDim + 1, lit(subDim)))
-      .withColumn("cn", dot(col("cs"), col("cs")))
-      .select("sub", "centroid_id", "cs", "cn")
-    // probes: the shared [[ivfProbes]] contract (ivfAssign's exact
-    // rounded-cosine + tie-break arithmetic, kept to rank ≤ nprobe)
-    val probes = ivfProbes(embeddings, cents, nQueries, nprobe)
-    val qv = embeddings
-      .where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), quantize(col("embedding")).as("v"))
-    // per-(query, probed list) LUT against the query residual
-    // q − c(list): nQueries × nprobe × m × ksub rows collapse to
-    // nQueries × nprobe nested-array rows — broadcast
-    val perEntry = probes
-      .join(qv, "query_id")
-      .join(broadcast(cents.select("list_id", "cv")), "list_id")
-      .withColumn("qr", zip_with(col("v"), col("cv"), (a, b) => a - b))
-      .withColumn("sub", explode(lit((0 until m).toArray)))
-      .withColumn("vs", slice(col("qr"), col("sub") * subDim + 1, lit(subDim)))
-      .withColumn("vn", dot(col("vs"), col("vs")))
-      .join(broadcast(rbooks), Seq("sub"))
-      .select(col("query_id"), col("list_id"), col("sub"), col("centroid_id"),
-        (col("vn") - lit(2) * dot(col("vs"), col("cs")) + col("cn")).as("pd"))
-    val probeLut = lutFold(perEntry, Seq("query_id", "list_id"), centroidMod)
-    index
-      .join(broadcast(probeLut), Seq("list_id"))
-      .where(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        adcSum(m, centroidMod).as("adc_dist"))
+    adcScan(ri.index, probeLutRelation(embeddings.sparkSession,
+      residualLuts(queries, ri.coarse,
+        adcBook(ri.book, m, ri.subDim, centroidMod), nprobe)),
+      m, centroidMod, excludeSelf = true)
   }
 
-  /** Per-query ADC lookup tables as m positional arrays
-    * (luts[s][ci] = pd, ci = centroid_id / centroidMod — pqCodebooks
-    * takes every centroidMod-th vec_id, so the division is the exact
-    * dense index). nQueries × m × ksub longs — metadata-sized, always
-    * broadcast by callers. */
-  private def adcLutArr(
-      embeddings: DataFrame,
-      nQueries: Int,
+  /** The ONE ADC scan: the index's `(neighbor_id, [list_id,] codes)` rows
+    * against the broadcast local relation of lookup-table rows
+    * `(query_id, [list_id,] luts)`, joined on the columns the two share
+    * — `list_id` for probe rows (an equi-join, so unprobed lists never
+    * leave the scan), none for flat PQ's per-query rows (every codes row
+    * against every query) — then the optional `neighbor_id !=
+    * query_id` filter and the m-term [[adcSum]]. */
+  private def adcScan(
+      index: DataFrame,
+      lut: DataFrame,
       m: Int,
-      dims: Int,
-      centroidMod: Int): DataFrame =
-    adcLutFrom(
-      embeddings
-        .where(col("vec_id") < nQueries)
-        .select(col("vec_id").as("query_id"),
-          quantize(col("embedding")).as("v")),
-      pqCodebooks(embeddings, m, dims, centroidMod),
-      m, dims / m, centroidMod)
-
-  /** Per-query LUTs from explicit (query_id, v) and codebook relations —
-    * the ONE copy of the relational LUT join, used by the in-plan
-    * builders; the persisted search's driver stage
-    * ([[persistedProbeLuts]]) is pinned bit-equal to it. */
-  private[graft] def adcLutFrom(
-      queries: DataFrame,
-      books: DataFrame,
-      m: Int,
-      subDim: Int,
-      centroidMod: Int): DataFrame = {
-    val spark = queries.sparkSession
-    val perEntry = queries
-      .withColumn("sub", explode(lit((0 until m).toArray)))
-      .withColumn("vs", slice(col("v"), col("sub") * subDim + 1, lit(subDim)))
-      .withColumn("vn", dot(col("vs"), col("vs")))
-      .join(broadcast(books), Seq("sub"))
-      .select(col("query_id"), col("sub"), col("centroid_id"),
-        (col("vn") - lit(2) * dot(col("vs"), col("cs")) + col("cn")).as("pd"))
-    lutFold(perEntry, Seq("query_id"), centroidMod)
+      divisor: Int,
+      excludeSelf: Boolean): DataFrame = {
+    val joined = index.join(broadcast(lut),
+      index.columns.intersect(lut.columns).toSeq)
+    val kept =
+      if (excludeSelf) joined.where(col("neighbor_id") =!= col("query_id"))
+      else joined
+    kept.select(col("query_id"), col("neighbor_id"),
+      adcSum(m, divisor).as("adc_dist"))
   }
 
   /** The m-term ADC estimate over a `codes` row against the broadcast
@@ -2300,11 +2211,11 @@ object Similarity {
     * chains, not a higher-order aggregate (HOF lambdas stay outside
     * whole-stage codegen). pd is an integer-valued double (quantized
     * milli-unit arithmetic); the sum is exact in binary FP, cast once. */
-  private def adcSum(m: Int, centroidMod: Int): Column =
+  private def adcSum(m: Int, divisor: Int): Column =
     (0 until m).map { s =>
       element_at(
         element_at(col("luts"), s + 1),
-        (element_at(col("codes"), s + 1) / centroidMod).cast("int") + 1)
+        (element_at(col("codes"), s + 1) / divisor).cast("int") + 1)
     }.reduce(_ + _).cast("long")
 
   /** Deterministic (dist asc, neighbor_id) top-k per query through

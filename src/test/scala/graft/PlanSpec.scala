@@ -371,6 +371,28 @@ class PlanSpec extends SparkSpec {
     } finally spark.conf.set(key, prior)
   }
 
+  test("pq_encode compiles to ONE call of the shared kernel " +
+    "(no interpreted fallback)") {
+    import org.apache.spark.sql.execution.debug.codegenString
+    val key = "spark.sql.codegen.fallback"
+    val prior = spark.conf.get(key, "true")
+    try {
+      spark.conf.set(key, "false")
+      // v = (i, 2 | 0, i) against (0, 2 | 0, 0) id 3 and (5, 2 | 0, 5)
+      // id 5: both subspaces pick 3 for i <= 2, else 5
+      val i = col("id").cast("double")
+      val df = spark.range(8L).select(graft.functions.PqEncodeExpr.col(
+        array(i, lit(2.0), lit(0.0), i),
+        Array(Array(0.0, 2.0, 0.0, 0.0), Array(5.0, 2.0, 0.0, 5.0)),
+        Array(3L, 5L), 2, 2).as("codes"))
+      val code = codegenString(df.queryExecution.executedPlan)
+      assert(code.contains("graft.functions.PqEncodeExpr.encode("),
+        s"generated code does not call the kernel:\n$code")
+      assert(df.collect().map(_.getSeq[Long](0)).toSeq ==
+        (0 until 8).map(n => if (n <= 2) Seq(3L, 3L) else Seq(5L, 5L)))
+    } finally spark.conf.set(key, prior)
+  }
+
   test("persisted search CHUNKS the probed-list IN above the session's " +
     "pushdown threshold: every scan keeps a pushed In and reads stay at " +
     "the probed fraction (no silent [min,max] degradation)") {

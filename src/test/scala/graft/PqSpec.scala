@@ -1094,33 +1094,60 @@ class PqSpec extends SparkSpec {
       trainMod = 3)
     s"$dir/index"
   }
+  private def queryDf(rows: Seq[(Long, Seq[Float])]) =
+    spark.createDataFrame(rows).toDF("query_id", "embedding")
   private def searchRows(rows: (Long, Seq[Float])*) =
-    Similarity.ivfPqSearchPersistedQ(spark, badQueryIndex,
-      spark.createDataFrame(rows).toDF("query_id", "embedding"), k = 3,
-      m = 2, dims = 4, centroidMod = 1, nprobe = 2).collect()
+    Similarity.ivfPqSearchPersistedQ(spark, badQueryIndex, queryDf(rows),
+      k = 3, m = 2, dims = 4, centroidMod = 1, nprobe = 2).collect()
+  /** The in-plan searches of literal query rows over the same corpus,
+    * k = 3: each collects its queries at call time. */
+  private def inPlanSearches(rows: (Long, Seq[Float])*) = Seq(
+    "ivfPqSearchQ" -> (() => Similarity.ivfPqSearchQ(bigWithDup,
+      queryDf(rows), k = 3, m = 2, dims = 4, centroidMod = 7,
+      coarseMod = 20, nprobe = 2).collect()),
+    "pqSearchTrainedQ" -> (() => Similarity.pqSearchTrainedQ(bigWithDup,
+      queryDf(rows), k = 3, m = 2, dims = 4, ksub = 4, iters = 1,
+      trainMod = 3).collect()))
 
   test("persisted search rejects a repeated query_id by name") {
     // two queries under one id used to come back as ONE merged top-3
-    val e = intercept[IllegalArgumentException](searchRows(
-      (0L, Seq(1f, 2f, 3f, 4f)), (0L, Seq(4f, 3f, 2f, 1f))))
-    assert(e.getMessage.contains("query_id 0 appears more than once"),
-      e.getMessage)
+    val rows = Seq((0L, Seq(1f, 2f, 3f, 4f)), (0L, Seq(4f, 3f, 2f, 1f)))
+    val all = ("persisted" -> (() => searchRows(rows: _*))) +:
+      inPlanSearches(rows: _*)
+    all.foreach { case (name, search) =>
+      val e = intercept[IllegalArgumentException](search())
+      assert(e.getMessage.contains("query_id 0 appears more than once"),
+        s"$name: ${e.getMessage}")
+    }
   }
 
   test("persisted search rejects a null query embedding by name") {
     // a null embedding used to rank 3 neighbors with adc_dist = null
-    val e = intercept[IllegalArgumentException](searchRows(
-      (5L, Seq(1f, 2f, 3f, 4f)), (7L, null)))
-    assert(e.getMessage.contains("query_id 7 has a null embedding"),
-      e.getMessage)
+    val rows = Seq((5L, Seq(1f, 2f, 3f, 4f)), (7L, null))
+    val all = ("persisted" -> (() => searchRows(rows: _*))) +:
+      inPlanSearches(rows: _*)
+    all.foreach { case (name, search) =>
+      val e = intercept[IllegalArgumentException](search())
+      assert(e.getMessage.contains("query_id 7 has a null embedding"),
+        s"$name: ${e.getMessage}")
+    }
     assert(searchRows((5L, Seq(1f, 2f, 3f, 4f))).length == 3)
+    inPlanSearches((5L, Seq(1f, 2f, 3f, 4f))).foreach { case (name, search) =>
+      assert(search().length == 3, name)
+    }
   }
 
   test("persisted search of a zero-magnitude query fails with " +
     "DIVIDE_BY_ZERO") {
-    val e = intercept[Throwable](searchRows((3L, Seq(0f, 0f, 0f, 0f))))
-    val messages = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
-      .map(t => String.valueOf(t.getMessage)).mkString(" | ")
-    assert(messages.contains("DIVIDE_BY_ZERO"), messages)
+    val zero = Seq((3L, Seq(0f, 0f, 0f, 0f)))
+    // the in-plan IVF+PQ search probes on the driver too: it fails at
+    // call time (flat trained PQ has no cosine, so no probe to fail)
+    Seq(() => searchRows(zero: _*), inPlanSearches(zero: _*).head._2)
+      .foreach { search =>
+        val e = intercept[Throwable](search())
+        val messages = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+          .map(t => String.valueOf(t.getMessage)).mkString(" | ")
+        assert(messages.contains("DIVIDE_BY_ZERO"), messages)
+      }
   }
 }

@@ -463,31 +463,79 @@ class PropertySpec extends SparkSpec {
     import graft.similarity.Similarity
     type Cents = Seq[(Long, Seq[Double], Double)]
     type Book = Seq[(Long, Seq[Double])]
+    type Qs = Seq[(Long, Seq[Double])]
+    type Rows = Seq[(Long, Long, Seq[Seq[Long]])]
     // the index-order self-dot the writers persist as cn
     def selfDot(v: Seq[Double]) = v.foldLeft(0.0)((acc, x) => acc + x * x)
     def bits(luts: collection.Seq[collection.Seq[Double]]): Seq[Seq[Long]] =
       luts.map(_.map(java.lang.Double.doubleToRawLongBits).toList).toList
-    def driver(qs: Seq[(Long, Seq[Double])], cents: Cents, book: Book,
-        m: Int, subDim: Int, cmod: Int, nprobe: Int) =
-      Similarity.persistedProbeLuts(qs.map { case (i, v) => (i, v.toArray) },
-        cents, book, m, subDim, cmod, nprobe)
-        .map { case (q, l, luts) => (q, l, bits(luts)) }
-    def relational(qs: Seq[(Long, Seq[Double])], cents: Cents, book: Book,
-        m: Int, subDim: Int, cmod: Int, nprobe: Int) = {
-      val qv = spark.createDataFrame(qs).toDF("query_id", "v")
-      val books = Similarity.subspaceBooks(
-        spark.createDataFrame(book).toDF("centroid_id", "v"), m, subDim)
-      Similarity.ivfProbesQ(qv,
-          spark.createDataFrame(cents).toDF("list_id", "cv", "cn"), nprobe)
-        .join(Similarity.adcLutFrom(qv, books, m, subDim, cmod), "query_id")
-        .select("query_id", "list_id", "luts").collect()
+    def arrs(qs: Qs) = qs.map { case (i, v) => (i, v.toArray) }
+    def stageCents(cents: Cents) =
+      Similarity.cents(cents.map { case (i, v, cn) => (i, v.toArray, cn) })
+    def stageBook(book: Book, m: Int, subDim: Int, cmod: Int) =
+      Similarity.adcBook(book.map { case (i, v) => (i, v.toArray) }, m,
+        subDim, cmod)
+    def driverRows(rows: Seq[(Long, Long, Seq[Seq[Double]])]): Rows =
+      rows.map { case (q, l, luts) => (q, l, bits(luts)) }
+    // the raw IVF+PQ stage: probes, each with the query's LUTs
+    def driver(qs: Qs, cents: Cents, book: Book,
+        m: Int, subDim: Int, cmod: Int, nprobe: Int): Rows =
+      driverRows(Similarity.probeLuts(arrs(qs), stageCents(cents),
+        stageBook(book, m, subDim, cmod), nprobe))
+    // flat PQ: LUTs only, no probes
+    def driverFlat(qs: Qs, book: Book, m: Int, subDim: Int, cmod: Int) =
+      qs.map { case (q, v) =>
+        (q, bits(Similarity.luts(v.toArray, stageBook(book, m, subDim, cmod))))
+      }
+    def driverResidual(qs: Qs, cents: Cents, book: Book,
+        m: Int, subDim: Int, cmod: Int, nprobe: Int): Rows =
+      driverRows(Similarity.residualLuts(arrs(qs), stageCents(cents),
+        stageBook(book, m, subDim, cmod), nprobe))
+    def qvDf(qs: Qs) = spark.createDataFrame(qs).toDF("query_id", "v")
+    def centsDf(cents: Cents) =
+      spark.createDataFrame(cents).toDF("list_id", "cv", "cn")
+    def booksDf(book: Book, m: Int, subDim: Int) = Similarity.subspaceBooks(
+      spark.createDataFrame(book).toDF("centroid_id", "v"), m, subDim)
+    def relRows(df: org.apache.spark.sql.DataFrame): Rows =
+      df.select("query_id", "list_id", "luts").collect()
         .map(r => (r.getLong(0), r.getLong(1),
           bits(r.getSeq[collection.Seq[Double]](2))))
         .toSeq
+    def relational(qs: Qs, cents: Cents, book: Book,
+        m: Int, subDim: Int, cmod: Int, nprobe: Int): Rows = {
+      val qv = qvDf(qs)
+      relRows(AdcReference.ivfProbesQ(qv, centsDf(cents), nprobe)
+        .join(AdcReference.adcLutFrom(qv, booksDf(book, m, subDim), m,
+          subDim, cmod), "query_id"))
     }
-    def same(d: Seq[(Long, Long, Seq[Seq[Long]])],
-        r: Seq[(Long, Long, Seq[Seq[Long]])]) =
+    def relationalFlat(qs: Qs, book: Book, m: Int, subDim: Int, cmod: Int) =
+      AdcReference.adcLutFrom(qvDf(qs), booksDf(book, m, subDim), m, subDim,
+        cmod).collect()
+        .map(r => (r.getLong(0), bits(r.getSeq[collection.Seq[Double]](1))))
+        .toSeq
+    def relationalResidual(qs: Qs, cents: Cents, book: Book,
+        m: Int, subDim: Int, cmod: Int, nprobe: Int): Rows =
+      relRows(AdcReference.residualLuts(qvDf(qs), centsDf(cents),
+        booksDf(book, m, subDim), m, subDim, cmod, nprobe))
+    def same[T](d: Seq[T], r: Seq[T]) =
       d.length == r.length && d.toSet == r.toSet
+    // residual: full-length queries match bit for bit; a short one has
+    // no residual (the relational zip_with pads it with null, which the
+    // dot kernel reads as 0.0), so the driver stage rejects it by name
+    def residualAgrees(qs: Qs, cents: Cents, book: Book,
+        m: Int, subDim: Int, cmod: Int, nprobe: Int) = {
+      val (full, short) = qs.partition(_._2.length == m * subDim)
+      same(driverResidual(full, cents, book, m, subDim, cmod, nprobe),
+        relationalResidual(full, cents, book, m, subDim, cmod, nprobe)) &&
+      short.forall { case (q, v) =>
+        scala.util.Try(driverResidual(Seq((q, v)), cents, book, m, subDim,
+          cmod, nprobe)) match {
+          case scala.util.Failure(e: IllegalArgumentException) =>
+            e.getMessage.contains(s"query_id $q has")
+          case _ => false
+        }
+      }
+    }
 
     // integer-valued coordinates: small, or >= 2^27 where products and
     // sums stop being exact and the LUT's operation order shows
@@ -504,9 +552,13 @@ class PropertySpec extends SparkSpec {
       subDim <- Gen.choose(1, 3)
       dims = m * subDim
       big <- Gen.oneOf(false, true)
-      cmod <- Gen.oneOf(1, 97)
+      // trained: list ids 0..nlists−1 and book ids 0..ksub−1 at
+      // divisor 1; else a subset (sparse list ids, ids i·cmod)
+      trained <- Gen.oneOf(false, true)
+      cmod <- if (trained) Gen.const(1) else Gen.oneOf(1, 97)
       nlists <- Gen.choose(1, 5)
-      listIds <- Gen.pick(nlists, 0L until 40L)
+      listIds <- if (trained) Gen.const(0L until nlists.toLong)
+        else Gen.pick(nlists, 0L until 40L)
       base <- Gen.listOfN(nlists, vec(dims, big))
       // a list may repeat an earlier one's direction (x2 is exact):
       // a cosine tie the (cos desc, list_id) order must break
@@ -535,7 +587,10 @@ class PropertySpec extends SparkSpec {
     val prop = Prop.forAllNoShrink(caseGen) {
       case (qs, cents, book, m, subDim, cmod, nprobe) =>
         same(driver(qs, cents, book, m, subDim, cmod, nprobe),
-          relational(qs, cents, book, m, subDim, cmod, nprobe))
+          relational(qs, cents, book, m, subDim, cmod, nprobe)) &&
+        same(driverFlat(qs, book, m, subDim, cmod),
+          relationalFlat(qs, book, m, subDim, cmod)) &&
+        residualAgrees(qs, cents, book, m, subDim, cmod, nprobe)
     }
     val res = Check.check(Check.Parameters.default
       .withMinSuccessfulTests(30).withInitialSeed(Seed(5L)), prop)
