@@ -1,6 +1,40 @@
 package graft
+
+import java.io.IOException
+import java.nio.file.{Files, Paths}
+
 object Bench {
+
+  // Start conditions, benchmark/run.py's rule: start once the 1-minute
+  // load is below IdleLoadPerCpu × nproc, or after IdleWaitS stamped
+  // contended; a run that lost more than StealContended of the CPU to
+  // steal is contended too.
+  private val IdleLoadPerCpu = 1.25
+  private val IdleWaitS = 10
+  private val StealContended = 0.05
+
+  /** (steal, total) jiffies of all CPUs from /proc/stat; (0, 0) where it
+    * cannot be read. */
+  private def cpuTicks(): (Long, Long) =
+    try {
+      val fields = Files.readAllLines(Paths.get("/proc/stat")).get(0)
+        .trim.split("\\s+").drop(1).map(_.toLong)
+      (if (fields.length > 7) fields(7) else 0L, fields.sum)
+    } catch { case _: IOException | _: NumberFormatException => (0L, 0L) }
+
   def main(args: Array[String]): Unit = {
+    val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+    val loadLimit = IdleLoadPerCpu * Runtime.getRuntime.availableProcessors
+    val waitT0 = System.nanoTime()
+    var load = os.getSystemLoadAverage
+    while (load >= loadLimit &&
+        System.nanoTime() - waitT0 < IdleWaitS * 1000000000L) {
+      Thread.sleep(1000)
+      load = os.getSystemLoadAverage
+    }
+    val waitedS = (System.nanoTime() - waitT0) / 1e9
+    val waitExpired = load >= loadLimit
+    val (steal0, ticks0) = cpuTicks()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.build(cpus)
@@ -38,13 +72,11 @@ object Bench {
       .mkString("{", ",", "}")
     // environment stamp at START (to pair with the end-of-run load_avg:
     // box contention, not plan regressions, explained the r11 noise)
-    val loadStart = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage
+    val loadStart = os.getSystemLoadAverage
     val uptimeSec: Long =
-      try java.nio.file.Files.readString(
-        java.nio.file.Paths.get("/proc/uptime")).split("\\s+")(0)
+      try Files.readString(Paths.get("/proc/uptime")).split("\\s+")(0)
         .toDouble.toLong
-      catch { case _: Throwable => -1L }
+      catch { case _: IOException | _: NumberFormatException => -1L }
     val benchT0 = System.currentTimeMillis()
     // Per-query: wall seconds, start offset (ms since bench start — lets a
     // post-hoc reader line timings up against driver-box contention
@@ -92,10 +124,14 @@ object Bench {
     val total = results.filter(_._4.isEmpty).map(_._2).sum
     // environment stamp: box contention (not plan regressions) explained
     // the r11 cross-round timing noise — record enough to tell them apart
-    val loadAvg = d3(java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage)
+    val loadAvg = d3(os.getSystemLoadAverage)
+    val (steal1, ticks1) = cpuTicks()
+    val stealFrac = (steal1 - steal0).toDouble / math.max(1L, ticks1 - ticks0)
+    val start =
+      s""""waited_s":${d3(waitedS)},"steal_frac":${d3(stealFrac)},""" +
+        s""""contended":${waitExpired || stealFrac > StealContended}"""
     val env =
-      s""""cpus":"$cpus","host_cores":${Runtime.getRuntime.availableProcessors},"load_avg":$loadAvg,"load_avg_start":${d3(loadStart)},"uptime_sec":$uptimeSec,"hot_cache":${hotTables.nonEmpty},"hot_tables":$hotStatus"""
+      s""""cpus":"$cpus","host_cores":${Runtime.getRuntime.availableProcessors},"load_avg":$loadAvg,"load_avg_start":${d3(loadStart)},$start,"uptime_sec":$uptimeSec,"hot_cache":${hotTables.nonEmpty},"hot_tables":$hotStatus"""
     val line =
       s"""{"metric":"total","value":${d3(total)},"unit":"sec","queries":$qs,""" +
         s""""build_sec":$builds,"build_total":${d3(buildTotal)},""" +
@@ -149,7 +185,7 @@ object Bench {
       s"""{"metric":"total","value":${d3(total)},"unit":"sec","queries":$qsTop,""" +
         s""""queries_shown":${top.size},"queries_total":${results.size},""" +
         s""""build_total":${d3(buildTotal)},"serve_total":${d3(total - buildTotal)},""" +
-        s""""error_count":$errCount,""" +
+        s""""error_count":$errCount,$start,""" +
         lastWriteError.fold("\"queries_full\":\"BENCH_LAST.json\",")(e =>
           s""""queries_full":null,"queries_full_error":"$e",""") +
         s""""sf":"$sfDir"}"""

@@ -23,6 +23,9 @@ object Caching {
     c
   }
 
+  /** Whether no DataFrame is tracked — nothing awaits [[release]]. */
+  private[graft] def isEmpty: Boolean = registry.isEmpty
+
   /** Unpersist ONE tracked DataFrame eagerly — for iterative operators
     * (label propagation) that must drop round N's cache before round
     * N+1, long before the harness-level [[release()]] runs. */

@@ -493,9 +493,10 @@ object ScaleBenchEntries {
   // must be the planted doc for all 100 queries. Wall-time REQUIRE:
   // fusion adds only query-scale work, so the fused run must stay
   // within 1.2× the sum of its two leg costs (+2 s fixed slack) — the
-  // legs are localCheckpointed before fusion (RankFusion.materialized),
-  // so the fused plan never re-derives corpus-scale intermediates (the
-  // r17 pre-fix shape cost 1.65× the leg sum).
+  // legs are collected (concurrently) and fused on the driver
+  // (RankFusion.rrfFuse), so fusion never re-derives corpus-scale
+  // intermediates (the r17 pre-fix shape, fusing the two live plans,
+  // cost 1.65× the leg sum).
   def b44(spark: SparkSession): String = {
     val vecs = dupVecs(spark).persist()
     vecs.count()
@@ -530,7 +531,7 @@ object ScaleBenchEntries {
     require(b44s <= 1.2 * (b44lexs + b44sems) + 2.0,
       s"B44 fused $b44s s > 1.2x legs (${b44lexs + b44sems} s) + 2 - " +
         "fusion is doing corpus-scale work (r17's 1.65x came from fusing " +
-        "two live corpus-scale plans; legs are localCheckpointed now)")
+        "two live corpus-scale plans; legs are collected and fused on the driver now)")
     vecs.unpersist()
     docs.unpersist()
     Caching.release()

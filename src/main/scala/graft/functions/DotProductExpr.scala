@@ -19,20 +19,31 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * (exact-integer) embeddings the engine uses — so gate hashes are
   * unchanged. Mismatched lengths dot the common prefix (zip_with
   * semantics would null-pad; embeddings are fixed-width so both agree —
-  * kept strict-prefix to stay total).
+  * kept strict-prefix to stay total). An array holding a null element
+  * gives null, as the higher-order form's `x * y` did, so the kernel
+  * never reads a null slot.
   */
 case class DotProductExpr(left: Expression, right: Expression)
   extends BinaryExpression {
 
   override def dataType: DataType = DoubleType
   override def prettyName: String = "dot_product"
+  override def nullable: Boolean = true
 
-  override def nullSafeEval(a: Any, b: Any): Any =
-    DotProductExpr.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    if (DotProductExpr.hasNull(x) || DotProductExpr.hasNull(y)) null
+    else DotProductExpr.dot(x, y)
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.DotProductExpr.dot($a, $b);")
+      s"""if (graft.functions.DotProductExpr.hasNull($a) ||
+         |    graft.functions.DotProductExpr.hasNull($b)) {
+         |  ${ev.isNull} = true;
+         |} else {
+         |  ${ev.value} = graft.functions.DotProductExpr.dot($a, $b);
+         |}""".stripMargin)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProductExpr =
@@ -41,7 +52,19 @@ case class DotProductExpr(left: Expression, right: Expression)
 
 object DotProductExpr {
 
-  /** The kernel, shared by the interpreted and the generated path. */
+  /** Whether `x` holds a null element — the expression's null test. */
+  def hasNull(x: ArrayData): Boolean = {
+    var i = 0
+    val n = x.numElements()
+    while (i < n) {
+      if (x.isNullAt(i)) return true
+      i += 1
+    }
+    false
+  }
+
+  /** The kernel, shared by the interpreted and the generated path and
+    * the driver stages; callers pass arrays without null elements. */
   def dot(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var s = 0.0

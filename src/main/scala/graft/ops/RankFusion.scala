@@ -1,5 +1,7 @@
 package graft.ops
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -21,90 +23,104 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: each leg is already a top-k relation (≤ nQueries·kEach
   * rows — query-scale, NOT corpus-scale; the corpus work happened inside
-  * the leg operators, which carry their own scale proofs). Fusion is a
-  * unionByName + one groupBy on (query_id, doc_id) and a per-query
-  * [[TopK.perGroup]] over ≤ legs·kEach candidates. The candidate count
-  * is bounded by construction, and the helper's stated bound (at most k
-  * rows per query from each map partition reach the final sort) holds
-  * as well.
+  * the leg operators, which carry their own scale proofs). So the engine
+  * runs only the legs: [[rrfFuse]] collects them concurrently and folds
+  * them on the driver ([[fuse]], ≤ legs·nQueries·kEach rows), with the
+  * engine's arithmetic unchanged, and returns a local relation. Nothing
+  * is cached, and fusion adds no job beyond the legs' own. PropertySpec
+  * pins [[fuse]] bit-equal to the relational fusion kept in src/test as
+  * the reference.
   */
 object RankFusion {
 
-  /** Fuse ranked legs, each with columns (query_id, doc_id, rank).
+  /** Fuse ranked legs on the driver — the (query_id, doc_id, rank)
+    * triples of each leg, in any order.
     *
     * Each leg is deduplicated to its BEST (minimum) rank per
     * (query_id, doc_id) before fusion, so a leg that returns the same
     * document twice (a caller passing a non-top-k relation) contributes
     * once — RRF's per-leg term is defined on the document's rank IN
     * that leg, and double-counting would silently inflate both the
-    * fused score and `legs_hit` past the leg count. The dedup is a
-    * query-scale aggregate (≤ the leg's own row count, never corpus
-    * rows) and a no-op on well-formed top-k legs.
+    * fused score and `legs_hit` past the leg count.
+    *
+    * A leg's contribution is `round(1e9 / (rrfK + rank), 0)` — Spark's
+    * double `round` (HALF_UP on the shortest decimal form) — cast to
+    * long; the fused score is the exact long sum of those.
     *
     * @return (query_id, doc_id, rank, rrf_nanos, legs_hit) — rank ≤ k
-    *         per query by (rrf_nanos desc, doc_id asc); `legs_hit` is
-    *         how many legs returned the document (consensus signal). */
+    *         per query by (rrf_nanos desc, doc_id asc), by query then
+    *         rank; `legs_hit` is how many legs returned the document
+    *         (consensus signal). */
+  def fuse(legs: Seq[Array[(Long, Long, Long)]], k: Int,
+      rrfK: Int): IndexedSeq[(Long, Long, Int, Long, Long)] = {
+    require(legs.nonEmpty, "rrfFuse needs at least one leg")
+    require(k >= 1 && rrfK >= 1, s"bad k=$k / rrfK=$rrfK")
+    val fused = mutable.HashMap.empty[(Long, Long), (Long, Long)]
+    legs.foreach { leg =>
+      val best = mutable.HashMap.empty[(Long, Long), Long]
+      leg.foreach { case (q, d, r) =>
+        best.update((q, d), best.get((q, d)).fold(r)(math.min(_, r)))
+      }
+      best.foreach { case (key, r) =>
+        val c = contribution(r, rrfK)
+        fused.update(key, fused.get(key).fold((c, 1L)) { case (s, h) =>
+          (Math.addExact(s, c), h + 1) })
+      }
+    }
+    fused.toIndexedSeq.groupBy(_._1._1).toIndexedSeq.sortBy(_._1)
+      .flatMap { case (q, rows) =>
+        rows.map { case ((_, d), (s, h)) => (d, s, h) }
+          .sortWith((a, b) => if (a._2 != b._2) a._2 > b._2 else a._1 < b._1)
+          .take(k).zipWithIndex
+          .map { case ((d, s, h), i) => (q, d, i + 1, s, h) }
+      }
+  }
+
+  /** One leg's term for a document at `rank`: `1e9 / (rrfK + rank)` as
+    * one IEEE division, rounded to 0 places as Spark rounds a double,
+    * then cast to long. A zero divisor throws, as ANSI DIVIDE_BY_ZERO
+    * does. */
+  private def contribution(rank: Long, rrfK: Int): Long = {
+    val d = rrfK + rank
+    if (d == 0L) throw new ArithmeticException(
+      s"[DIVIDE_BY_ZERO] rank $rank with rrfK $rrfK in RRF fusion")
+    java.math.BigDecimal.valueOf(1e9 / d.toDouble)
+      .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue().toLong
+  }
+
+  /** Fuse ranked legs, each with columns (query_id, doc_id, rank): the
+    * legs are collected concurrently ([[graft.Par.run]] — one leg's
+    * tasks back-fill the executors the other leaves idle in its scan
+    * tails and planning), evaluated once at call time, and fused on the
+    * driver by [[fuse]]. A null query_id, doc_id or rank fails, naming
+    * the leg and the column.
+    *
+    * @return a local relation (query_id long, doc_id long, rank int,
+    *         rrf_nanos long, legs_hit long) — see [[fuse]]. */
   def rrfFuse(legs: Seq[DataFrame], k: Int, rrfK: Int = 60): DataFrame = {
     require(legs.nonEmpty, "rrfFuse needs at least one leg")
     require(k >= 1 && rrfK >= 1, s"bad k=$k / rrfK=$rrfK")
-    val contribs = legs.map(_.select(
-      col("query_id").cast("long").as("query_id"),
-      col("doc_id").cast("long").as("doc_id"),
-      col("rank"))
-      .groupBy("query_id", "doc_id").agg(min("rank").as("rank"))
-      .select(col("query_id"), col("doc_id"),
-        round(lit(1e9) / (lit(rrfK) + col("rank")), 0).cast("long")
-          .as("contrib")))
-    val fused = contribs.reduce(_.unionByName(_))
-      .groupBy("query_id", "doc_id")
-      .agg(sum("contrib").as("rrf_nanos"),
-        count(lit(1)).as("legs_hit"))
-    TopK.perGroup(fused, Seq(col("query_id")),
-        Seq(col("rrf_nanos").desc, col("doc_id")), k)
-      .select("query_id", "doc_id", "rank", "rrf_nanos", "legs_hit")
+    val rows = new Array[Array[(Long, Long, Long)]](legs.length)
+    graft.Par.run(legs.indices.map(i => () => rows(i) = legRows(legs(i), i)): _*)
+    legs.head.sparkSession.createDataFrame(fuse(rows.toSeq, k, rrfK))
+      .toDF("query_id", "doc_id", "rank", "rrf_nanos", "legs_hit")
   }
+
+  private val legCols = Seq("query_id", "doc_id", "rank")
+
+  /** Leg `i`'s (query_id, doc_id, rank) rows, collected. */
+  private def legRows(leg: DataFrame, i: Int): Array[(Long, Long, Long)] =
+    leg.select(legCols.map(c => col(c).cast("long")): _*).collect().map { r =>
+      legCols.indices.foreach(j =>
+        require(!r.isNullAt(j), s"rrfFuse leg $i has a null ${legCols(j)}"))
+      (r.getLong(0), r.getLong(1), r.getLong(2))
+    }
 
   /** Hybrid lexical+semantic retrieval: BM25 over `docs` text fused with
     * exact-cosine kNN over `embeddings` (row i of `embeddings` is the
     * embedding of doc_id i; query embeddings are rows vec_id < max
     * query_id + 1, mirroring the kNN operators' query convention).
     * `kEach` bounds each leg's candidates; the fused top-k ≤ k. */
-  /** Materialize a leg's top-k before fusion: legs are QUERY-scale
-    * (≤ nQueries·kEach rows) but their lineage is corpus-scale, and
-    * fusing two live corpus-scale plans in one query makes the executor
-    * interleave both scans and re-derive shared intermediates — B44
-    * measured the fused run at 1.65× the leg sum before this, ~1.0×
-    * after. Registry-tracked persist + an eager count (NOT
-    * localCheckpoint, which truncates lineage: a lost executor's
-    * checkpoint blocks would abort the fused query unrecoverably,
-    * where a persisted leg just recomputes) — the cached rows are
-    * bounded by construction, never by data, and the harness-level
-    * [[graft.Caching.release]] drops them after the result is
-    * consumed. */
-  private def materialized(leg: DataFrame): DataFrame = {
-    val c = graft.Caching.cache(leg)
-    c.count()
-    c
-  }
-
-  /** [[materialized]] over BOTH legs CONCURRENTLY (guide §2.6 — overlap
-    * independent jobs): the lexical and semantic legs share no state,
-    * and each leaves executors idle in its scan tails and driver-side
-    * planning, so materializing them from two driver threads lets one
-    * leg's tasks back-fill the other's idle capacity. Results are
-    * unchanged (the same two persisted relations, fused identically);
-    * only the wall-clock overlap moves. */
-  private def materializedAll(legs: Seq[DataFrame]): Seq[DataFrame] = {
-    val cached = legs.map(graft.Caching.cache)
-    // graft.Par.run, not a raw pool: it awaits BOTH legs before
-    // rethrowing and unwraps ExecutionException, so a leg failure
-    // surfaces as the leg's own loud require/SparkException (the
-    // caller-visible error contract) and never propagates while the
-    // other leg's count is still running.
-    graft.Par.run(cached.map(c => () => { c.count(); () }): _*)
-    cached
-  }
-
   def hybridSearch(
       spark: SparkSession,
       docs: DataFrame,
@@ -122,7 +138,7 @@ object RankFusion {
     val sem = graft.similarity.Similarity
       .cosineTopKIds(embeddings, queries.map(_._1.toLong), kEach)
       .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))
-    rrfFuse(materializedAll(Seq(lex, sem)), k, rrfK)
+    rrfFuse(Seq(lex, sem), k, rrfK)
   }
 
   /** [[hybridSearch]] with the IVF+PQ approximate semantic leg — the
@@ -150,7 +166,7 @@ object RankFusion {
       .ivfPqSearch(embeddings, nQueries = queries.length, k = kEach,
         m, dims, centroidMod, coarseMod, nprobe)
       .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))
-    rrfFuse(materializedAll(Seq(lex, sem)), k, rrfK)
+    rrfFuse(Seq(lex, sem), k, rrfK)
   }
 
   /** [[hybridSearchAnn]] with STANDALONE query embeddings — the
@@ -182,7 +198,7 @@ object RankFusion {
       .ivfPqSearchQ(embeddings, queryEmbeddings, k = kEach,
         m, dims, centroidMod, coarseMod, nprobe, excludeSelf)
       .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))
-    rrfFuse(materializedAll(Seq(lex, sem)), k, rrfK)
+    rrfFuse(Seq(lex, sem), k, rrfK)
   }
 
   /** Hybrid retrieval served ENTIRELY from persisted artifacts — the
@@ -191,22 +207,26 @@ object RankFusion {
     * pruned to the query terms' postings), the semantic leg reads the
     * [[graft.similarity.Similarity.ivfPqWriteIndex]] /
     * `ivfPqWriteIndexTrained` index at `annDir` (scan pruned to the
-    * probed lists), and fusion is the same query-scale [[rrfFuse]] —
-    * neither the corpus text nor the corpus embeddings are ever read.
-    * Legs are pinned equal to their in-plan forms by their own gates,
-    * so this composition shares the in-plan hybrid's oracle
-    * (q_hybrid_persisted). The semantic leg builds its query stage on
-    * the driver (probes and ADC lookup tables from the cached index
-    * metadata, see [[graft.similarity.Similarity.ivfPqSearchPersistedQ]]):
-    * `queryEmbeddings` is collected once, and the leg adds one codes
-    * scan and its top-k to the fused plan. */
-  /** `rerankR` > 0 upgrades the semantic leg to the exact-refine
+    * probed lists) — neither the corpus text nor the corpus embeddings
+    * are ever read. Legs are pinned equal to their in-plan forms by
+    * their own gates, so this composition shares the in-plan hybrid's
+    * oracle (q_hybrid_persisted).
+    *
+    * The engine runs the two legs' scans and nothing else: the
+    * semantic leg builds its query stage on the driver (probes and ADC
+    * lookup tables from the cached index metadata, see
+    * [[graft.similarity.Similarity.ivfPqSearchPersistedQ]];
+    * `queryEmbeddings` is collected once), and [[rrfFuse]] collects
+    * both legs concurrently and folds them on the driver. The result is
+    * a local relation; nothing is cached.
+    *
+    * `rerankR` > 0 upgrades the semantic leg to the exact-refine
     * serving path ([[graft.similarity.Similarity.ivfPqRerankPersistedQ]]
     * — requires an index written with `storeVecs = true`): the leg's
     * top-`kEach` comes from exact cosine over the `rerankR` ADC
     * candidates instead of quantized ADC order, the IVFPQ+refine recall
-    * a production retrieval stack serves with. 0 (default) keeps the
-    * ADC-only leg. */
+    * a production retrieval stack serves with; its re-rank runs on the
+    * driver too. 0 (default) keeps the ADC-only leg. */
   def hybridSearchPersisted(
       spark: SparkSession,
       bm25Dir: String,
@@ -235,6 +255,6 @@ object RankFusion {
         queryEmbeddings, k = kEach, m, dims, centroidMod, nprobe,
         excludeSelf))
       .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))
-    rrfFuse(materializedAll(Seq(lex, sem)), k, rrfK)
+    rrfFuse(Seq(lex, sem), k, rrfK)
   }
 }

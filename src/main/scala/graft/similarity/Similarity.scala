@@ -1,6 +1,6 @@
 package graft.similarity
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -632,11 +632,12 @@ object Similarity {
     * = [[cosineTopK]]'s rounded-cosine arithmetic verbatim, so rerankR
     * ≥ corpus reproduces the exact brute-force ranking.
     *
-    * Scale shape: the candidate set (nQueries × rerankR rows — query-
-    * scale) is BROADCAST to the vector fetch-back, so re-ranking is one
-    * scan-side equi-join on vec_id plus a per-query window over ≤
-    * rerankR rows; the corpus is never shuffled and raw vectors leave
-    * the scan only for candidates. */
+    * Scale shape: the queries and the candidate set (nQueries × rerankR
+    * rows — query-scale) are collected at call time; the candidates'
+    * quantized vectors leave the corpus scan through a semi-join to the
+    * broadcast candidate ids and are collected once (nQueries × rerankR
+    * × dims doubles on the driver). The re-rank itself is
+    * [[exactTopK]], on the driver; the result is a local relation. */
   def ivfPqRerank(
       embeddings: DataFrame,
       nQueries: Int,
@@ -648,22 +649,14 @@ object Similarity {
       coarseMod: Int = 83,
       nprobe: Int = 2): DataFrame = {
     require(rerankR >= k, s"rerankR=$rerankR must be >= k=$k")
-    val cand = ivfPqSearch(
-      embeddings, nQueries, rerankR, m, dims, centroidMod, coarseMod, nprobe)
-      .select(col("query_id"), col("neighbor_id"))
-    val qv = embeddings
-      .where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), quantize(col("embedding")).as("qv"))
-      .withColumn("qn", dot(col("qv"), col("qv")))
-    val exact = embeddings
-      .select(col("vec_id").as("neighbor_id"),
-        quantize(col("embedding")).as("cv"))
-      .withColumn("cn", dot(col("cv"), col("cv")))
-      .join(broadcast(cand), "neighbor_id")
-      .join(broadcast(qv), "query_id")
-      .withColumn("cos_sim",
-        round(dot(col("qv"), col("cv")) / (sqrt(col("qn")) * sqrt(col("cn"))), 6))
-    cosTopK(exact, k)
+    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
+    val queries = queryRows(prefixQueries(embeddings, nQueries))
+    val cand = candidates(adcTopK(ivfPqScoredQ(embeddings, queries, m, dims,
+      centroidMod, coarseMod, nprobe, excludeSelf = true), rerankR))
+    val vecs = embeddings.select(col("vec_id"),
+      quantize(col("embedding")).as("v"))
+    exactRelation(embeddings.sparkSession, exactTopK(queries, cand,
+      vecRows(candidateVecs(vecs, cand)), k))
   }
 
   /** The IVF+PQ index relation `(neighbor_id, list_id, codes)` with
@@ -1423,11 +1416,13 @@ object Similarity {
     * in lockstep); fails loudly otherwise. Scale shape: the candidate
     * relation (nQueries × rerankR rows) is the SAME query-scale driver
     * bound as the probed-list IN; the vecs scan reads ≈ the candidates'
-    * rows; the corpus is never shuffled. The query rows are collected
-    * once and serve both stages: the ADC stage's driver probes and
-    * lookup tables, and the exact stage's broadcast (query_id, qv, qn)
-    * relation — `queries` is evaluated once per call. Output schema
-    * matches [[ivfPqRerank]]: (query_id, neighbor_id, rank, cos_sim). */
+    * rows ([[rerankFetch]]); the corpus is never shuffled. The query
+    * rows are collected once and serve both stages: the ADC stage's
+    * driver probes and lookup tables, and the exact stage
+    * ([[exactTopK]], on the driver, over the fetched vectors collected
+    * once: nQueries × rerankR × dims doubles) — `queries` is evaluated
+    * once per call. Output schema matches [[ivfPqRerank]]: (query_id,
+    * neighbor_id, rank, cos_sim), a local relation. */
   def ivfPqRerankPersistedQ(
       spark: SparkSession,
       indexDir: String,
@@ -1446,23 +1441,25 @@ object Similarity {
       s"no raw-vector relation at $root/vecs - write the index with " +
         "storeVecs = true to enable the exact re-rank stage")
     val qv = queryRows(quantQueries(queries))
-    val cand = adcTopK(ivfPqScoredPersistedQ(spark, indexDir, qv, m, dims,
-      centroidMod, nprobe, excludeSelf), rerankR)
-      .select(col("query_id"), col("neighbor_id"))
-      .collect()
+    val cand = candidates(adcTopK(ivfPqScoredPersistedQ(spark, indexDir, qv,
+      m, dims, centroidMod, nprobe, excludeSelf), rerankR))
     require(cand.nonEmpty, "no ADC candidates to re-rank - empty index?")
-    // candidate ids, driver-collected: nQueries × rerankR longs — the
-    // same query-scale bound as the probed-list IN, pushed down so the
-    // vecs scan reads only row groups that may hold a candidate
-    val candIds = cand.map(_.getLong(1)).distinct.sorted.toIndexedSeq
-    val candDf = broadcast(spark.createDataFrame(
-      cand.toIndexedSeq.map(r => (r.getLong(0), r.getLong(1))))
-      .toDF("query_id", "neighbor_id"))
-    // same plan-size budget as the probed-list scan: candIds is
-    // nQueries × rerankR distinct ids (B47's operating point is
-    // already ~1000), so past the chunk budget the fetch switches to
-    // ONE range-cover scan — exact membership is the candDf inner
-    // join below either way
+    exactRelation(spark,
+      exactTopK(qv, cand, vecRows(rerankFetch(spark, root, cand)), k))
+  }
+
+  /** The stored raw vectors (vec_id, v) of the candidates' ids, from
+    * `root/vecs`: the ids (nQueries × rerankR longs, the same
+    * query-scale bound as the probed-list IN) are pushed down as a
+    * chunked IN, so the scan reads only row groups that may hold a
+    * candidate; past the chunk budget (B47's operating point is already
+    * ~1000 ids) the fetch switches to ONE range-cover scan. Either way
+    * the semi-join to the broadcast ids ([[candidateVecs]]) is the
+    * exact membership filter. PlanSpec pins the plan: no shuffle, no
+    * window. */
+  private[graft] def rerankFetch(spark: SparkSession, root: String,
+      cand: Seq[(Long, Long)]): DataFrame = {
+    val candIds = cand.map(_._2).distinct.sorted.toIndexedSeq
     val vecsTable = graft.ops.Layout.clusteredTable(spark, s"$root/vecs")
     val fetchThreshold = math.max(1, spark.conf
       .get("spark.sql.parquet.pushdown.inFilterThreshold", "10").toInt)
@@ -1471,19 +1468,93 @@ object Similarity {
         graft.ops.Layout.chunkedIn(spark, vecsTable, "vec_id", candIds)
       else
         graft.ops.Layout.rangeCoverScan(spark, vecsTable, "vec_id", candIds)
-    val qn = broadcast(spark.createDataFrame(
-      qv.map { case (id, v) => (id, v.toSeq) })
-      .toDF("query_id", "qv")
-      .withColumn("qn", dot(col("qv"), col("qv"))))
-    val exact = vecs
-      .select(col("vec_id").as("neighbor_id"), col("v").as("cv"))
-      .withColumn("cn", dot(col("cv"), col("cv")))
-      .join(candDf, "neighbor_id")
-      .join(qn, "query_id")
-      .withColumn("cos_sim",
-        round(dot(col("qv"), col("cv")) / (sqrt(col("qn")) * sqrt(col("cn"))), 6))
-    cosTopK(exact, k)
+    candidateVecs(vecs.select("vec_id", "v"), cand)
   }
+
+  // --- The exact refine stage, on the driver ----------------------------
+  //
+  // Both refine paths ([[ivfPqRerank]], [[ivfPqRerankPersistedQ]])
+  // collect their queries, their ADC candidates and the candidates'
+  // vectors — all query-scale — and rank here. PropertySpec pins
+  // [[exactTopK]] bit-equal to the relational exact stage kept in
+  // src/test as the reference.
+
+  /** (query_id, neighbor_id) rows of an ADC top-k, collected. */
+  private def candidates(adc: DataFrame): IndexedSeq[(Long, Long)] =
+    adc.select("query_id", "neighbor_id").collect().toIndexedSeq
+      .map(r => (r.getLong(0), r.getLong(1)))
+
+  /** The (vec_id, v) rows of `vecs` whose id some candidate names: a
+    * left-semi join to the broadcast distinct candidate ids, so a
+    * repeated vector row stays repeated. */
+  private def candidateVecs(vecs: DataFrame,
+      cand: Seq[(Long, Long)]): DataFrame = {
+    val ids = vecs.sparkSession.createDataFrame(
+      cand.map(c => Tuple1(c._2)).distinct).toDF("vec_id")
+    vecs.join(broadcast(ids), Seq("vec_id"), "left_semi")
+  }
+
+  /** (vec_id, v) rows collected to the driver, failing by vec_id on a
+    * null vector or a null coordinate (the dot kernel reads no null). */
+  private def vecRows(vecs: DataFrame): IndexedSeq[(Long, Array[Double])] =
+    vecs.select("vec_id", "v").collect().toIndexedSeq.map { r =>
+      val id = r.getLong(0)
+      (id, coords(r, 1, s"vec_id $id"))
+    }
+
+  /** The exact re-rank: per (query, candidate) pair and per vector row
+    * of the candidate, `round(dot(q, c) / (sqrt(qn) · sqrt(cn)), 6)` —
+    * every dot [[graft.functions.DotProductExpr.dot]], the rounding
+    * Spark's double `round` ([[IvfTopListsExpr.round6]], so 0.0 is
+    * never −0.0) — ranked per query by (cos_sim desc, neighbor_id asc)
+    * under Spark's double ordering, kept to rank ≤ k. The relational
+    * stage's inner joins carry over: a candidate with no vector row, or
+    * with an unknown query, is dropped; a repeated vector row is ranked
+    * once per copy. A zero-norm query or vector throws
+    * `ArithmeticException`, as ANSI DIVIDE_BY_ZERO does, naming the id.
+    * Driver footprint: the collected inputs, nQueries × rerankR × dims
+    * doubles. Rows: (query_id, neighbor_id, rank, cos_sim). */
+  private[graft] def exactTopK(
+      queries: Seq[(Long, Array[Double])],
+      candidates: Seq[(Long, Long)],
+      vecRows: Seq[(Long, Array[Double])],
+      k: Int): IndexedSeq[(Long, Long, Int, Double)] = {
+    require(k >= 1, s"top-k needs k >= 1, got $k")
+    def withNorm(v: Array[Double]) = {
+      val a = ArrayData.toArrayData(v)
+      (a, math.sqrt(DotProductExpr.dot(a, a)))
+    }
+    val qs = queries.map { case (id, v) => id -> withNorm(v) }.toMap
+    val vs = vecRows.map { case (id, v) => (id, withNorm(v)) }
+      .groupBy(_._1)
+    val scored = candidates.flatMap { case (q, n) =>
+      qs.get(q).toSeq.flatMap { case (qa, qn) =>
+        vs.getOrElse(n, Nil).map { case (_, (ca, cn)) =>
+          val div = qn * cn
+          if (div == 0.0) throw new ArithmeticException(
+            "[DIVIDE_BY_ZERO] zero-magnitude " +
+              (if (qn == 0.0) s"query_id $q" else s"vec_id $n") +
+              " in the exact re-rank")
+          (q, n, IvfTopListsExpr.round6(DotProductExpr.dot(qa, ca) / div))
+        }
+      }
+    }
+    val byCosId: ((Long, Long, Double), (Long, Long, Double)) => Boolean =
+      (a, b) => {
+        val c = SQLOrderingUtil.compareDoubles(a._3, b._3)
+        if (c != 0) c > 0 else a._2 < b._2
+      }
+    scored.groupBy(_._1).toIndexedSeq.sortBy(_._1).flatMap { case (_, rows) =>
+      rows.sortWith(byCosId).take(k).zipWithIndex.map {
+        case ((q, n, cos), i) => (q, n, i + 1, cos)
+      }
+    }
+  }
+
+  /** [[exactTopK]] rows as the refine searches' local relation. */
+  private def exactRelation(spark: SparkSession,
+      rows: Seq[(Long, Long, Int, Double)]): DataFrame =
+    spark.createDataFrame(rows).toDF("query_id", "neighbor_id", "rank", "cos_sim")
 
   /** Candidate relation of [[ivfPqSearchPersisted]] before top-k —
     * exposed (like [[ivfPqScored]]) so ScaleBench B43 can read the
@@ -1900,19 +1971,29 @@ object Similarity {
     * ADC search's ONE evaluation of the caller's queries (nQueries ×
     * dims doubles, query-scale), at call time. Fails loudly, naming the
     * row, on inputs a relational query stage answered silently: a
-    * repeated query_id (its queries' candidates merged into ONE top-k)
-    * and a null embedding (neighbors ranked with a null adc_dist). */
+    * repeated query_id (its queries' candidates merged into ONE top-k),
+    * a null embedding (neighbors ranked with a null adc_dist) and a null
+    * coordinate (read as 0.0). */
   private[graft] def queryRows(
       qv: DataFrame): IndexedSeq[(Long, Array[Double])] = {
     val seen = scala.collection.mutable.HashSet.empty[Long]
     qv.select("query_id", "v").collect().toIndexedSeq.map { r =>
       require(!r.isNullAt(0), "a query row has a null query_id")
       val id = r.getLong(0)
-      require(!r.isNullAt(1), s"query_id $id has a null embedding")
+      val v = coords(r, 1, s"query_id $id")
       require(seen.add(id),
         s"query_id $id appears more than once in the query relation")
-      (id, r.getSeq[Double](1).toArray)
+      (id, v)
     }
+  }
+
+  /** Field `i` of `r`, an array of doubles, as a driver vector — failing
+    * on a null array or a null coordinate, naming the row as `what`. */
+  private def coords(r: Row, i: Int, what: String): Array[Double] = {
+    require(!r.isNullAt(i), s"$what has a null embedding")
+    val xs = r.getSeq[Any](i)
+    require(!xs.contains(null), s"$what has a null coordinate")
+    xs.iterator.map(_.asInstanceOf[Double]).toArray
   }
 
   // --- The ADC query stage, on the driver -------------------------------
@@ -2229,7 +2310,7 @@ object Similarity {
 
   /** Deterministic (cos_sim desc, neighbor_id) top-k per query of a
     * scored (query_id, neighbor_id, cos_sim) relation — the exact-cosine
-    * tail of the brute-force, IVF and rerank searches. */
+    * tail of the corpus-scale brute-force and IVF searches. */
   private def cosTopK(scored: DataFrame, k: Int): DataFrame =
     graft.ops.TopK.perGroup(scored, Seq(col("query_id")),
         Seq(col("cos_sim").desc, col("neighbor_id")), k)

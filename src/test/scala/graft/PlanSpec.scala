@@ -353,6 +353,67 @@ class PlanSpec extends SparkSpec {
       s"the caller's query plan is re-planned in the search:\n$plan")
   }
 
+  test("hybridSearchPersisted returns a local relation and caches " +
+    "nothing; the rerank vector fetch plans no shuffle and no window") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+    import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.execution.window.WindowExecBase
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    val docs = spark.range(60L).select(col("id").as("doc_id"),
+      concat_ws(" ", lit("w"), (col("id") % 7).cast("string"),
+        lit("hash"), lit("join")).as("text"))
+    val big = spark.range(60L).select(col("id").as("vec_id"),
+      transform(sequence(lit(0), lit(3)),
+        d => (((col("id") * 13 + d * 11) % 29) + (col("id") % 5) + 1)
+          .cast("float"))
+        .as("embedding"))
+    val dir = java.nio.file.Files.createTempDirectory("planspec_hyb").toString
+    graft.text.Bm25.writeIndex(spark, docs, s"$dir/bm25", numFiles = 2)
+    graft.similarity.Similarity.ivfPqWriteIndex(big, s"$dir/ann",
+      numFiles = 3, m = 2, dims = 4, centroidMod = 7, coarseMod = 20,
+      storeVecs = true)
+    val qEmb = big.where(col("vec_id") < 2)
+      .select(col("vec_id").as("query_id"), col("embedding"))
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case o => o +: o.children.flatMap(nodes)
+    }
+    Caching.release()
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.size
+    Seq(0, 8).foreach { rerankR =>
+      val out = graft.ops.RankFusion.hybridSearchPersisted(spark,
+        s"$dir/bm25", s"$dir/ann", Seq((0, "hash join"), (1, "w 1")), qEmb,
+        kEach = 5, k = 3, m = 2, dims = 4, centroidMod = 7, nprobe = 3,
+        rerankR = rerankR)
+      val logical = out.queryExecution.optimizedPlan
+      assert(logical.isInstanceOf[LocalRelation] &&
+        logical.collect { case r: InMemoryRelation => r }.isEmpty,
+        s"rerankR=$rerankR: not a local relation:\n$logical")
+      val all = nodes(out.queryExecution.executedPlan)
+      assert(!all.exists(n => n.isInstanceOf[Exchange] ||
+        n.isInstanceOf[InMemoryTableScanExec]),
+        s"rerankR=$rerankR: exchange or cache scan:\n${out.queryExecution.executedPlan}")
+      assert(Caching.isEmpty, s"rerankR=$rerankR: the call registered a cache")
+      assert(spark.sparkContext.getPersistentRDDs.size == persistedBefore,
+        s"rerankR=$rerankR: the call persisted an RDD")
+      assert(out.collect().length == 6)
+    }
+
+    val root = graft.similarity.Similarity.indexRoot(spark, s"$dir/ann")
+    val fetch = graft.similarity.Similarity.rerankFetch(spark, root,
+      Seq((0L, 3L), (0L, 17L), (1L, 17L), (1L, 42L)))
+    assert(fetch.collect().map(_.getLong(0)).sorted.toSeq == Seq(3L, 17L, 42L))
+    val plan = fetch.queryExecution.executedPlan
+    val all = nodes(plan)
+    assert(!all.exists(n => n.isInstanceOf[ShuffleExchangeExec] ||
+      n.isInstanceOf[WindowExecBase]), s"shuffle or window in the fetch:\n$plan")
+    assert(all.collect { case j: BroadcastHashJoinExec => j.joinType } == Seq(LeftSemi),
+      s"expected one broadcast semi-join to the candidate ids:\n$plan")
+  }
+
   test("ivf_top_lists compiles to ONE call of the shared kernel " +
     "(no interpreted fallback)") {
     import org.apache.spark.sql.execution.debug.codegenString

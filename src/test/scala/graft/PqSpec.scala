@@ -179,11 +179,15 @@ class PqSpec extends SparkSpec {
   test("ivfPqRerank ranks the exact duplicate first even when ADC " +
     "quantization ties it with non-duplicates, and broadcasts the " +
     "candidate set (corpus never shuffled for the fetch-back)") {
-    val out = Similarity.ivfPqRerank(bigWithDup, nQueries = 5, k = 3,
-      rerankR = 10, m = 2, dims = 4, centroidMod = 7, coarseMod = 20,
-      nprobe = 2)
-    val plan = out.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), plan)
+    // the fetch-back runs at call time (the result is a local
+    // relation): read the plans of the call's own actions
+    val (out, plans) = org.apache.spark.sql.PlansOf(spark) {
+      Similarity.ivfPqRerank(bigWithDup, nQueries = 5, k = 3,
+        rerankR = 10, m = 2, dims = 4, centroidMod = 7, coarseMod = 20,
+        nprobe = 2)
+    }
+    val plan = plans.map(_.toString).mkString("\n")
+    assert(plans.last.toString.contains("BroadcastHashJoin"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
     val q1 = out.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
@@ -1149,5 +1153,76 @@ class PqSpec extends SparkSpec {
           .map(t => String.valueOf(t.getMessage)).mkString(" | ")
         assert(messages.contains("DIVIDE_BY_ZERO"), messages)
       }
+  }
+
+  /** `bigWithDup` with coordinate 1 of vector `id` set to null. */
+  private def withNullCoord(id: Long) = {
+    import org.apache.spark.sql.functions._
+    bigWithDup.withColumn("embedding", when(col("vec_id") === id,
+      transform(col("embedding"), (x, i) =>
+        when(i === 1, lit(null).cast("float")).otherwise(x)))
+      .otherwise(col("embedding")))
+  }
+
+  /** A clean `bigWithDup` index with its raw-vector relation. */
+  private lazy val refineIndex = {
+    val dir = java.nio.file.Files.createTempDirectory("ivfpqnull").toString
+    Similarity.ivfPqWriteIndex(bigWithDup, s"$dir/index", numFiles = 2,
+      m = 2, dims = 4, centroidMod = 7, coarseMod = 20, storeVecs = true)
+    s"$dir/index"
+  }
+
+  test("a query with a null coordinate fails by name at every search " +
+    "entry point") {
+    import org.apache.spark.sql.functions._
+    // the null used to be read as 0.0: every search ranked neighbors
+    val queries = withNullCoord(3L).where(col("vec_id").isin(2L, 3L))
+      .select(col("vec_id").as("query_id"), col("embedding"))
+    val all = Seq(
+      "persisted" -> (() => Similarity.ivfPqSearchPersistedQ(spark,
+        badQueryIndex, queries, k = 3, m = 2, dims = 4, centroidMod = 1,
+        nprobe = 2).collect()),
+      "ivfPqSearchQ" -> (() => Similarity.ivfPqSearchQ(bigWithDup, queries,
+        k = 3, m = 2, dims = 4, centroidMod = 7, coarseMod = 20,
+        nprobe = 2).collect()),
+      "pqSearchTrainedQ" -> (() => Similarity.pqSearchTrainedQ(bigWithDup,
+        queries, k = 3, m = 2, dims = 4, ksub = 4, iters = 1,
+        trainMod = 3).collect()),
+      "ivfPqRerankPersistedQ" -> (() => Similarity.ivfPqRerankPersistedQ(
+        spark, refineIndex, queries, k = 3, rerankR = 8, m = 2, dims = 4,
+        centroidMod = 7, nprobe = 2).collect()),
+      "ivfPqRerank" -> (() => Similarity.ivfPqRerank(withNullCoord(3L),
+        nQueries = 5, k = 3, rerankR = 8, m = 2, dims = 4, centroidMod = 7,
+        coarseMod = 20, nprobe = 2).collect()))
+    all.foreach { case (name, search) =>
+      val e = intercept[IllegalArgumentException](search())
+      assert(e.getMessage.contains("query_id 3 has a null coordinate"),
+        s"$name: ${e.getMessage}")
+    }
+  }
+
+  test("a stored vector with a null coordinate fails the exact re-rank " +
+    "by vec_id") {
+    // vec 33 is neither a coarse centroid nor a codebook row; with every
+    // list probed and rerankR = corpus it is every query's candidate,
+    // and its null used to be read as 0.0 in the exact cosine
+    val dir = java.nio.file.Files.createTempDirectory("ivfpqnullv").toString
+    Similarity.ivfPqWriteIndex(withNullCoord(33L), s"$dir/index",
+      numFiles = 2, m = 2, dims = 4, centroidMod = 7, coarseMod = 20,
+      storeVecs = true)
+    val queries = bigWithDup.where(org.apache.spark.sql.functions.col("vec_id") < 2)
+      .withColumnRenamed("vec_id", "query_id")
+    val all = Seq(
+      "ivfPqRerankPersistedQ" -> (() => Similarity.ivfPqRerankPersistedQ(
+        spark, s"$dir/index", queries, k = 3, rerankR = 62, m = 2, dims = 4,
+        centroidMod = 7, nprobe = 4).collect()),
+      "ivfPqRerank" -> (() => Similarity.ivfPqRerank(withNullCoord(33L),
+        nQueries = 2, k = 3, rerankR = 62, m = 2, dims = 4, centroidMod = 7,
+        coarseMod = 20, nprobe = 4).collect()))
+    all.foreach { case (name, search) =>
+      val e = intercept[IllegalArgumentException](search())
+      assert(e.getMessage.contains("vec_id 33 has a null coordinate"),
+        s"$name: ${e.getMessage}")
+    }
   }
 }

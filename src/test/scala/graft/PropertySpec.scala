@@ -623,4 +623,127 @@ class PropertySpec extends SparkSpec {
       .withMinSuccessfulTests(6).withInitialSeed(Seed(6L)), spillProp)
     assert(spillRes.passed, org.scalacheck.util.Pretty.pretty(spillRes))
   }
+
+  test("property: the driver RRF fold equals the relational fusion bit " +
+    "for bit") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    import org.scalacheck.rng.Seed
+    import graft.ops.RankFusion
+    type Leg = List[(Long, Long, Int)]
+    // few queries and docs, so a doc repeats within a leg and most docs
+    // come from one leg; small ranks tie contributions, and 1e9 / d is
+    // a rounding half at d = 1024 and 5120 (rank 1023 / 5119 at rrfK 1,
+    // 964 / 5060 at rrfK 60)
+    val rankGen = Gen.frequency(8 -> Gen.choose(1, 6),
+      1 -> Gen.oneOf(964, 1023, 5060, 5119))
+    val legGen: Gen[Leg] = Gen.choose(0, 14).flatMap(n => Gen.listOfN(n,
+      Gen.zip(Gen.choose(0L, 2L), Gen.choose(0L, 9L), rankGen)))
+    val caseGen = for {
+      nLegs <- Gen.choose(1, 3)
+      legs <- Gen.listOfN(nLegs, legGen)
+      k <- Gen.oneOf(1, 3, 50)
+      rrfK <- Gen.oneOf(1, 60)
+    } yield (legs, k, rrfK)
+    val seen = scala.collection.mutable.Set.empty[String]
+    def note(legs: Seq[Leg], k: Int, rrfK: Int): Unit = {
+      val perLeg = legs.map(_.map(r => (r._1, r._2)))
+      if (perLeg.exists(l => l.distinct.length < l.length)) seen += "repeat"
+      val all = perLeg.flatMap(_.distinct)
+      if (all.groupBy(identity).exists(_._2.length == 1)) seen += "one-leg"
+      if (all.distinct.groupBy(_._1).exists(_._2.length < k)) seen += "k>n"
+      seen += s"legs=${legs.length}" += s"rrfK=$rrfK"
+    }
+    val prop = Prop.forAllNoShrink(caseGen) { case (legs, k, rrfK) =>
+      note(legs, k, rrfK)
+      val driver = RankFusion.fuse(
+        legs.map(_.map(r => (r._1, r._2, r._3.toLong)).toArray), k, rrfK)
+      val relational = FusionReference.rrfFuse(
+        legs.map(l => spark.createDataFrame(l).toDF("query_id", "doc_id",
+          "rank")), k, rrfK).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3),
+          r.getLong(4)))
+      val ties = driver.groupBy(r => (r._1, r._4)).exists(_._2.length > 1)
+      if (ties) seen += "tie"
+      driver.sorted == relational.toSeq.sorted
+    }
+    val res = Check.check(Check.Parameters.default
+      .withMinSuccessfulTests(40).withInitialSeed(Seed(7L)), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+    val want = Set("repeat", "one-leg", "k>n", "tie", "legs=1", "legs=2",
+      "legs=3", "rrfK=1", "rrfK=60")
+    assert(want.subsetOf(seen), s"generator missed ${want -- seen}")
+  }
+
+  test("property: the driver exact re-rank equals the relational exact " +
+    "stage bit for bit") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    import org.scalacheck.rng.Seed
+    import graft.similarity.Similarity
+    type Vecs = List[(Long, List[Double])]
+    // (a, b, 0) with sqrt(a·a + b·b) == 1.0, so against the query
+    // (1, 0, 0) the cosine is a itself: a 6-digit rounding half
+    // (±0.dddddd5) or a value that rounds to ±0.0
+    def unit(a: Double): List[Double] = {
+      val b0 = math.sqrt(1.0 - a * a)
+      (Iterator.iterate(b0)(math.nextUp).take(4) ++
+        Iterator.iterate(b0)(math.nextDown).take(4))
+        .find(b => math.sqrt(a * a + b * b) == 1.0)
+        .fold(List(1.0, 0.0, 0.0))(b => List(a, b, 0.0))
+    }
+    val halfGen: Gen[List[Double]] = for {
+      digits <- Gen.choose(0, 999999)
+      sign <- Gen.oneOf(1.0, -1.0)
+      tiny <- Gen.frequency(3 -> false, 1 -> true)
+    } yield unit(sign * (if (tiny) 4e-7 else f"0.$digits%06d5".toDouble))
+    val intGen: Gen[List[Double]] = Gen.listOfN(3, Gen.choose(-3, 3))
+      .map(_.map(_.toDouble))
+      .map(v => if (v.forall(_ == 0.0)) List(1.0, 0.0, 0.0) else v)
+    val vecGen = Gen.oneOf(halfGen, intGen)
+    val caseGen = for {
+      nq <- Gen.choose(1, 3)
+      qs <- Gen.listOfN(nq, Gen.frequency(2 -> Gen.const(List(1.0, 0.0, 0.0)),
+        1 -> Gen.const(List(0.0, 1.0, 0.0)), 1 -> intGen))
+      // a small pool, so several ids share a vector: cosine ties
+      pool <- Gen.listOfN(3, vecGen)
+      nv <- Gen.choose(0, 10)
+      vecs <- Gen.listOfN(nv, Gen.zip(Gen.choose(0L, 7L), Gen.oneOf(pool)))
+      nc <- Gen.choose(0, 12)
+      cand <- Gen.listOfN(nc, Gen.zip(Gen.choose(0L, nq.toLong), Gen.choose(0L, 7L)))
+      k <- Gen.oneOf(1, 2, 5, 20)
+    } yield (qs.zipWithIndex.map { case (v, i) => (i.toLong, v) },
+      cand, vecs: Vecs, k)
+    val seen = scala.collection.mutable.Set.empty[String]
+    def bits(rows: Seq[(Long, Long, Int, Double)]) = rows
+      .map(r => (r._1, r._2, r._3, java.lang.Double.doubleToRawLongBits(r._4)))
+      .sorted
+    val prop = Prop.forAllNoShrink(caseGen) { case (qs, cand, vecs, k) =>
+      val driver = Similarity.exactTopK(qs.map(q => (q._1, q._2.toArray)),
+        cand, vecs.map(v => (v._1, v._2.toArray)), k)
+      val relational = FusionReference.exactTopK(
+        spark.createDataFrame(qs).toDF("query_id", "qv"),
+        spark.createDataFrame(cand).toDF("query_id", "neighbor_id"),
+        spark.createDataFrame(vecs).toDF("vec_id", "v"), k).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
+      val candIds = cand.map(_._2).toSet
+      if (vecs.exists(v => !candIds(v._1))) seen += "uncandidate"
+      if (driver.exists(r => r._4 == 0.0)) seen += "zero"
+      if (driver.groupBy(r => (r._1, r._4)).exists(_._2.length > 1))
+        seen += "tie"
+      if (driver.exists(r => qs.exists(q => q._1 == r._1 &&
+        q._2 == List(1.0, 0.0, 0.0)) && vecs.exists(v => v._1 == r._2 &&
+        v._2.head.toString.matches("-?0\\.\\d{6}5")))) seen += "half"
+      bits(driver) == bits(relational.toSeq)
+    }
+    val res = Check.check(Check.Parameters.default
+      .withMinSuccessfulTests(40).withInitialSeed(Seed(8L)), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+    assert(Set("uncandidate", "zero", "tie", "half").subsetOf(seen),
+      s"generator covered only $seen")
+
+    // a zero-norm vector fails on the driver by id, as DIVIDE_BY_ZERO
+    val e = intercept[ArithmeticException](Similarity.exactTopK(
+      Seq((0L, Array(1.0, 0.0))), Seq((0L, 4L)), Seq((4L, Array(0.0, 0.0))), 1))
+    assert(e.getMessage.contains("DIVIDE_BY_ZERO") &&
+      e.getMessage.contains("vec_id 4"), e.getMessage)
+  }
 }

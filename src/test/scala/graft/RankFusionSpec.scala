@@ -173,4 +173,20 @@ class RankFusionSpec extends SparkSpec {
       RankFusion.rrfFuse(Seq(a), k = 0)
     }
   }
+
+  test("rrfFuse rejects a null query_id, doc_id or rank by name") {
+    val ok = Seq((0L, 1L, 1)).toDF("query_id", "doc_id", "rank")
+    val rows = Seq(
+      "query_id" -> Seq((None, Some(1L), Some(1))),
+      "doc_id" -> Seq((Some(0L), None, Some(1))),
+      "rank" -> Seq((Some(0L), Some(1L), None)))
+    rows.foreach { case (name, leg) =>
+      val bad = leg.toDF("query_id", "doc_id", "rank")
+      val e = intercept[IllegalArgumentException] {
+        RankFusion.rrfFuse(Seq(ok, bad), k = 3)
+      }
+      assert(e.getMessage.contains(s"rrfFuse leg 1 has a null $name"),
+        e.getMessage)
+    }
+  }
 }

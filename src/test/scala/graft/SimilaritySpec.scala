@@ -106,4 +106,23 @@ class SimilaritySpec extends SparkSpec {
       "SELECT dot_product(CAST(NULL AS ARRAY<DOUBLE>), array(1.0d)) AS d")
     assert(withNull.collect()(0).isNullAt(0))
   }
+
+  test("dot_product of an array holding a null element is null, as the " +
+    "higher-order fold it replaced") {
+    graft.functions.GraftFunctions.register(spark)
+    // row-dependent arrays run the generated path; literals fold
+    // through the interpreted one
+    val df = spark.range(1).selectExpr(
+      "array(1.0d, IF(id < 0, 1.0d, NULL), 3.0d) AS a",
+      "array(2.0d + id, 5.0d, 7.0d) AS b")
+    val hof = df.select(aggregate(zip_with(col("a"), col("b"), (x, y) => x * y),
+      lit(0.0), (acc, v) => acc + v)).collect()(0)
+    assert(hof.isNullAt(0))
+    Seq("dot_product(a, b)", "dot_product(b, a)").foreach { e =>
+      assert(df.selectExpr(e).collect()(0).isNullAt(0), e)
+    }
+    assert(spark.sql("SELECT dot_product(array(1.0d, CAST(NULL AS DOUBLE)), " +
+      "array(2.0d, 5.0d))").collect()(0).isNullAt(0))
+    assert(df.selectExpr("dot_product(b, b)").collect()(0).getDouble(0) == 78.0)
+  }
 }
