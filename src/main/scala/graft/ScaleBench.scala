@@ -1504,6 +1504,13 @@ object ScaleBench {
       .persist()
     b40vecs.count()
     val b40nlists = 1000100L / 9973L + 1 // ids ≡ 0 mod 9973
+    // the candidate relation of the searches below, before top-k
+    def b40scored(residual: Boolean) = {
+      import graft.similarity.Similarity._
+      val queries = queryRows(prefixQueries(b40vecs, 100))
+      scored(Ann.built(b40vecs, m = 8, dims = 32, Some(Subset(9973)),
+        Subset(4096), residual), queries, nprobe = 4, excludeSelf = true)
+    }
     var b40top1 = 0L
     val (b40s, b40n) = time {
       val out = graft.similarity.Similarity.ivfPqSearch(
@@ -1520,9 +1527,7 @@ object ScaleBench {
       out.count()
     }
     val (b40cs, b40scanned) = time {
-      graft.similarity.Similarity.ivfPqScored(
-        b40vecs, nQueries = 100, m = 8, dims = 32,
-        centroidMod = 4096, coarseMod = 9973, nprobe = 4).count()
+      b40scored(residual = false).count()
     }
     val b40expect = 100L * 1000100L * 4L / b40nlists
     require(b40scanned <= 3L * b40expect,
@@ -1555,9 +1560,7 @@ object ScaleBench {
       out.count()
     }
     val (b40rcs, b40rscanned) = time {
-      graft.similarity.Similarity.ivfPqResidualScored(
-        b40vecs, nQueries = 100, m = 8, dims = 32,
-        centroidMod = 4096, coarseMod = 9973, nprobe = 4).count()
+      b40scored(residual = true).count()
     }
     require(b40rscanned <= 3L * b40expect,
       s"B40r scanned $b40rscanned candidate pairs, > 3x balanced " +

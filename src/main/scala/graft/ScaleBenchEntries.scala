@@ -81,6 +81,14 @@ object ScaleBenchEntries {
     (hits, scanned)
   }
 
+  /** The persisted search's candidate relation before top-k: the
+    * queries vec_id < 10 of `vecs` against the index at `dir`. */
+  private def persistedScored(dir: String, vecs: DataFrame, divisor: Int,
+      nprobe: Int): DataFrame =
+    Similarity.scored(Similarity.Ann.opened(vecs.sparkSession, dir, m = 8,
+      dims = 32, divisor), Similarity.queryRows(Similarity.prefixQueries(vecs, 10)),
+      nprobe, excludeSelf = true)
+
   /** (query_id, list_id) of each query's `nprobe` probed lists, nearest
     * first — the searches' own driver probe stage
     * ([[Similarity.probes]]) over the coarse-centroid relation `cents`
@@ -189,7 +197,7 @@ object ScaleBenchEntries {
     }
     require(b43wn == 1000100L, s"B43 index holds $b43wn rows, want 1000100")
     // exact probed-row expectation: the union of probed lists' sizes
-    val cents = Similarity.coarseCents(vecs, 997)
+    val cents = spark.read.parquet(s"$dir/index/cents")
     val probedLists =
       probePairs(Similarity.prefixQueries(vecs, 10), cents, 4).map(_._2).toSet
     val probedRows = spark.read.parquet(s"$dir/index/codes/*")
@@ -211,9 +219,7 @@ object ScaleBenchEntries {
       out.count()
     }
     val (b43cs, scanPair) = time {
-      val (_, scanned) = scanMetrics(Similarity.ivfPqScoredPersisted(
-        spark, s"$dir/index", vecs, nQueries = 10, m = 8, dims = 32,
-        centroidMod = 4096, nprobe = 4))
+      val (_, scanned) = scanMetrics(persistedScored(s"$dir/index", vecs, 4096, 4))
       scanned
     }
     val b43scanned = scanPair
@@ -281,9 +287,7 @@ object ScaleBenchEntries {
       out.count()
     }
     val (b43tcs, b43tscanned) = time {
-      val (_, scanned) = scanMetrics(Similarity.ivfPqScoredPersisted(
-        spark, s"$dir/index", vecs, nQueries = 10, m = 8, dims = 32,
-        centroidMod = 1, nprobe = 4))
+      val (_, scanned) = scanMetrics(persistedScored(s"$dir/index", vecs, 1, 4))
       scanned
     }
     require(b43tscanned >= probedRows,
@@ -321,9 +325,7 @@ object ScaleBenchEntries {
     }
     require(b46an == 100000L, s"B46 tail holds $b46an rows, want 100k")
     def b46scan(): Long = {
-      val (_, scanned) = scanMetrics(Similarity.ivfPqScoredPersisted(
-        spark, s"$dir/index", vecs, nQueries = 10, m = 8, dims = 32,
-        centroidMod = 1, nprobe = 4))
+      val (_, scanned) = scanMetrics(persistedScored(s"$dir/index", vecs, 1, 4))
       scanned
     }
     def b46recall(): Unit = {
@@ -573,9 +575,10 @@ object ScaleBenchEntries {
       out.count()
     }
     val (b45cs, b45scanned) = time {
-      Similarity.ivfPqScoredTrainedFull(vecs, nQueries = 100, m = 8,
-        dims = 32, ksub = 245, nlists = 256, iters = 2, trainMod = 97,
-        nprobe = 4).count()
+      val queries = Similarity.queryRows(Similarity.prefixQueries(vecs, 100))
+      Similarity.scored(Similarity.Ann.built(vecs, m = 8, dims = 32,
+        Some(Similarity.Trained(256, 2, 97)), Similarity.Trained(245, 2, 97)),
+        queries, nprobe = 4, excludeSelf = true).count()
     }
     val b45expect = 100L * 1000100L * 4L / 256L
     require(b45scanned <= 2L * b45expect,
@@ -710,9 +713,7 @@ object ScaleBenchEntries {
         hits = res.count(r => exactSet((r.getLong(0), r.getLong(1)))).toLong
         res.length.toLong
       }
-      val (_, scanned) = scanMetrics(Similarity.ivfPqScoredPersisted(
-        spark, s"$dir/index", vecs, nQueries = 10, m = 8, dims = 32,
-        centroidMod = 1, nprobe = np))
+      val (_, scanned) = scanMetrics(persistedScored(s"$dir/index", vecs, 1, np))
       val recall = hits / 100.0
       // the REFINE leg at the same operating point: top-100 ADC
       // candidates re-ranked by exact cosine from the stored vecs
@@ -1263,9 +1264,7 @@ object ScaleBenchEntries {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val probedRows = probesOfQ.map(_._2).toSeq.distinct
       .map(listCounts.getOrElse(_, 0L)).sum
-    val (_, scanned) = scanMetrics(Similarity.ivfPqScoredPersisted(
-      spark, s"$dir/index", vecs, nQueries = 10, m = 8, dims = 32,
-      centroidMod = 1, nprobe = nprobe))
+    val (_, scanned) = scanMetrics(persistedScored(s"$dir/index", vecs, 1, nprobe))
     require(scanned <= 3L * probedRows,
       s"B50 scan read $scanned rows > 3x probed $probedRows - " +
         "row-group pruning lost under spill")

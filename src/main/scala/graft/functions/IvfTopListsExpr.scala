@@ -8,9 +8,9 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** The `g` nearest coarse lists of a quantized vector as a NATIVE
-  * codegen'd kernel — the IVF coarse-assignment hot loop
-  * ([[graft.similarity.Similarity.ivfAssign]] / `trainedAssignG`) as
-  * one narrow projection.
+  * codegen'd kernel — the IVF coarse-assignment hot loop of every
+  * index build (the writers, the append, the in-plan searches and the
+  * trained coarse quantizer) as one narrow projection.
   *
   * Why an Expression (the [[PqEncodeExpr]] argument, applied to the
   * OTHER index half): the relational assignment is
@@ -44,9 +44,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   *    `BigDecimal.valueOf(x).setScale(6, HALF_UP).doubleValue()`;
   *  - selection order is (cos desc, list id asc) under Spark's
   *    nan-safe double ordering (NaN greater than any non-NaN, NaN ==
-  *    NaN) — identical to `max(struct(cos_sim, -list_id))` and, for
-  *    g > 1, to the iterative exclude-priors argmax of
-  *    `trainedAssignG` (successive selection ≡ top-g).
+  *    NaN) — identical to `max(struct(cos_sim, -list_id))` of
+  *    [[graft.similarity.Similarity.ivfAssign]] and, for g > 1, to g
+  *    rounds of that argmax, each excluding the lists already picked
+  *    (successive selection ≡ top-g).
   *
   * @param cents nlists × dims quantized centroid vectors, ascending id
   * @param ids   nlists list ids, ascending

@@ -97,12 +97,26 @@ object RankFusion {
     *
     * @return a local relation (query_id long, doc_id long, rank int,
     *         rrf_nanos long, legs_hit long) — see [[fuse]]. */
-  def rrfFuse(legs: Seq[DataFrame], k: Int, rrfK: Int = 60): DataFrame = {
+  def rrfFuse(legs: Seq[DataFrame], k: Int, rrfK: Int = 60): DataFrame =
+    fuseLegs(legs.map(leg => () => leg), k, rrfK)
+
+  /** [[rrfFuse]] over legs still to be built: each thunk builds its leg
+    * AND collects it on its own [[graft.Par.run]] thread, so a leg that
+    * does work at call time (an ANN leg collects its queries; a re-rank
+    * leg runs its ADC jobs, its vector fetch and its driver re-rank)
+    * overlaps the other legs instead of running before them. Every
+    * hybrid search fuses through it. */
+  private[graft] def fuseLegs(legs: Seq[() => DataFrame], k: Int,
+      rrfK: Int): DataFrame = {
     require(legs.nonEmpty, "rrfFuse needs at least one leg")
     require(k >= 1 && rrfK >= 1, s"bad k=$k / rrfK=$rrfK")
+    val built = new Array[DataFrame](legs.length)
     val rows = new Array[Array[(Long, Long, Long)]](legs.length)
-    graft.Par.run(legs.indices.map(i => () => rows(i) = legRows(legs(i), i)): _*)
-    legs.head.sparkSession.createDataFrame(fuse(rows.toSeq, k, rrfK))
+    graft.Par.run(legs.indices.map(i => () => {
+      built(i) = legs(i)()
+      rows(i) = legRows(built(i), i)
+    }): _*)
+    built.head.sparkSession.createDataFrame(fuse(rows.toSeq, k, rrfK))
       .toDF("query_id", "doc_id", "rank", "rrf_nanos", "legs_hit")
   }
 
@@ -131,14 +145,11 @@ object RankFusion {
       rrfK: Int = 60): DataFrame = {
     require(queries.nonEmpty, "hybridSearch needs at least one query")
     require(queries.forall(_._1 >= 0), "query ids must be non-negative")
-    val lex = graft.text.Bm25.search(spark, docs, queries, topK = kEach)
-      .select(col("query_id"), col("doc_id"), col("rank"))
     // the query-id SET, not a vec_id prefix: a sparse set like {999999}
     // must cost |queries|·N, not max(id)·N
-    val sem = graft.similarity.Similarity
-      .cosineTopKIds(embeddings, queries.map(_._1.toLong), kEach)
-      .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))
-    rrfFuse(Seq(lex, sem), k, rrfK)
+    fuseLegs(Seq(lexLeg(spark, docs, queries, kEach), () => semLeg(
+      graft.similarity.Similarity
+        .cosineTopKIds(embeddings, queries.map(_._1.toLong), kEach))), k, rrfK)
   }
 
   /** [[hybridSearch]] with the IVF+PQ approximate semantic leg — the
@@ -160,13 +171,10 @@ object RankFusion {
       nprobe: Int = 2): DataFrame = {
     require(queries.map(_._1).sorted == queries.indices.toList,
       "ANN-leg hybrid needs query ids 0..n-1 (the vec_id prefix convention)")
-    val lex = graft.text.Bm25.search(spark, docs, queries, topK = kEach)
-      .select(col("query_id"), col("doc_id"), col("rank"))
-    val sem = graft.similarity.Similarity
-      .ivfPqSearch(embeddings, nQueries = queries.length, k = kEach,
-        m, dims, centroidMod, coarseMod, nprobe)
-      .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))
-    rrfFuse(Seq(lex, sem), k, rrfK)
+    fuseLegs(Seq(lexLeg(spark, docs, queries, kEach), () => semLeg(
+      graft.similarity.Similarity.ivfPqSearch(embeddings,
+        nQueries = queries.length, k = kEach, m, dims, centroidMod,
+        coarseMod, nprobe))), k, rrfK)
   }
 
   /** [[hybridSearchAnn]] with STANDALONE query embeddings — the
@@ -192,13 +200,10 @@ object RankFusion {
       nprobe: Int = 2,
       excludeSelf: Boolean = false): DataFrame = {
     require(queries.nonEmpty, "hybridSearchAnnQ needs at least one query")
-    val lex = graft.text.Bm25.search(spark, docs, queries, topK = kEach)
-      .select(col("query_id"), col("doc_id"), col("rank"))
-    val sem = graft.similarity.Similarity
-      .ivfPqSearchQ(embeddings, queryEmbeddings, k = kEach,
-        m, dims, centroidMod, coarseMod, nprobe, excludeSelf)
-      .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))
-    rrfFuse(Seq(lex, sem), k, rrfK)
+    fuseLegs(Seq(lexLeg(spark, docs, queries, kEach), () => semLeg(
+      graft.similarity.Similarity.ivfPqSearchQ(embeddings, queryEmbeddings,
+        k = kEach, m, dims, centroidMod, coarseMod, nprobe, excludeSelf))),
+      k, rrfK)
   }
 
   /** Hybrid retrieval served ENTIRELY from persisted artifacts — the
@@ -216,9 +221,9 @@ object RankFusion {
     * semantic leg builds its query stage on the driver (probes and ADC
     * lookup tables from the cached index metadata, see
     * [[graft.similarity.Similarity.ivfPqSearchPersistedQ]];
-    * `queryEmbeddings` is collected once), and [[rrfFuse]] collects
-    * both legs concurrently and folds them on the driver. The result is
-    * a local relation; nothing is cached.
+    * `queryEmbeddings` is collected once), and both legs are built and
+    * collected concurrently ([[fuseLegs]]) and folded on the driver. The
+    * result is a local relation; nothing is cached.
     *
     * `rerankR` > 0 upgrades the semantic leg to the exact-refine
     * serving path ([[graft.similarity.Similarity.ivfPqRerankPersistedQ]]
@@ -243,18 +248,27 @@ object RankFusion {
       excludeSelf: Boolean = false,
       rerankR: Int = 0): DataFrame = {
     require(queries.nonEmpty, "hybridSearchPersisted needs >= 1 query")
-    val lex = graft.text.Bm25
-      .searchPersisted(spark, bm25Dir, queries, topK = kEach)
-      .select(col("query_id"), col("doc_id"), col("rank"))
-    val sem = (if (rerankR > 0)
-      graft.similarity.Similarity.ivfPqRerankPersistedQ(spark, annDir,
-        queryEmbeddings, k = kEach, rerankR = rerankR, m, dims,
-        centroidMod, nprobe, excludeSelf)
-    else
-      graft.similarity.Similarity.ivfPqSearchPersistedQ(spark, annDir,
-        queryEmbeddings, k = kEach, m, dims, centroidMod, nprobe,
-        excludeSelf))
-      .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))
-    rrfFuse(Seq(lex, sem), k, rrfK)
+    fuseLegs(Seq(
+      () => graft.text.Bm25
+        .searchPersisted(spark, bm25Dir, queries, topK = kEach)
+        .select(col("query_id"), col("doc_id"), col("rank")),
+      () => semLeg(if (rerankR > 0)
+        graft.similarity.Similarity.ivfPqRerankPersistedQ(spark, annDir,
+          queryEmbeddings, k = kEach, rerankR = rerankR, m, dims,
+          centroidMod, nprobe, excludeSelf)
+      else
+        graft.similarity.Similarity.ivfPqSearchPersistedQ(spark, annDir,
+          queryEmbeddings, k = kEach, m, dims, centroidMod, nprobe,
+          excludeSelf))), k, rrfK)
   }
+
+  /** The in-plan BM25 leg, to be built on its fusion thread. */
+  private def lexLeg(spark: SparkSession, docs: DataFrame,
+      queries: Seq[(Int, String)], kEach: Int): () => DataFrame = () =>
+    graft.text.Bm25.search(spark, docs, queries, topK = kEach)
+      .select(col("query_id"), col("doc_id"), col("rank"))
+
+  /** A kNN result as a fusion leg: neighbor_id is the doc_id. */
+  private def semLeg(knn: DataFrame): DataFrame =
+    knn.select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))
 }

@@ -549,7 +549,7 @@ object Similarity {
       .where(col("vec_id") % mod === 0)
       .select(col("vec_id"), quantize(col("embedding")).as("v"))
       .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+      .map { r => val id = r.getLong(0); (id, coords(r, 1, s"vec_id $id")) }
       .sortBy(_._1)
       .toIndexedSeq
 
@@ -573,15 +573,9 @@ object Similarity {
       m: Int = 8,
       dims: Int = 64,
       centroidMod: Int = 97): DataFrame = {
-    require(m >= 1 && dims % m == 0, s"dims=$dims not divisible by m=$m")
-    val subDim = dims / m
     val queries = queryRows(prefixQueries(embeddings, nQueries))
-    val book = codebook(embeddings, dims, centroidMod)
-    val index = embeddings.select(col("vec_id").as("neighbor_id"),
-      encodeCol(quantize(col("embedding")), book, m, subDim).as("codes"))
-    adcTopK(adcScan(index, flatLuts(embeddings.sparkSession, queries,
-      adcBook(book, m, subDim, centroidMod)), m, centroidMod,
-      excludeSelf = true), k)
+    adcTopK(scored(Ann.built(embeddings, m, dims, None, Subset(centroidMod)),
+      queries, 1, excludeSelf = true), k)
   }
 
   /** IVF+PQ composed search — the FAISS IVFPQ shape (Jégou 2011 §IV,
@@ -620,8 +614,9 @@ object Similarity {
       coarseMod: Int = 83,
       nprobe: Int = 2): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    adcTopK(ivfPqScored(
-      embeddings, nQueries, m, dims, centroidMod, coarseMod, nprobe), k)
+    val queries = queryRows(prefixQueries(embeddings, nQueries))
+    adcTopK(scored(Ann.built(embeddings, m, dims, Some(Subset(coarseMod)),
+      Subset(centroidMod)), queries, nprobe, excludeSelf = true), k)
   }
 
   /** ADC-approximate top-`rerankR` then EXACT re-rank to top-`k` — the
@@ -651,29 +646,9 @@ object Similarity {
     require(rerankR >= k, s"rerankR=$rerankR must be >= k=$k")
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
     val queries = queryRows(prefixQueries(embeddings, nQueries))
-    val cand = candidates(adcTopK(ivfPqScoredQ(embeddings, queries, m, dims,
-      centroidMod, coarseMod, nprobe, excludeSelf = true), rerankR))
-    val vecs = embeddings.select(col("vec_id"),
-      quantize(col("embedding")).as("v"))
-    exactRelation(embeddings.sparkSession, exactTopK(queries, cand,
-      vecRows(candidateVecs(vecs, cand)), k))
-  }
-
-  /** The IVF+PQ index relation `(neighbor_id, list_id, codes)` with
-    * coarse-spill degree `g`: every vector's [[pqEncode]] codes plus its
-    * g nearest coarse lists ([[ivfAssign]] arithmetic; g = 1 is the
-    * classic single assignment) — this IS the stored index layout a
-    * production deployment persists ([[ivfPqWriteIndex]]). */
-  private[graft] def ivfPqIndexG(
-      embeddings: DataFrame,
-      m: Int,
-      dims: Int,
-      centroidMod: Int,
-      coarseMod: Int,
-      g: Int): DataFrame = {
-    require(m >= 1 && dims % m == 0, s"dims=$dims not divisible by m=$m")
-    indexFrom(embeddings, coarseSet(embeddings, coarseMod),
-      codebook(embeddings, dims, centroidMod), m, dims / m, g)
+    refine(Ann.built(embeddings, m, dims, Some(Subset(coarseMod)),
+      Subset(centroidMod)), queries, k, rerankR, nprobe, excludeSelf = true,
+      cand => candidateVecs(vecsOf(embeddings), cand))
   }
 
   /** The index rows of `vecs` (vec_id, embedding) in ONE narrow
@@ -681,61 +656,47 @@ object Similarity {
     * embedding against driver-resident centroid sets — the
     * [[graft.functions.IvfTopListsExpr]] kernel (exploded, each
     * vector's row lands in its g nearest lists) riding the
-    * [[graft.functions.PqEncodeExpr]] encode scan; no join, no
-    * aggregate, no shuffle. An empty coarse set gives an empty index
-    * (the explode drops every row). Shared by every writer, the append
-    * and the in-plan searches. */
+    * [[graft.functions.PqEncodeExpr]] encode scan; no aggregate, no
+    * shuffle. Without a coarse set the rows are flat PQ's
+    * (neighbor_id, codes); an EMPTY coarse set gives an empty index
+    * (the explode drops every row). `residual` encodes each vector's
+    * offset from its list's centroid, fetched through a broadcast join
+    * to the driver centroids. A null coordinate fails the build by
+    * vec_id ([[storedVec]], evaluated before the explode). Shared by
+    * every writer, the append and the in-plan searches. */
   private def indexFrom(
       vecs: DataFrame,
-      coarse: Cents,
+      coarse: Option[Cents],
       book: IndexedSeq[(Long, Array[Double])],
       m: Int,
       subDim: Int,
-      g: Int): DataFrame =
-    vecs.select(
-      col("vec_id").as("neighbor_id"),
-      explode(graft.functions.IvfTopListsExpr.col(
-        quantize(col("embedding")), coarse.vs, coarse.ids, g)).as("list_id"),
-      encodeCol(quantize(col("embedding")), book, m, subDim).as("codes"))
+      g: Int,
+      residual: Boolean = false): DataFrame = {
+    val id = col("vec_id").as("neighbor_id")
+    def codes(v: Column) = encodeCol(v, book, m, subDim).as("codes")
+    coarse match {
+      case None => vecs.select(id, codes(storedVec))
+      case Some(cs) =>
+        val lists = explode(IvfTopListsExpr.col(storedVec, cs.vs, cs.ids, g))
+          .as("list_id")
+        if (!residual) vecs.select(id, lists, codes(storedVec))
+        else vecs.select(id, lists, storedVec.as("v"))
+          .join(broadcast(vecs.sparkSession.createDataFrame(cs.ids.indices
+            .map(i => (cs.ids(i), cs.vs(i).toSeq))).toDF("list_id", "cv")),
+            "list_id")
+          .select(col("neighbor_id"), col("list_id"),
+            codes(zip_with(col("v"), col("cv"), _ - _)))
+    }
+  }
 
-  /** The (query_id, neighbor_id, adc_dist) candidate relation of
-    * [[ivfPqSearch]] BEFORE top-k — exposed so ScaleBench can count
-    * scanned candidate rows (the nprobe/nlists fraction REQUIRE)
-    * without re-deriving the join. */
-  private[graft] def ivfPqScored(
-      embeddings: DataFrame,
-      nQueries: Int,
-      m: Int,
-      dims: Int,
-      centroidMod: Int,
-      coarseMod: Int,
-      nprobe: Int): DataFrame =
-    ivfPqScoredQ(embeddings, queryRows(prefixQueries(embeddings, nQueries)),
-      m, dims, centroidMod, coarseMod, nprobe, excludeSelf = true)
-
-  /** The ONE copy of the in-plan IVF+PQ candidate scan, over collected
-    * (query_id, v) query rows ([[queryRows]]) — shared by the
-    * vec_id-prefix form above and the standalone-query form
-    * ([[ivfPqSearchQ]]). The coarse centroids and the codebook are
-    * collected once and serve both the index projection and the
-    * driver query stage ([[probeLuts]]); the scan is [[adcScan]]. */
-  private[graft] def ivfPqScoredQ(
-      embeddings: DataFrame,
-      queries: Seq[(Long, Array[Double])],
-      m: Int,
-      dims: Int,
-      centroidMod: Int,
-      coarseMod: Int,
-      nprobe: Int,
-      excludeSelf: Boolean): DataFrame = {
-    require(m >= 1 && dims % m == 0, s"dims=$dims not divisible by m=$m")
-    val subDim = dims / m
-    val coarse = coarseSet(embeddings, coarseMod)
-    val book = codebook(embeddings, dims, centroidMod)
-    adcScan(indexFrom(embeddings, coarse, book, m, subDim, 1),
-      probeLutRelation(embeddings.sparkSession, probeLuts(queries, coarse,
-        adcBook(book, m, subDim, centroidMod), nprobe)),
-      m, centroidMod, excludeSelf)
+  /** The quantized `embedding` of a row being indexed, failing by
+    * vec_id on a null coordinate (the kernels read a null slot as 0.0):
+    * the native [[dot]] is null exactly when an element is. */
+  private def storedVec: Column = {
+    val e = col("embedding").cast("array<double>")
+    when(e.isNotNull && dot(e, e).isNull, raise_error(concat(lit("vec_id "),
+      col("vec_id").cast("string"), lit(" has a null coordinate"))))
+      .otherwise(quantize(col("embedding")))
   }
 
   /** [[ivfPqSearch]] serving a STANDALONE (query_id, embedding) query
@@ -752,8 +713,9 @@ object Similarity {
       nprobe: Int = 2,
       excludeSelf: Boolean = false): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    adcTopK(ivfPqScoredQ(embeddings, queryRows(quantQueries(queries)), m,
-      dims, centroidMod, coarseMod, nprobe, excludeSelf), k)
+    val qs = queryRows(quantQueries(queries))
+    adcTopK(scored(Ann.built(embeddings, m, dims, Some(Subset(coarseMod)),
+      Subset(centroidMod)), qs, nprobe, excludeSelf), k)
   }
 
   // --- Persisted IVF+PQ index (the 100 TB storage shape) ----------------
@@ -805,27 +767,43 @@ object Similarity {
       coarseMod: Int = 83,
       writerOptions: Map[String, String] = Map.empty,
       storeVecs: Boolean = false,
-      spillG: Int = 1): Unit = {
+      spillG: Int = 1): Unit =
+    writeIndex(embeddings, dir, numFiles, m, dims, Subset(coarseMod),
+      Subset(centroidMod), writerOptions, storeVecs, spillG)
+
+  /** The one writer body: resolve the coarse set and the book on the
+    * driver, then write the index relations through [[Index]] — codes
+    * with each vector's g nearest lists in one narrow corpus pass for
+    * any spill degree ([[indexFrom]]) — and overlap the two metadata
+    * relations, written from those same driver rows: `cents` (list_id,
+    * cv, cn) and `book` (centroid_id, v). */
+  private def writeIndex(
+      vecs: DataFrame,
+      dir: String,
+      numFiles: Int,
+      m: Int,
+      dims: Int,
+      coarse: From,
+      book: From,
+      writerOptions: Map[String, String],
+      storeVecs: Boolean,
+      spillG: Int): Unit = {
+    require(m >= 1 && dims % m == 0, s"dims=$dims not divisible by m=$m")
     require(spillG >= 1, s"spillG must be >= 1, got $spillG")
-    // g-nearest-list assignment rides the encode projection — one
-    // narrow corpus pass for ANY spill degree (r22; the g>1 path was
-    // g rounds of corpus-scale crossJoin+argmax+join)
-    val codes = ivfPqIndexG(embeddings, m, dims, centroidMod, coarseMod,
-      spillG)
-    // the lifecycle relations and the two metadata relations are
-    // independent writes (disjoint dirs, shared read-only input) —
-    // overlapped on driver threads (guide §2.6)
-    Index.write(embeddings.sparkSession, dir,
-      Map("codes" -> codes) ++ vecsIf(storeVecs, embeddings),
+    val spark = vecs.sparkSession
+    val cs = coarseOf(vecs, dims, coarse)
+    val bk = bookOf(vecs, m, dims, book)
+    def meta(df: DataFrame, name: String) = () =>
+      df.coalesce(1).write.mode("errorifexists").parquet(s"$dir/$name")
+    Index.write(spark, dir,
+      Map("codes" -> indexFrom(vecs, Some(cs), bk, m, dims / m, spillG)) ++
+        (if (storeVecs) Map("vecs" -> vecsOf(vecs)) else Map.empty),
       numFiles, writerOptions,
-      () => coarseCents(embeddings, coarseMod)
-        .coalesce(1).write.mode("errorifexists").parquet(s"$dir/cents"),
-      () => embeddings
-        .where(col("vec_id") % centroidMod === 0)
-        .select(col("vec_id").as("centroid_id"),
-          quantize(col("embedding")).as("v"))
-        .coalesce(1).write.mode("errorifexists").parquet(s"$dir/book"))
-    if (spillG > 1) writeSpillMarker(embeddings.sparkSession, dir, spillG)
+      meta(spark.createDataFrame(cs.ids.indices.map(i =>
+        (cs.ids(i), cs.vs(i).toSeq, cs.cn(i)))).toDF("list_id", "cv", "cn"), "cents"),
+      meta(spark.createDataFrame(bk.map { case (i, v) => (i, v.toSeq) })
+        .toDF("centroid_id", "v"), "book"))
+    if (spillG > 1) writeSpillMarker(spark, dir, spillG)
   }
 
   /** The persisted index's lifecycle relations
@@ -847,10 +825,7 @@ object Similarity {
 
   /** The vecs relation's rows for `embeddings`. */
   private def vecsOf(embeddings: DataFrame): DataFrame =
-    embeddings.select(col("vec_id"), quantize(col("embedding")).as("v"))
-
-  private def vecsIf(store: Boolean, embeddings: DataFrame) =
-    if (store) Map("vecs" -> vecsOf(embeddings)) else Map.empty[String, DataFrame]
+    embeddings.select(col("vec_id"), storedVec.as("v"))
 
   /** Chunk budget for the probed-list scan: up to this many
     * ≤-threshold IN chunks stay exact-at-the-scan; past it the plan
@@ -931,16 +906,6 @@ object Similarity {
       g
     }
   }
-
-  // The iterated-argmax relational assignment (trainedAssign /
-  // trainedAssignG) was replaced in r22 by the single-pass
-  // [[graft.functions.IvfTopListsExpr]] kernel at every call site —
-  // the assignment is a pure per-row function of the vector against a
-  // metadata-sized driver-resident centroid set, so the crossJoin +
-  // argmax exchange (+ the vec_id self-join to attach the result) were
-  // removable shuffles (guide §2.4). Iterated argmax-with-exclusion
-  // equals top-g by (cos desc, list asc) exactly, ties included — the
-  // kernel implements precisely that ordering.
 
   // --- Retraining epochs --------------------------------------------------
   //
@@ -1142,33 +1107,10 @@ object Similarity {
       trainMod: Int = 1,
       writerOptions: Map[String, String] = Map.empty,
       storeVecs: Boolean = false,
-      spillG: Int = 1): Unit = {
-    require(dims % m == 0, s"dims=$dims not divisible by m=$m")
-    require(spillG >= 1, s"spillG must be >= 1, got $spillG")
-    val spark = embeddings.sparkSession
-    val coarse = indexed(
-      ivfTrainCentroids(embeddings, dims, nlists, iters, trainMod))
-    val book = indexed(
-      pqTrainCodebooks(embeddings, m, dims, ksub, iters, trainMod))
-    // codes + g-nearest trained lists in ONE narrow projection (r22):
-    // the trained centroids are already driver arrays
-    val codes = indexFrom(embeddings, centsOf(coarse), book, m, dims / m,
-      spillG)
-    def rel(rows: IndexedSeq[(Long, Array[Double])], id: String, v: String) =
-      spark.createDataFrame(rows.map { case (i, x) => (i, x.toSeq) })
-        .toDF(id, v)
-    // all relation writes are independent (disjoint dirs; cents and
-    // books are already driver-resolved) — overlapped (guide §2.6)
-    Index.write(spark, dir,
-      Map("codes" -> codes) ++ vecsIf(storeVecs, embeddings),
-      numFiles, writerOptions,
-      () => rel(coarse, "list_id", "cv")
-        .withColumn("cn", dot(col("cv"), col("cv")))
-        .coalesce(1).write.mode("errorifexists").parquet(s"$dir/cents"),
-      () => rel(book, "centroid_id", "v")
-        .coalesce(1).write.mode("errorifexists").parquet(s"$dir/book"))
-    if (spillG > 1) writeSpillMarker(spark, dir, spillG)
-  }
+      spillG: Int = 1): Unit =
+    writeIndex(embeddings, dir, numFiles, m, dims,
+      Trained(nlists, iters, trainMod), Trained(ksub, iters, trainMod),
+      writerOptions, storeVecs, spillG)
 
   /** INCREMENTAL index maintenance — the FAISS `add()` contract: encode
     * and coarse-assign NEW vectors against the index's FROZEN stored
@@ -1231,7 +1173,7 @@ object Similarity {
     // fetch any candidate the codes relation can surface
     Index.append(spark, root, newVecs, dedupAgainstIndex, Map(
       "codes" -> ((batch: DataFrame) => indexFrom(batch,
-        centsCached(spark, root), book, m, dims / m, spillG)),
+        Some(centsCached(spark, root)), book, m, dims / m, spillG)),
       "vecs" -> (vecsOf _)))
   }
 
@@ -1312,7 +1254,7 @@ object Similarity {
     * the corpus-scale codes relation is filtered to the UNION of probed
     * lists — a predicate the scan itself prunes with. The query stage
     * (probes and ADC lookup tables) runs on the driver
-    * ([[ivfPqScoredPersistedQ]]), so a call is one collect of the query
+    * ([[scored]] over [[Ann.opened]]), so a call is one collect of the query
     * vectors plus one codes-scan job and its top-k.
     * `embeddings` supplies ONLY the query vectors (vec_id < nQueries, a
     * pushed-down filter) — search cost is independent of corpus size
@@ -1333,9 +1275,9 @@ object Similarity {
       centroidMod: Int = 97,
       nprobe: Int = 2): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    adcTopK(ivfPqScoredPersistedQ(
-      spark, indexDir, queryRows(prefixQueries(embeddings, nQueries)), m,
-      dims, centroidMod, nprobe, excludeSelf = true), k)
+    val queries = queryRows(prefixQueries(embeddings, nQueries))
+    adcTopK(scored(Ann.opened(spark, indexDir, m, dims, centroidMod), queries,
+      nprobe, excludeSelf = true), k)
   }
 
   /** [[ivfPqSearchPersisted]] serving a STANDALONE query relation — the
@@ -1346,7 +1288,7 @@ object Similarity {
     * vec_id-prefix form on the same fixture); what changes is only
     * where the query vectors come from. `queries` is evaluated ONCE:
     * its quantized rows are collected (nQueries × dims doubles) and the
-    * driver query stage of [[ivfPqScoredPersistedQ]] builds the probes
+    * driver query stage of [[scored]] builds the probes
     * and lookup tables from them. A null `query_id`, a repeated
     * `query_id` or a null embedding fails the call, naming the row.
     *
@@ -1368,9 +1310,9 @@ object Similarity {
       nprobe: Int = 2,
       excludeSelf: Boolean = false): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    adcTopK(ivfPqScoredPersistedQ(
-      spark, indexDir, queryRows(quantQueries(queries)), m, dims,
-      centroidMod, nprobe, excludeSelf), k)
+    val qs = queryRows(quantQueries(queries))
+    adcTopK(scored(Ann.opened(spark, indexDir, m, dims, centroidMod), qs,
+      nprobe, excludeSelf), k)
   }
 
   /** [[ivfPqSearchPersistedQ]] for LITERAL query vectors (id, values) —
@@ -1440,12 +1382,9 @@ object Similarity {
     require(Index.has(spark, root, "vecs"),
       s"no raw-vector relation at $root/vecs - write the index with " +
         "storeVecs = true to enable the exact re-rank stage")
-    val qv = queryRows(quantQueries(queries))
-    val cand = candidates(adcTopK(ivfPqScoredPersistedQ(spark, indexDir, qv,
-      m, dims, centroidMod, nprobe, excludeSelf), rerankR))
-    require(cand.nonEmpty, "no ADC candidates to re-rank - empty index?")
-    exactRelation(spark,
-      exactTopK(qv, cand, vecRows(rerankFetch(spark, root, cand)), k))
+    val qs = queryRows(quantQueries(queries))
+    refine(Ann.opened(spark, indexDir, m, dims, centroidMod), qs, k, rerankR,
+      nprobe, excludeSelf, rerankFetch(spark, root, _))
   }
 
   /** The stored raw vectors (vec_id, v) of the candidates' ids, from
@@ -1459,16 +1398,33 @@ object Similarity {
     * window. */
   private[graft] def rerankFetch(spark: SparkSession, root: String,
       cand: Seq[(Long, Long)]): DataFrame = {
-    val candIds = cand.map(_._2).distinct.sorted.toIndexedSeq
-    val vecsTable = graft.ops.Layout.clusteredTable(spark, s"$root/vecs")
-    val fetchThreshold = math.max(1, spark.conf
+    require(cand.nonEmpty, "no ADC candidates to re-rank - empty index?")
+    candidateVecs(prunedScan(spark, s"$root/vecs", "vec_id",
+      cand.map(_._2).distinct.sorted).select("vec_id", "v"), cand)
+  }
+
+  /** The lifecycle relation at `dir` read with `column` pruned at the
+    * scan to `values` (sorted, distinct): a union of In reads CHUNKED to
+    * the session's parquet IN-pushdown threshold — above
+    * `spark.sql.parquet.pushdown.inFilterThreshold` values Spark
+    * silently degrades a pushed In to a [min,max] range, which un-prunes
+    * the scan exactly when a workload asks for many values — each chunk
+    * a contiguous value range, so its row-group pruning stays tight.
+    * Plan-size bound (r19): past [[MaxInChunks]] chunks the plan
+    * switches to ONE scan under an OR-of-BETWEEN cover of ≤ 64 merged
+    * ranges. A SUPERSET is safe because every caller joins the result to
+    * the exact values (the broadcast probe equi-join, the candidate
+    * semi-join) — admitted extras cost scan rows (adjacent row groups on
+    * the clustered layout), never wrong results. PlanSpec pins both
+    * regimes and their equality. */
+  private def prunedScan(spark: SparkSession, dir: String, column: String,
+      values: Seq[Long]): DataFrame = {
+    val table = graft.ops.Layout.clusteredTable(spark, dir)
+    val threshold = math.max(1, spark.conf
       .get("spark.sql.parquet.pushdown.inFilterThreshold", "10").toInt)
-    val vecs =
-      if (candIds.length <= fetchThreshold * MaxInChunks)
-        graft.ops.Layout.chunkedIn(spark, vecsTable, "vec_id", candIds)
-      else
-        graft.ops.Layout.rangeCoverScan(spark, vecsTable, "vec_id", candIds)
-    candidateVecs(vecs.select("vec_id", "v"), cand)
+    if (values.length <= threshold * MaxInChunks)
+      graft.ops.Layout.chunkedIn(spark, table, column, values)
+    else graft.ops.Layout.rangeCoverScan(spark, table, column, values)
   }
 
   // --- The exact refine stage, on the driver ----------------------------
@@ -1551,95 +1507,19 @@ object Similarity {
     }
   }
 
-  /** [[exactTopK]] rows as the refine searches' local relation. */
-  private def exactRelation(spark: SparkSession,
-      rows: Seq[(Long, Long, Int, Double)]): DataFrame =
-    spark.createDataFrame(rows).toDF("query_id", "neighbor_id", "rank", "cos_sim")
-
-  /** Candidate relation of [[ivfPqSearchPersisted]] before top-k —
-    * exposed (like [[ivfPqScored]]) so ScaleBench B43 can read the
-    * executed plan's scan metrics. */
-  private[graft] def ivfPqScoredPersisted(
-      spark: SparkSession,
-      indexDir: String,
-      embeddings: DataFrame,
-      nQueries: Int,
-      m: Int,
-      dims: Int,
-      centroidMod: Int,
-      nprobe: Int): DataFrame =
-    ivfPqScoredPersistedQ(spark, indexDir,
-      queryRows(prefixQueries(embeddings, nQueries)), m, dims, centroidMod,
-      nprobe, excludeSelf = true)
-
-  /** The ONE copy of the persisted-index candidate scan, over
-    * collected (query_id, v) query rows ([[queryRows]]).
-    *
-    * The query stage runs on the driver ([[probeLuts]]): the coarse
-    * centroids and the PQ codebook already sit in the driver metadata
-    * cache, so the call runs no job before the codes scan; the scan is
-    * [[adcScan]] plus, on a spill-written index, a min-dedup.
-    *
-    * Index rows come from the lifecycle reader
-    * ([[graft.ops.Layout.clusteredTable]]), so tombstoned neighbors
-    * ([[ivfPqDeleteIndex]]) are masked, and the probed-list predicate is
-    * CHUNKED to the session's parquet IN-pushdown threshold: above
-    * `spark.sql.parquet.pushdown.inFilterThreshold` values Spark
-    * silently degrades a pushed In to a [min,max] range — which
-    * un-prunes the scan exactly when a workload probes many lists — so
-    * the scan is a union of ≤-threshold-sized In reads over the SORTED
-    * probed lists (each chunk a contiguous list range, so its row-group
-    * pruning stays tight). PlanSpec pins both the pushed In and the
-    * above-threshold chunking, and the plan's shape: one exchange (the
-    * top-k's), a local-relation broadcast side. */
-  private[graft] def ivfPqScoredPersistedQ(
-      spark: SparkSession,
-      indexDir: String,
-      queries: Seq[(Long, Array[Double])],
-      m: Int,
-      dims: Int,
-      centroidMod: Int,
-      nprobe: Int,
-      excludeSelf: Boolean): DataFrame = {
-    require(dims % m == 0, s"dims=$dims not divisible by m=$m")
-    val root = indexRoot(spark, indexDir)
-    val probeLut = probeLuts(queries, centsCached(spark, root),
-      adcBook(bookCached(spark, root), m, dims / m, centroidMod), nprobe)
-    // the probed-list UNION: nQueries × nprobe longs. isInCollection
-    // emits an In predicate the parquet source accepts, so row groups
-    // whose [min,max] list range misses every probed list are dropped
-    // at the scan — bytes read ≈ probed fraction.
-    val probedLists = probeLut.map(_._2).distinct.sorted
-    require(probedLists.nonEmpty,
-      "no probed lists - is the query relation empty?")
-    // plan-size bound (r19): the chunked IN is exact at the scan but
-    // its union grows O(probes / threshold) — a workload probing tens
-    // of thousands of lists would build a hundred-scan plan. Above a
-    // fixed chunk budget, switch to ONE scan under an OR-of-BETWEEN
-    // cover of ≤ 64 merged list ranges: a SUPERSET is safe here
-    // because the broadcast probe equi-join below is the exact
-    // membership filter — admitted extras cost scan rows (adjacent
-    // row groups on the list-clustered layout), never wrong results.
-    // PlanSpec pins both regimes and their equality.
-    val threshold = math.max(1, spark.conf
-      .get("spark.sql.parquet.pushdown.inFilterThreshold", "10").toInt)
-    val table = graft.ops.Layout.clusteredTable(spark, s"$root/codes")
-    val index =
-      if (probedLists.length <= threshold * MaxInChunks)
-        graft.ops.Layout.chunkedIn(spark, table, "list_id", probedLists)
-      else
-        graft.ops.Layout.rangeCoverScan(spark, table, "list_id",
-          probedLists)
-    val scored = adcScan(index, probeLutRelation(spark, probeLut), m,
-      centroidMod, excludeSelf)
-    // a spill-written index surfaces a vector once per probed copy —
-    // identical adc_dist each time (non-residual codes are shared), so
-    // a min-dedup (partial-aggregatable map-side) restores one row per
-    // (query, neighbor) before top-k; single-assignment indexes skip
-    // the extra exchange entirely
-    if (spillDegree(spark, root) <= 1) scored
-    else scored.groupBy("query_id", "neighbor_id")
-      .agg(min("adc_dist").as("adc_dist"))
+  /** The refine stage of both re-rank searches: `ann`'s ADC top-
+    * `rerankR` candidates of the collected `queries`, their vectors
+    * from `fetch` (vec_id, v), collected once, and [[exactTopK]] over
+    * them to top-`k` — a local relation (query_id, neighbor_id, rank,
+    * cos_sim). */
+  private def refine(ann: Ann, queries: IndexedSeq[(Long, Array[Double])],
+      k: Int, rerankR: Int, nprobe: Int, excludeSelf: Boolean,
+      fetch: Seq[(Long, Long)] => DataFrame): DataFrame = {
+    val cand = candidates(adcTopK(scored(ann, queries, nprobe, excludeSelf),
+      rerankR))
+    val vecs = fetch(cand)
+    vecs.sparkSession.createDataFrame(exactTopK(queries, cand, vecRows(vecs), k))
+      .toDF("query_id", "neighbor_id", "rank", "cos_sim")
   }
 
   /** Tombstone index entries by vector id — FAISS `remove_ids` as
@@ -1700,38 +1580,51 @@ object Similarity {
       iters: Int = 3,
       trainMod: Int = 1): Array[Array[Double]] = {
     require(dims % m == 0, s"dims=$dims not divisible by m=$m")
-    require(ksub >= 1 && iters >= 0 && trainMod >= 1,
-      s"bad ksub=$ksub / iters=$iters / trainMod=$trainMod")
     val subDim = dims / m
-    val train = embeddings
-      .where(col("vec_id") % trainMod === 0)
-      .select(col("vec_id"), quantize(col("embedding")).as("v"))
-    val initRows = train.orderBy("vec_id").limit(ksub).collect()
-    require(initRows.length == ksub,
-      s"training subset ${initRows.length} rows < ksub=$ksub; lower trainMod")
-    var books: Array[Array[Double]] =
-      initRows.map(_.getSeq[Double](1).toArray)
-    val ids = Array.tabulate(ksub)(_.toLong)
-    var it = 0
-    while (it < iters) {
-      val updates = train
-        .select(col("v"), graft.functions.PqEncodeExpr.col(
-          col("v"), books, ids, m, subDim).as("codes"))
+    lloyd(embeddings, ksub, iters, trainMod, "ksub") { (train, books) =>
+      train
+        .select(col("v"), encodeCol(col("v"), indexed(books), m, subDim)
+          .as("codes"))
         .select(col("v"), posexplode(col("codes")).as(Seq("sub", "code")))
         .withColumn("vs", slice(col("v"), col("sub") * subDim + 1, lit(subDim)))
         .select(col("sub"), col("code"), posexplode(col("vs")).as(Seq("d", "x")))
         .groupBy("sub", "code", "d")
         .agg(round(sum("x") / count(lit(1)), 0).as("cx"))
-        .collect()
-      val next = books.map(_.clone())
-      updates.foreach { r =>
-        next(r.getLong(1).toInt)(r.getInt(0) * subDim + r.getInt(2)) =
-          r.getDouble(3)
+        .select(col("code").cast("int"), col("sub") * subDim + col("d"),
+          col("cx"))
+    }
+  }
+
+  /** Lloyd's loop, shared by both trainers: init = the `n` smallest
+    * training vec_ids (vec_id ≡ 0 mod trainMod, quantized; centroid
+    * index = rank), then `iters` rounds of ONE collected mean-update
+    * aggregate — `update(train, centroids)` yields (centroid index,
+    * coordinate, new value) cells, and a centroid no cell names (an
+    * empty cluster) keeps its previous coordinates. `what` names `n`
+    * in the errors. */
+  private def lloyd(embeddings: DataFrame, n: Int, iters: Int,
+      trainMod: Int, what: String)(
+      update: (DataFrame, Array[Array[Double]]) => DataFrame)
+      : Array[Array[Double]] = {
+    require(n >= 1 && iters >= 0 && trainMod >= 1,
+      s"bad $what=$n / iters=$iters / trainMod=$trainMod")
+    val train = embeddings
+      .where(col("vec_id") % trainMod === 0)
+      .select(col("vec_id"), quantize(col("embedding")).as("v"))
+    val initRows = train.orderBy("vec_id").limit(n).collect()
+    require(initRows.length == n,
+      s"training subset ${initRows.length} rows < $what=$n; lower trainMod")
+    var cents = initRows.map(_.getSeq[Double](1).toArray)
+    var it = 0
+    while (it < iters) {
+      val next = cents.map(_.clone())
+      update(train, cents).collect().foreach { r =>
+        next(r.getInt(0))(r.getInt(1)) = r.getDouble(2)
       }
-      books = next
+      cents = next
       it += 1
     }
-    books
+    cents
   }
 
   /** [[pqEncode]] with [[pqTrainCodebooks]] — the scale-invariant form:
@@ -1744,12 +1637,9 @@ object Similarity {
       ksub: Int = 256,
       iters: Int = 3,
       trainMod: Int = 1): DataFrame = {
-    val subDim = dims / m
     val books = pqTrainCodebooks(embeddings, m, dims, ksub, iters, trainMod)
-    embeddings.select(col("vec_id"),
-      graft.functions.PqEncodeExpr.col(
-        quantize(col("embedding")), books, Array.tabulate(ksub)(_.toLong),
-        m, subDim).as("codes"))
+    embeddings.select(col("vec_id"), encodeCol(quantize(col("embedding")),
+      indexed(books), m, dims / m).as("codes"))
   }
 
   /** [[pqSearch]] over the TRAINED codebooks: same ADC shape (per-query
@@ -1767,10 +1657,11 @@ object Similarity {
       dims: Int = 64,
       ksub: Int = 256,
       iters: Int = 3,
-      trainMod: Int = 1): DataFrame =
-    pqSearchTrainedCore(embeddings,
-      queryRows(prefixQueries(embeddings, nQueries)), k, m, dims, ksub,
-      iters, trainMod, excludeSelf = true)
+      trainMod: Int = 1): DataFrame = {
+    val queries = queryRows(prefixQueries(embeddings, nQueries))
+    adcTopK(scored(Ann.built(embeddings, m, dims, None,
+      Trained(ksub, iters, trainMod)), queries, 1, excludeSelf = true), k)
+  }
 
   /** [[pqSearchTrained]] serving a STANDALONE (query_id, embedding)
     * query relation — see [[ivfPqSearchPersistedQ]] for the signature
@@ -1784,27 +1675,10 @@ object Similarity {
       ksub: Int = 256,
       iters: Int = 3,
       trainMod: Int = 1,
-      excludeSelf: Boolean = false): DataFrame =
-    pqSearchTrainedCore(embeddings, queryRows(quantQueries(queries)), k, m,
-      dims, ksub, iters, trainMod, excludeSelf)
-
-  private def pqSearchTrainedCore(
-      embeddings: DataFrame,
-      queries: Seq[(Long, Array[Double])],
-      k: Int,
-      m: Int,
-      dims: Int,
-      ksub: Int,
-      iters: Int,
-      trainMod: Int,
-      excludeSelf: Boolean): DataFrame = {
-    val subDim = dims / m
-    val book = indexed(
-      pqTrainCodebooks(embeddings, m, dims, ksub, iters, trainMod))
-    val index = embeddings.select(col("vec_id").as("neighbor_id"),
-      encodeCol(quantize(col("embedding")), book, m, subDim).as("codes"))
-    adcTopK(adcScan(index, flatLuts(embeddings.sparkSession, queries,
-      adcBook(book, m, subDim, 1)), m, 1, excludeSelf), k)
+      excludeSelf: Boolean = false): DataFrame = {
+    val qs = queryRows(quantQueries(queries))
+    adcTopK(scored(Ann.built(embeddings, m, dims, None,
+      Trained(ksub, iters, trainMod)), qs, 1, excludeSelf), k)
   }
 
   // --- Lloyd-trained coarse quantizer (fixed nlists) ---------------------
@@ -1834,38 +1708,17 @@ object Similarity {
       nlists: Int = 16,
       iters: Int = 2,
       trainMod: Int = 1): Array[Array[Double]] = {
-    require(nlists >= 1 && iters >= 0 && trainMod >= 1,
-      s"bad nlists=$nlists / iters=$iters / trainMod=$trainMod")
-    val spark = embeddings.sparkSession
-    val train = embeddings
-      .where(col("vec_id") % trainMod === 0)
-      .select(col("vec_id"), quantize(col("embedding")).as("v"))
-    val initRows = train.orderBy("vec_id").limit(nlists).collect()
-    require(initRows.length == nlists,
-      s"training subset ${initRows.length} rows < nlists=$nlists; lower trainMod")
-    var cents: Array[Array[Double]] = initRows.map(_.getSeq[Double](1).toArray)
-    val listIds = Array.tabulate(nlists)(_.toLong)
-    var it = 0
-    while (it < iters) {
-      // assignment as the narrow kernel (r22): the former relational
-      // assign paid a crossJoin + argmax exchange + a train-set
-      // self-join on vec_id PER ITERATION — the assignment is a pure
-      // per-row function of v against the driver-resident centroids
-      val updates = train
-        .select(element_at(graft.functions.IvfTopListsExpr.col(
-          col("v"), cents, listIds, 1), 1).as("list_id"),
+    // the assignment is a pure per-row function of v against the
+    // driver-resident centroids: one narrow kernel, no join or exchange
+    lloyd(embeddings, nlists, iters, trainMod, "nlists") { (train, cents) =>
+      train
+        .select(element_at(IvfTopListsExpr.col(col("v"), cents,
+          Array.tabulate(nlists)(_.toLong), 1), 1).as("list_id"),
           posexplode(col("v")).as(Seq("d", "x")))
         .groupBy("list_id", "d")
         .agg(round(sum("x") / count(lit(1)), 0).as("cx"))
-        .collect()
-      val next = cents.map(_.clone())
-      updates.foreach { r =>
-        next(r.getLong(0).toInt)(r.getInt(1)) = r.getDouble(2)
-      }
-      cents = next
-      it += 1
+        .select(col("list_id").cast("int"), col("d"), col("cx"))
     }
-    cents
   }
 
   /** [[ivfAssign]] against TRAINED centroids: every vector to its
@@ -1911,45 +1764,11 @@ object Similarity {
       trainMod: Int = 1,
       nprobe: Int = 2): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    adcTopK(ivfPqScoredTrainedFull(embeddings, nQueries, m, dims, ksub,
-      nlists, iters, trainMod, nprobe), k)
-  }
-
-  /** Candidate relation of [[ivfPqSearchTrainedFull]] before top-k —
-    * exposed for ScaleBench B45's scanned-fraction REQUIRE. */
-  private[graft] def ivfPqScoredTrainedFull(
-      embeddings: DataFrame,
-      nQueries: Int,
-      m: Int,
-      dims: Int,
-      ksub: Int,
-      nlists: Int,
-      iters: Int,
-      trainMod: Int,
-      nprobe: Int): DataFrame = {
-    require(dims % m == 0, s"dims=$dims not divisible by m=$m")
-    val subDim = dims / m
     val queries = queryRows(prefixQueries(embeddings, nQueries))
-    val coarse = centsOf(indexed(
-      ivfTrainCentroids(embeddings, dims, nlists, iters, trainMod)))
-    val book = indexed(
-      pqTrainCodebooks(embeddings, m, dims, ksub, iters, trainMod))
-    // index: trained codes + trained coarse list per vector in ONE
-    // corpus pass — what ivfPqWriteIndexTrained persists; probes and
-    // LUTs (indices, divisor 1) from the same driver arrays
-    adcScan(indexFrom(embeddings, coarse, book, m, subDim, 1),
-      probeLutRelation(embeddings.sparkSession, probeLuts(queries, coarse,
-        adcBook(book, m, subDim, 1), nprobe)),
-      m, 1, excludeSelf = true)
+    adcTopK(scored(Ann.built(embeddings, m, dims,
+      Some(Trained(nlists, iters, trainMod)), Trained(ksub, iters, trainMod)),
+      queries, nprobe, excludeSelf = true), k)
   }
-
-  /** Coarse-centroid relation (list_id, cv, cn) — metadata-sized,
-    * broadcast at every use site. */
-  private[graft] def coarseCents(embeddings: DataFrame, coarseMod: Int): DataFrame =
-    embeddings
-      .where(col("vec_id") % coarseMod === 0)
-      .select(col("vec_id").as("list_id"), quantize(col("embedding")).as("cv"))
-      .withColumn("cn", dot(col("cv"), col("cv")))
 
   /** The query-prefix convention as a (query_id, v) relation: queries
     * are the corpus rows vec_id < nQueries, quantized — the fixture
@@ -1996,38 +1815,166 @@ object Similarity {
     xs.iterator.map(_.asInstanceOf[Double]).toArray
   }
 
-  // --- The ADC query stage, on the driver -------------------------------
+  // --- The ADC index value and its one scoring path --------------------
   //
-  // Every PQ and IVF+PQ search — persisted or in-plan, subset or trained
-  // books, raw or residual — builds its probes and lookup tables HERE,
-  // from query rows collected once ([[queryRows]]) and centroid sets the
-  // index build or the metadata cache already holds on the driver. Both
-  // are query-scale: probes are nQueries × nprobe ids, and the lookup
-  // tables nQueries × nprobe × m × ksub doubles (nQueries × m × ksub
-  // for the flat and raw forms, whose probes share one table) — the
-  // cells a broadcast LUT relation would hold anyway. They reach the
-  // scan as ONE broadcast local relation ([[adcScan]]), so the engine
-  // runs only the data-parallel codes scan and its top-k. No arithmetic
-  // is written twice: probes are [[graft.functions.IvfTopListsExpr.topLists]]
-  // and every dot is [[graft.functions.DotProductExpr.dot]].
-  // PropertySpec pins the stage bit-equal to the relational probes +
-  // LUT fold kept in src/test as the reference.
+  // FAISS's index factory (Douze et al. 2024, "The Faiss library") treats
+  // flat or inverted, subset or trained books, raw or residual codes and
+  // in-memory or on-disk storage as fields of ONE index value; [[Ann]] is
+  // that value here, built in-plan ([[Ann.built]]) or opened from a
+  // persisted index ([[Ann.opened]]), and every PQ and IVF+PQ search
+  // scores through [[scored]].
+  //
+  // The query stage runs on the driver: every search builds its probes
+  // and lookup tables from query rows collected once ([[queryRows]]) and
+  // the centroid sets the build or the metadata cache already holds.
+  // Both are query-scale: probes are nQueries × nprobe ids, and the
+  // lookup tables nQueries × nprobe × m × ksub doubles (nQueries × m ×
+  // ksub for the flat and raw forms, whose probes share one table) — the
+  // cells a broadcast LUT relation would hold anyway. They reach the scan
+  // as ONE broadcast local relation ([[adcScan]]), so the engine runs
+  // only the data-parallel codes scan and its top-k. No arithmetic is
+  // written twice: probes are [[graft.functions.IvfTopListsExpr.topLists]]
+  // and every dot is [[graft.functions.DotProductExpr.dot]]. PropertySpec
+  // pins the stage bit-equal to the relational probes + LUT fold kept in
+  // src/test as the reference.
+
+  /** One ADC index. `codes(probed)` is the index relation a search over
+    * the sorted distinct `probed` lists scans — (neighbor_id, list_id,
+    * codes), or flat PQ's (neighbor_id, codes) when there is no
+    * `coarse` set; `book` the cut codebook of the lookup tables and
+    * `divisor` its code → slot map; `residual` codes quantize each
+    * vector's offset from its list's centroid (per-probe tables);
+    * `spilled` copies of a vector in several lists share their codes
+    * (the scan min-dedups them). */
+  private[graft] final case class Ann(
+      codes: Seq[Long] => DataFrame,
+      coarse: Option[Cents],
+      book: AdcBook,
+      divisor: Int,
+      residual: Boolean,
+      spilled: Boolean)
+
+  private[graft] object Ann {
+
+    /** An in-plan index over `vecs` (vec_id, embedding): its coarse set
+      * (none: flat PQ) and book resolved on the driver, every vector
+      * encoded by the one index projection ([[indexFrom]]) in its
+      * nearest list. `residual` trains the book on the subset's
+      * residuals — each book row minus the centroid of its nearest list
+      * — and encodes residuals. `codes` ignores the probed lists: the
+      * probe equi-join of [[adcScan]] prunes. */
+    def built(vecs: DataFrame, m: Int, dims: Int, coarse: Option[From],
+        book: From, residual: Boolean = false): Ann = {
+      require(m >= 1 && dims % m == 0, s"dims=$dims not divisible by m=$m")
+      val cs = coarse.map(coarseOf(vecs, dims, _))
+      val raw = bookOf(vecs, m, dims, book)
+      val rows = if (!residual) raw else {
+        val c = cs.get
+        val res = raw.flatMap { case (id, v) =>
+          probes(v, c, 1).map { list =>
+            val cv = c.vs(java.util.Arrays.binarySearch(c.ids, list))
+            (id, Array.tabulate(v.length)(i => v(i) - cv(i)))
+          }
+        }
+        require(res.nonEmpty, "empty residual PQ codebook")
+        res
+      }
+      val index = indexFrom(vecs, cs, rows, m, dims / m, 1, residual)
+      Ann(_ => index, cs, adcBook(rows, m, dims / m, book.divisor),
+        book.divisor, residual, spilled = false)
+    }
+
+    /** The persisted index at `dir` (its live root): the coarse
+      * centroids and the book from the driver metadata cache
+      * ([[centsCached]], [[bookCached]]), `codes` the lifecycle reader
+      * of `codes` — tombstoned neighbors ([[ivfPqDeleteIndex]]) masked —
+      * pruned AT THE SCAN to the probed lists ([[prunedScan]]), and
+      * `spilled` from the writer's `_spill` marker. `divisor` must match
+      * the writer: the subset writer's centroidMod, 1 for trained books. */
+    def opened(spark: SparkSession, dir: String, m: Int, dims: Int,
+        divisor: Int): Ann = {
+      require(m >= 1 && dims % m == 0, s"dims=$dims not divisible by m=$m")
+      val root = indexRoot(spark, dir)
+      Ann(lists => {
+        require(lists.nonEmpty, "no probed lists - is the query relation empty?")
+        prunedScan(spark, s"$root/codes", "list_id", lists)
+      }, Some(centsCached(spark, root)),
+        adcBook(bookCached(spark, root), m, dims / m, divisor), divisor,
+        residual = false, spilled = spillDegree(spark, root) > 1)
+    }
+  }
+
+  /** Where a build takes a centroid set from: the corpus rows vec_id ≡ 0
+    * (mod `mod`), whose ids are vec_ids (LUT divisor `mod`), or `n`
+    * Lloyd-trained centroids, whose ids are indices (divisor 1). */
+  private[graft] sealed trait From { def divisor: Int }
+  private[graft] final case class Subset(mod: Int) extends From {
+    def divisor: Int = mod
+  }
+  private[graft] final case class Trained(n: Int, iters: Int, trainMod: Int)
+      extends From {
+    def divisor: Int = 1
+  }
+
+  /** A coarse centroid set, on the driver. */
+  private def coarseOf(vecs: DataFrame, dims: Int, from: From): Cents =
+    from match {
+      case Subset(mod) => coarseSet(vecs, mod)
+      case Trained(n, iters, trainMod) =>
+        centsOf(indexed(ivfTrainCentroids(vecs, dims, n, iters, trainMod)))
+    }
+
+  /** A PQ book as (centroid_id, v) rows, ids ascending, on the driver. */
+  private def bookOf(vecs: DataFrame, m: Int, dims: Int,
+      from: From): IndexedSeq[(Long, Array[Double])] = from match {
+    case Subset(mod) => codebook(vecs, dims, mod)
+    case Trained(n, iters, trainMod) =>
+      indexed(pqTrainCodebooks(vecs, m, dims, n, iters, trainMod))
+  }
+
+  /** `ann` scored for the collected `queries` — (query_id, neighbor_id,
+    * adc_dist) before top-k: flat lookup tables (one per query, every
+    * codes row), or per-probe ones over each query's `nprobe` nearest
+    * lists (raw: the query's one table; residual: one per probe), then
+    * [[adcScan]] and, on a spilled index, the min-dedup of the copies
+    * (identical adc_dist each time, so min == any; map-side
+    * partial-aggregatable) that restores one row per (query, neighbor).
+    * ScaleBench and the specs count its rows and read its plan. */
+  private[graft] def scored(ann: Ann, queries: Seq[(Long, Array[Double])],
+      nprobe: Int, excludeSelf: Boolean): DataFrame = {
+    val (index, lut) = ann.coarse match {
+      case None =>
+        val index = ann.codes(Nil)
+        (index, index.sparkSession.createDataFrame(queries.map {
+          case (q, v) => (q, luts(v, ann.book)) }).toDF("query_id", "luts"))
+      case Some(cs) =>
+        val rows = (if (ann.residual) residualLuts(queries, cs, ann.book, nprobe)
+          else probeLuts(queries, cs, ann.book, nprobe))
+        val index = ann.codes(rows.map(_._2).distinct.sorted)
+        (index, index.sparkSession.createDataFrame(rows)
+          .toDF("query_id", "list_id", "luts"))
+    }
+    val s = adcScan(index, lut, ann.book.m, ann.divisor, excludeSelf)
+    if (!ann.spilled) s
+    else s.groupBy("query_id", "neighbor_id").agg(min("adc_dist").as("adc_dist"))
+  }
 
   /** A centroid set on the driver, ids ascending: each id's vector and
-    * sqrt of its `cn` (the cosine denominator of [[probes]]). */
+    * its `cn` — the stored self-dot — with the sqrt [[probes]] divides by. */
   private[graft] final case class Cents(
-      ids: Array[Long], vs: Array[Array[Double]], sqrtCn: Array[Double])
+      ids: Array[Long], vs: Array[Array[Double]], cn: Array[Double]) {
+    val sqrtCn: Array[Double] = cn.map(math.sqrt)
+  }
 
   /** [[Cents]] from (id, v, cn) rows in any order — `cn` as stored. */
   private[graft] def cents(rows: Seq[(Long, Array[Double], Double)]): Cents = {
     val byId = rows.sortBy(_._1)
     Cents(byId.map(_._1).toArray, byId.map(_._2).toArray,
-      byId.map(r => math.sqrt(r._3)).toArray)
+      byId.map(_._3).toArray)
   }
 
   /** [[Cents]] from (id, v) rows, each `cn` the vector's index-order
-    * self-dot — the value both writers store and [[coarseCents]]
-    * computes. */
+    * self-dot — the value both writers store. */
   private def centsOf(rows: Seq[(Long, Array[Double])]): Cents =
     cents(rows.map { case (id, v) =>
       val a = ArrayData.toArrayData(v)
@@ -2035,8 +1982,7 @@ object Similarity {
     })
 
   /** The coarse subset (vec_id ≡ 0 mod coarseMod) collected to the
-    * driver — metadata-sized by the same contract that lets the
-    * [[coarseCents]] relation broadcast, bounded like [[codebook]]. */
+    * driver — metadata-sized, bounded like [[codebook]]. */
   private def coarseSet(embeddings: DataFrame, coarseMod: Int): Cents = {
     val rows = subsetRows(embeddings, coarseMod)
     val cells = rows.iterator.map(_._2.length.toLong).sum
@@ -2132,18 +2078,6 @@ object Similarity {
       }
     }
 
-  /** Per-probe LUT rows as the broadcast side of [[adcScan]]. */
-  private def probeLutRelation(spark: SparkSession,
-      rows: Seq[(Long, Long, Seq[Seq[Double]])]): DataFrame =
-    spark.createDataFrame(rows).toDF("query_id", "list_id", "luts")
-
-  /** Flat PQ: one (query_id, luts) row per query — no probes, every
-    * codes row is scored against every query. */
-  private def flatLuts(spark: SparkSession,
-      queries: Seq[(Long, Array[Double])], book: AdcBook): DataFrame =
-    spark.createDataFrame(queries.map { case (q, v) => (q, luts(v, book)) })
-      .toDF("query_id", "luts")
-
   /** IVF+PQ with RESIDUAL quantization — the FAISS IVFPQ DEFAULT
     * (`by_residual=true`, Jégou 2011 §IV.C): codes quantize x − c(list)
     * instead of x. Residuals concentrate near the origin, so the same
@@ -2155,14 +2089,14 @@ object Similarity {
     * (query, probed list) — the table is built against the query
     * residual q − c(list), which differs per probed list — and that is
     * EXACTLY the (query, list) row shape the composed join already
-    * broadcasts ([[ivfPqScored]]'s probe LUTs), so the scan shape is
+    * broadcasts ([[ivfPqSearch]]'s probe LUTs), so the scan shape is
     * unchanged: an equi-join of the residual-encoded corpus against
     * nQueries·nprobe broadcast LUT rows on `list_id`, scanning
     * ~nprobe/nlists of the corpus. Those rows are built on the driver
     * ([[residualLuts]]: nQueries × nprobe × m × ksub doubles) from the
     * query rows, collected at call time, and the coarse centroids and
     * residual codebook rows the index build collects
-    * ([[buildResidualIndex]]); a query of another length than the
+    * ([[Ann.built]]); a query of another length than the
     * centroids has no residual and fails, naming its query_id.
     * Residual codebooks are trained on
     * the residuals of the same deterministic subset (vec_id ≡ 0 mod
@@ -2182,82 +2116,10 @@ object Similarity {
       coarseMod: Int = 83,
       nprobe: Int = 2): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    adcTopK(ivfPqResidualScored(
-      embeddings, nQueries, m, dims, centroidMod, coarseMod, nprobe), k)
-  }
-
-  /** A residual IVF+PQ index: the residual-encoded index relation plus
-    * the driver-resident coarse centroids and residual codebook rows it
-    * was built from — split out so specs can pin the index contents
-    * (codes trained on RESIDUALS, not raw vectors) independently of the
-    * search join, and so the search builds its lookup tables from the
-    * rows the build already collected. In production the `index`
-    * relation is what gets persisted. */
-  private[graft] final case class ResidualIndex(
-      index: DataFrame, coarse: Cents,
-      book: IndexedSeq[(Long, Array[Double])], subDim: Int)
-
-  private[graft] def buildResidualIndex(
-      embeddings: DataFrame,
-      m: Int,
-      dims: Int,
-      centroidMod: Int,
-      coarseMod: Int): ResidualIndex = {
-    require(dims % m == 0, s"dims=$dims not divisible by m=$m")
-    val subDim = dims / m
-    // residual per vector vs its assigned list's centroid — the
-    // assignment is the narrow kernel (r22: the former corpus-scale
-    // assign aggregate + vec_id self-join removed); only the
-    // metadata-sized broadcast join that fetches the centroid VECTOR
-    // remains. `get` (null past the end) keeps the degenerate
-    // empty-centroid case identical to the old inner-join-empty form:
-    // null list_id matches nothing, resid comes out empty.
-    val coarse = coarseSet(embeddings, coarseMod)
-    val resid = embeddings
-      .select(col("vec_id"), quantize(col("embedding")).as("v"))
-      .withColumn("list_id", get(graft.functions.IvfTopListsExpr.col(
-        col("v"), coarse.vs, coarse.ids, 1), lit(0)))
-      .join(broadcast(coarseCents(embeddings, coarseMod)
-        .select("list_id", "cv")), "list_id")
-      .withColumn("rv", zip_with(col("v"), col("cv"), (a, b) => a - b))
-      .select("vec_id", "list_id", "rv")
-    // residual codebooks: the deterministic subset's RESIDUALS
-    val book = resid
-      .where(col("vec_id") % centroidMod === 0)
-      .select("vec_id", "rv")
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
-      .toIndexedSeq
-    require(book.nonEmpty, "empty residual PQ codebook")
-    require(book.length.toLong * dims <= (16L << 20),
-      s"codebook ${book.length}x$dims exceeds the driver bound; " +
-        "raise centroidMod")
-    // index: residual codes + coarse list per vector (one narrow
-    // codegen'd projection — the pqEncode kernel, fed residuals)
-    val index = resid.select(
-      col("vec_id").as("neighbor_id"), col("list_id"),
-      encodeCol(col("rv"), book, m, subDim).as("codes"))
-    ResidualIndex(index, coarse, book, subDim)
-  }
-
-  /** Candidate relation of [[ivfPqResidualSearch]] before top-k —
-    * exposed for ScaleBench's scanned-row REQUIRE, like
-    * [[ivfPqScored]]. */
-  private[graft] def ivfPqResidualScored(
-      embeddings: DataFrame,
-      nQueries: Int,
-      m: Int,
-      dims: Int,
-      centroidMod: Int,
-      coarseMod: Int,
-      nprobe: Int): DataFrame = {
     val queries = queryRows(prefixQueries(embeddings, nQueries))
-    val ri = buildResidualIndex(embeddings, m, dims, centroidMod, coarseMod)
-    adcScan(ri.index, probeLutRelation(embeddings.sparkSession,
-      residualLuts(queries, ri.coarse,
-        adcBook(ri.book, m, ri.subDim, centroidMod), nprobe)),
-      m, centroidMod, excludeSelf = true)
+    adcTopK(scored(Ann.built(embeddings, m, dims, Some(Subset(coarseMod)),
+      Subset(centroidMod), residual = true), queries, nprobe,
+      excludeSelf = true), k)
   }
 
   /** The ONE ADC scan: the index's `(neighbor_id, [list_id,] codes)` rows

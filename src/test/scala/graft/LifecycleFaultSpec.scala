@@ -51,13 +51,15 @@ object FaultFs {
       throw new java.io.IOException(s"injected fault: $op #$failAt $p")
 }
 
-/** Fault-injection matrix for the shared consolidate
-  * ([[graft.ops.ClusteredIndex.consolidate]] behind
-  * [[Bm25.consolidateIndex]] and [[Similarity.ivfPqConsolidateIndex]]):
-  * for a tiny index of each family — with a tail and pending tombstones
-  * — every create/rename/delete the pass issues is failed in turn, and
-  *  - a fresh reader sees exactly the pre-op (= post-op: consolidate
-  *    never changes results) search result;
+/** Fault-injection matrix for the shared consolidate and optimize
+  * ([[graft.ops.ClusteredIndex.consolidate]] / `optimize` behind
+  * [[Bm25.consolidateIndex]], [[Bm25.optimizeIndex]],
+  * [[Similarity.ivfPqConsolidateIndex]] and
+  * [[Similarity.ivfPqOptimizeIndex]]): for a tiny index of each family —
+  * with a tail and pending tombstones — every create/rename/delete the
+  * pass issues is failed in turn, and
+  *  - a fresh reader sees exactly the pre-op (= post-op: neither pass
+  *    ever changes results) search result;
   *  - a fault-free retry converges to the no-fault pass: same results,
   *    same rows in the live generations;
   *  - a forced vacuum leaves no unreferenced gen-* or staged-* directory.
@@ -104,12 +106,12 @@ class LifecycleFaultSpec extends SparkSpec {
     }
   }
 
-  /** Run the matrix: `consolidate(dir)` over a copy of the fixture at
-    * `base` once per fault point; `search`, `relations` (lifecycle
-    * relation dirs under an index dir) and `vacuum` are the family's. */
+  /** Run the matrix: `op(dir)` over a copy of the fixture at `base` once
+    * per fault point; `search`, `relations` (lifecycle relation dirs
+    * under an index dir) and `vacuum` are the family's. */
   private def matrix(
       base: String,
-      consolidate: String => Unit,
+      op: String => Unit,
       search: String => Set[Seq[Any]],
       relations: Seq[String],
       vacuum: String => Unit): Unit = {
@@ -124,17 +126,17 @@ class LifecycleFaultSpec extends SparkSpec {
     val clean = copy()
     FaultFs.arm(Int.MaxValue)
     val points =
-      try { consolidate(clean); FaultFs.disarm() } finally FaultFs.disarm()
+      try { op(clean); FaultFs.disarm() } finally FaultFs.disarm()
     assert(points > 0)
     graft.ops.ServingCache.invalidate()
-    assert(search(clean) == expected, "consolidate changed the results")
+    assert(search(clean) == expected, "the pass changed the results")
     val cleanState = state(clean)
     var fired = 0
     for (n <- 1 to points) {
       val d = copy()
       FaultFs.arm(n)
       val thrown =
-        try { consolidate(d); None }
+        try { op(d); None }
         catch { case e: Exception => Some(e) }
         finally FaultFs.disarm()
       if (thrown.isDefined) fired += 1
@@ -142,7 +144,7 @@ class LifecycleFaultSpec extends SparkSpec {
       assert(search(d) == expected,
         s"fault point $n: a fresh reader saw neither the pre- nor the " +
           s"post-op result (${thrown.map(_.getMessage)})")
-      consolidate(d)
+      op(d)
       graft.ops.ServingCache.invalidate()
       assert(search(d) == expected, s"fault point $n: retry changed results")
       assert(state(d) == cleanState,
@@ -160,9 +162,8 @@ class LifecycleFaultSpec extends SparkSpec {
     info(s"$points fault points, $fired fired")
   }
 
-  test("BM25 consolidate: every create/rename/delete fault point leaves " +
-    "readers on the pre/post snapshot, retries converge, vacuum " +
-    "reclaims the orphans") {
+  /** A BM25 index with a generation, a tail and pending tombstones. */
+  private def bm25Fixture(): String = {
     val docs = spark.createDataFrame((0L until 14L).map(i =>
       (i, s"alpha w${i % 3} beta w${i % 5}"))).toDF("doc_id", "text")
     val base = faultDir("bm25fault")
@@ -173,21 +174,26 @@ class LifecycleFaultSpec extends SparkSpec {
       spark.createDataFrame(Seq((20L, "alpha w1 gamma"))).toDF("doc_id", "text"))
     Bm25.deleteIndex(spark, base,
       docs.where(col("doc_id").isin(2L, 11L)).select("doc_id"))
-    val queries = Seq((0, "alpha w1"), (1, "beta w4 gamma"))
-    matrix(base,
-      d => Bm25.consolidateIndex(spark, d, numFiles = 1),
-      d => rows(Bm25.searchPersisted(spark, d, queries)),
-      Seq("postings", "docstats", "stats"),
-      d => Bm25.vacuumIndex(spark, d, force = true))
+    base
   }
 
-  test("IVF+PQ consolidate (codes + vecs): every create/rename/delete " +
-    "fault point leaves readers on the pre/post snapshot, retries " +
-    "converge, vacuum reclaims the orphans") {
-    val vecs = spark.range(24L).select(col("id").as("vec_id"),
-      transform(sequence(lit(0), lit(3)),
-        d => (((col("id") * 13 + d * 11) % 29) + (col("id") % 5) + 1)
-          .cast("float")).as("embedding"))
+  private val bm25Queries = Seq((0, "alpha w1"), (1, "beta w4 gamma"))
+
+  /** The BM25 matrix of `op`. */
+  private def bm25Matrix(op: String => Unit): Unit =
+    matrix(bm25Fixture(), op,
+      d => rows(Bm25.searchPersisted(spark, d, bm25Queries)),
+      Seq("postings", "docstats", "stats"),
+      d => Bm25.vacuumIndex(spark, d, force = true))
+
+  private def ivfVecs = spark.range(24L).select(col("id").as("vec_id"),
+    transform(sequence(lit(0), lit(3)),
+      d => (((col("id") * 13 + d * 11) % 29) + (col("id") % 5) + 1)
+        .cast("float")).as("embedding"))
+
+  /** An IVF+PQ index (codes + vecs) with a tail and pending tombstones. */
+  private def ivfFixture(): String = {
+    val vecs = ivfVecs
     val base = faultDir("ivffault")
     Similarity.ivfPqWriteIndexTrained(vecs.where(col("vec_id") < 20), base,
       numFiles = 1, m = 2, dims = 4, ksub = 4, nlists = 2, iters = 1,
@@ -196,13 +202,41 @@ class LifecycleFaultSpec extends SparkSpec {
       vecs.where(col("vec_id") >= 20), m = 2, dims = 4)
     Similarity.ivfPqDeleteIndex(spark, base,
       spark.createDataFrame(Seq(Tuple1(4L), Tuple1(21L))).toDF("vec_id"))
-    val queries = vecs.where(col("vec_id") < 3)
+    base
+  }
+
+  /** The IVF+PQ matrix of `op`, read through the exact re-rank. */
+  private def ivfMatrix(op: String => Unit): Unit = {
+    val queries = ivfVecs.where(col("vec_id") < 3)
       .select(col("vec_id").as("query_id"), col("embedding"))
-    matrix(base,
-      d => Similarity.ivfPqConsolidateIndex(spark, d, numFiles = 1),
+    matrix(ivfFixture(), op,
       d => rows(Similarity.ivfPqRerankPersistedQ(spark, d, queries, k = 3,
         rerankR = 24, m = 2, dims = 4, centroidMod = 1, nprobe = 2)),
       Seq("codes", "vecs"),
       d => Similarity.ivfPqVacuumIndex(spark, d, force = true))
+  }
+
+  test("BM25 consolidate: every create/rename/delete fault point leaves " +
+    "readers on the pre/post snapshot, retries converge, vacuum " +
+    "reclaims the orphans") {
+    bm25Matrix(d => Bm25.consolidateIndex(spark, d, numFiles = 1))
+  }
+
+  test("IVF+PQ consolidate (codes + vecs): every create/rename/delete " +
+    "fault point leaves readers on the pre/post snapshot, retries " +
+    "converge, vacuum reclaims the orphans") {
+    ivfMatrix(d => Similarity.ivfPqConsolidateIndex(spark, d, numFiles = 1))
+  }
+
+  test("BM25 optimize: every create/rename/delete fault point leaves " +
+    "readers on the pre/post snapshot, retries converge, vacuum " +
+    "reclaims the orphans") {
+    bm25Matrix(d => Bm25.optimizeIndex(spark, d, numFiles = 1))
+  }
+
+  test("IVF+PQ optimize (codes + vecs): every create/rename/delete " +
+    "fault point leaves readers on the pre/post snapshot, retries " +
+    "converge, vacuum reclaims the orphans") {
+    ivfMatrix(d => Similarity.ivfPqOptimizeIndex(spark, d, numFiles = 1))
   }
 }

@@ -290,9 +290,13 @@ class PlanSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("planspec_idx").toString
     graft.similarity.Similarity.ivfPqWriteIndex(big, s"$dir/index",
       numFiles = 3, m = 2, dims = 4, centroidMod = 7, coarseMod = 20)
-    val scored = graft.similarity.Similarity.ivfPqScoredPersisted(spark,
-      s"$dir/index", big, nQueries = 5, m = 2, dims = 4, centroidMod = 7,
-      nprobe = 2)
+    val scored = {
+      import graft.similarity.Similarity
+      Similarity.scored(Similarity.Ann.opened(spark, s"$dir/index", m = 2,
+        dims = 4, divisor = 7),
+        Similarity.queryRows(Similarity.prefixQueries(big, 5)), nprobe = 2,
+        excludeSelf = true)
+    }
     val plan = scored.queryExecution.executedPlan.toString
     // the probed-list predicate must reach the scan as an IN over
     // list_id — a plan that filters list_id only above the scan (or
@@ -484,9 +488,13 @@ class PlanSpec extends SparkSpec {
         .filter(_.toString.contains("codes"))
         .map(_.metrics("numOutputRows").value).sum
     }
-    def search() = graft.similarity.Similarity.ivfPqScoredPersisted(spark,
-      s"$dir/index", big, nQueries = 10, m = 2, dims = 4, centroidMod = 7,
-      nprobe = 4)
+    def search() = {
+      import graft.similarity.Similarity
+      Similarity.scored(Similarity.Ann.opened(spark, s"$dir/index", m = 2,
+        dims = 4, divisor = 7),
+        Similarity.queryRows(Similarity.prefixQueries(big, 10)), nprobe = 4,
+        excludeSelf = true)
+    }
     val key = "spark.sql.parquet.pushdown.inFilterThreshold"
     val prior = spark.conf.get(key, "10")
     try {

@@ -18,6 +18,16 @@ class PqSpec extends SparkSpec {
     (2L, Seq(0f, 1f, 1f, 0f)),
     (3L, Seq(0.9f, 0.1f, 0.1f, 0.9f))) // both subs ~ v0
 
+  /** The in-plan subset IVF+PQ search's candidate relation before
+    * top-k (m = 2, dims = 4), queries vec_id < nQueries. */
+  private def inPlanScored(vecs: org.apache.spark.sql.DataFrame,
+      nQueries: Int, centroidMod: Int, coarseMod: Int, nprobe: Int,
+      residual: Boolean = false) =
+    Similarity.scored(Similarity.Ann.built(vecs, m = 2, dims = 4,
+      Some(Similarity.Subset(coarseMod)), Similarity.Subset(centroidMod),
+      residual), Similarity.queryRows(Similarity.prefixQueries(vecs, nQueries)),
+      nprobe, excludeSelf = true)
+
   private def codesOf(m: Int = 2): Map[Long, Seq[Long]] =
     Similarity.pqEncode(e, m = m, dims = 4, centroidMod = 2).collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1).toList).toMap
@@ -107,8 +117,8 @@ class PqSpec extends SparkSpec {
       assert(ls.size == 1, s"query $q scanned lists $ls with nprobe=1") }
     // and pruning is real: the candidate relation (pre-top-k) scans a
     // strict subset of the 5 × 59 pairs a full ADC scan scores
-    val scanned = Similarity.ivfPqScored(big, nQueries = 5,
-      m = 2, dims = 4, centroidMod = 7, coarseMod = 20, nprobe = 1).count()
+    val scanned = inPlanScored(big, nQueries = 5, centroidMod = 7,
+      coarseMod = 20, nprobe = 1).count()
     assert(scanned < 5L * 59L, s"scanned $scanned of ${5 * 59} pairs")
   }
 
@@ -205,8 +215,8 @@ class PqSpec extends SparkSpec {
   }
 
   test("residual search with nprobe >= nlists scans the whole corpus") {
-    val scanned = Similarity.ivfPqResidualScored(bigWithDup, nQueries = 5,
-      m = 2, dims = 4, centroidMod = 7, coarseMod = 20, nprobe = 4)
+    val scanned = inPlanScored(bigWithDup, nQueries = 5, centroidMod = 7,
+      coarseMod = 20, nprobe = 4, residual = true)
     // 4 lists exist (centroids 0, 20, 40, 60); probing all of them =
     // every (query, neighbor != query) pair
     assert(scanned.count() == 5L * 61L)
@@ -216,15 +226,15 @@ class PqSpec extends SparkSpec {
     "on residuals) while the scan shape stays an equi-join on list_id") {
     val raw = Similarity.pqEncode(bigWithDup, m = 2, dims = 4, centroidMod = 7)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val ri = Similarity.buildResidualIndex(bigWithDup,
-      m = 2, dims = 4, centroidMod = 7, coarseMod = 20)
-    val res = ri.index.collect()
+    val ri = Similarity.Ann.built(bigWithDup, m = 2, dims = 4,
+      Some(Similarity.Subset(20)), Similarity.Subset(7), residual = true)
+    val res = ri.codes(Nil).collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](2)).toMap
     assert(res.keySet == raw.keySet)
     assert(res.exists { case (id, codes) => codes != raw(id) },
       "residual training produced byte-identical codes to raw training")
-    val scored = Similarity.ivfPqResidualScored(bigWithDup, nQueries = 5,
-      m = 2, dims = 4, centroidMod = 7, coarseMod = 20, nprobe = 2)
+    val scored = inPlanScored(bigWithDup, nQueries = 5, centroidMod = 7,
+      coarseMod = 20, nprobe = 2, residual = true)
     val plan = scored.queryExecution.executedPlan.toString
     // the corpus-side scan is an equi-join on list_id (broadcast hash);
     // a CartesianProduct would mean an unpruned all-pairs scan. The
@@ -524,8 +534,10 @@ class PqSpec extends SparkSpec {
     assert(searchPersisted() == rebuilt)
     // the appended duplicate of vec 1 (id 70) is searchable and sits at
     // query 1's ADC floor — identical vector, identical frozen codes
-    val scored = Similarity.ivfPqScoredPersisted(spark, s"$dir/index",
-      union, nQueries = 2, m = 2, dims = 4, centroidMod = 1, nprobe = 2)
+    val scored = Similarity.scored(Similarity.Ann.opened(spark,
+      s"$dir/index", m = 2, dims = 4, divisor = 1),
+      Similarity.queryRows(Similarity.prefixQueries(union, 2)), nprobe = 2,
+      excludeSelf = true)
       .where(col("query_id") === 1L).collect()
       .map(r => r.getLong(1) -> r.getLong(2)).toMap
     assert(scored.contains(70L), scored.toString)
@@ -1203,26 +1215,67 @@ class PqSpec extends SparkSpec {
 
   test("a stored vector with a null coordinate fails the exact re-rank " +
     "by vec_id") {
-    // vec 33 is neither a coarse centroid nor a codebook row; with every
-    // list probed and rerankR = corpus it is every query's candidate,
-    // and its null used to be read as 0.0 in the exact cosine
+    import org.apache.spark.sql.functions._
+    // the writers reject such a vector, so the persisted case plants one
+    // out of band: a vecs tail row for vec 33 (neither a coarse centroid
+    // nor a codebook row) with a null coordinate. With every list probed
+    // and rerankR = corpus, vec 33 is every query's candidate, and the
+    // null used to be read as 0.0 in the exact cosine
     val dir = java.nio.file.Files.createTempDirectory("ivfpqnullv").toString
-    Similarity.ivfPqWriteIndex(withNullCoord(33L), s"$dir/index",
+    Similarity.ivfPqWriteIndex(bigWithDup, s"$dir/index",
       numFiles = 2, m = 2, dims = 4, centroidMod = 7, coarseMod = 20,
       storeVecs = true)
-    val queries = bigWithDup.where(org.apache.spark.sql.functions.col("vec_id") < 2)
+    withNullCoord(33L).where(col("vec_id") === 33L)
+      .select(col("vec_id"), Similarity.quantize(col("embedding")).as("v"))
+      .write.mode("append").parquet(s"$dir/index/vecs/tail")
+    val queries = bigWithDup.where(col("vec_id") < 2)
       .withColumnRenamed("vec_id", "query_id")
+    val e = intercept[IllegalArgumentException](
+      Similarity.ivfPqRerankPersistedQ(spark, s"$dir/index", queries, k = 3,
+        rerankR = 62, m = 2, dims = 4, centroidMod = 7, nprobe = 4).collect())
+    assert(e.getMessage.contains("vec_id 33 has a null coordinate"),
+      e.getMessage)
+    // in-plan, the index build itself fails by vec_id
+    val inPlan = intercept[Exception](Similarity.ivfPqRerank(
+      withNullCoord(33L), nQueries = 2, k = 3, rerankR = 62, m = 2, dims = 4,
+      centroidMod = 7, coarseMod = 20, nprobe = 4).collect())
+    assert(messages(inPlan).contains("vec_id 33 has a null coordinate"),
+      messages(inPlan))
+  }
+
+  /** Every message of `e`'s cause chain. */
+  private def messages(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString(" | ")
+
+  test("every IVF+PQ build rejects a vector with a null coordinate by " +
+    "vec_id: both writers, the append and the in-plan searches") {
+    import org.apache.spark.sql.functions._
+    // vec 33's null used to be encoded and assigned as 0.0
+    val bad = withNullCoord(33L)
+    val dir = java.nio.file.Files.createTempDirectory("ivfpqnullb").toString
+    Similarity.ivfPqWriteIndex(bad.where(col("vec_id") =!= 33L),
+      s"$dir/append", numFiles = 2, m = 2, dims = 4, centroidMod = 7,
+      coarseMod = 20, storeVecs = true)
     val all = Seq(
-      "ivfPqRerankPersistedQ" -> (() => Similarity.ivfPqRerankPersistedQ(
-        spark, s"$dir/index", queries, k = 3, rerankR = 62, m = 2, dims = 4,
-        centroidMod = 7, nprobe = 4).collect()),
-      "ivfPqRerank" -> (() => Similarity.ivfPqRerank(withNullCoord(33L),
-        nQueries = 2, k = 3, rerankR = 62, m = 2, dims = 4, centroidMod = 7,
-        coarseMod = 20, nprobe = 4).collect()))
-    all.foreach { case (name, search) =>
-      val e = intercept[IllegalArgumentException](search())
-      assert(e.getMessage.contains("vec_id 33 has a null coordinate"),
-        s"$name: ${e.getMessage}")
+      "ivfPqWriteIndex" -> (() => Similarity.ivfPqWriteIndex(bad,
+        s"$dir/subset", numFiles = 2, m = 2, dims = 4, centroidMod = 7,
+        coarseMod = 20)),
+      "ivfPqWriteIndexTrained" -> (() => Similarity.ivfPqWriteIndexTrained(
+        bad, s"$dir/trained", numFiles = 2, m = 2, dims = 4, ksub = 4,
+        nlists = 3, iters = 1, trainMod = 3)),
+      "ivfPqAppendIndex" -> (() => Similarity.ivfPqAppendIndex(spark,
+        s"$dir/append", bad.where(col("vec_id") === 33L), m = 2, dims = 4)),
+      "ivfPqSearch" -> (() => Similarity.ivfPqSearch(bad, nQueries = 5,
+        k = 3, m = 2, dims = 4, centroidMod = 7, coarseMod = 20,
+        nprobe = 2).collect()),
+      "ivfPqResidualSearch" -> (() => Similarity.ivfPqResidualSearch(bad,
+        nQueries = 5, k = 3, m = 2, dims = 4, centroidMod = 7,
+        coarseMod = 20, nprobe = 2).collect()))
+    all.foreach { case (name, call) =>
+      val e = intercept[Exception](call())
+      assert(messages(e).contains("vec_id 33 has a null coordinate"),
+        s"$name: ${messages(e)}")
     }
   }
 }

@@ -189,4 +189,25 @@ class RankFusionSpec extends SparkSpec {
         e.getMessage)
     }
   }
+
+  test("hybrid legs are BUILT concurrently: each leg thunk runs on its own " +
+    "fusion thread, so a leg's call-time work overlaps the other legs") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    // each leg waits for the other to START building: built one after
+    // the other, the first leg's bounded wait expires and fails the call
+    val started = new CountDownLatch(2)
+    def leg(rows: Seq[(Long, Long, Int)]): () => org.apache.spark.sql.DataFrame =
+      () => {
+        started.countDown()
+        assert(started.await(60, TimeUnit.SECONDS),
+          "the other leg was not being built concurrently")
+        rows.toDF("query_id", "doc_id", "rank")
+      }
+    val a = Seq((0L, 10L, 1), (0L, 11L, 2))
+    val b = Seq((0L, 11L, 1), (0L, 12L, 2))
+    def rowsOf(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+    assert(rowsOf(RankFusion.fuseLegs(Seq(leg(a), leg(b)), k = 3, rrfK = 60)) ==
+      rowsOf(RankFusion.rrfFuse(Seq(a.toDF("query_id", "doc_id", "rank"),
+        b.toDF("query_id", "doc_id", "rank")), k = 3)))
+  }
 }
