@@ -61,7 +61,7 @@ object Bench {
     // scans the parquet inputs): the standing per-round artifact
     // BENCH_NOHOT_rN.json uses it so there is a suite-level number that
     // includes scan+pushdown cost alongside the hot-cache series
-    // (r21 verdict ask #2). Same harness condition RunOne/ProfOne and
+    // (r21 verdict ask #2). Same harness condition RunOne and
     // the A/B canary already honor.
     val noHot = sys.env.get("SPARK_GRAFT_NO_HOT").contains("1")
     val hotTables = if (noHot) Seq.empty else Tables.loadHot(spark, sfDir)

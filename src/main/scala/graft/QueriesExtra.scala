@@ -593,9 +593,10 @@ object QueriesExtra {
         |LEFT JOIN prof ON prof.category = tot.category
         |               AND prof.level = hts.level""".stripMargin)),
 
-    // K2 distributed per-hour fan-out: hourlyExportNcDistributed writes
-    // every hour file from executor tasks (byte-identical to the driver
-    // writer — NetcdfWriterSpec pins that); the gate reads each file
+    // K2 distributed per-hour fan-out: hourlyExportNcDistributed (the
+    // hourlyExportNc writer) writes every hour file from executor tasks
+    // (byte-identical to a test-side assembly of temporalExplode —
+    // NetcdfWriterSpec pins that); the gate reads each file
     // back and checks per-variable plane totals against the closed-form
     // explode semantics (integer cell values × a dyadic 1 + h/64 hourly
     // factor → FP-exact on both engines).

@@ -372,8 +372,9 @@ object ScaleBench {
     deleteRecursive(b13dir)
 
     // B13b: EDGAR-grid hourly export — 6.48M cells × 24 h through the
-    // per-HOUR collect path (one 6.48M-row plane per file; the pre-fix
-    // code collected the whole 168-h chunk — 1.1B rows at this grid).
+    // hour-keyed task writer: one exchange keyed by hour, each task
+    // streams its hours' files holding one 6.48M-cell plane at a time
+    // (coordinates generated in segments); the driver gathers no plane.
     val hourFact = spark.range(src.ncells).select(
       col("id").as("cell_id"), lit("c0").as("category"),
       lit("s0").as("substance"),
@@ -1426,12 +1427,10 @@ object ScaleBench {
     deleteRecursive(b39dir); Caching.release()
 
     // B13c: the YEAR-LONG small-grid hourly export — 1000 cells × 1 var
-    // × 8760 hours. The driver-side writer pays one Spark job per hour
-    // (8,760 sequential job latencies ≈ tens of minutes of pure
-    // scheduling on this box); hourlyExportNc now routes hour counts
-    // past its threshold to the distributed writer, which runs ONE job
-    // and streams each task's hour files from its sorted partition.
-    // REQUIREs all 8760 files written.
+    // × 8760 hours. A driver-side hour loop would pay one Spark job per
+    // hour (8,760 sequential job latencies); hourlyExportNc runs ONE
+    // write job for any hour count and streams each task's hour files
+    // from its sorted partition. REQUIREs all 8760 files written.
     val b13cGrid = RegularGrid(100, 10, 0.0, 0.0, 0.01, 0.01)
     val b13cFact = spark.range(1000L).select(
       col("id").as("cell_id"), lit("c0").as("category"),

@@ -30,7 +30,7 @@ object Tables {
   /** HARNESS-ONLY overlay for the bench mains' spread hot tables —
     * separate from [[tableMemo]] so the shared plan memo never carries
     * a bench-condition plan: only [[spreadForSession]] (called by
-    * Bench/RunOne/ProfOne) populates it, and [[graft.Bench]] clears it
+    * Bench/RunOne) populates it, and [[graft.Bench]] clears it
     * (`clearSpreadOverlay`) before anything non-harness could run in
     * the same session. Disk-path readers and every other JVM (Verify,
     * specs, ScaleBench) see raw parquet scans only. */
@@ -109,10 +109,9 @@ object Tables {
   val HotTables: Seq[String] = Seq("lineitem", "events", "documents", "embeddings")
 
   /** Spread, persist and materialize every [[HotTables]] entry — the
-    * hot-table methodology of [[graft.Bench]], [[graft.RunOne]] and
-    * [[graft.ProfOne]]. A table that does not load fails the run with
-    * its name: a silently missing table would change what a bench
-    * measures. */
+    * hot-table methodology of [[graft.Bench]] and [[graft.RunOne]]. A
+    * table that does not load fails the run with its name: a silently
+    * missing table would change what a bench measures. */
   def loadHot(spark: SparkSession, dir: String): Seq[(String, DataFrame)] =
     HotTables.map { t =>
       val df =

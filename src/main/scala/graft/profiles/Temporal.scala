@@ -211,15 +211,20 @@ object Temporal {
         tsStr(col("ts")).as("ts_str"),
         (col("value") * coalesce(col("sf"), lit(1.0))).as("value"))
 
-  /** The time spine of [[temporalExplode]], a generator of `hours` hourly
-    * instants `ts` from `startTs`, which is read in the session time zone.
-    * Shared with callers that must reproduce the explode's hours exactly. */
+  /** The time spine of [[temporalExplode]], a generator of the
+    * [[hourSeq]] instants `ts`. */
   private[graft] def hourSpine(startTs: String, hours: Int): Column =
-    explode(
-      sequence(
-        to_timestamp(lit(startTs)),
-        to_timestamp(lit(startTs)) + expr(s"INTERVAL ${hours - 1} HOURS"),
-        expr("INTERVAL 1 HOUR"))).as("ts")
+    explode(hourSeq(startTs, hours)).as("ts")
+
+  /** The hourly instants of [[temporalExplode]] as one array: from
+    * `startTs`, read in the session time zone, to `startTs + INTERVAL
+    * (hours − 1) HOURS`. Shared with callers that must reproduce the
+    * explode's hours exactly. */
+  private[graft] def hourSeq(startTs: String, hours: Int): Column =
+    sequence(
+      to_timestamp(lit(startTs)),
+      to_timestamp(lit(startTs)) + expr(s"INTERVAL ${hours - 1} HOURS"),
+      expr("INTERVAL 1 HOUR"))
 
   /** `ts_str` of [[temporalExplode]]: the session-zone wall-clock hour. */
   private[graft] def tsStr(ts: Column): Column = date_format(ts, "yyyy-MM-dd HH:mm:ss")

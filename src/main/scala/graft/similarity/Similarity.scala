@@ -1596,7 +1596,8 @@ object Similarity {
   }
 
   /** Lloyd's loop, shared by both trainers: init = the `n` smallest
-    * training vec_ids (vec_id ≡ 0 mod trainMod, quantized; centroid
+    * training vec_ids (vec_id ≡ 0 mod trainMod, quantized through
+    * [[storedVec]], so a null coordinate fails by vec_id; centroid
     * index = rank), then `iters` rounds of ONE collected mean-update
     * aggregate — `update(train, centroids)` yields (centroid index,
     * coordinate, new value) cells, and a centroid no cell names (an
@@ -1610,7 +1611,7 @@ object Similarity {
       s"bad $what=$n / iters=$iters / trainMod=$trainMod")
     val train = embeddings
       .where(col("vec_id") % trainMod === 0)
-      .select(col("vec_id"), quantize(col("embedding")).as("v"))
+      .select(col("vec_id"), storedVec.as("v"))
     val initRows = train.orderBy("vec_id").limit(n).collect()
     require(initRows.length == n,
       s"training subset ${initRows.length} rows < $what=$n; lower trainMod")

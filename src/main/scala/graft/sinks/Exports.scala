@@ -187,6 +187,28 @@ object Exports {
       Array.tabulate(math.min(segSize, n - base))(i => f(base + i))
     }
 
+  /** The (lat, lon) plane of `plane` — `(idx, v)` rows over flat cell
+    * indexes `0 until n`, summed per index — as writer chunks: planes up
+    * to [[PlaneCollectMax]] cells are collected in one job
+    * ([[collectPlane]]), larger ones stream through [[streamPlane]] with
+    * O(segment) driver memory. The one place a driver-written file
+    * gathers a grid plane. */
+  private[graft] def planeChunks(plane: DataFrame, n: Int): Iterator[Array[Double]] =
+    if (n > PlaneCollectMax) streamPlane(plane, n) else Iterator(collectPlane(plane, n))
+
+  /** The dense plane of `(idx, v)` rows in one collect. */
+  private[graft] def collectPlane(plane: DataFrame, n: Int): Array[Double] = {
+    val arr = new Array[Double](n)
+    plane.toDF("idx", "v").select(col("idx").cast("long"), col("v").cast("double"))
+      .collect().foreach(r => arr(r.getLong(0).toInt) += r.getDouble(1))
+    arr
+  }
+
+  /** Flat (lat, lon) index `iy · nx + ix` of a column-major `cell_id`
+    * (`ix = cell_id div ny`, `iy = cell_id mod ny`). */
+  private def flatIdx(nx: Int, ny: Int): org.apache.spark.sql.Column =
+    expr(s"cell_id % $ny * $nx + cell_id div $ny").as("idx")
+
   /** K1 as a REAL NetCDF file — the reference's `export_raster_netcdf`
     * layout (emiproc/exports/rasters.py:109-246): one NC_DOUBLE variable
     * per substance over dims (lat, lon) with CF var attributes, center
@@ -196,8 +218,8 @@ object Exports {
     * `perArea` exactly as rasters.py:95-108.
     *
     * The raster is grid-sized (the small analytic side at any SF), so the
-    * encode is a bounded driver-side collect by design — identical to the
-    * reference materializing the full `np` array before `to_netcdf`. */
+    * encode gathers one plane at a time on the driver ([[planeChunks]]) —
+    * the reference materializes the full `np` array before `to_netcdf`. */
   def rasterExportNc(
       emissions: DataFrame,
       grid: RegularGrid,
@@ -206,11 +228,10 @@ object Exports {
       atts: Seq[NcAtt] = Nil,
       groupCategories: Boolean = false,
       addTotals: Boolean = false,
-      varPerCatSub: Boolean = false,
-      planeCollectMax: Long = PlaneCollectMax): Unit = {
+      varPerCatSub: Boolean = false): Unit = {
     val conv = if (perArea) 1.0 / (grid.cellArea * SecPerYear) else 1.0
     // ONE distributed aggregate to (cell, substance, category), persisted;
-    // planes are then collected ONE AT A TIME as grid-bounded filtered
+    // planes are then gathered ONE AT A TIME as grid-bounded filtered
     // aggregates (≤ ncell rows each) — never the full fact aggregate.
     // At EDGAR scale (6.48M cells × 8 cat × 4 sub) the full aggregate is
     // >200M driver-side Rows; a single plane is ~52 MB of doubles, the
@@ -224,29 +245,10 @@ object Exports {
     val cats = agg.select("category").distinct()
       .collect().map(_.getString(0)).sorted
     val ncell = grid.ny * grid.nx
-    def flat(cid: Long): Int = {
-      val ix = (cid / grid.ny).toInt; val iy = (cid % grid.ny).toInt
-      iy * grid.nx + ix
-    }
-    def planeOf(rows: Array[org.apache.spark.sql.Row]): Array[Double] = {
-      val arr = new Array[Double](ncell)
-      rows.foreach(r => arr(flat(r.getLong(0))) += r.getDouble(1))
-      arr
-    }
-    // flat (lat, lon) index computed distributed for the streaming path
-    val flatIdx = expr(
-      s"cell_id % ${grid.ny} * ${grid.nx} + cell_id div ${grid.ny}")
-    val segStream = ncell > planeCollectMax
-    def catPlane(s: String, c: String): Array[Double] = planeOf(
+    val idx = flatIdx(grid.nx, grid.ny)
+    def catChunks(s: String, c: String): Iterator[Array[Double]] = planeChunks(
       agg.where(col("substance") === s && col("category") === c)
-        .select(col("cell_id"), col("v")).collect())
-    // Chunk providers: Row-collect planes below PlaneCollectMax (one job,
-    // minimal latency), segment-streamed above it (driver holds ~4 MB).
-    def catChunks(s: String, c: String): Iterator[Array[Double]] =
-      if (!segStream) Iterator(catPlane(s, c))
-      else streamPlane(
-        agg.where(col("substance") === s && col("category") === c)
-          .select(flatIdx.as("idx"), col("v")), ncell)
+        .select(idx, col("v")), ncell)
     // per-substance summed plane (the default layout + the all-sectors
     // totals); per-(substance, category) planes for the group mode.
     // Planes are NOT materialized up front: each WriteVar carries a
@@ -263,14 +265,8 @@ object Exports {
       sa.count()
       Some(sa)
     } else None
-    def subPlane(s: String): Array[Double] = planeOf(
-      subAgg.get.where(col("substance") === s)
-        .select(col("cell_id"), col("pv")).collect())
-    def subChunks(s: String): Iterator[Array[Double]] =
-      if (!segStream) Iterator(subPlane(s))
-      else streamPlane(
-        subAgg.get.where(col("substance") === s)
-          .select(flatIdx.as("idx"), col("pv")), ncell)
+    def subChunks(s: String): Iterator[Array[Double]] = planeChunks(
+      subAgg.get.where(col("substance") === s).select(idx, col("pv")), ncell)
     // which (substance, category) planes are non-empty — decided from a
     // DISTRIBUTED scan (agg has one row per (cell, sub, cat), so a plane
     // has a nonzero cell iff some row's v != 0), not from materialized
@@ -383,162 +379,30 @@ object Exports {
 
   /** K2 with real per-hour `.nc` files — the reference's
     * `export_hourly_emissions` (emiproc/exports/hourly.py:20-224): one
-    * file per hour named `yyyyMMdd'T'HHmmss'Z'.nc`, computed in
-    * `chunkSize`-hour chunks (default 168 = one week, hourly.py:33 +
-    * 167-169: `time_range[i : i + chunk_size]`). Each file uses the
+    * file per hour named `yyyyMMdd'T'HHmmss'Z'.nc`. Each file uses the
     * unstructured-grid layout (dim `cell`, coord vars `lon`/`lat` over
     * cells, hourly.py:181-199) with one NC_DOUBLE variable per
-    * `substance_category` in kg/h.
+    * `substance_category` in kg/h. The hours are those of
+    * [[Temporal.temporalExplode]] in the session time zone; hours whose
+    * local `ts_str` coincide (a DST fall-back) fold into one file.
     *
-    * The explode + (var, cell) fold run distributed per chunk (the
-    * reference's 168-hour chunking, hourly.py:167-169, is a single-node
-    * numpy memory idiom — here the chunk stays a persisted DataFrame);
-    * only the ONE hour being written is ever collected, ≤ nvars × ncells
-    * rows. At a 6.48M-cell grid that bounds driver memory to one hour's
-    * planes instead of a whole week's. Returns the written file names.
-    *
-    * @note hour counts above `distributedHoursThreshold` route to
-    *       [[hourlyExportNcDistributed]]: it caches only the input rows,
-    *       lists the variables from them, and runs the explode and the
-    *       fold over one exchange keyed by hour, whose TASKS write the
-    *       .nc files — on a multi-node cluster `outDir` must therefore be
-    *       a shared filesystem (on a driver-local path the files land
-    *       on executor disks). `chunkSize` applies only to the
-    *       driver-side route. Pass `distributedHoursThreshold =
-    *       Int.MaxValue` to force the driver-side writer. */
-  def hourlyExportNc(
-      emissions: DataFrame,
-      scalingFactors: DataFrame,
-      startTs: String,
-      hours: Int,
-      grid: RegularGrid,
-      outDir: String,
-      chunkSize: Int = 168,
-      atts: Seq[NcAtt] = Nil,
-      distributedHoursThreshold: Int = 720): Seq[String] = {
-    // Long exports route to the distributed writer BY DEFAULT: the
-    // driver-side loop below runs at least one Spark job per hour, so a
-    // year-long export pays 8,760 sequential job latencies even on a
-    // tiny grid — per-hour plane SIZE was the original hybrid's only
-    // trigger, which a small grid never trips. The distributed writer
-    // is byte-identical (NetcdfWriterSpec pins it), so routing on hour
-    // COUNT is pure win; ScaleBench B13c times the year-long case.
-    if (hours > distributedHoursThreshold) {
-      // the route switch is invisible at the call site — leave a
-      // breadcrumb, and warn about the distributed writer's one
-      // deployment requirement (task-side writes land on executor-local
-      // disks unless outDir is a shared filesystem)
-      val log = org.slf4j.LoggerFactory.getLogger(getClass)
-      log.info(s"hourlyExportNc: $hours hours > threshold " +
-        s"$distributedHoursThreshold - routing to the DISTRIBUTED writer " +
-        s"(chunkSize=$chunkSize ignored on this route)")
-      log.warn(s"hourlyExportNc distributed route: tasks write directly " +
-        s"to '$outDir' - on a multi-node cluster this must be a SHARED " +
-        "filesystem, or the per-hour files land on executor-local disks")
-      return hourlyExportNcDistributed(
-        emissions, scalingFactors, startTs, hours, grid, outDir, atts)
-    }
-    val t0 = java.time.LocalDateTime.parse(startTs.replace(' ', 'T'))
-    val names = scala.collection.mutable.ArrayBuffer.empty[String]
-    // hour-independent file furniture, built once (6.48M-element coord
-    // arrays per hour would be pure GC churn at EDGAR grids)
-    val ncells = grid.ncells.toInt
-    val dims = Seq(NcDim("cell", ncells))
-    val coords = Seq(
-      WriteVar("lon", Seq("cell"), NetcdfClassicDouble,
-        atts = Seq(textAtt("standard_name", "longitude"),
-          textAtt("units", "degrees_east")),
-        chunks = tabulateChunks(ncells, c =>
-          grid.xmin + (c / grid.ny + 0.5) * grid.dx)),
-      WriteVar("lat", Seq("cell"), NetcdfClassicDouble,
-        atts = Seq(textAtt("standard_name", "latitude"),
-          textAtt("units", "degrees_north")),
-        chunks = tabulateChunks(ncells, c =>
-          grid.ymin + (c % grid.ny + 0.5) * grid.dy)))
-    (0 until hours).grouped(chunkSize).foreach { chunk =>
-      val chunkStart = t0.plusHours(chunk.head)
-      val exploded = Temporal.temporalExplode(
-        emissions, scalingFactors,
-        chunkStart.format(java.time.format.DateTimeFormatter
-          .ofPattern("yyyy-MM-dd HH:mm:ss")), chunk.size)
-        .withColumn("var", concat_ws("_", col("substance"), col("category")))
-        .groupBy(col("ts_str"), col("var"), col("cell_id").cast("long").as("cell_id"))
-        .agg(sum(col("value").cast("double")).as("value"))
-        .persist()
-      val tss = exploded.select("ts_str").distinct()
-        .collect().map(_.getString(0)).sorted
-      // variables present per hour — metadata-scale (ts × var)
-      val varsByTs = exploded.select("ts_str", "var").distinct()
-        .collect().map(r => r.getString(0) -> r.getString(1))
-        .groupBy(_._1).view.mapValues(_.map(_._2).distinct.sorted).toMap
-      tss.foreach { ts =>
-          val vars = varsByTs(ts)
-          // Hybrid collect granularity: one job per hour when the hour's
-          // (var × cell) rows are modest (a year-long export on a small
-          // grid is THOUSANDS of hours — per-var jobs would multiply the
-          // fixed job latency); one job per (hour, var) at big grids,
-          // where driver memory for the hour's nvars planes of Rows is
-          // the binding constraint, not job count.
-          val dataVars: Seq[WriteVar] =
-            if (vars.length.toLong * ncells <= 8000000L) {
-              val rows = exploded.where(col("ts_str") === ts).collect()
-              val data = vars.map(v => v -> new Array[Double](ncells)).toMap
-              rows.foreach { r =>
-                data(r.getAs[String]("var"))(r.getAs[Long]("cell_id").toInt) +=
-                  r.getAs[Double]("value")
-              }
-              vars.toSeq.map { v =>
-                WriteVar(v, Seq("cell"), NetcdfClassicDouble,
-                  atts = Seq(textAtt("units", "kg h-1"),
-                    textAtt("long_name", v)),
-                  doubles = data(v))
-              }
-            } else {
-              // big-grid path: per-(hour, var) planes stream in dense
-              // segments (hourly dim `cell` IS cell_id order — no remap)
-              vars.toSeq.map { v =>
-                WriteVar(v, Seq("cell"), NetcdfClassicDouble,
-                  atts = Seq(textAtt("units", "kg h-1"),
-                    textAtt("long_name", v)),
-                  chunks = () => streamPlane(
-                    exploded.where(col("ts_str") === ts && col("var") === v)
-                      .select(col("cell_id").as("idx"), col("value").as("v")),
-                    ncells))
-              }
-            }
-          val gatts = (if (atts.nonEmpty) atts
-            else ncCfAttrs("graft hourly export")) :+ textAtt("valid_hour", ts)
-          val fname = hourFileName(ts)
-          writeNcStreamed(s"$outDir/$fname", dims, gatts,
-            coords ++ dataVars.toSeq)
-          names += fname
-        }
-      exploded.unpersist()
-    }
-    names.toSeq
-  }
-
-  /** K2 at CLUSTER scale: distributed per-hour file fan-out. Each TASK
-    * streams its hours' `.nc` files from its own sorted partition — the
-    * one-task-per-file `foreachPartition` shape a 1000-executor cluster
-    * needs (8760 hour files encode concurrently instead of sequentially
-    * on the driver). `outDir` must be writable from every executor (a
-    * shared filesystem on a real cluster; any local dir under local[*]).
-    *
-    * Plan: the un-exploded input `(cell_id, category, substance, var,
+    * The reference works through 168-hour chunks (hourly.py:167-169), a
+    * single-node numpy memory idiom. Here every hour count runs as one
+    * job: the un-exploded input `(cell_id, category, substance, var,
     * value)` is the only cache, and one small `distinct` over it lists
     * the variables — every input row reaches every hour, so every hour
-    * holds the same variables. The hour spine comes from
-    * [[hourKeys]]; the hour explode, the broadcast scaling-factor join,
+    * holds the same variables. The hour spine comes from [[hourKeys]]
+    * without a job; the hour explode, the broadcast scaling-factor join,
     * the (hour, var, cell) sum and the per-partition sort then run over
-    * ONE exchange keyed by the int hour ([[hourlyKeyed]]). The driver
-    * touches only metadata. Task memory is ONE plane: rows arrive sorted
-    * (hour, var, cell) and each variable's chunk consumes exactly its
-    * contiguous run off the shared cursor while the file streams. The
-    * cache is released even when a task write fails.
-    * Output is byte-identical to [[hourlyExportNc]] (spec-pinned).
-    * Returns the file names (sorted). */
-  def hourlyExportNcDistributed(
+    * ONE exchange keyed by the int hour ([[hourlyKeyed]]), and each TASK
+    * streams its hours' files from its sorted partition, so 8,760 hour
+    * files of a year encode concurrently. The driver touches only
+    * metadata, and task memory is ONE variable plane. `outDir` must be
+    * writable from every executor: a shared filesystem on a multi-node
+    * cluster (on a driver-local path the files land on executor disks),
+    * any local directory under local[n]. The cache is released even when
+    * a task write fails. Returns the file names (sorted). */
+  def hourlyExportNc(
       emissions: DataFrame,
       scalingFactors: DataFrame,
       startTs: String,
@@ -560,6 +424,17 @@ object Exports {
     } finally input.unpersist()
   }
 
+  /** [[hourlyExportNc]] under its former cluster-scale name. */
+  def hourlyExportNcDistributed(
+      emissions: DataFrame,
+      scalingFactors: DataFrame,
+      startTs: String,
+      hours: Int,
+      grid: RegularGrid,
+      outDir: String,
+      atts: Seq[NcAtt] = Nil): Seq[String] =
+    hourlyExportNc(emissions, scalingFactors, startTs, hours, grid, outDir, atts)
+
   /** `yyyyMMdd'T'HHmmss'Z'.nc` of a `ts_str` (hourly.py:33). */
   private def hourFileName(ts: String): String =
     java.time.format.DateTimeFormatter
@@ -567,34 +442,37 @@ object Exports {
       .format(java.time.LocalDateTime.parse(ts.replace(' ', 'T'))
         .toInstant(java.time.ZoneOffset.UTC)) + ".nc"
 
-  /** The input rows [[hourlyExportNcDistributed]] caches: `(cell_id,
-    * category, substance, var, value)`, un-exploded. */
+  /** The input rows [[hourlyExportNc]] caches: `(cell_id, category,
+    * substance, var, value)`, un-exploded. */
   private[graft] def hourlyInput(emissions: DataFrame): DataFrame =
     emissions.select(
       col("cell_id").cast("long").as("cell_id"), col("category"), col("substance"),
       concat_ws("_", col("substance"), col("category")).as("var"), col("value"))
 
-  /** The hours of [[Temporal.temporalExplode]], evaluated once with its
-    * own session-zone expressions: the sorted distinct `ts_str`s, and per
+  /** The hours of [[Temporal.temporalExplode]], evaluated with its own
+    * session-zone expressions: the sorted distinct `ts_str`s, and per
     * spine hour `(hour key, hour_of_day)`, where the key is the index of
     * the hour's `ts_str` in that list. Hours whose local `ts_str`
-    * coincide (a DST fall-back) share a key, and so one file. */
+    * coincide (a DST fall-back) share a key, and so one file. The spine
+    * is one array projected over a one-row local relation, which
+    * Catalyst folds on the driver: no Spark job runs. */
   private[graft] def hourKeys(
       spark: SparkSession,
       startTs: String,
       hours: Int): (IndexedSeq[String], Seq[(Int, Int)]) = {
-    val spine = spark.range(1)
-      .select(Temporal.hourSpine(startTs, hours))
-      .select(Temporal.tsStr(col("ts")), Temporal.hourOfDay(col("ts")))
-      .collect().map(r => r.getString(0) -> r.getInt(1))
+    val spine = spark.createDataFrame(Seq(Tuple1(0)))
+      .select(transform(Temporal.hourSeq(startTs, hours),
+        ts => struct(Temporal.tsStr(ts), Temporal.hourOfDay(ts))))
+      .collect()(0).getSeq[org.apache.spark.sql.Row](0)
+      .map(r => r.getString(0) -> r.getInt(1))
     val tss = spine.map(_._1).distinct.sorted.toIndexedSeq
     val keyOf = tss.zipWithIndex.toMap
-    (tss, spine.map { case (ts, hod) => keyOf(ts) -> hod }.toSeq)
+    (tss, spine.map { case (ts, hod) => keyOf(ts) -> hod })
   }
 
-  /** The pre-writer relation of [[hourlyExportNcDistributed]]: `(hk, var,
-    * cell_id, value)` summed per (hour key, var, cell), clustered by `hk`
-    * and sorted within partitions. `input` is [[hourlyInput]]; `spine` is
+  /** The pre-writer relation of [[hourlyExportNc]]: `(hk, var, cell_id,
+    * value)` summed per (hour key, var, cell), clustered by `hk` and
+    * sorted within partitions. `input` is [[hourlyInput]]; `spine` is
     * [[hourKeys]]. One exchange: `repartition(hk)` already satisfies the
     * aggregate's clustered distribution. Exposed for PlanSpec. */
   private[graft] def hourlyKeyed(
@@ -613,8 +491,10 @@ object Exports {
       .agg(sum(col("value")).as("value"))
       .sortWithinPartitions("hk", "var", "cell_id")
 
-  /** Task-side writer of [[hourlyExportNcDistributed]]: one file per hour
-    * key in `keyed`, holding every variable of `vars` (sorted). */
+  /** Task-side writer of [[hourlyExportNc]]: one file per hour key in
+    * `keyed`, holding every variable of `vars` (sorted). The coordinate
+    * variables are generated in segments, so a task holds one variable
+    * plane at a time. */
   private def writeHourlyFiles(
       keyed: DataFrame,
       tss: IndexedSeq[String],
@@ -629,15 +509,15 @@ object Exports {
       import scala.jdk.CollectionConverters._
       val buf = it.asScala.buffered
       val dims = Seq(NcDim("cell", ncells))
-      lazy val coords = Seq(
+      val coords = Seq(
         WriteVar("lon", Seq("cell"), NetcdfClassicDouble,
           atts = Seq(textAtt("standard_name", "longitude"),
             textAtt("units", "degrees_east")),
-          doubles = Array.tabulate(ncells)(c => gxmin + (c / gny + 0.5) * gdx)),
+          chunks = tabulateChunks(ncells, c => gxmin + (c / gny + 0.5) * gdx)),
         WriteVar("lat", Seq("cell"), NetcdfClassicDouble,
           atts = Seq(textAtt("standard_name", "latitude"),
             textAtt("units", "degrees_north")),
-          doubles = Array.tabulate(ncells)(c => gymin + (c % gny + 0.5) * gdy)))
+          chunks = tabulateChunks(ncells, c => gymin + (c % gny + 0.5) * gdy)))
       while (buf.hasNext) {
         val hk = buf.head.getInt(0)
         def varChunk(v: String): Array[Double] = {
@@ -661,11 +541,6 @@ object Exports {
       }
     }
   }
-
-  /** The totals block of the raster export (reference rasters.py:247-306):
-    * per-substance per-category sums plus grand totals — a rollup. */
-  def rasterTotals(emissions: DataFrame): DataFrame =
-    graft.ops.Grouping.totals(emissions)
 
   /** Hourly export (reference `export_hourly_emissions`,
     * emiproc/exports/hourly.py:22-224): temporal explode then a
@@ -717,9 +592,10 @@ object Exports {
     * `countryFractions` = `(cell_id, country, fraction)`.
     *
     * Scale: the (substance × time × cell) aggregate is PERSISTED and each
-    * (substance, time) plane is collected on its own — ≤ ncell rows per
-    * collect, the K1 `rasterExportNc` pattern — never the full aggregate
-    * (6.48M cells × 12 months × nsub ≈ 300M+ Rows at EDGAR scale).
+    * (substance, time) plane is gathered on its own ([[planeChunks]]) —
+    * ≤ ncell rows per plane, the K1 `rasterExportNc` pattern — never the
+    * full aggregate (6.48M cells × 12 months × nsub ≈ 300M+ Rows at
+    * EDGAR scale).
     * `country_flux_total_prior` = Σ_cells flux × fraction is a DISTRIBUTED
     * join + sum (nsub × nT × ncountry result rows), not a driver loop over
     * the dense cube. Only the sparse fraction rows (≈ ncells × avg
@@ -773,20 +649,13 @@ object Exports {
         doubles = Array.tabulate(n)(i => v0 + (i + 0.5) * dv))
 
     val written = subs.toIndexedSeq.map { sub =>
-      // one grid-bounded plane per (substance, time), COLLECTED LAZILY
+      // one grid-bounded plane per (substance, time), GATHERED LAZILY
       // while the file streams to disk — driver memory is one plane,
       // not the nT × ny × nx flux cube (622 MB/substance at EDGAR-
       // monthly), and not the encoded file either (writeNcStreamed).
-      def fluxPlane(t: Int): Array[Double] = {
-        val arr = new Array[Double](ny * nx)
+      def fluxChunks(t: Int): Iterator[Array[Double]] = planeChunks(
         agg.where(col("substance") === sub && col("time_idx") === t)
-          .select(col("cell_id"), col("v")).collect().foreach { r =>
-            val cid = r.getLong(0)
-            val ix = (cid / ny).toInt; val iy = (cid % ny).toInt
-            arr(iy * nx + ix) += r.getDouble(1) / area
-          }
-        arr
-      }
+          .select(flatIdx(nx, ny), col("v") / area), ny * nx)
       val baseDims = Seq(NcDim("time", nT), NcDim("latitude", ny),
         NcDim("longitude", nx))
       val coordVars = Seq(
@@ -800,7 +669,7 @@ object Exports {
         Seq("time", "latitude", "longitude"),
         graft.sources.NetcdfClassic.NcDouble,
         atts = Seq(textAtt("units", "kg m-2 yr-1")),
-        chunks = () => (0 until nT).iterator.map(fluxPlane))
+        chunks = () => (0 until nT).iterator.flatMap(fluxChunks))
       val countryBlock = countries.toSeq.flatMap { cf =>
         val nC = countryNames.length
         val cIdx = countryNames.zipWithIndex.toMap
@@ -901,7 +770,8 @@ object Exports {
     *
     * The hourly series is base-plane × hour factor (the same
     * `get_temporally_scaled_array` product the reference applies): each
-    * (substance, category) MOLE plane is collected ONCE, grid-bounded,
+    * (substance, category) MOLE plane is gathered ONCE, grid-bounded
+    * ([[planeChunks]]),
     * through [[wrfMoleFlux]]'s distributed unit math; per-hour files then
     * scale the in-memory plane by the (substance, category, hour) factor
     * (missing profile → 1.0) — no per-hour Spark jobs, `hours` × vars
@@ -960,17 +830,10 @@ object Exports {
       .persist()
     val pairs = agg.select("category", "substance").distinct().collect()
       .map(r => (r.getString(0), r.getString(1))).sortBy(p => (p._2, p._1))
-    val ncell = ny * nx
-    def flat(cid: Long): Int = {
-      val ix = (cid / ny).toInt; val iy = (cid % ny).toInt
-      iy * nx + ix
-    }
     val planes = pairs.map { case (c, s) =>
-      val arr = new Array[Double](ncell)
-      agg.where(col("category") === c && col("substance") === s)
-        .select(col("cell_id"), col("v")).collect()
-        .foreach(r => arr(flat(r.getLong(0))) += r.getDouble(1))
-      (c, s) -> arr
+      (c, s) -> Array.concat(planeChunks(
+        agg.where(col("category") === c && col("substance") === s)
+          .select(flatIdx(nx, ny), col("v")), ny * nx).toSeq: _*)
     }.toMap
     agg.unpersist()
     // Two accepted scaling-factor schemas (reference

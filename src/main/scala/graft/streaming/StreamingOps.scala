@@ -180,21 +180,27 @@ object StreamingOps {
     *
     * Input: the output of [[hourlyCellWindows]]. Each batch shuffles
     * ONCE keyed by hour, then every closed hour is assembled and
-    * written INSIDE its task — the pattern of
-    * `Exports.hourlyExportNcDistributed`, which runs its explode and
-    * fold over one exchange keyed by an int hour, caches only the
-    * un-exploded input rows and lists the variables from them. A stalled
-    * stream that closes many hours in one
-    * catch-up batch writes them in parallel across executor threads,
-    * and the driver never materializes a single plane. Task memory is
-    * bounded by variables × cells for one hour.
+    * written INSIDE its task — the pattern of the batch writer
+    * [[graft.sinks.Exports.hourlyExportNc]], which runs its explode and
+    * fold over one exchange keyed by an int hour. A stalled stream that
+    * closes many hours in one catch-up batch writes them in parallel
+    * across executor threads, and the driver never materializes a
+    * single plane. Task memory is bounded by variables × cells for one
+    * hour.
+    *
+    * The sink stays separate from the batch writer: it learns each
+    * hour's variables from that hour's rows, and a classic NetCDF
+    * header must list every variable before the first plane streams,
+    * so an hour's planes are assembled before its file is written. The
+    * batch writer lists its variables once from the un-exploded input
+    * and streams one plane at a time.
     *
     * NOTE: because files are written from executor TASKS (not the
     * driver), on a multi-node cluster `outDir` must be a shared
     * filesystem visible to every executor (NFS/Lustre/fuse-mounted
     * object store) — the same constraint as
-    * [[graft.sinks.Exports.hourlyExportNcDistributed]]. On local[n]
-    * any local path works. */
+    * [[graft.sinks.Exports.hourlyExportNc]]. On local[n] any local path
+    * works. */
   def hourlyNcSink(
       windowed: DataFrame,
       grid: graft.model.RegularGrid,

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.model.RegularGrid
 import graft.sources.NetcdfClassic
@@ -250,18 +251,20 @@ class NetcdfWriterSpec extends SparkSpec {
     }
   }
 
-  test("segment-streamed raster export is byte-identical to the collect path") {
-    val grid = RegularGrid(20, 10, 0.0, 0.0, 1.0, 1.0) // 200 cells
-    val emi = basicInv
-    val p1 = s"${tmpDir()}/collect.nc"
-    val p2 = s"${tmpDir()}/streamed.nc"
-    val atts = Exports.ncCfAttrs("ab", creationTime = "t0")
-    Exports.rasterExportNc(emi, grid, p1, addTotals = true, atts = atts)
-    Exports.rasterExportNc(emi, grid, p2, addTotals = true, atts = atts,
-      planeCollectMax = 0L) // force streamPlane on every plane
-    val b1 = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p1))
-    val b2 = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p2))
-    assert(java.util.Arrays.equals(b1, b2))
+  test("planeChunks: the collect and the stream route gather the same plane") {
+    import spark.implicits._
+    // a 200-cell plane with empty cells and two rows on one index
+    val rows = (0 until 200 by 3).map(i => (i.toLong, i * 0.5)) :+ ((3L, 1.0))
+    val plane = rows.toDF("idx", "v")
+    val chunks = Exports.planeChunks(plane, 200).toSeq
+    val collected = Exports.collectPlane(plane, 200)
+    val streamed = Exports.streamPlane(plane, 200L).toSeq.flatten
+    assert(chunks.size == 1 && chunks.head.sameElements(collected))
+    assert(collected.toSeq == streamed)
+    (0 until 200).foreach { i =>
+      val expect = if (i == 3) 2.5 else if (i % 3 == 0) i * 0.5 else 0.0
+      assert(collected(i) == expect, s"idx $i")
+    }
   }
 
   test("exported raster re-ingests through the CF reader (full interop loop)") {
@@ -325,13 +328,13 @@ class NetcdfWriterSpec extends SparkSpec {
     assert(cflux.toSeq == Seq(2.0, 0.0, 2.0, 2.0))
   }
 
-  test("hourlyExportNc writes one file per hour in chunks with hourly.py naming") {
+  test("hourlyExportNc writes one file per hour with hourly.py naming") {
     val grid = RegularGrid(5, 1, 0.0, 0.0, 1.0, 1.0)
     val sfs = spark.createDataFrame(Seq(("adf", "CH4", 0, 2.0)))
       .toDF("category", "substance", "hour_of_day", "sf")
     val dir = tmpDir()
     val files = Exports.hourlyExportNc(
-      basicInv, sfs, "2023-01-01 00:00:00", 48, grid, dir, chunkSize = 7)
+      basicInv, sfs, "2023-01-01 00:00:00", 48, grid, dir)
     assert(files.size == 48)
     assert(files.head == "20230101T000000Z.nc")
     assert(files.last == "20230102T230000Z.nc")
@@ -364,22 +367,55 @@ class NetcdfWriterSpec extends SparkSpec {
     val grid = RegularGrid(5, 1, 0.0, 0.0, 1.0, 1.0)
     val sfs = spark.createDataFrame(Seq(("adf", "CH4", 0, 2.0)))
       .toDF("category", "substance", "hour_of_day", "sf")
-    val (dirA, dirB) = (tmpDir(), tmpDir())
-    val driver = Exports.hourlyExportNc(
-      basicInv, sfs, "2023-01-01 00:00:00", 30, grid, dirA, chunkSize = 7)
-    val dist = Exports.hourlyExportNcDistributed(
-      basicInv, sfs, "2023-01-01 00:00:00", 30, grid, dirB)
-    assertSameHourFiles(driver, dist, dirA, dirB)
+    assertHourFilesMatch(sfs, "2023-01-01 00:00:00", 30, grid)
   }
 
-  private def assertSameHourFiles(driver: Seq[String], dist: Seq[String],
-      dirA: String, dirB: String): Unit = {
-    assert(dist == driver.sorted)
-    driver.foreach { f =>
-      val a = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$dirA/$f"))
-      val b = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$dirB/$f"))
-      assert(java.util.Arrays.equals(a, b), s"$f differs")
+  /** The hour files of `temporalExplode` assembled on the driver: each
+    * `ts_str`'s rows folded into one dense plane per `substance_category`
+    * and written with `NetcdfWriter.write`. File name → bytes. */
+  private def hourlyReference(sfs: DataFrame, start: String, hours: Int,
+      grid: RegularGrid): Map[String, Array[Byte]] = {
+    val ncells = grid.ncells.toInt
+    val rows = graft.profiles.Temporal.temporalExplode(basicInv, sfs, start, hours)
+      .select(col("ts_str"), concat_ws("_", col("substance"), col("category")),
+        col("cell_id").cast("int"), col("value")).collect()
+    val vars = rows.map(_.getString(1)).distinct.sorted.toSeq
+    val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyyMMdd'T'HHmmss'Z'")
+    def axis(name: String, std: String, units: String, f: Int => Double) =
+      WriteVar(name, Seq("cell"), NcDouble, doubles = Array.tabulate(ncells)(f),
+        atts = Seq(textAtt("standard_name", std), textAtt("units", units)))
+    val coords = Seq(
+      axis("lon", "longitude", "degrees_east", c => grid.xmin + (c / grid.ny + 0.5) * grid.dx),
+      axis("lat", "latitude", "degrees_north", c => grid.ymin + (c % grid.ny + 0.5) * grid.dy))
+    rows.groupBy(_.getString(0)).map { case (ts, hour) =>
+      val planes = vars.map(_ -> new Array[Double](ncells)).toMap
+      hour.foreach(r => planes(r.getString(1))(r.getInt(2)) += r.getDouble(3))
+      val data = vars.map(v => WriteVar(v, Seq("cell"), NcDouble, doubles = planes(v),
+        atts = Seq(textAtt("units", "kg h-1"), textAtt("long_name", v))))
+      val gatts = Exports.ncCfAttrs("graft hourly export") :+ textAtt("valid_hour", ts)
+      (java.time.LocalDateTime.parse(ts.replace(' ', 'T')).format(fmt) + ".nc") ->
+        NetcdfWriter.write(Seq(NcDim("cell", ncells)), gatts, coords ++ data)
     }
+  }
+
+  /** Both hourly entry points write exactly the [[hourlyReference]]
+    * files, byte for byte; returns the file count. */
+  private def assertHourFilesMatch(sfs: DataFrame, start: String, hours: Int,
+      grid: RegularGrid): Int = {
+    val ref = hourlyReference(sfs, start, hours, grid)
+    Seq[String => Seq[String]](
+      Exports.hourlyExportNc(basicInv, sfs, start, hours, grid, _),
+      Exports.hourlyExportNcDistributed(basicInv, sfs, start, hours, grid, _)
+    ).foreach { write =>
+      val dir = tmpDir()
+      val files = write(dir)
+      assert(files == ref.keys.toSeq.sorted, s"$start + $hours h")
+      files.foreach { f =>
+        val b = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$dir/$f"))
+        assert(java.util.Arrays.equals(b, ref(f)), s"$f differs")
+      }
+    }
+    ref.size
   }
 
   test("hourlyExportNcDistributed stays byte-identical to the driver-side " +
@@ -393,17 +429,16 @@ class NetcdfWriterSpec extends SparkSpec {
     val saved = spark.conf.get(key)
     spark.conf.set(key, "Europe/Zurich")
     try {
-      // 2024-03-31 02:00 local does not exist; 2024-10-27 02:00 happens twice
-      Seq(("2024-03-31 00:00:00", 6), ("2024-10-27 00:00:00", 5)).foreach {
-        case (start, nfiles) =>
-          val (dirA, dirB) = (tmpDir(), tmpDir())
-          val driver = Exports.hourlyExportNc(
-            basicInv, sfs, start, 6, grid, dirA, distributedHoursThreshold = Int.MaxValue)
-          val dist = Exports.hourlyExportNcDistributed(
-            basicInv, sfs, start, 6, grid, dirB)
-          assert(dist.size == nfiles, s"$start: $dist")
-          assertSameHourFiles(driver, dist, dirA, dirB)
-      }
+      // 2024-03-31 02:00 local does not exist; 2024-10-27 02:00 happens
+      // twice. The end bound adds whole local days, so 200 requested
+      // hours span 199 instants across the March switch and 201 (two
+      // sharing one local hour) across the October one; both 200-hour
+      // windows cross a 168-hour boundary
+      Seq(("2024-03-31 00:00:00", 6, 6), ("2024-10-27 00:00:00", 6, 5),
+        ("2024-03-25 00:00:00", 200, 199), ("2024-10-21 00:00:00", 200, 200))
+        .foreach { case (start, hours, nfiles) =>
+          assert(assertHourFilesMatch(sfs, start, hours, grid) == nfiles, start)
+        }
     } finally spark.conf.set(key, saved)
   }
 

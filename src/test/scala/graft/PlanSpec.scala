@@ -828,6 +828,38 @@ class PlanSpec extends SparkSpec {
     } finally input.unpersist()
   }
 
+  test("hourKeys folds the hour spine on the driver: no Spark job runs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import graft.sinks.Exports
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(js.properties.getProperty("spark.jobGroup.id")))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("hourkeys-probe", "hourKeys")
+      val (tss, spine) = Exports.hourKeys(spark, "2023-01-01 00:00:00", 30)
+      // a sentinel job: listener events arrive in order, so once its
+      // start is seen every job hourKeys might have started is seen too
+      sc.setJobGroup("hourkeys-sentinel", "sentinel")
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.contains("hourkeys-sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains("hourkeys-sentinel"), "sentinel job not seen")
+      assert(!groups.contains("hourkeys-probe"), "hourKeys ran a Spark job")
+      assert(tss.size == 30 && tss.head == "2023-01-01 00:00:00" &&
+        tss.last == "2023-01-02 05:00:00")
+      assert(spine.map(_._1) == (0 until 30) &&
+        spine.map(_._2) == (0 until 30).map(_ % 24))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("releaseManifest: ONE aggregation shuffle, no window, no broadcast") {
     val docs = spark.createDataFrame(
       (0L until 20L).map(i => (i, s"doc body $i"))).toDF("doc_id", "text")

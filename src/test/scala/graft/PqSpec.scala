@@ -1243,6 +1243,23 @@ class PqSpec extends SparkSpec {
       messages(inPlan))
   }
 
+  test("both Lloyd trainers reject a training vector with a null " +
+    "coordinate by vec_id") {
+    // vec 33 ≡ 0 mod trainMod 3 is in the training subset; its null used
+    // to be read as 0.0 by the init rows and every mean update
+    val bad = withNullCoord(33L)
+    val all = Seq(
+      "pqTrainCodebooks" -> (() => Similarity.pqTrainCodebooks(bad, m = 2,
+        dims = 4, ksub = 4, iters = 1, trainMod = 3)),
+      "ivfTrainCentroids" -> (() => Similarity.ivfTrainCentroids(bad,
+        dims = 4, nlists = 3, iters = 1, trainMod = 3)))
+    all.foreach { case (name, train) =>
+      val e = intercept[Exception](train())
+      assert(messages(e).contains("vec_id 33 has a null coordinate"),
+        s"$name: ${messages(e)}")
+    }
+  }
+
   /** Every message of `e`'s cause chain. */
   private def messages(e: Throwable): String =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
