@@ -372,9 +372,10 @@ object ScaleBench {
     deleteRecursive(b13dir)
 
     // B13b: EDGAR-grid hourly export — 6.48M cells × 24 h through the
-    // hour-keyed task writer: one exchange keyed by hour, each task
-    // streams its hours' files holding one 6.48M-cell plane at a time
-    // (coordinates generated in segments); the driver gathers no plane.
+    // hour-keyed task writer: one exchange deals whole hours onto
+    // balanced partitions, each task streams its hours' files holding
+    // one 6.48M-cell plane at a time and sums rows into it (coordinates
+    // generated in segments); the driver gathers no plane.
     val hourFact = spark.range(src.ncells).select(
       col("id").as("cell_id"), lit("c0").as("category"),
       lit("s0").as("substance"),

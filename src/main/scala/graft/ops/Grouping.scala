@@ -13,31 +13,35 @@ import org.apache.spark.sql.functions._
   */
 object Grouping {
 
-  /** Mirrors the reference's `validate_group` (emiproc/inventories/utils.py:
-    * 91-117): every member appears in exactly one group, and — unless
-    * `ignoreMissing` — every distinct value present in the data is covered
-    * by the mapping (the reference raises on uncovered categories instead
-    * of silently dropping them through the inner join). The coverage check
-    * is one partial-aggregated distinct over a single column — cheap next
-    * to the grouping shuffle itself; pass `ignoreMissing = true` to skip
-    * the extra job and keep drop-semantics explicitly. */
-  private def validateGroup(
+  /** `emissions` joined to the broadcast group mapping `mapping` on
+    * `axis`, with the group in column `group`. Mirrors the reference's
+    * `validate_group` (emiproc/inventories/utils.py:91-117): every member
+    * appears in exactly one group (checked here, on the mapping alone),
+    * and — unless `ignoreMissing` — every value present in the data is
+    * covered by the mapping (the reference raises on uncovered values
+    * instead of silently dropping them through an inner join). The
+    * coverage check rides in the grouping pass itself: a left join whose
+    * filter raises `USER_RAISED_EXCEPTION` at the first action, naming
+    * the first uncovered value it meets — no extra job decodes the input.
+    * `ignoreMissing = true` keeps the inner join's drop semantics. */
+  private def mapGroups(
+      spark: SparkSession,
       emissions: DataFrame,
       axis: String,
-      flat: Seq[(String, String)],
-      mapDf: DataFrame,
-      ignoreMissing: Boolean): Unit = {
+      group: String,
+      mapping: Map[String, Seq[String]],
+      ignoreMissing: Boolean): DataFrame = {
+    val flat = mapping.toSeq.flatMap { case (g, members) => members.map(m => (m, g)) }
     val dups = flat.groupBy(_._1).filter(_._2.size > 1).keys
     require(dups.isEmpty,
       s"${axis}s mapped to more than one group: ${dups.mkString(", ")}")
-    if (!ignoreMissing) {
-      val missing = emissions.select(axis).distinct()
-        .join(broadcast(mapDf), Seq(axis), "left_anti")
-        .limit(10).collect().map(_.getString(0))
-      require(missing.isEmpty,
-        s"${axis}s present in data but not in any group (pass " +
-          s"ignoreMissing=true to drop them): ${missing.mkString(", ")}")
-    }
+    val mapDf = broadcast(spark.createDataFrame(flat).toDF(axis, group))
+    if (ignoreMissing) emissions.join(mapDf, Seq(axis))
+    else emissions.join(mapDf, Seq(axis), "left")
+      .where(assert_true(col(group).isNotNull,
+        concat(lit(s"$axis present in data but not in any group (pass " +
+          "ignoreMissing=true to drop it): "),
+          coalesce(col(axis), lit("null")))).isNull)
   }
 
   /** Validate + apply a category partition mapping, then sum members —
@@ -48,11 +52,7 @@ object Grouping {
       emissions: DataFrame,
       mapping: Map[String, Seq[String]],
       ignoreMissing: Boolean = false): DataFrame = {
-    val flat = mapping.toSeq.flatMap { case (g, cats) => cats.map(c => (c, g)) }
-    val mapDf = spark.createDataFrame(flat).toDF("category", "cat_group")
-    validateGroup(emissions, "category", flat, mapDf, ignoreMissing)
-    emissions
-      .join(broadcast(mapDf), Seq("category"))
+    mapGroups(spark, emissions, "category", "cat_group", mapping, ignoreMissing)
       .groupBy(col("cell_id"), col("cat_group").as("category"), col("substance"))
       .agg(sum("value").as("value"))
       .select("cell_id", "category", "substance", "value")
@@ -65,11 +65,7 @@ object Grouping {
       emissions: DataFrame,
       mapping: Map[String, Seq[String]],
       ignoreMissing: Boolean = false): DataFrame = {
-    val flat = mapping.toSeq.flatMap { case (g, subs) => subs.map(s => (s, g)) }
-    val mapDf = spark.createDataFrame(flat).toDF("substance", "sub_group")
-    validateGroup(emissions, "substance", flat, mapDf, ignoreMissing)
-    emissions
-      .join(broadcast(mapDf), Seq("substance"))
+    mapGroups(spark, emissions, "substance", "sub_group", mapping, ignoreMissing)
       .groupBy(col("cell_id"), col("category"), col("sub_group").as("substance"))
       .agg(sum("value").as("value"))
       .select("cell_id", "category", "substance", "value")
@@ -150,15 +146,12 @@ object Grouping {
       emissions: DataFrame,
       mapping: Map[String, Seq[String]],
       ignoreMissing: Boolean = false): DataFrame = {
-    val flat = mapping.toSeq.flatMap { case (g, cats) => cats.map(c => (c, g)) }
-    val mapDf = spark.createDataFrame(flat).toDF("category", "cat_group")
-    validateGroup(emissions, "category", flat, mapDf, ignoreMissing)
     // cached: the union below reads it twice, and without the cache the
     // second branch would re-scan the full fact table
-    val perPair = graft.Caching.cache(emissions
-      .join(broadcast(mapDf), Seq("category"))
-      .groupBy(col("substance"), col("cat_group").as("category"))
-      .agg(sum("value").as("total")))
+    val perPair = graft.Caching.cache(
+      mapGroups(spark, emissions, "category", "cat_group", mapping, ignoreMissing)
+        .groupBy(col("substance"), col("cat_group").as("category"))
+        .agg(sum("value").as("total")))
     perPair
       .select("substance", "category", "total")
       .unionByName(perPair

@@ -101,21 +101,27 @@ object Layout {
       }
     }
     visit(0L, 0L, bits, 0L)
-    var ranges = buf.toVector
-    if (ranges.length > maxRanges) {
-      // keep the (maxRanges - 1) widest gaps; swallow the rest
-      val keep = ranges.sliding(2).map { case Vector(a, b) => b._1 - a._2 }
-        .toVector.zipWithIndex.sortBy(-_._1).take(maxRanges - 1)
-        .map(_._2).toSet
+    swallowGaps(buf.toVector, maxRanges)
+  }
+
+  /** `ranges` (sorted, disjoint) cut to at most `maxRanges`: the
+    * `maxRanges − 1` widest inter-range gaps are kept (on a tie the
+    * earlier one) and every other gap is swallowed into its left range.
+    * The gap-merge of [[zRangesForBox]] and [[mergeRanges]]. */
+  private def swallowGaps(
+      ranges: Vector[(Long, Long)], maxRanges: Int): Vector[(Long, Long)] =
+    if (ranges.length <= maxRanges) ranges
+    else {
+      val keep = (1 until ranges.length)
+        .sortBy(i => -(ranges(i)._1 - ranges(i - 1)._2))
+        .take(maxRanges - 1).toSet
       val out = scala.collection.mutable.ArrayBuffer(ranges.head)
       for (i <- 1 until ranges.length) {
-        if (keep.contains(i - 1)) out += ranges(i)
+        if (keep.contains(i)) out += ranges(i)
         else out(out.length - 1) = (out.last._1, ranges(i)._2)
       }
-      ranges = out.toVector
+      out.toVector
     }
-    ranges
-  }
 
   /** OR-of-BETWEEN predicate over the z intervals — the shape parquet
     * row-group (and file) min/max pruning evaluates without decoding. */
@@ -500,19 +506,7 @@ object Layout {
         buf(buf.length - 1) = (buf.last._1, math.max(buf.last._2, v))
       else buf += ((v, v))
     }
-    var ranges = buf.toVector
-    if (ranges.length > maxRanges) {
-      val keep = ranges.sliding(2).map { case Vector(a, b) => b._1 - a._2 }
-        .toVector.zipWithIndex.sortBy(-_._1).take(maxRanges - 1)
-        .map(_._2).toSet
-      val out = scala.collection.mutable.ArrayBuffer(ranges.head)
-      for (i <- 1 until ranges.length) {
-        if (keep.contains(i - 1)) out += ranges(i)
-        else out(out.length - 1) = (out.last._1, ranges(i)._2)
-      }
-      ranges = out.toVector
-    }
-    ranges
+    swallowGaps(buf.toVector, maxRanges)
   }
 
   /** `base` filtered to a SUPERSET cover of `column IN sortedKeys` as

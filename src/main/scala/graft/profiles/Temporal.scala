@@ -216,15 +216,20 @@ object Temporal {
   private[graft] def hourSpine(startTs: String, hours: Int): Column =
     explode(hourSeq(startTs, hours)).as("ts")
 
-  /** The hourly instants of [[temporalExplode]] as one array: from
-    * `startTs`, read in the session time zone, to `startTs + INTERVAL
-    * (hours − 1) HOURS`. Shared with callers that must reproduce the
+  /** The hourly instants of [[temporalExplode]] as one array: `hours`
+    * instants from `startTs`, read in the session time zone
+    * ([[hourInstants]]). Shared with callers that must reproduce the
     * explode's hours exactly. */
   private[graft] def hourSeq(startTs: String, hours: Int): Column =
-    sequence(
-      to_timestamp(lit(startTs)),
-      to_timestamp(lit(startTs)) + expr(s"INTERVAL ${hours - 1} HOURS"),
-      expr("INTERVAL 1 HOUR"))
+    hourInstants(to_timestamp(lit(startTs)), hours)
+
+  /** `hours` instants one hour apart from the instant `start`:
+    * `start + i · 1 h` for `i` in `0 until hours`, stepped in
+    * microseconds. Local-time interval arithmetic would add whole local
+    * days, so across a DST switch it would yield an hour more or less. */
+  private[graft] def hourInstants(start: Column, hours: Int): Column =
+    transform(sequence(lit(0L), lit(hours - 1L), lit(1L)),
+      i => timestamp_micros(unix_micros(start) + i * 3600000000L))
 
   /** `ts_str` of [[temporalExplode]]: the session-zone wall-clock hour. */
   private[graft] def tsStr(ts: Column): Column = date_format(ts, "yyyy-MM-dd HH:mm:ss")
@@ -369,10 +374,7 @@ object Temporal {
         lit(0).as("is_spine"))
     val spine = events
       .agg(date_trunc("day", min("ts")).as("start0"))
-      .select(explode(sequence(
-        col("start0"),
-        col("start0") + expr(s"INTERVAL ${hours - 1} HOURS"),
-        expr("INTERVAL 1 HOUR"))).as("ts"))
+      .select(explode(hourInstants(col("start0"), hours)).as("ts"))
       .withColumn("sday", date_trunc("day", col("ts")))
     // as-of forward fill WITHOUT a global window: the daily table is
     // bounded (one row per day of the event span), so the day → last

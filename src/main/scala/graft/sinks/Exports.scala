@@ -392,16 +392,18 @@ object Exports {
     * value)` is the only cache, and one small `distinct` over it lists
     * the variables — every input row reaches every hour, so every hour
     * holds the same variables. The hour spine comes from [[hourKeys]]
-    * without a job; the hour explode, the broadcast scaling-factor join,
-    * the (hour, var, cell) sum and the per-partition sort then run over
-    * ONE exchange keyed by the int hour ([[hourlyKeyed]]), and each TASK
-    * streams its hours' files from its sorted partition, so 8,760 hour
-    * files of a year encode concurrently. The driver touches only
-    * metadata, and task memory is ONE variable plane. `outDir` must be
-    * writable from every executor: a shared filesystem on a multi-node
-    * cluster (on a driver-local path the files land on executor disks),
-    * any local directory under local[n]. The cache is released even when
-    * a task write fails. Returns the file names (sorted). */
+    * without a job; the hour explode, the broadcast scaling-factor join
+    * and the per-partition sort then run over ONE exchange that deals
+    * whole hours round-robin onto balanced partitions ([[hourlyKeyed]]),
+    * and each TASK streams its hours' files from its sorted partition,
+    * summing repeated (hour, var, cell) rows into the plane as it goes,
+    * so 8,760 hour files of a year encode concurrently. The driver
+    * touches only metadata, and task memory is ONE variable plane.
+    * `outDir` must be writable from every executor: a shared filesystem
+    * on a multi-node cluster (on a driver-local path the files land on
+    * executor disks), any local directory under local[n]. The cache is
+    * released even when a task write fails. Returns the file names
+    * (sorted). */
   def hourlyExportNc(
       emissions: DataFrame,
       scalingFactors: DataFrame,
@@ -417,7 +419,7 @@ object Exports {
       if (vars.isEmpty) Nil
       else {
         val (tss, spine) = hourKeys(emissions.sparkSession, startTs, hours)
-        writeHourlyFiles(hourlyKeyed(input, scalingFactors, spine),
+        writeHourlyFiles(hourlyKeyed(input, scalingFactors, spine, vars),
           tss, vars, grid, outDir, atts)
         tss.map(hourFileName)
       }
@@ -470,29 +472,43 @@ object Exports {
     (tss, spine.map { case (ts, hod) => keyOf(ts) -> hod })
   }
 
-  /** The pre-writer relation of [[hourlyExportNc]]: `(hk, var, cell_id,
-    * value)` summed per (hour key, var, cell), clustered by `hk` and
-    * sorted within partitions. `input` is [[hourlyInput]]; `spine` is
-    * [[hourKeys]]. One exchange: `repartition(hk)` already satisfies the
-    * aggregate's clustered distribution. Exposed for PlanSpec. */
+  /** The pre-writer relation of [[hourlyExportNc]]: `(hv, cell_id,
+    * value)` with one long key `hv = hk · |vars| + vi` per (hour key,
+    * var), where `vi` is the var's index in `vars` (sorted). `input` is
+    * [[hourlyInput]]; `spine` is [[hourKeys]]. One exchange deals hour
+    * key `hk` to partition `hk mod n`, `n = min(#hour keys, shuffle
+    * partitions)`: every partition holds whole hours, and partitions
+    * differ by at most one hour. Rows are sorted within partitions on
+    * `hv` only and are not summed: the writer sums into its plane. No
+    * aggregate may follow the exchange — it would plan a second, hashed
+    * one that splits an hour over tasks. Exposed for PlanSpec. */
   private[graft] def hourlyKeyed(
       input: DataFrame,
       scalingFactors: DataFrame,
-      spine: Seq[(Int, Int)]): DataFrame =
+      spine: Seq[(Int, Int)],
+      vars: Seq[String]): DataFrame = {
+    val nkeys = spine.map(_._1).distinct.size
+    val n = math.min(nkeys,
+      input.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
     input
+      .select(col("cell_id"), col("category"), col("substance"), col("value"),
+        (array_position(typedLit(vars), col("var")) - 1).as("vi"))
       .select(col("*"), explode(typedLit(spine)).as("h"))
-      .select(col("cell_id"), col("category"), col("substance"), col("var"),
-        col("value"), col("h._1").as("hk"), col("h._2").as("hour_of_day"))
+      .select(col("cell_id"), col("category"), col("substance"), col("value"),
+        col("vi"), col("h._1").as("hk"), col("h._2").as("hour_of_day"))
       .join(broadcast(scalingFactors), Seq("category", "substance", "hour_of_day"), "left")
-      .select(col("hk"), col("var"), col("cell_id"),
+      .select(col("hk"),
+        (col("hk").cast("long") * vars.size + col("vi")).as("hv"), col("cell_id"),
         (col("value") * coalesce(col("sf"), lit(1.0))).cast("double").as("value"))
-      .repartition(col("hk"))
-      .groupBy("hk", "var", "cell_id")
-      .agg(sum(col("value")).as("value"))
-      .sortWithinPartitions("hk", "var", "cell_id")
+      .repartitionById(n, pmod(col("hk"), lit(n)))
+      .drop("hk")
+      .sortWithinPartitions("hv")
+  }
 
   /** Task-side writer of [[hourlyExportNc]]: one file per hour key in
-    * `keyed`, holding every variable of `vars` (sorted). The coordinate
+    * `keyed` ([[hourlyKeyed]]), holding every variable of `vars`
+    * (sorted). A variable's plane is the sum of its rows: the writer,
+    * not the plan, folds repeated (hour, var, cell) rows. The coordinate
     * variables are generated in segments, so a task holds one variable
     * plane at a time. */
   private def writeHourlyFiles(
@@ -504,6 +520,7 @@ object Exports {
       atts: Seq[NcAtt]): Unit = {
     val gatts = (if (atts.nonEmpty) atts else ncCfAttrs("graft hourly export"))
     val ncells = grid.ncells.toInt
+    val nvars = vars.size.toLong
     val (gxmin, gymin, gdx, gdy, gny) = (grid.xmin, grid.ymin, grid.dx, grid.dy, grid.ny)
     keyed.foreachPartition { (it: java.util.Iterator[org.apache.spark.sql.Row]) =>
       import scala.jdk.CollectionConverters._
@@ -519,25 +536,25 @@ object Exports {
             textAtt("units", "degrees_north")),
           chunks = tabulateChunks(ncells, c => gymin + (c % gny + 0.5) * gdy)))
       while (buf.hasNext) {
-        val hk = buf.head.getInt(0)
-        def varChunk(v: String): Array[Double] = {
+        val hk = buf.head.getLong(0) / nvars
+        def plane(hv: Long): Array[Double] = {
           val arr = new Array[Double](ncells)
-          while (buf.hasNext && buf.head.getInt(0) == hk &&
-            buf.head.getString(1) == v) {
-            val r = buf.next(); arr(r.getLong(2).toInt) += r.getDouble(3)
+          while (buf.hasNext && buf.head.getLong(0) == hv) {
+            val r = buf.next(); arr(r.getLong(1).toInt) += r.getDouble(2)
           }
           arr
         }
-        val dataVars = vars.map { v =>
+        val dataVars = vars.zipWithIndex.map { case (v, vi) =>
           WriteVar(v, Seq("cell"), NetcdfClassicDouble,
             atts = Seq(textAtt("units", "kg h-1"), textAtt("long_name", v)),
-            chunks = () => Iterator(varChunk(v)))
+            chunks = () => Iterator(plane(hk * nvars + vi)))
         }
-        writeNcStreamed(s"$outDir/${hourFileName(tss(hk))}", dims,
-          gatts :+ textAtt("valid_hour", tss(hk)), coords ++ dataVars)
+        val ts = tss(hk.toInt)
+        writeNcStreamed(s"$outDir/${hourFileName(ts)}", dims,
+          gatts :+ textAtt("valid_hour", ts), coords ++ dataVars)
         // defensive: skip any residue of this hour (none when vars and
         // the sorted rows agree)
-        while (buf.hasNext && buf.head.getInt(0) == hk) buf.next()
+        while (buf.hasNext && buf.head.getLong(0) / nvars == hk) buf.next()
       }
     }
   }

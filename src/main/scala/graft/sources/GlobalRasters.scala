@@ -119,15 +119,20 @@ object GlobalRasters {
     // at planning — whole unnamed files never get a partition
     val pruned =
       if (files.isEmpty) base else base.where(col("file").isin(files: _*))
+    // `{substance}_{category}.nc`, cut with string functions (no regex
+    // per row): a name without `_` has a null category
+    val file = col("file")
+    val us = instr(file, "_")
+    val rest = when(us > 0, file.substr(us + 1, length(file)))
     pruned
       .where(assert_true(gridOk,
         concat(col("file"), lit(": grid differs from "), lit(g.toString))).isNull)
       .where(col("flux") =!= 0.0)
       .select(
         (col("lon_idx").cast("long") * g.ny + col("lat_idx")).as("cell_id"),
-        regexp_replace(element_at(split(col("file"), "_", 2), 2), "\\.nc$", "")
-          .as("category"),
-        element_at(split(col("file"), "_", 2), 1).as("substance"),
+        when(rest.endsWith(".nc"), rest.substr(lit(1), length(rest) - 3))
+          .otherwise(rest).as("category"),
+        substring_index(file, "_", 1).as("substance"),
         (col("flux") * conv * GfasLoader.SecPerYear).as("value"))
   }
 

@@ -70,11 +70,39 @@ class GroupingSpec extends SparkSpec {
     assert(e.getMessage.contains("adf"))
   }
 
-  test("groupCategories rejects uncovered categories unless ignoreMissing") {
-    val e = intercept[IllegalArgumentException] {
-      Grouping.groupCategories(spark, basicInv, Map("g1" -> Seq("adf")))
+  /** The message of the `USER_RAISED_EXCEPTION` that `action` raises. */
+  private def raisedBy(action: => Any): String = {
+    val e = intercept[Exception](action)
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case t: org.apache.spark.SparkThrowable
+        if t.getCondition == "USER_RAISED_EXCEPTION" => t.getMessage }
+      .getOrElse(fail(s"no USER_RAISED_EXCEPTION under $e"))
+  }
+
+  /** The join types of `df`'s optimized plan. */
+  private def joinTypes(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j.joinType
     }
-    assert(e.getMessage.contains("liku") || e.getMessage.contains("test"))
+
+  test("groupCategories rejects uncovered categories unless ignoreMissing") {
+    import org.apache.spark.sql.catalyst.plans.LeftOuter
+    // the coverage check is lazy: the call returns, the first action
+    // raises and names an uncovered value. The join must stay a left
+    // outer join: an inner one would drop the rows the check looks for
+    val grouped = Grouping.groupCategories(spark, basicInv, Map("g1" -> Seq("adf")))
+    assert(joinTypes(grouped) == Seq(LeftOuter))
+    val msg = raisedBy(grouped.collect())
+    assert(msg.contains("liku") || msg.contains("test"), msg)
+    val bySub = Grouping.groupSubstances(spark, basicInv,
+      Map("GHG" -> Seq("CO2", "CH4")))
+    assert(joinTypes(bySub) == Seq(LeftOuter))
+    assert(raisedBy(bySub.collect()).contains("NH3"))
+    val totals = Grouping.groupedTotals(spark, basicInv, Map("g1" -> Seq("adf")))
+    try {
+      val m = raisedBy(totals.collect())
+      assert(m.contains("liku") || m.contains("test"), m)
+    } finally Caching.release()
     // explicit drop semantics
     val out = Grouping.groupCategories(spark, basicInv,
       Map("g1" -> Seq("adf")), ignoreMissing = true)

@@ -373,10 +373,10 @@ class NetcdfWriterSpec extends SparkSpec {
   /** The hour files of `temporalExplode` assembled on the driver: each
     * `ts_str`'s rows folded into one dense plane per `substance_category`
     * and written with `NetcdfWriter.write`. File name → bytes. */
-  private def hourlyReference(sfs: DataFrame, start: String, hours: Int,
-      grid: RegularGrid): Map[String, Array[Byte]] = {
+  private def hourlyReference(emi: DataFrame, sfs: DataFrame, start: String,
+      hours: Int, grid: RegularGrid): Map[String, Array[Byte]] = {
     val ncells = grid.ncells.toInt
-    val rows = graft.profiles.Temporal.temporalExplode(basicInv, sfs, start, hours)
+    val rows = graft.profiles.Temporal.temporalExplode(emi, sfs, start, hours)
       .select(col("ts_str"), concat_ws("_", col("substance"), col("category")),
         col("cell_id").cast("int"), col("value")).collect()
     val vars = rows.map(_.getString(1)).distinct.sorted.toSeq
@@ -399,13 +399,13 @@ class NetcdfWriterSpec extends SparkSpec {
   }
 
   /** Both hourly entry points write exactly the [[hourlyReference]]
-    * files, byte for byte; returns the file count. */
+    * files of `emi`, byte for byte; returns the file count. */
   private def assertHourFilesMatch(sfs: DataFrame, start: String, hours: Int,
-      grid: RegularGrid): Int = {
-    val ref = hourlyReference(sfs, start, hours, grid)
+      grid: RegularGrid, emi: DataFrame = basicInv): Int = {
+    val ref = hourlyReference(emi, sfs, start, hours, grid)
     Seq[String => Seq[String]](
-      Exports.hourlyExportNc(basicInv, sfs, start, hours, grid, _),
-      Exports.hourlyExportNcDistributed(basicInv, sfs, start, hours, grid, _)
+      Exports.hourlyExportNc(emi, sfs, start, hours, grid, _),
+      Exports.hourlyExportNcDistributed(emi, sfs, start, hours, grid, _)
     ).foreach { write =>
       val dir = tmpDir()
       val files = write(dir)
@@ -430,16 +430,28 @@ class NetcdfWriterSpec extends SparkSpec {
     spark.conf.set(key, "Europe/Zurich")
     try {
       // 2024-03-31 02:00 local does not exist; 2024-10-27 02:00 happens
-      // twice. The end bound adds whole local days, so 200 requested
-      // hours span 199 instants across the March switch and 201 (two
-      // sharing one local hour) across the October one; both 200-hour
-      // windows cross a 168-hour boundary
+      // twice. Every window holds `hours` instants, so the October ones
+      // write one file less (two instants share one local hour); both
+      // 200-hour windows cross a 168-hour boundary
       Seq(("2024-03-31 00:00:00", 6, 6), ("2024-10-27 00:00:00", 6, 5),
-        ("2024-03-25 00:00:00", 200, 199), ("2024-10-21 00:00:00", 200, 200))
+        ("2024-03-25 00:00:00", 200, 200), ("2024-10-21 00:00:00", 200, 199))
         .foreach { case (start, hours, nfiles) =>
           assert(assertHourFilesMatch(sfs, start, hours, grid) == nfiles, start)
         }
     } finally spark.conf.set(key, saved)
+  }
+
+  test("hourlyExportNc sums repeated (cell, category, substance) rows " +
+    "into the reference's bytes") {
+    val grid = RegularGrid(5, 1, 0.0, 0.0, 1.0, 1.0)
+    val sfs = spark.createDataFrame(Seq(("adf", "CH4", 0, 2.0), ("liku", "CO2", 1, 0.5)))
+      .toDF("category", "substance", "hour_of_day", "sf")
+    // every row three times, at 1, 1/4 and 1/2 of its value: dyadic
+    // parts, so any summation order gives the same bits
+    val repeated = basicInv
+      .unionByName(basicInv.withColumn("value", col("value") * 0.25))
+      .unionByName(basicInv.withColumn("value", col("value") * 0.5))
+    assert(assertHourFilesMatch(sfs, "2023-01-01 00:00:00", 30, grid, repeated) == 30)
   }
 
   test("hourlyExportNcDistributed on empty emissions writes no file") {

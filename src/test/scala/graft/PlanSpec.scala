@@ -798,8 +798,9 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.catalyst.plans.QueryPlan
     import org.apache.spark.sql.execution.GenerateExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
     import org.apache.spark.sql.execution.columnar.InMemoryRelation
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
     import graft.sinks.Exports
     // every node, descending into AQE and into cached plans
     def nodes(p: QueryPlan[_]): Seq[QueryPlan[_]] = {
@@ -815,10 +816,25 @@ class PlanSpec extends SparkSpec {
     try {
       val (tss, spine) = Exports.hourKeys(spark, "2023-01-01 00:00:00", 30)
       assert(tss.size == 30 && spine.size == 30)
-      val all = nodes(Exports.hourlyKeyed(input, sfs, spine).queryExecution.executedPlan)
-      val exchanges = all.count(_.isInstanceOf[ShuffleExchangeExec])
-      assert(exchanges == 1, s"expected 1 shuffle exchange, got $exchanges")
+      val vars = input.select("var").distinct().collect().map(_.getString(0)).sorted.toSeq
+      val keyed = Exports.hourlyKeyed(input, sfs, spine, vars)
+      val all = nodes(keyed.queryExecution.executedPlan)
+      val exchanges = all.collect { case e: ShuffleExchangeExec => e }
+      assert(exchanges.size == 1, s"expected 1 shuffle exchange, got ${exchanges.size}")
+      assert(exchanges.head.shuffleOrigin == REPARTITION_BY_NUM,
+        s"exchange origin ${exchanges.head.shuffleOrigin}")
+      assert(!all.exists(_.isInstanceOf[HashAggregateExec]), "the writer sums, not the plan")
       assert(all.exists(_.isInstanceOf[GenerateExec]), "missing hour explode")
+      // whole hours per partition, balanced: 30 hour keys over 4 shuffle
+      // partitions are 8, 8, 7 and 7
+      val hoursOf = keyed
+        .select(spark_partition_id().as("p"), expr(s"hv div ${vars.size}").as("hk"))
+        .distinct().collect()
+        .groupBy(_.getInt(0)).map { case (p, rs) => p -> rs.map(_.getLong(1)).toSet }
+      assert(hoursOf.size == 4, s"partitions holding hours: ${hoursOf.keys}")
+      assert(hoursOf.values.toSeq.flatten.sorted == (0L until 30L), "an hour split or lost")
+      val counts = hoursOf.values.map(_.size)
+      assert(counts.max - counts.min <= 1, s"unbalanced hour partitions: $counts")
       val caches = all.collect { case r: InMemoryRelation => r }
       assert(caches.nonEmpty, "the input rows should be read from the cache")
       caches.foreach { r =>

@@ -66,6 +66,31 @@ class TemporalSpec extends SparkSpec {
     assert(out(("B", "2024-01-01 00:00:00")) == 10.0) // no profile -> 1.0
   }
 
+  test("hourSeq steps `hours` instants from the start, across DST switches too") {
+    val key = "spark.sql.session.timeZone"
+    val saved = spark.conf.get(key)
+    def micros(seq: org.apache.spark.sql.Column): Seq[Long] =
+      spark.range(1).select(transform(seq, unix_micros(_))).collect()(0).getSeq[Long](0)
+    try {
+      // 2024-03-31 and 2024-10-27 switch Europe/Zurich; local interval
+      // arithmetic gave 199 and 201 instants for these 200-hour windows
+      Seq(("UTC", "2024-03-25 00:00:00", 200), ("UTC", "2023-01-01 00:00:00", 1),
+        ("Europe/Zurich", "2024-03-25 00:00:00", 200),
+        ("Europe/Zurich", "2024-10-21 00:00:00", 200)).foreach { case (zone, start, hours) =>
+        spark.conf.set(key, zone)
+        val t0 = java.time.LocalDateTime.parse(start.replace(' ', 'T'))
+          .atZone(java.time.ZoneId.of(zone)).toInstant.toEpochMilli * 1000L
+        val want = (0 until hours).map(i => t0 + i * 3600000000L)
+        assert(micros(Temporal.hourSeq(start, hours)) == want, s"$zone $start")
+        assert(micros(Temporal.hourInstants(to_timestamp(lit(start)), hours)) == want)
+        // the export's hour keys: every instant keyed, one key per local hour
+        val (tss, spine) = graft.sinks.Exports.hourKeys(spark, start, hours)
+        assert(spine.size == hours)
+        assert(tss.size == (if (start == "2024-10-21 00:00:00") hours - 1 else hours))
+      }
+    } finally spark.conf.set(key, saved)
+  }
+
   test("monthly interpolation hits anchors at day m*30+15 and clamps ends") {
     val monthly = spark.range(12).select(
       (col("id") + 1).cast("int").as("month"),
