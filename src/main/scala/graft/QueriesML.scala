@@ -1643,8 +1643,9 @@ object QueriesML {
     // the r17 persisted-IVF+PQ story on the lexical leg): postings
     // range-clustered by term through the shared lifecycle, additive
     // (n, sum_dl) stats rows, df derived from the pruned postings at
-    // serve time. searchPersisted shares search()'s scoring tail, so
-    // the gate shares q_bm25's oracle verbatim.
+    // serve time. searchPersisted scores with search()'s arithmetic bit
+    // for bit (on the driver, or past its bound with the shared tail),
+    // so the gate shares q_bm25's oracle verbatim.
     Q("q_bm25_persisted",
       (s, d) => {
         val dir = BuildPhase.timed {

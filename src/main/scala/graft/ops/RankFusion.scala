@@ -218,7 +218,9 @@ object RankFusion {
     * oracle (q_hybrid_persisted).
     *
     * The engine runs the two legs' scans and nothing else: the
-    * semantic leg builds its query stage on the driver (probes and ADC
+    * lexical leg scores its pruned postings on the driver
+    * ([[graft.text.Bm25.searchPersisted]], one job), the semantic leg
+    * builds its query stage on the driver (probes and ADC
     * lookup tables from the cached index metadata, see
     * [[graft.similarity.Similarity.ivfPqSearchPersistedQ]];
     * `queryEmbeddings` is collected once), and both legs are built and

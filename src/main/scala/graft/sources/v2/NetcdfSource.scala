@@ -272,6 +272,11 @@ private final class NetcdfPartitionReader(
 
   private var it: Iterator[InternalRow] = _
 
+  // each required column's position in NetcdfSource.Schema, resolved
+  // once per reader rather than matched by name for every column of
+  // every row
+  private val slots = required.fieldNames.map(NetcdfSource.Schema.fieldIndex)
+
   private def ensureOpen(): Unit = if (it == null) {
     val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(file))
     val avail = NetcdfRaster.rasterVariables(bytes)
@@ -281,28 +286,27 @@ private final class NetcdfPartitionReader(
     val fname = UTF8String.fromString(
       file.substring(file.lastIndexOf('/') + 1))
     val varCache = new java.util.HashMap[String, UTF8String]()
-    val cols = required.fieldNames
     it = rows.iterator
       .filter { case (j, i, _, _) => bbox.contains(j, i) }
       .map { case (j, i, v, flux) =>
-        val vals = new Array[Any](cols.length)
+        val vals = new Array[Any](slots.length)
         var k = 0
-        while (k < cols.length) {
-          vals(k) = cols(k) match {
-            case "file" => fname
-            case "variable" =>
+        while (k < slots.length) {
+          vals(k) = slots(k) match {
+            case 0 => fname
+            case 1 =>
               var u = varCache.get(v)
               if (u == null) { u = UTF8String.fromString(v); varCache.put(v, u) }
               u
-            case "lon_idx" => j
-            case "lat_idx" => i
-            case "flux" => flux
-            case "nx" => grid.nx
-            case "ny" => grid.ny
-            case "xmin" => grid.xmin
-            case "ymin" => grid.ymin
-            case "dx" => grid.dx
-            case "dy" => grid.dy
+            case 2 => j
+            case 3 => i
+            case 4 => flux
+            case 5 => grid.nx
+            case 6 => grid.ny
+            case 7 => grid.xmin
+            case 8 => grid.ymin
+            case 9 => grid.dx
+            case 10 => grid.dy
           }
           k += 1
         }

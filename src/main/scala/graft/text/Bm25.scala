@@ -1,7 +1,13 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** BM25 retrieval over the document corpus for a fixed query set — the
   * lexical-search primitive of a training-data pipeline (query-based
@@ -28,6 +34,14 @@ import org.apache.spark.sql.functions._
   * map partition of the score aggregate ships at most topK rows per query
   * to the query-keyed sort (the helper's stated bound), so a query
   * matching half the corpus cannot funnel it into one task.
+  *
+  * Persisted search ([[searchPersisted]]) scans only the query terms'
+  * postings, in ONE Spark job: the engine runs the data-parallel scan,
+  * and the driver folds the query-scale tail — df from exact per-term
+  * counts, then the same scoring arithmetic — into a local relation,
+  * the shape of [[graft.ops.RankFusion.fuse]]. The fold is bounded by
+  * [[DriverScoreMax]] postings; a call past it keeps df from the counts
+  * and scores on the engine with the relational tail above.
   */
 object Bm25 {
 
@@ -56,33 +70,25 @@ object Bm25 {
       .agg(max("dl").as("dl"), count(lit(1)).cast("double").as("tf"))
   }
 
-  /** The scoring tail shared by [[search]] and [[searchPersisted]]:
-    * df/idf from the matched postings, the fixed-order contribution
-    * chain, the exact BIGINT per-doc sum, and the per-query top-k.
-    * `withStat(df, c)` attaches the single corpus statistic
-    * named `c` ("n" or "avgdl") to `df` — a crossJoin of the lazy
-    * single-row stats relation for the in-plan search, a plain literal
-    * column for the persisted path (whose stats are already
-    * driver-resolved longs: same IEEE doubles, two broadcast exchanges
-    * fewer in every serve plan — guide §2.4). */
+  /** The scoring tail of [[search]] and of [[searchPersisted]]'s engine
+    * path: the fixed-order contribution chain over `tf` joined to the
+    * per-term `idf` (term, idf_micro), the exact BIGINT per-doc sum,
+    * and the per-query top-k. `withAvgdl` attaches the double column
+    * `avgdl` — a crossJoin of the lazy single-row stats relation for
+    * the in-plan search, a literal column for the persisted path (whose
+    * stats are driver-resolved longs: same IEEE doubles, one broadcast
+    * exchange fewer). [[scoreOnDriver]] mirrors it bit for bit. */
   private def scoreAndRank(
       tf: DataFrame,
-      withStat: (DataFrame, String) => DataFrame,
+      idf: DataFrame,
+      withAvgdl: DataFrame => DataFrame,
       qterms: DataFrame,
       k1: Double,
       b: Double,
       topK: Int): DataFrame = {
-    // idf quantized to micro-units per term: |query terms| rows, tiny.
-    val idf = withStat(
-      tf.groupBy("term").agg(count(lit(1)).cast("double").as("df")), "n")
-      .select(col("term"),
-        round(log(lit(1.0) + (col("n") - col("df") + lit(0.5)) /
-          (col("df") + lit(0.5))) * lit(1000000.0)).cast("long")
-          .as("idf_micro"))
-
     // Fixed-order contribution chain — mirrored verbatim by the oracle:
     // idf_micro * (tf * (k1+1) / (tf + k1 * (1 - b + b * dl/avgdl))) * 1e3
-    val contrib = withStat(tf.join(broadcast(idf), "term"), "avgdl")
+    val contrib = withAvgdl(tf.join(broadcast(idf), "term"))
       .join(qterms, "term")
       .select(col("query_id"), col("doc_id"),
         round(col("idf_micro") *
@@ -121,7 +127,16 @@ object Bm25 {
       (sum(size(col("w"))).cast("double") /
         count(lit(1)).cast("double")).as("avgdl"))
     val tf = postingsOf(docs, Some(qterms.select("term").distinct()))
-    scoreAndRank(tf, (df, c) => df.crossJoin(stats.select(c)),
+    // idf quantized to micro-units per term: |query terms| rows, tiny.
+    // [[idfMicro]] mirrors it on the driver.
+    val idf = tf.groupBy("term")
+      .agg(count(lit(1)).cast("double").as("df"))
+      .crossJoin(stats.select("n"))
+      .select(col("term"),
+        round(log(lit(1.0) + (col("n") - col("df") + lit(0.5)) /
+          (col("df") + lit(0.5))) * lit(1000000.0)).cast("long")
+          .as("idf_micro"))
+    scoreAndRank(tf, idf, _.crossJoin(stats.select("avgdl")),
       qterms, k1, b, topK)
   }
 
@@ -161,7 +176,9 @@ object Bm25 {
   // and applied physically at consolidate; df needs no stored relation
   // at all — it is a per-term count over the (pruned, tombstone-masked)
   // postings the search already reads, so it is always exactly the
-  // visible corpus's df.
+  // visible corpus's df. That one scan is the search's only job: its
+  // partitions ship per-term counts, and rows up to the driver bound,
+  // so df and scores fold on the driver (or, past the bound, df only).
 
   private val Index = graft.ops.ClusteredIndex("doc_id", "docstats", Seq(
     graft.ops.ClusteredIndex.Relation("postings", "doc_id",
@@ -403,37 +420,182 @@ object Bm25 {
       consolidate = consolidateIndex(spark, dir, numFiles, writerOptions),
       append = appendIndex(spark, dir, docs))
 
-  /** [[search]] served from a persisted index — identical output (the
-    * scoring tail is the same code over the same relations; gate
+  /** The most postings one [[searchPersisted]] call folds on the
+    * driver: 1 << 20 rows of (term ordinal int, doc_id long, dl and tf
+    * doubles), 28 bytes each, about 28 MB. A fixed constant, not an
+    * option. A call whose pruned scan may exceed it scores on the
+    * engine instead. */
+  private[graft] val DriverScoreMax: Long = 1L << 20
+
+  /** The relation a persisted search reads: the (term, doc_id, dl, tf)
+    * postings of the index at `dir` whose term is in the sorted
+    * `terms`, tombstoned docs masked. An IN chunked to the session's
+    * parquet pushdown threshold, each chunk a contiguous slice of the
+    * sorted term list, so row-group min/max stats on the clustering
+    * key drop everything else. */
+  private[graft] def postingsScan(
+      spark: SparkSession, dir: String, terms: Seq[String]): DataFrame =
+    graft.ops.Layout.chunkedIn(spark,
+      graft.ops.Layout.clusteredTable(spark, s"$dir/postings"),
+      "term", terms)
+      .select(col("term"), col("doc_id"), col("dl"), col("tf"))
+
+  /** One partition's postings as primitive arrays, row i being
+    * (terms(term(i)), doc(i), dl(i), tf(i)). */
+  private final case class Postings(term: Array[Int],
+      doc: Array[Long], dl: Array[Double], tf: Array[Double])
+
+  /** What one scan partition ships: the exact posting count per term
+    * ordinal, and its rows only when they number at most `share`. */
+  private final case class Part(df: Array[Long], rows: Option[Postings])
+
+  private def partOf(it: Iterator[InternalRow], terms: Array[String],
+      share: Long): Part = {
+    val ord = terms.indices.map(i => UTF8String.fromString(terms(i)) -> i).toMap
+    val df = new Array[Long](terms.length)
+    val t = Array.newBuilder[Int]
+    val d = Array.newBuilder[Long]
+    val l = Array.newBuilder[Double]
+    val f = Array.newBuilder[Double]
+    var n = 0L
+    it.foreach { r =>
+      val i = ord(r.getUTF8String(0))
+      df(i) += 1
+      n += 1
+      if (n <= share) {
+        t += i; d += r.getLong(1); l += r.getDouble(2); f += r.getDouble(3)
+      }
+    }
+    Part(df, if (n <= share) Some(Postings(t.result(), d.result(),
+      l.result(), f.result())) else None)
+  }
+
+  /** [[search]]'s idf_micro on the driver: the same IEEE chain,
+    * `StrictMath.log` (as Spark's `log`), and Spark's double `round`
+    * (HALF_UP on the shortest decimal form) cast to long. */
+  private def idfMicro(n: Double, df: Long): Long =
+    roundLong(StrictMath.log(1.0 + (n - df.toDouble + 0.5) /
+      (df.toDouble + 0.5)) * 1000000.0)
+
+  private def roundLong(x: Double): Long =
+    java.math.BigDecimal.valueOf(x)
+      .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue().toLong
+
+  /** [[scoreAndRank]] on the driver, bit for bit: each posting row of a
+    * term contributes `round(idf_micro * (tf * (k1+1) / (tf + k1 * (1 -
+    * b + b * dl / avgdl))) * 1e3)` to every query holding the term
+    * (distinct (query, term) pairs), the per-(query, doc) sum is an
+    * exact long sum (`Math.addExact`, as ANSI `sum`), and each query
+    * keeps rank ≤ `topK` by (score_nanos desc, doc_id asc). A query
+    * with no matching posting has no row. `df` is the exact per-term
+    * count over the whole scan, `rows` every scanned posting.
+    * @return (query_id, rank, doc_id, score_nanos, score) rows, by query
+    *         then rank. */
+  private def scoreOnDriver(
+      queries: Seq[(Int, String)],
+      terms: IndexedSeq[String],
+      df: Array[Long],
+      rows: Seq[Postings],
+      n: Double,
+      avgdl: Double,
+      k1: Double,
+      b: Double,
+      topK: Int): IndexedSeq[(Int, Int, Long, Long, Double)] = {
+    val ordOf = terms.zipWithIndex.toMap
+    val holders = Array.fill(terms.length)(Set.empty[Int])
+    queries.foreach { case (q, text) =>
+      text.split(" ").foreach(w => holders(ordOf(w)) += q)
+    }
+    val idf = df.map(idfMicro(n, _))
+    val scores = mutable.HashMap.empty[Int, mutable.LongMap[Long]]
+    rows.foreach { p =>
+      var j = 0
+      while (j < p.term.length) {
+        val i = p.term(j)
+        val tf = p.tf(j)
+        val c = roundLong(idf(i).toDouble *
+          (tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * p.dl(j) / avgdl))) *
+          1000.0)
+        holders(i).foreach { q =>
+          val s = scores.getOrElseUpdate(q, mutable.LongMap.empty[Long])
+          s.update(p.doc(j), s.get(p.doc(j)).fold(c)(Math.addExact(_, c)))
+        }
+        j += 1
+      }
+    }
+    scores.toIndexedSeq.sortBy(_._1).flatMap { case (q, s) =>
+      s.toArray
+        .sortWith((x, y) => if (x._2 != y._2) x._2 > y._2 else x._1 < y._1)
+        .take(topK).zipWithIndex.map { case ((d, sc), r) =>
+          (q, r + 1, d, sc, sc / 1.0e9) }
+    }
+  }
+
+  /** The (query_id, rank, doc_id, score_nanos, score) schema of
+    * [[searchPersisted]]'s engine path, which its driver path keeps. */
+  private val resultSchema = StructType(Seq(
+    StructField("query_id", IntegerType, nullable = false),
+    StructField("rank", IntegerType, nullable = false),
+    StructField("doc_id", LongType),
+    StructField("score_nanos", LongType),
+    StructField("score", DoubleType)))
+
+  /** [[search]] served from a persisted index — identical output (gate
     * q_bm25_persisted shares q_bm25's oracle verbatim), but the corpus
     * is never read: the postings scan is pruned to the query terms
-    * (an IN chunked to the session's parquet pushdown threshold, each
-    * chunk a contiguous slice of the sorted term list so row-group
-    * min/max stats on the clustering key drop everything else), and
-    * N/avgdl are a sum over the metadata-sized additive stats rows. */
+    * ([[postingsScan]]), and N/avgdl are a sum over the
+    * metadata-sized additive stats rows.
+    *
+    * One Spark job per call once the stats are cached. The job scans
+    * [[postingsScan]]; every partition ships its exact per-term posting
+    * counts (df, over the visible corpus) and, while its rows number at
+    * most its equal share [[DriverScoreMax]] / partitions, the rows as
+    * primitive arrays. When every partition shipped its rows, the
+    * driver scores them ([[scoreOnDriver]], [[scoreAndRank]]'s
+    * arithmetic bit for bit) and the result is a local relation. Else
+    * the call takes the engine path: [[scoreAndRank]] over the scan,
+    * with idf built on the driver from the shipped counts as a
+    * broadcast local relation. Either way the driver holds at most
+    * [[DriverScoreMax]] postings, whatever the corpus size; a
+    * partition holding a large share of the matches sends the call
+    * down the engine path even below the bound.
+    *
+    * Eager: the scan runs at call time, not at the result's first
+    * action, so an index changed after the call does not change the
+    * (driver-path) result. */
   def searchPersisted(
       spark: SparkSession,
       dir: String,
       queries: Seq[(Int, String)],
       k1: Double = 1.2,
       b: Double = 0.75,
-      topK: Int = 10): DataFrame = {
-    val qterms = queryTerms(spark, queries)
-    val termList = queries.flatMap(_._2.split(" ")).distinct.sorted
-    require(termList.nonEmpty, "searchPersisted needs at least one term")
-    val tf = graft.ops.Layout.chunkedIn(spark,
-      graft.ops.Layout.clusteredTable(spark, s"$dir/postings"),
-      "term", termList)
+      topK: Int = 10): DataFrame =
+    searchPersistedCapped(spark, dir, queries, k1, b, topK, DriverScoreMax)
+
+  /** [[searchPersisted]] with the driver bound `driverMax` in place of
+    * [[DriverScoreMax]]; 0 sends every call that matches a posting
+    * down the engine path. */
+  private[graft] def searchPersistedCapped(
+      spark: SparkSession,
+      dir: String,
+      queries: Seq[(Int, String)],
+      k1: Double,
+      b: Double,
+      topK: Int,
+      driverMax: Long): DataFrame = {
+    require(topK >= 1, s"top-k needs k >= 1, got $topK")
+    // sorted: the scan's term list, and the ordinals the driver fold
+    // indexes by
+    val terms = queries.flatMap(_._2.split(" ")).distinct.sorted.toIndexedSeq
+    require(terms.nonEmpty, "searchPersisted needs at least one term")
     // additive stats summed EAGERLY (one metadata-sized driver read) so
     // an all-deleted index fails LOUDLY here instead of silently
     // null-scoring downstream: net n_docs = 0 makes avgdl a NaN and idf
     // a null, and unlike the other lifecycle misuse paths nothing else
-    // would raise. The literal single-row relation is bit-identical to
-    // the lazy aggregate it replaces (same longs, same IEEE division).
-    // memoized per (dir, lifecycle fingerprint): a serving workload
-    // re-querying one index pays a directory listing, not a Spark job,
-    // per batch; any append/delete/consolidate changes the file set
-    // and reloads ([[graft.ops.ServingCache]])
+    // would raise. Memoized per (dir, lifecycle fingerprint): a serving
+    // workload re-querying one index pays a directory listing, not a
+    // Spark job, per batch; any append/delete/consolidate changes the
+    // file set and reloads ([[graft.ops.ServingCache]])
     val (nSum, dlSum) = graft.ops.ServingCache
       .cached("bm25stats", spark, s"$dir/stats") {
         val statFileList = statsFiles(spark, dir)
@@ -449,14 +611,36 @@ object Bm25 {
       s"BM25 index at $dir has net n_docs=$nSum - every document has " +
         "been deleted (or the stats relation is inconsistent); idf/avgdl " +
         "are undefined over an empty corpus (delete-lifecycle contract)")
-    // stats are driver-resolved longs here, so they attach as LITERAL
-    // columns: bit-identical to the single-row-relation crossJoin they
-    // replace (same doubles, same IEEE division), two broadcast
-    // exchanges fewer in every serve plan
-    val nLit = lit(nSum.toDouble)
-    val avgdlLit = lit(dlSum.toDouble / nSum.toDouble)
-    scoreAndRank(tf,
-      (df, c) => df.withColumn(c, if (c == "n") nLit else avgdlLit),
-      qterms, k1, b, topK)
+    // the same doubles (and IEEE division) as the in-plan single-row
+    // stats relation
+    val n = nSum.toDouble
+    val avgdl = dlSum.toDouble / nSum.toDouble
+
+    val scan = postingsScan(spark, dir, terms)
+    val rdd = scan.queryExecution.toRdd
+    val share = driverMax / math.max(1, rdd.getNumPartitions)
+    val termArr = terms.toArray
+    val df = new Array[Long](terms.length)
+    val parts = mutable.ArrayBuffer.empty[Postings]
+    var complete = true
+    spark.sparkContext.runJob(rdd,
+      (it: Iterator[InternalRow]) => partOf(it, termArr, share),
+      (_: Int, p: Part) => {
+        p.df.indices.foreach(i => df(i) += p.df(i))
+        p.rows match {
+          case Some(r) if complete => parts += r
+          case Some(_) =>
+          case None => complete = false; parts.clear()
+        }
+      })
+    if (complete)
+      spark.createDataFrame(scoreOnDriver(queries, terms, df, parts.toSeq,
+        n, avgdl, k1, b, topK).map(Row.fromTuple).asJava, resultSchema)
+    else {
+      val idf = spark.createDataFrame(terms.indices.filter(df(_) > 0)
+        .map(i => (terms(i), idfMicro(n, df(i))))).toDF("term", "idf_micro")
+      scoreAndRank(scan, idf, _.withColumn("avgdl", lit(avgdl)),
+        queryTerms(spark, queries), k1, b, topK)
+    }
   }
 }

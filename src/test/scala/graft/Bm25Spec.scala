@@ -225,7 +225,8 @@ class Bm25Spec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("bm25prune").toString
     Bm25.writeIndex(spark, docs, dir, numFiles = 30,
       writerOptions = Map("parquet.block.size" -> (16L << 10).toString))
-    val out = Bm25.searchPersisted(spark, dir, Seq((0, "t123 v55")))
+    // the relation searchPersisted's one job reads
+    val out = Bm25.postingsScan(spark, dir, Seq("t123", "v55"))
     val hits = out.queryExecution.toRdd.count() // executes THIS plan,
     assert(hits > 0)                            // populating its metrics
     def scans(plan: SparkPlan): Seq[FileSourceScanExec] = plan match {

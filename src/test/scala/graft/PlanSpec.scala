@@ -876,6 +876,47 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("Bm25.searchPersisted runs one Spark job per steady-state call " +
+    "and returns a local relation") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import graft.text.Bm25
+    val docs = spark.createDataFrame((0L until 40L).map(i =>
+      (i, s"alpha w${i % 7} beta w${i % 11}"))).toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("planspec_bm25jobs").toString
+    Bm25.writeIndex(spark, docs, dir, numFiles = 3)
+    val queries = Seq((0, "alpha w3"), (1, "w5 beta"), (2, "w10"))
+    Bm25.searchPersisted(spark, dir, queries) // caches the index stats
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(js.properties.getProperty("spark.jobGroup.id")))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("bm25-probe", "searchPersisted")
+      val out = Bm25.searchPersisted(spark, dir, queries)
+      val rows = out.collect()
+      // a sentinel job: listener events arrive in order, so once its
+      // start is seen every job of the probe is seen too
+      sc.setJobGroup("bm25-sentinel", "sentinel")
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.contains("bm25-sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains("bm25-sentinel"), "sentinel job not seen")
+      val jobs = groups.toArray.count(_ == "bm25-probe")
+      assert(jobs == 1, s"expected 1 job per searchPersisted call, got $jobs")
+      assert(out.queryExecution.logical.isInstanceOf[LocalRelation],
+        s"not a local relation:\n${out.queryExecution.logical}")
+      assert(rows.length == 23) // 10 + 10 + the 3 docs holding w10
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("releaseManifest: ONE aggregation shuffle, no window, no broadcast") {
     val docs = spark.createDataFrame(
       (0L until 20L).map(i => (i, s"doc body $i"))).toDF("doc_id", "text")
@@ -955,8 +996,10 @@ class PlanSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val dir = java.nio.file.Files.createTempDirectory("planspec_bm25").toString
     Bm25.writeIndex(spark, docs, dir, numFiles = 3)
-    val out = Bm25.searchPersisted(spark, dir,
-      Seq((0, "alpha w3"), (1, "gamma w5 beta"), (2, "w10 delta")))
+    // a driver bound of 0 sends the call down the engine path
+    val out = Bm25.searchPersistedCapped(spark, dir,
+      Seq((0, "alpha w3"), (1, "gamma w5 beta"), (2, "w10 delta")),
+      k1 = 1.2, b = 0.75, topK = 10, driverMax = 0)
     assert(out.count() > 0)
     val all = physicalNodes(out.queryExecution.executedPlan)
     val salted = all.flatMap(n => n.output ++ n.references).filter(_.name == "_salt")

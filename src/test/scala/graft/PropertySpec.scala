@@ -746,4 +746,83 @@ class PropertySpec extends SparkSpec {
     assert(e.getMessage.contains("DIVIDE_BY_ZERO") &&
       e.getMessage.contains("vec_id 4"), e.getMessage)
   }
+
+  test("property: the persisted BM25 search equals the in-plan search bit " +
+    "for bit on the driver path and on the engine path") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    import org.scalacheck.rng.Seed
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import graft.text.Bm25
+    // few short docs over six words, so scores tie; "zz" matches no
+    // doc. A doc with tf(a) = 31 at k1 = 1, b = 0 makes the tf part
+    // 62/32 = 1.9375, so its contribution idf_micro * 1937.5 is an
+    // exact half whenever idf_micro is odd
+    val vocab = Seq("a", "b", "c", "d", "e", "f")
+    val docGen = Gen.frequency(
+      6 -> Gen.choose(1, 6).flatMap(n => Gen.listOfN(n, Gen.oneOf(vocab))),
+      1 -> Gen.listOfN(2, Gen.oneOf(vocab)).map(Seq.fill(31)("a") ++ _))
+    val caseGen = for {
+      n <- Gen.choose(2, 16)
+      docs <- Gen.listOfN(n, docGen.map(_.mkString(" ")))
+      written <- Gen.choose(1, n)
+      deleted <- Gen.someOf(0 until n).map(_.filter(_ != 0).toSet)
+      nq <- Gen.choose(1, 4)
+      queries <- Gen.listOfN(nq, Gen.choose(1, 3)
+        .flatMap(w => Gen.listOfN(w, Gen.oneOf(vocab :+ "zz"))))
+      topK <- Gen.oneOf(1, 3, 50)
+      kb <- Gen.oneOf((1.2, 0.75), (1.0, 0.0))
+    } yield (docs, written, deleted, queries.zipWithIndex
+      .map { case (q, i) => (i, q.mkString(" ")) }, topK, kb)
+    val seen = scala.collection.mutable.Set.empty[String]
+    def rowsOf(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
+      (r.getInt(0), r.getInt(1), r.getLong(2), r.getLong(3),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(4)))).toSeq.sorted
+    def local(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.logical.isInstanceOf[LocalRelation]
+    val prop = Prop.forAllNoShrink(caseGen) {
+      case (docs, written, deleted, queries, topK, (k1, b)) =>
+        val all = spark.createDataFrame(docs.zipWithIndex
+          .map { case (t, i) => (i.toLong, t) }).toDF("doc_id", "text")
+        val dir = java.nio.file.Files.createTempDirectory("bm25prop").toString
+        Bm25.writeIndex(spark, all.where(col("doc_id") < written), dir,
+          numFiles = 2)
+        if (written < docs.length) {
+          Bm25.appendIndex(spark, dir, all.where(col("doc_id") >= written))
+          seen += "tail"
+        }
+        if (deleted.nonEmpty) {
+          Bm25.deleteIndex(spark, dir, spark.createDataFrame(
+            deleted.toSeq.map(i => Tuple1(i.toLong))).toDF("doc_id"))
+          seen += "tombstones"
+        }
+        val visible = all.where(!col("doc_id").isin(deleted.toSeq: _*))
+        val inPlan = rowsOf(Bm25.search(spark, visible, queries, k1, b, topK))
+        val onDriver = Bm25.searchPersisted(spark, dir, queries, k1, b, topK)
+        val onEngine = Bm25.searchPersistedCapped(spark, dir, queries, k1, b,
+          topK, driverMax = 0)
+        val words = queries.map(_._2.split(" ").toSeq)
+        if (words.exists(w => w.distinct.length < w.length)) seen += "repeat"
+        if (words.flatMap(_.distinct).groupBy(identity).exists(_._2.length > 1))
+          seen += "shared"
+        val perQuery = inPlan.groupBy(_._1).map { case (q, r) => q -> r.length }
+        if (queries.exists(q => !perQuery.contains(q._1))) seen += "no match"
+        if (perQuery.values.exists(_ < topK)) seen += "k>n"
+        if (inPlan.groupBy(r => (r._1, r._4)).exists(_._2.length > 1))
+          seen += "tie"
+        if (b == 0.0 && docs.zipWithIndex.exists { case (t, i) =>
+          !deleted(i) && t.startsWith("a " * 31) } &&
+          words.exists(_.contains("a"))) seen += "tf 31"
+        val matched = inPlan.nonEmpty
+        if (matched) seen += "engine"
+        local(onDriver) && (local(onEngine) != matched) &&
+          onDriver.schema == onEngine.schema &&
+          rowsOf(onDriver) == inPlan && rowsOf(onEngine) == inPlan
+    }
+    val res = Check.check(Check.Parameters.default
+      .withMinSuccessfulTests(24).withInitialSeed(Seed(9L)), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+    val want = Set("tail", "tombstones", "repeat", "shared", "no match",
+      "k>n", "tie", "tf 31", "engine")
+    assert(want.subsetOf(seen), s"generator missed ${want -- seen}")
+  }
 }
