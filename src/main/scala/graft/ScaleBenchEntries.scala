@@ -61,33 +61,39 @@ object ScaleBenchEntries {
           .cast("double") / 1000.0).as("embedding"))
 
   /** Execute `df`'s own physical plan and return (rows, parquet-scan
-    * numOutputRows) — metrics live on the executed plan's scan nodes.
-    * AQE wraps any exchange-bearing plan in AdaptiveSparkPlanExec (a
-    * childless node, so collectLeaves alone would miss every scan) and
-    * materialized stages in QueryStageExec — both are descended
-    * explicitly. */
+    * numOutputRows) ([[scanRows]]). */
   private def scanMetrics(df: DataFrame): (Long, Long) = {
+    val hits = df.queryExecution.toRdd.count()
+    (hits, scanRows(df))
+  }
+
+  /** The parquet-scan numOutputRows of `df`'s executed plan — metrics
+    * live on the executed plan's scan nodes. AQE wraps any
+    * exchange-bearing plan in AdaptiveSparkPlanExec (a childless node,
+    * so collectLeaves alone would miss every scan) and materialized
+    * stages in QueryStageExec — both are descended explicitly. */
+  private def scanRows(df: DataFrame): Long = {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    val hits = df.queryExecution.toRdd.count()
     def scans(plan: SparkPlan): Seq[FileSourceScanExec] = plan match {
       case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
       case q: QueryStageExec => scans(q.plan)
       case s: FileSourceScanExec => Seq(s)
       case other => other.children.flatMap(scans)
     }
-    val scanned = scans(df.queryExecution.executedPlan)
+    scans(df.queryExecution.executedPlan)
       .map(_.metrics("numOutputRows").value).sum
-    (hits, scanned)
   }
 
-  /** The persisted search's candidate relation before top-k: the
-    * queries vec_id < 10 of `vecs` against the index at `dir`. */
-  private def persistedScored(dir: String, vecs: DataFrame, divisor: Int,
-      nprobe: Int): DataFrame =
-    Similarity.scored(Similarity.Ann.opened(vecs.sparkSession, dir, m = 8,
-      dims = 32, divisor), Similarity.queryRows(Similarity.prefixQueries(vecs, 10)),
-      nprobe, excludeSelf = true)
+  /** The codes rows the persisted search's ADC job reads for the
+    * queries vec_id < 10 of `vecs` against the index at `dir`: the scan
+    * metrics of the relation [[Similarity.ranked]] ran. */
+  private def persistedScan(dir: String, vecs: DataFrame, divisor: Int,
+      nprobe: Int): Long =
+    scanRows(Similarity.ranked(Similarity.Ann.opened(vecs.sparkSession, dir,
+      m = 8, dims = 32, divisor),
+      Similarity.queryRows(Similarity.prefixQueries(vecs, 10)), nprobe,
+      excludeSelf = true, k = 10).scan)
 
   /** (query_id, list_id) of each query's `nprobe` probed lists, nearest
     * first — the searches' own driver probe stage
@@ -219,7 +225,7 @@ object ScaleBenchEntries {
       out.count()
     }
     val (b43cs, scanPair) = time {
-      val (_, scanned) = scanMetrics(persistedScored(s"$dir/index", vecs, 4096, 4))
+      val scanned = persistedScan(s"$dir/index", vecs, 4096, 4)
       scanned
     }
     val b43scanned = scanPair
@@ -287,7 +293,7 @@ object ScaleBenchEntries {
       out.count()
     }
     val (b43tcs, b43tscanned) = time {
-      val (_, scanned) = scanMetrics(persistedScored(s"$dir/index", vecs, 1, 4))
+      val scanned = persistedScan(s"$dir/index", vecs, 1, 4)
       scanned
     }
     require(b43tscanned >= probedRows,
@@ -325,7 +331,7 @@ object ScaleBenchEntries {
     }
     require(b46an == 100000L, s"B46 tail holds $b46an rows, want 100k")
     def b46scan(): Long = {
-      val (_, scanned) = scanMetrics(persistedScored(s"$dir/index", vecs, 1, 4))
+      val scanned = persistedScan(s"$dir/index", vecs, 1, 4)
       scanned
     }
     def b46recall(): Unit = {
@@ -576,9 +582,9 @@ object ScaleBenchEntries {
     }
     val (b45cs, b45scanned) = time {
       val queries = Similarity.queryRows(Similarity.prefixQueries(vecs, 100))
-      Similarity.scored(Similarity.Ann.built(vecs, m = 8, dims = 32,
+      Similarity.ranked(Similarity.Ann.built(vecs, m = 8, dims = 32,
         Some(Similarity.Trained(256, 2, 97)), Similarity.Trained(245, 2, 97)),
-        queries, nprobe = 4, excludeSelf = true).count()
+        queries, nprobe = 4, excludeSelf = true, k = 10).pairs
     }
     val b45expect = 100L * 1000100L * 4L / 256L
     require(b45scanned <= 2L * b45expect,
@@ -713,7 +719,7 @@ object ScaleBenchEntries {
         hits = res.count(r => exactSet((r.getLong(0), r.getLong(1)))).toLong
         res.length.toLong
       }
-      val (_, scanned) = scanMetrics(persistedScored(s"$dir/index", vecs, 1, np))
+      val scanned = persistedScan(s"$dir/index", vecs, 1, np)
       val recall = hits / 100.0
       // the REFINE leg at the same operating point: top-100 ADC
       // candidates re-ranked by exact cosine from the stored vecs
@@ -1290,7 +1296,7 @@ object ScaleBenchEntries {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val probedRows = probesOfQ.map(_._2).toSeq.distinct
       .map(listCounts.getOrElse(_, 0L)).sum
-    val (_, scanned) = scanMetrics(persistedScored(s"$dir/index", vecs, 1, nprobe))
+    val scanned = persistedScan(s"$dir/index", vecs, 1, nprobe)
     require(scanned <= 3L * probedRows,
       s"B50 scan read $scanned rows > 3x probed $probedRows - " +
         "row-group pruning lost under spill")

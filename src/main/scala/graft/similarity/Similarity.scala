@@ -1,7 +1,11 @@
 package graft.similarity
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
+import org.apache.spark.sql.types.DoubleType
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{DotProductExpr, IvfTopListsExpr}
@@ -559,8 +563,8 @@ object Similarity {
     * query subvector on the driver ([[luts]]: nQueries × m × ksub
     * doubles, from the query rows and the codebook rows the encode
     * collects anyway), and a candidate's distance estimate is the
-    * m-term SUM of its codes' table entries: the scan ([[adcScan]],
-    * every codes row against the broadcast tables) never touches raw
+    * m-term SUM of its codes' table entries: the scan ([[ranked]],
+    * every codes row against the tables, in one job) never touches raw
     * corpus vectors. Exact BIGINT arithmetic end-to-end; deterministic
     * (dist asc, neighbor_id) top-k. Approximate by construction
     * (quantization error) — certified against exact top-k recall in
@@ -574,8 +578,8 @@ object Similarity {
       dims: Int = 64,
       centroidMod: Int = 97): DataFrame = {
     val queries = queryRows(prefixQueries(embeddings, nQueries))
-    adcTopK(scored(Ann.built(embeddings, m, dims, None, Subset(centroidMod)),
-      queries, 1, excludeSelf = true), k)
+    ranked(Ann.built(embeddings, m, dims, None, Subset(centroidMod)),
+      queries, 1, excludeSelf = true, k).top
   }
 
   /** IVF+PQ composed search — the FAISS IVFPQ shape (Jégou 2011 §IV,
@@ -588,9 +592,9 @@ object Similarity {
     * carries its [[pqEncode]] codes AND its [[ivfAssign]] coarse list.
     * Query side, on the driver ([[probeLuts]]): each query ranks the
     * metadata-sized coarse centroids and probes its `nprobe` nearest
-    * lists; the ADC scan is an EQUI-JOIN of the encoded corpus against
-    * the broadcast (query, probed-list, LUT) rows on `list_id` — so the
-    * fraction of the corpus scanned per query is Σ probed-list sizes / N
+    * lists; the ADC scan matches each encoded corpus row to the
+    * (query, probed-list, LUT) entries of its `list_id` ([[ranked]]) —
+    * so the fraction of the corpus scanned per query is Σ probed-list sizes / N
     * ≈ nprobe/nlists, the pruning lever [[pqSearch]]'s full linear ADC
     * scan lacks (its cost is strictly linear in corpus size; this is
     * what makes billion-vector search affordable). ScaleBench B40
@@ -615,8 +619,8 @@ object Similarity {
       nprobe: Int = 2): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
     val queries = queryRows(prefixQueries(embeddings, nQueries))
-    adcTopK(scored(Ann.built(embeddings, m, dims, Some(Subset(coarseMod)),
-      Subset(centroidMod)), queries, nprobe, excludeSelf = true), k)
+    ranked(Ann.built(embeddings, m, dims, Some(Subset(coarseMod)),
+      Subset(centroidMod)), queries, nprobe, excludeSelf = true, k).top
   }
 
   /** ADC-approximate top-`rerankR` then EXACT re-rank to top-`k` — the
@@ -627,12 +631,13 @@ object Similarity {
     * = [[cosineTopK]]'s rounded-cosine arithmetic verbatim, so rerankR
     * ≥ corpus reproduces the exact brute-force ranking.
     *
-    * Scale shape: the queries and the candidate set (nQueries × rerankR
-    * rows — query-scale) are collected at call time; the candidates'
-    * quantized vectors leave the corpus scan through a semi-join to the
-    * broadcast candidate ids and are collected once (nQueries × rerankR
-    * × dims doubles on the driver). The re-rank itself is
-    * [[exactTopK]], on the driver; the result is a local relation. */
+    * Scale shape: the queries are collected at call time and the
+    * candidate set (nQueries × rerankR rows — query-scale) is ranked
+    * in one job ([[ranked]]); a second job over the corpus scan keeps
+    * the candidates' quantized vectors in its tasks ([[fetched]]:
+    * nQueries × rerankR × dims doubles on the driver). The re-rank
+    * itself is [[exactTopK]], on the driver; the result is a local
+    * relation. */
   def ivfPqRerank(
       embeddings: DataFrame,
       nQueries: Int,
@@ -648,7 +653,7 @@ object Similarity {
     val queries = queryRows(prefixQueries(embeddings, nQueries))
     refine(Ann.built(embeddings, m, dims, Some(Subset(coarseMod)),
       Subset(centroidMod)), queries, k, rerankR, nprobe, excludeSelf = true,
-      cand => candidateVecs(vecsOf(embeddings), cand))
+      _ => vecsOf(embeddings))
   }
 
   /** The index rows of `vecs` (vec_id, embedding) in ONE narrow
@@ -714,8 +719,8 @@ object Similarity {
       excludeSelf: Boolean = false): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
     val qs = queryRows(quantQueries(queries))
-    adcTopK(scored(Ann.built(embeddings, m, dims, Some(Subset(coarseMod)),
-      Subset(centroidMod)), qs, nprobe, excludeSelf), k)
+    ranked(Ann.built(embeddings, m, dims, Some(Subset(coarseMod)),
+      Subset(centroidMod)), qs, nprobe, excludeSelf, k).top
   }
 
   // --- Persisted IVF+PQ index (the 100 TB storage shape) ----------------
@@ -1253,9 +1258,12 @@ object Similarity {
     * codebook are metadata-sized reads held in the driver cache, and
     * the corpus-scale codes relation is filtered to the UNION of probed
     * lists — a predicate the scan itself prunes with. The query stage
-    * (probes and ADC lookup tables) runs on the driver
-    * ([[scored]] over [[Ann.opened]]), so a call is one collect of the query
-    * vectors plus one codes-scan job and its top-k.
+    * (probes and ADC lookup tables) runs on the driver and the scoring
+    * in ONE job over the pruned codes scan ([[ranked]] over
+    * [[Ann.opened]]): each task keeps a top-k per query (nQueries × k
+    * heap entries), and the driver merges them into a local relation,
+    * holding at most nQueries × k rows plus one task's result. A call
+    * is one collect of the query vectors plus that one job.
     * `embeddings` supplies ONLY the query vectors (vec_id < nQueries, a
     * pushed-down filter) — search cost is independent of corpus size
     * except for the pruned codes scan, which is the whole point.
@@ -1276,8 +1284,8 @@ object Similarity {
       nprobe: Int = 2): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
     val queries = queryRows(prefixQueries(embeddings, nQueries))
-    adcTopK(scored(Ann.opened(spark, indexDir, m, dims, centroidMod), queries,
-      nprobe, excludeSelf = true), k)
+    ranked(Ann.opened(spark, indexDir, m, dims, centroidMod), queries,
+      nprobe, excludeSelf = true, k).top
   }
 
   /** [[ivfPqSearchPersisted]] serving a STANDALONE query relation — the
@@ -1287,10 +1295,15 @@ object Similarity {
     * arithmetic (gate q_ivfpq_persisted_q pins it equal to the
     * vec_id-prefix form on the same fixture); what changes is only
     * where the query vectors come from. `queries` is evaluated ONCE:
-    * its quantized rows are collected (nQueries × dims doubles) and the
-    * driver query stage of [[scored]] builds the probes
-    * and lookup tables from them. A null `query_id`, a repeated
-    * `query_id` or a null embedding fails the call, naming the row.
+    * its quantized rows are collected (nQueries × dims doubles; no job
+    * for a local relation) and the driver builds the probes and lookup
+    * tables from them. The search is then ONE job over the pruned codes
+    * scan ([[ranked]]): the tables ride in its task binary, each task
+    * holds a top-k per query (nQueries × k heap entries), and the
+    * driver merges the tasks' heaps as they arrive into a local
+    * relation (at most nQueries × k rows plus one task's result). A
+    * null `query_id`, a repeated `query_id` or a null embedding fails
+    * the call, naming the row.
     *
     * `excludeSelf` controls the fixture-era self-exclusion: the default
     * `false` is the FAISS contract (an indexed vector identical to the
@@ -1311,8 +1324,8 @@ object Similarity {
       excludeSelf: Boolean = false): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
     val qs = queryRows(quantQueries(queries))
-    adcTopK(scored(Ann.opened(spark, indexDir, m, dims, centroidMod), qs,
-      nprobe, excludeSelf), k)
+    ranked(Ann.opened(spark, indexDir, m, dims, centroidMod), qs,
+      nprobe, excludeSelf, k).top
   }
 
   /** [[ivfPqSearchPersistedQ]] for LITERAL query vectors (id, values) —
@@ -1355,15 +1368,19 @@ object Similarity {
     *
     * Requires an index written with `storeVecs = true` (and appends
     * made through [[ivfPqAppendIndex]], which keeps the refine relation
-    * in lockstep); fails loudly otherwise. Scale shape: the candidate
-    * relation (nQueries × rerankR rows) is the SAME query-scale driver
-    * bound as the probed-list IN; the vecs scan reads ≈ the candidates'
-    * rows ([[rerankFetch]]); the corpus is never shuffled. The query
-    * rows are collected once and serve both stages: the ADC stage's
-    * driver probes and lookup tables, and the exact stage
-    * ([[exactTopK]], on the driver, over the fetched vectors collected
-    * once: nQueries × rerankR × dims doubles) — `queries` is evaluated
-    * once per call. Output schema matches [[ivfPqRerank]]: (query_id,
+    * in lockstep); fails loudly otherwise. Scale shape: two jobs, no
+    * shuffle ([[refine]]). The ADC job ([[ranked]]) ranks the top
+    * `rerankR` candidates, each task holding nQueries × rerankR heap
+    * entries and the driver the merged candidates (nQueries × rerankR
+    * rows, the SAME query-scale bound as the probed-list IN). The fetch
+    * job scans vecs pruned to the candidate ids ([[rerankFetch]], ≈ the
+    * candidates' rows) and its tasks keep exactly the candidates'
+    * rows ([[fetched]]: nQueries × rerankR × dims doubles on the
+    * driver, a null vector or coordinate failing by vec_id there). The
+    * query rows are collected once and serve both stages: the ADC
+    * stage's driver probes and lookup tables, and the exact stage
+    * ([[exactTopK]], on the driver) — `queries` is evaluated once per
+    * call. Output schema matches [[ivfPqRerank]]: (query_id,
     * neighbor_id, rank, cos_sim), a local relation. */
   def ivfPqRerankPersistedQ(
       spark: SparkSession,
@@ -1387,20 +1404,19 @@ object Similarity {
       nprobe, excludeSelf, rerankFetch(spark, root, _))
   }
 
-  /** The stored raw vectors (vec_id, v) of the candidates' ids, from
-    * `root/vecs`: the ids (nQueries × rerankR longs, the same
-    * query-scale bound as the probed-list IN) are pushed down as a
-    * chunked IN, so the scan reads only row groups that may hold a
-    * candidate; past the chunk budget (B47's operating point is already
-    * ~1000 ids) the fetch switches to ONE range-cover scan. Either way
-    * the semi-join to the broadcast ids ([[candidateVecs]]) is the
-    * exact membership filter. PlanSpec pins the plan: no shuffle, no
-    * window. */
+  /** The relation the exact re-rank's fetch scans for the candidate
+    * `ids` (sorted, distinct): `root/vecs` as (vec_id, v), the ids
+    * (nQueries × rerankR longs, the same query-scale bound as the
+    * probed-list IN) pushed down as a chunked IN, so the scan reads
+    * only row groups that may hold a candidate; past the chunk budget
+    * (B47's operating point is already ~1000 ids) it is ONE range-cover
+    * scan ([[prunedScan]]). The fetch job ([[fetched]]) keeps exactly
+    * the candidates' rows in its tasks. PlanSpec pins the plan: a
+    * pushed In(vec_id), no shuffle, no window. */
   private[graft] def rerankFetch(spark: SparkSession, root: String,
-      cand: Seq[(Long, Long)]): DataFrame = {
-    require(cand.nonEmpty, "no ADC candidates to re-rank - empty index?")
-    candidateVecs(prunedScan(spark, s"$root/vecs", "vec_id",
-      cand.map(_._2).distinct.sorted).select("vec_id", "v"), cand)
+      ids: Seq[Long]): DataFrame = {
+    require(ids.nonEmpty, "no ADC candidates to re-rank - empty index?")
+    prunedScan(spark, s"$root/vecs", "vec_id", ids).select("vec_id", "v")
   }
 
   /** The lifecycle relation at `dir` read with `column` pruned at the
@@ -1412,9 +1428,9 @@ object Similarity {
     * a contiguous value range, so its row-group pruning stays tight.
     * Plan-size bound (r19): past [[MaxInChunks]] chunks the plan
     * switches to ONE scan under an OR-of-BETWEEN cover of ≤ 64 merged
-    * ranges. A SUPERSET is safe because every caller joins the result to
-    * the exact values (the broadcast probe equi-join, the candidate
-    * semi-join) — admitted extras cost scan rows (adjacent row groups on
+    * ranges. A SUPERSET is safe because every caller's tasks keep only
+    * the exact values (the ADC kernel's probed-list lookup, the
+    * candidate fetch's id lookup) — admitted extras cost scan rows (adjacent row groups on
     * the clustered layout), never wrong results. PlanSpec pins both
     * regimes and their equality. */
   private def prunedScan(spark: SparkSession, dir: String, column: String,
@@ -1435,28 +1451,25 @@ object Similarity {
   // [[exactTopK]] bit-equal to the relational exact stage kept in
   // src/test as the reference.
 
-  /** (query_id, neighbor_id) rows of an ADC top-k, collected. */
-  private def candidates(adc: DataFrame): IndexedSeq[(Long, Long)] =
-    adc.select("query_id", "neighbor_id").collect().toIndexedSeq
-      .map(r => (r.getLong(0), r.getLong(1)))
-
-  /** The (vec_id, v) rows of `vecs` whose id some candidate names: a
-    * left-semi join to the broadcast distinct candidate ids, so a
-    * repeated vector row stays repeated. */
-  private def candidateVecs(vecs: DataFrame,
-      cand: Seq[(Long, Long)]): DataFrame = {
-    val ids = vecs.sparkSession.createDataFrame(
-      cand.map(c => Tuple1(c._2)).distinct).toDF("vec_id")
-    vecs.join(broadcast(ids), Seq("vec_id"), "left_semi")
+  /** The (vec_id, v) rows of `vecs` whose vec_id is in the sorted
+    * `ids`, in ONE job over `vecs`' own scan: each task keeps the rows
+    * its partition holds for a candidate (a repeated row stays
+    * repeated) and ships them as they are; the driver fails by vec_id
+    * on a null vector or a null coordinate (the dot kernel reads no
+    * null). Driver footprint: the candidates' rows, nQueries × rerankR
+    * × dims doubles. */
+  private[graft] def fetched(vecs: DataFrame,
+      ids: Array[Long]): IndexedSeq[(Long, Array[Double])] = {
+    val rdd = vecs.select("vec_id", "v").queryExecution.toRdd
+    vecs.sparkSession.sparkContext.runJob(rdd, (it: Iterator[InternalRow]) =>
+      it.filter(r => java.util.Arrays.binarySearch(ids, r.getLong(0)) >= 0)
+        .map(r => (r.getLong(0),
+          if (r.isNullAt(1)) null else r.getArray(1).toObjectArray(DoubleType)))
+        .toArray)
+      .iterator.flatten.map { case (id, v) =>
+        (id, vector(s"vec_id $id", if (v == null) null else v.toSeq))
+      }.toIndexedSeq
   }
-
-  /** (vec_id, v) rows collected to the driver, failing by vec_id on a
-    * null vector or a null coordinate (the dot kernel reads no null). */
-  private def vecRows(vecs: DataFrame): IndexedSeq[(Long, Array[Double])] =
-    vecs.select("vec_id", "v").collect().toIndexedSeq.map { r =>
-      val id = r.getLong(0)
-      (id, coords(r, 1, s"vec_id $id"))
-    }
 
   /** The exact re-rank: per (query, candidate) pair and per vector row
     * of the candidate, `round(dot(q, c) / (sqrt(qn) · sqrt(cn)), 6)` —
@@ -1508,17 +1521,20 @@ object Similarity {
   }
 
   /** The refine stage of both re-rank searches: `ann`'s ADC top-
-    * `rerankR` candidates of the collected `queries`, their vectors
-    * from `fetch` (vec_id, v), collected once, and [[exactTopK]] over
-    * them to top-`k` — a local relation (query_id, neighbor_id, rank,
-    * cos_sim). */
+    * `rerankR` candidates of the collected `queries` ([[ranked]], one
+    * job), their vectors [[fetched]] in one job from `vecs(ids)` (the
+    * candidates' sorted distinct ids), and [[exactTopK]] over them to
+    * top-`k` — a local relation (query_id, neighbor_id, rank, cos_sim).
+    * The driver holds nQueries × rerankR candidates and their vectors. */
   private def refine(ann: Ann, queries: IndexedSeq[(Long, Array[Double])],
       k: Int, rerankR: Int, nprobe: Int, excludeSelf: Boolean,
-      fetch: Seq[(Long, Long)] => DataFrame): DataFrame = {
-    val cand = candidates(adcTopK(scored(ann, queries, nprobe, excludeSelf),
-      rerankR))
-    val vecs = fetch(cand)
-    vecs.sparkSession.createDataFrame(exactTopK(queries, cand, vecRows(vecs), k))
+      vecs: Seq[Long] => DataFrame): DataFrame = {
+    val adc = ranked(ann, queries, nprobe, excludeSelf, rerankR)
+    val cand = adc.rows.map(r => (r._1, r._2))
+    val ids = cand.map(_._2).distinct.sorted.toArray
+    val rel = vecs(ids.toSeq)
+    val rows = if (ids.isEmpty) IndexedSeq.empty else fetched(rel, ids)
+    adc.scan.sparkSession.createDataFrame(exactTopK(queries, cand, rows, k))
       .toDF("query_id", "neighbor_id", "rank", "cos_sim")
   }
 
@@ -1644,8 +1660,8 @@ object Similarity {
   }
 
   /** [[pqSearch]] over the TRAINED codebooks: same ADC shape (per-query
-    * LUTs built on the driver from the trained books, broadcast against
-    * the encoded corpus, m-term exact BIGINT sum), codebook entries
+    * LUTs built on the driver from the trained books, scored against
+    * the encoded corpus in one job, m-term exact BIGINT sum), codebook entries
     * indexed directly (codes are indices, so the LUT divisor is 1).
     * The query rows are collected at call time, before training.
     * ScaleBench B33t REQUIREs recall ≥ the subset-codebook pqSearch at
@@ -1660,8 +1676,8 @@ object Similarity {
       iters: Int = 3,
       trainMod: Int = 1): DataFrame = {
     val queries = queryRows(prefixQueries(embeddings, nQueries))
-    adcTopK(scored(Ann.built(embeddings, m, dims, None,
-      Trained(ksub, iters, trainMod)), queries, 1, excludeSelf = true), k)
+    ranked(Ann.built(embeddings, m, dims, None,
+      Trained(ksub, iters, trainMod)), queries, 1, excludeSelf = true, k).top
   }
 
   /** [[pqSearchTrained]] serving a STANDALONE (query_id, embedding)
@@ -1678,8 +1694,8 @@ object Similarity {
       trainMod: Int = 1,
       excludeSelf: Boolean = false): DataFrame = {
     val qs = queryRows(quantQueries(queries))
-    adcTopK(scored(Ann.built(embeddings, m, dims, None,
-      Trained(ksub, iters, trainMod)), qs, 1, excludeSelf), k)
+    ranked(Ann.built(embeddings, m, dims, None,
+      Trained(ksub, iters, trainMod)), qs, 1, excludeSelf, k).top
   }
 
   // --- Lloyd-trained coarse quantizer (fixed nlists) ---------------------
@@ -1745,8 +1761,8 @@ object Similarity {
     * fixed nlists) and trained PQ codebooks ([[pqTrainCodebooks]], fixed
     * ksub) — the complete FAISS IVFPQ training recipe (coarse k-means +
     * per-subspace k-means, Jégou 2011 §III–IV, by_residual=false). Scan
-    * shape identical to [[ivfPqSearch]]: encoded corpus equi-joined on
-    * `list_id` against a broadcast (query, probed list, LUT) relation,
+    * shape identical to [[ivfPqSearch]]: each encoded corpus row scored
+    * against the (query, probed list, LUT) entries of its `list_id`,
     * ~nprobe/nlists of the corpus scored. Probes and LUTs come from the
     * driver stage ([[probeLuts]]) over the trained centroids (list ids
     * 0..nlists−1) and books (divisor 1) the trainers already return as
@@ -1766,9 +1782,9 @@ object Similarity {
       nprobe: Int = 2): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
     val queries = queryRows(prefixQueries(embeddings, nQueries))
-    adcTopK(scored(Ann.built(embeddings, m, dims,
+    ranked(Ann.built(embeddings, m, dims,
       Some(Trained(nlists, iters, trainMod)), Trained(ksub, iters, trainMod)),
-      queries, nprobe, excludeSelf = true), k)
+      queries, nprobe, excludeSelf = true, k).top
   }
 
   /** The query-prefix convention as a (query_id, v) relation: queries
@@ -1809,9 +1825,13 @@ object Similarity {
 
   /** Field `i` of `r`, an array of doubles, as a driver vector — failing
     * on a null array or a null coordinate, naming the row as `what`. */
-  private def coords(r: Row, i: Int, what: String): Array[Double] = {
-    require(!r.isNullAt(i), s"$what has a null embedding")
-    val xs = r.getSeq[Any](i)
+  private def coords(r: Row, i: Int, what: String): Array[Double] =
+    vector(what, if (r.isNullAt(i)) null else r.getSeq[Any](i))
+
+  /** `xs` as a driver vector, failing on a null array or a null
+    * coordinate, naming the row as `what`. */
+  private def vector(what: String, xs: collection.Seq[Any]): Array[Double] = {
+    require(xs != null, s"$what has a null embedding")
     require(!xs.contains(null), s"$what has a null coordinate")
     xs.iterator.map(_.asInstanceOf[Double]).toArray
   }
@@ -1823,21 +1843,26 @@ object Similarity {
   // in-memory or on-disk storage as fields of ONE index value; [[Ann]] is
   // that value here, built in-plan ([[Ann.built]]) or opened from a
   // persisted index ([[Ann.opened]]), and every PQ and IVF+PQ search
-  // scores through [[scored]].
+  // ranks through [[ranked]].
   //
   // The query stage runs on the driver: every search builds its probes
   // and lookup tables from query rows collected once ([[queryRows]]) and
   // the centroid sets the build or the metadata cache already holds.
   // Both are query-scale: probes are nQueries × nprobe ids, and the
   // lookup tables nQueries × nprobe × m × ksub doubles (nQueries × m ×
-  // ksub for the flat and raw forms, whose probes share one table) — the
-  // cells a broadcast LUT relation would hold anyway. They reach the scan
-  // as ONE broadcast local relation ([[adcScan]]), so the engine runs
-  // only the data-parallel codes scan and its top-k. No arithmetic is
-  // written twice: probes are [[graft.functions.IvfTopListsExpr.topLists]]
-  // and every dot is [[graft.functions.DotProductExpr.dot]]. PropertySpec
-  // pins the stage bit-equal to the relational probes + LUT fold kept in
-  // src/test as the reference.
+  // ksub for the flat and raw forms, whose probes share one table). The
+  // tables ride in the task closure of ONE job over the index's codes
+  // scan, which Spark broadcasts once as the task binary: each task
+  // scores its codes rows against the tables of the queries that probe
+  // their list and keeps a bounded top-k per query; the driver merges
+  // the tasks' top-k as they arrive (the local-top-k-then-merge of
+  // REPOSE, ICDE 2021). No exchange, no broadcast relation and no
+  // engine top-k remain. No arithmetic is written twice: probes are
+  // [[graft.functions.IvfTopListsExpr.topLists]] and every dot is
+  // [[graft.functions.DotProductExpr.dot]]. PropertySpec pins the stage
+  // bit-equal to the relational probes + LUT fold, and the kernel
+  // bit-equal to the relational scan and engine top-k, both kept in
+  // src/test as references.
 
   /** One ADC index. `codes(probed)` is the index relation a search over
     * the sorted distinct `probed` lists scans — (neighbor_id, list_id,
@@ -1846,7 +1871,7 @@ object Similarity {
     * `divisor` its code → slot map; `residual` codes quantize each
     * vector's offset from its list's centroid (per-probe tables);
     * `spilled` copies of a vector in several lists share their codes
-    * (the scan min-dedups them). */
+    * ([[ranked]] keeps each neighbor once, at its least distance). */
   private[graft] final case class Ann(
       codes: Seq[Long] => DataFrame,
       coarse: Option[Cents],
@@ -1862,8 +1887,8 @@ object Similarity {
       * encoded by the one index projection ([[indexFrom]]) in its
       * nearest list. `residual` trains the book on the subset's
       * residuals — each book row minus the centroid of its nearest list
-      * — and encodes residuals. `codes` ignores the probed lists: the
-      * probe equi-join of [[adcScan]] prunes. */
+      * — and encodes residuals. `codes` ignores the probed lists:
+      * [[ranked]]'s tasks skip the rows of unprobed lists. */
     def built(vecs: DataFrame, m: Int, dims: Int, coarse: Option[From],
         book: From, residual: Boolean = false): Ann = {
       require(m >= 1 && dims % m == 0, s"dims=$dims not divisible by m=$m")
@@ -1933,31 +1958,196 @@ object Similarity {
       indexed(pqTrainCodebooks(vecs, m, dims, n, iters, trainMod))
   }
 
-  /** `ann` scored for the collected `queries` — (query_id, neighbor_id,
-    * adc_dist) before top-k: flat lookup tables (one per query, every
-    * codes row), or per-probe ones over each query's `nprobe` nearest
-    * lists (raw: the query's one table; residual: one per probe), then
-    * [[adcScan]] and, on a spilled index, the min-dedup of the copies
-    * (identical adc_dist each time, so min == any; map-side
-    * partial-aggregatable) that restores one row per (query, neighbor).
-    * ScaleBench and the specs count its rows and read its plan. */
-  private[graft] def scored(ann: Ann, queries: Seq[(Long, Array[Double])],
-      nprobe: Int, excludeSelf: Boolean): DataFrame = {
-    val (index, lut) = ann.coarse match {
+  /** What one ADC search ranked ([[ranked]]): per query its top-k
+    * (query_id, neighbor_id, rank, adc_dist) rows, by query then rank;
+    * `pairs`, the (query, codes row) pairs its job scored; `scan`, the
+    * codes relation the job ran (its scan metrics hold the job's reads);
+    * and `shipped`, the most rows one task sent the driver for one
+    * query. */
+  private[graft] final case class Ranked(
+      rows: IndexedSeq[(Long, Long, Int, Long)], pairs: Long,
+      scan: DataFrame, shipped: Int) {
+
+    /** `rows` as a local relation. */
+    def top: DataFrame = scan.sparkSession.createDataFrame(rows)
+      .toDF("query_id", "neighbor_id", "rank", "adc_dist")
+  }
+
+  /** `ann`'s top-`k` neighbors of the collected `queries`, in ONE job:
+    * the flat lookup tables (one per query, every codes row), or the
+    * per-probe ones of each query's `nprobe` nearest lists (raw: the
+    * query's one table, [[probeLuts]]; residual: one per probe,
+    * [[residualLuts]]), ride in the task closure; the job runs over
+    * `ann.codes(probed lists)`. Each task scores every codes row
+    * against the tables of the queries that probe its list
+    * ([[AdcTask]]: the ADC sum, `excludeSelf` applied) and
+    * keeps a top-k per query ([[AdcHeap]]); the driver merges the
+    * tasks' heaps as they arrive.
+    *
+    * Order: (adc_dist asc, neighbor_id asc), ranks 1..min(k, n), no row
+    * for a query without a candidate. On a spilled index a neighbor is
+    * ranked once, at its least distance (its copies share their codes,
+    * so their distances are equal); otherwise a repeated codes row is
+    * ranked once per copy. Bounds: each task holds nQueries × k heap
+    * entries, the driver nQueries × k rows plus one task's result. */
+  private[graft] def ranked(ann: Ann, queries: Seq[(Long, Array[Double])],
+      nprobe: Int, excludeSelf: Boolean, k: Int): Ranked = {
+    require(k >= 1, s"top-k needs k >= 1, got $k")
+    val qs = queries.toIndexedSeq
+    val qi = qs.map(_._1).zipWithIndex.toMap
+    val nb = ann.book.cells(0).length
+    def flat(t: Seq[Seq[Double]]) = t.flatten.toArray
+    val (scan, lists, from, qOf, tables, tOf) = ann.coarse match {
       case None =>
-        val index = ann.codes(Nil)
-        (index, index.sparkSession.createDataFrame(queries.map {
-          case (q, v) => (q, luts(v, ann.book)) }).toDF("query_id", "luts"))
+        (ann.codes(Nil).select("neighbor_id", "codes"), null, Array(0, qs.length),
+          qs.indices.toArray, qs.map(q => flat(luts(q._2, ann.book))).toArray,
+          qs.indices.toArray)
       case Some(cs) =>
-        val rows = (if (ann.residual) residualLuts(queries, cs, ann.book, nprobe)
-          else probeLuts(queries, cs, ann.book, nprobe))
-        val index = ann.codes(rows.map(_._2).distinct.sorted)
-        (index, index.sparkSession.createDataFrame(rows)
-          .toDF("query_id", "list_id", "luts"))
+        val rows = (if (ann.residual) residualLuts(qs, cs, ann.book, nprobe)
+          else probeLuts(qs, cs, ann.book, nprobe)).sortBy(_._2)
+        // a raw query's probes share one table object: flatten it once
+        val ti = new java.util.IdentityHashMap[Seq[Seq[Double]], Integer]()
+        rows.foreach(r => ti.putIfAbsent(r._3, ti.size))
+        val tables = new Array[Array[Double]](ti.size)
+        ti.forEach((t, i) => tables(i) = flat(t))
+        val lists = rows.map(_._2).distinct.toArray
+        (ann.codes(lists.toSeq).select("neighbor_id", "codes", "list_id"), lists,
+          (0 to rows.length).filter(i => i == 0 || i == rows.length ||
+            rows(i)._2 != rows(i - 1)._2).toArray,
+          rows.map(r => qi(r._1)).toArray, tables,
+          rows.map(r => ti.get(r._3).intValue).toArray)
     }
-    val s = adcScan(index, lut, ann.book.m, ann.divisor, excludeSelf)
-    if (!ann.spilled) s
-    else s.groupBy("query_id", "neighbor_id").agg(min("adc_dist").as("adc_dist"))
+    val task = AdcTask(qs.map(_._1).toArray, tables, nb, ann.book.m,
+      ann.divisor, lists, from, qOf, tOf, excludeSelf, k, ann.spilled)
+    val top = new Array[AdcHeap](qs.length)
+    var pairs = 0L
+    var shipped = 0
+    scan.sparkSession.sparkContext.runJob(scan.queryExecution.toRdd,
+      (it: Iterator[InternalRow]) => task.run(it),
+      (_: Int, part: AdcPart) => {
+        pairs += part.pairs
+        part.heaps.indices.foreach { q =>
+          val h = part.heaps(q)
+          if (h != null) {
+            shipped = math.max(shipped, h.size)
+            if (top(q) == null) top(q) = new AdcHeap(k, ann.spilled)
+            top(q).merge(h)
+          }
+        }
+      })
+    val rows = qs.indices.sortBy(qs(_)._1).flatMap { q =>
+      Option(top(q)).toSeq.flatMap(_.sorted.zipWithIndex.map {
+        case ((d, n), i) => (qs(q)._1, n, i + 1, d)
+      })
+    }
+    Ranked(rows, pairs, scan, shipped)
+  }
+
+  /** One task's share of a [[ranked]] job: per query (by index) its
+    * heap, null when no row of the task scored for it, and the pairs
+    * the task scored. */
+  private final case class AdcPart(heaps: Array[AdcHeap], pairs: Long)
+
+  /** The task side of [[ranked]]. Rows are (neighbor_id, codes) for a
+    * flat index (`lists` null: every query scores every row), else
+    * (neighbor_id, codes, list_id), whose list's entries are
+    * `from(i) until from(i + 1)` for `lists(i)` (sorted): entry e
+    * scores query `qOf(e)` with table `tables(tOf(e))`. A table is m
+    * runs of `nb` slots, slot-ordered as [[luts]] orders them. */
+  private final case class AdcTask(qids: Array[Long],
+      tables: Array[Array[Double]], nb: Int, m: Int, divisor: Int,
+      lists: Array[Long], from: Array[Int], qOf: Array[Int], tOf: Array[Int],
+      excludeSelf: Boolean, k: Int, dedup: Boolean) {
+
+    def run(it: Iterator[InternalRow]): AdcPart = {
+      val heaps = new Array[AdcHeap](qids.length)
+      val pos = new Array[Int](m)
+      var pairs = 0L
+      var list = 0L
+      var lo = 0
+      var hi = if (lists == null) qOf.length else 0
+      var seen = false
+      it.foreach { r =>
+        if (lists != null && (!seen || r.getLong(2) != list)) {
+          list = r.getLong(2)
+          seen = true
+          val i = java.util.Arrays.binarySearch(lists, list)
+          lo = if (i < 0) 0 else from(i)
+          hi = if (i < 0) 0 else from(i + 1)
+        }
+        val n = r.getLong(0)
+        var slotted = false
+        var e = lo
+        while (e < hi) {
+          val q = qOf(e)
+          if (!excludeSelf || n != qids(q)) {
+            if (!slotted) { slots(r, n, pos); slotted = true }
+            val t = tables(tOf(e))
+            var sum = t(pos(0))
+            var s = 1
+            while (s < m) { sum += t(pos(s)); s += 1 }
+            if (heaps(q) == null) heaps(q) = new AdcHeap(k, dedup)
+            heaps(q).offer(sum.toLong, n)
+            pairs += 1
+          }
+          e += 1
+        }
+      }
+      AdcPart(heaps, pairs)
+    }
+
+    /** Each subspace's table position of row `r`'s codes, the slot the
+      * relational ADC sum read: `element_at(luts[s], int(code[s] /
+      * divisor) + 1)`. A short codes array, or a code with no slot in
+      * the table, fails the call as ANSI `element_at` does; a null codes
+      * row (a null vector in a flat index) fails by neighbor_id. */
+    private def slots(r: InternalRow, n: Long, pos: Array[Int]): Unit = {
+      require(!r.isNullAt(1), s"neighbor_id $n has null codes")
+      val codes = r.getArray(1)
+      var s = 0
+      while (s < m) {
+        if (s >= codes.numElements()) outOfBounds(s + 1, codes.numElements())
+        val i = (codes.getLong(s).toDouble / divisor).toInt + 1
+        if (i < 1 || i > nb) outOfBounds(i, nb)
+        pos(s) = s * nb + i - 1
+        s += 1
+      }
+    }
+  }
+
+  private def outOfBounds(i: Int, size: Int): Nothing =
+    throw new ArrayIndexOutOfBoundsException("[INVALID_ARRAY_INDEX_IN_ELEMENT_AT] " +
+      s"The index $i is out of bounds. The array has $size elements.")
+
+  /** A bounded top-`k` by (adc_dist asc, neighbor_id asc), the worst at
+    * the head. With `dedup` a neighbor is held once, at its least
+    * distance. */
+  private[graft] final class AdcHeap(k: Int, dedup: Boolean)
+      extends Serializable {
+    private val q = new java.util.PriorityQueue[(Long, Long)](
+      math.min(k, 16), AdcHeap.worstFirst)
+
+    def size: Int = q.size
+
+    def offer(d: Long, n: Long): Unit = {
+      val w = q.peek
+      if (q.size < k || d < w._1 || (d == w._1 && n < w._2)) {
+        val held = if (dedup) q.iterator.asScala.find(_._2 == n) else None
+        held match {
+          case Some(h) => if (d < h._1) { q.remove(h); q.add((d, n)) }
+          case None => if (q.size == k) q.poll(); q.add((d, n))
+        }
+      }
+    }
+
+    def merge(o: AdcHeap): Unit = o.q.forEach(e => offer(e._1, e._2))
+
+    /** The entries as (adc_dist, neighbor_id), best first. */
+    def sorted: IndexedSeq[(Long, Long)] = q.asScala.toIndexedSeq.sorted
+  }
+
+  private object AdcHeap {
+    val worstFirst: Ordering[(Long, Long)] = Ordering[(Long, Long)].reverse
   }
 
   /** A centroid set on the driver, ids ascending: each id's vector and
@@ -2011,7 +2201,7 @@ object Similarity {
 
   /** Codebook rows cut for [[luts]]: per subspace s, each row's (ci, cs,
     * cn) — ci = `(centroid_id / divisor)` as a double division cast to
-    * int (the code → LUT-slot map [[adcSum]] applies: the subset
+    * int (the code → LUT-slot map [[ranked]] applies: the subset
     * writer's ids are multiples of its centroidMod, trained ids are
     * indices with divisor 1), cs the s-th subvector under Spark `slice`
     * semantics, cn its self-dot. Rows in any order. */
@@ -2089,11 +2279,11 @@ object Similarity {
     * Structural consequence: the ADC lookup table becomes PER
     * (query, probed list) — the table is built against the query
     * residual q − c(list), which differs per probed list — and that is
-    * EXACTLY the (query, list) row shape the composed join already
-    * broadcasts ([[ivfPqSearch]]'s probe LUTs), so the scan shape is
-    * unchanged: an equi-join of the residual-encoded corpus against
-    * nQueries·nprobe broadcast LUT rows on `list_id`, scanning
-    * ~nprobe/nlists of the corpus. Those rows are built on the driver
+    * EXACTLY the (query, list) entry shape the composed search already
+    * matches rows to ([[ivfPqSearch]]'s probe LUTs), so the scan shape
+    * is unchanged: each residual-encoded corpus row against the
+    * nQueries·nprobe LUT entries of its `list_id` ([[ranked]]),
+    * scanning ~nprobe/nlists of the corpus. Those rows are built on the driver
     * ([[residualLuts]]: nQueries × nprobe × m × ksub doubles) from the
     * query rows, collected at call time, and the coarse centroids and
     * residual codebook rows the index build collects
@@ -2118,58 +2308,10 @@ object Similarity {
       nprobe: Int = 2): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
     val queries = queryRows(prefixQueries(embeddings, nQueries))
-    adcTopK(scored(Ann.built(embeddings, m, dims, Some(Subset(coarseMod)),
+    ranked(Ann.built(embeddings, m, dims, Some(Subset(coarseMod)),
       Subset(centroidMod), residual = true), queries, nprobe,
-      excludeSelf = true), k)
+      excludeSelf = true, k).top
   }
-
-  /** The ONE ADC scan: the index's `(neighbor_id, [list_id,] codes)` rows
-    * against the broadcast local relation of lookup-table rows
-    * `(query_id, [list_id,] luts)`, joined on the columns the two share
-    * — `list_id` for probe rows (an equi-join, so unprobed lists never
-    * leave the scan), none for flat PQ's per-query rows (every codes row
-    * against every query) — then the optional `neighbor_id !=
-    * query_id` filter and the m-term [[adcSum]]. */
-  private def adcScan(
-      index: DataFrame,
-      lut: DataFrame,
-      m: Int,
-      divisor: Int,
-      excludeSelf: Boolean): DataFrame = {
-    val joined = index.join(broadcast(lut),
-      index.columns.intersect(lut.columns).toSeq)
-    val kept =
-      if (excludeSelf) joined.where(col("neighbor_id") =!= col("query_id"))
-      else joined
-    kept.select(col("query_id"), col("neighbor_id"),
-      adcSum(m, divisor).as("adc_dist"))
-  }
-
-  /** The m-term ADC estimate over a `codes` row against the broadcast
-    * `luts` column. A neighbor's m codes sit in ONE row of the encoded
-    * corpus, so the estimate is m positional lookups into the LUT — the
-    * scan never explodes the codes and never aggregates (query,
-    * neighbor) groups. (The explode-join-reaggregate shape shuffled an
-    * nQueries·N-group aggregate: 273 s at 1M×100 where this plan is
-    * seconds.) The m-term sum is unrolled as plain codegen'd element_at
-    * chains, not a higher-order aggregate (HOF lambdas stay outside
-    * whole-stage codegen). pd is an integer-valued double (quantized
-    * milli-unit arithmetic); the sum is exact in binary FP, cast once. */
-  private def adcSum(m: Int, divisor: Int): Column =
-    (0 until m).map { s =>
-      element_at(
-        element_at(col("luts"), s + 1),
-        (element_at(col("codes"), s + 1) / divisor).cast("int") + 1)
-    }.reduce(_ + _).cast("long")
-
-  /** Deterministic (dist asc, neighbor_id) top-k per query through
-    * [[graft.ops.TopK.perGroup]]: every map partition of the scored
-    * relation ships at most k rows per query to the query-keyed sort
-    * (the helper's stated bound) — no single-task sort of the corpus. */
-  private def adcTopK(scored: DataFrame, k: Int): DataFrame =
-    graft.ops.TopK.perGroup(scored, Seq(col("query_id")),
-        Seq(col("adc_dist").asc, col("neighbor_id").asc), k)
-      .select("query_id", "neighbor_id", "rank", "adc_dist")
 
   /** Deterministic (cos_sim desc, neighbor_id) top-k per query of a
     * scored (query_id, neighbor_id, cos_sim) relation — the exact-cosine

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.ops.Speciation
 import graft.dedup.Dedup
 import graft.profiles.Profiles
+import graft.similarity.Similarity
 
 /** Physical-plan and cache-hygiene guarantees: operators that promise
   * "one scan of the fact table" really do scan once, and pipelines that
@@ -26,6 +27,43 @@ class PlanSpec extends SparkSpec {
       }
       case _ => false
     }
+
+  /** `body`'s result and the number of Spark jobs it started. A
+    * sentinel job closes the count: listener events arrive in order, so
+    * once its start is seen every job of `body` is seen too. */
+  private def jobsIn[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(js.properties.getProperty("spark.jobGroup.id")))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("jobs-probe", "probe")
+      val out = body
+      sc.setJobGroup("jobs-sentinel", "sentinel")
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.contains("jobs-sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains("jobs-sentinel"), "sentinel job not seen")
+      (out, groups.toArray.count(_ == "jobs-probe"))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** The codes relation a persisted search of `queries` scans: the
+    * index at `dir` read for the queries' probed lists. */
+  private def probedCodes(dir: String, divisor: Int,
+      queries: Seq[(Long, Array[Double])], nprobe: Int): DataFrame = {
+    val ann = Similarity.Ann.opened(spark, dir, m = 2, dims = 4, divisor)
+    ann.codes(Similarity.probeLuts(queries, ann.coarse.get, ann.book, nprobe)
+      .map(_._2).distinct.sorted)
+  }
 
   private def factFromParquet(): DataFrame = {
     val dir = java.nio.file.Files.createTempDirectory("planspec").toString
@@ -290,13 +328,9 @@ class PlanSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("planspec_idx").toString
     graft.similarity.Similarity.ivfPqWriteIndex(big, s"$dir/index",
       numFiles = 3, m = 2, dims = 4, centroidMod = 7, coarseMod = 20)
-    val scored = {
-      import graft.similarity.Similarity
-      Similarity.scored(Similarity.Ann.opened(spark, s"$dir/index", m = 2,
-        dims = 4, divisor = 7),
-        Similarity.queryRows(Similarity.prefixQueries(big, 5)), nprobe = 2,
-        excludeSelf = true)
-    }
+    // the relation the search's one ADC job scans
+    val scored = probedCodes(s"$dir/index", divisor = 7,
+      Similarity.queryRows(Similarity.prefixQueries(big, 5)), nprobe = 2)
     val plan = scored.queryExecution.executedPlan.toString
     // the probed-list predicate must reach the scan as an IN over
     // list_id — a plan that filters list_id only above the scan (or
@@ -307,54 +341,51 @@ class PlanSpec extends SparkSpec {
     assert(scored.count() > 0)
   }
 
-  test("persisted IVF+PQ search plans the query stage on the driver: " +
-    "one exchange (the top-k's), a local-relation broadcast side, no " +
-    "window or aggregate below the join, the caller's queries absent") {
-    import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
-    import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec}
-    import org.apache.spark.sql.execution.window.WindowExecBase
-    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+  test("persisted IVF+PQ search runs one job per steady-state call: a " +
+    "local-relation result, the caller's queries absent, at most k rows " +
+    "per query shipped by each task") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
     val big = spark.range(60L).select(col("id").as("vec_id"),
       transform(sequence(lit(0), lit(3)),
         d => (((col("id") * 13 + d * 11) % 29) + (col("id") % 5) + 1)
           .cast("float"))
         .as("embedding"))
     val dir = java.nio.file.Files.createTempDirectory("planspec_qstage").toString
-    graft.similarity.Similarity.ivfPqWriteIndex(big, s"$dir/index",
+    // 3 files, so the ADC job runs several tasks
+    Similarity.ivfPqWriteIndex(big, s"$dir/index",
       numFiles = 3, m = 2, dims = 4, centroidMod = 7, coarseMod = 20)
     big.where(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding"))
       .write.parquet(s"$dir/callers_queries")
-    val out = graft.similarity.Similarity.ivfPqSearchPersistedQ(spark,
-      s"$dir/index", spark.read.parquet(s"$dir/callers_queries"), k = 3,
-      m = 2, dims = 4, centroidMod = 7, nprobe = 2)
+    def search(queries: DataFrame) = Similarity.ivfPqSearchPersistedQ(spark,
+      s"$dir/index", queries, k = 3, m = 2, dims = 4, centroidMod = 7,
+      nprobe = 2)
+    val out = search(spark.read.parquet(s"$dir/callers_queries"))
+    assert(out.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+      s"not a local relation:\n${out.queryExecution.optimizedPlan}")
+    assert(!out.queryExecution.executedPlan.toString.contains("callers_queries"),
+      s"the caller's query plan is re-planned in the search:\n" +
+        out.queryExecution.executedPlan)
     assert(out.collect().length == 15)
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case q: QueryStageExec => q +: nodes(q.plan)
-      case o => o +: o.children.flatMap(nodes)
-    }
-    val plan = out.queryExecution.executedPlan
-    val all = nodes(plan)
-    assert(all.count(_.isInstanceOf[ShuffleExchangeExec]) == 1,
-      s"expected exactly the top-k exchange:\n$plan")
-    val joins = all.collect { case j: BroadcastHashJoinExec => j }
-    assert(joins.length == 1, s"expected one broadcast join:\n$plan")
-    val below = nodes(joins.head)
-    assert(!below.exists(n => n.isInstanceOf[WindowExecBase] ||
-      n.isInstanceOf[BaseAggregateExec]),
-      s"window or aggregate below the scan join:\n$plan")
-    val build = nodes(joins.head.buildSide match {
-      case BuildLeft => joins.head.left
-      case BuildRight => joins.head.right
-    })
-    assert(build.exists(_.isInstanceOf[LocalTableScanExec]) &&
-      !build.exists(_.isInstanceOf[FileSourceScanExec]),
-      s"broadcast side is not a local relation:\n$plan")
-    assert(!plan.toString.contains("callers_queries"),
-      s"the caller's query plan is re-planned in the search:\n$plan")
+    // a local query relation, as a serving loop passes it: the call's one
+    // job is the ADC scan (the caller's parquet queries add their collect)
+    val local = spark.createDataFrame(
+      spark.read.parquet(s"$dir/callers_queries").collect().toSeq
+        .map(r => (r.getLong(0), r.getSeq[Float](1))))
+      .toDF("query_id", "embedding")
+    val (rows, jobs) = jobsIn(search(local).collect())
+    assert(jobs == 1, s"expected 1 job per steady-state call, got $jobs")
+    assert(rows.map(_.toSeq).toSet == out.collect().map(_.toSeq).toSet)
+    // each task ships at most k rows per query, whatever its rows
+    val qs = Similarity.queryRows(Similarity.prefixQueries(big, 5))
+    val ann = Similarity.Ann.opened(spark, s"$dir/index", m = 2, dims = 4,
+      divisor = 7)
+    val ranked = Similarity.ranked(ann, qs, nprobe = 3, excludeSelf = true,
+      k = 2)
+    assert(ranked.scan.queryExecution.toRdd.getNumPartitions > 1)
+    assert(ranked.shipped >= 1 && ranked.shipped <= 2,
+      s"a task shipped ${ranked.shipped} rows for one query, k = 2")
+    assert(ranked.pairs > 2L * 5, s"only ${ranked.pairs} pairs scored")
   }
 
   test("hybridSearchPersisted returns a local relation and caches " +
@@ -362,9 +393,7 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
     import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
     import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
-    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     import org.apache.spark.sql.execution.window.WindowExecBase
-    import org.apache.spark.sql.catalyst.plans.LeftSemi
     val docs = spark.range(60L).select(col("id").as("doc_id"),
       concat_ws(" ", lit("w"), (col("id") % 7).cast("string"),
         lit("hash"), lit("join")).as("text"))
@@ -406,16 +435,18 @@ class PlanSpec extends SparkSpec {
       assert(out.collect().length == 6)
     }
 
-    val root = graft.similarity.Similarity.indexRoot(spark, s"$dir/ann")
-    val fetch = graft.similarity.Similarity.rerankFetch(spark, root,
-      Seq((0L, 3L), (0L, 17L), (1L, 17L), (1L, 42L)))
-    assert(fetch.collect().map(_.getLong(0)).sorted.toSeq == Seq(3L, 17L, 42L))
+    val root = Similarity.indexRoot(spark, s"$dir/ann")
+    val ids = Array(3L, 17L, 42L)
+    val fetch = Similarity.rerankFetch(spark, root, ids.toSeq)
+    val (vecs, jobs) = jobsIn(Similarity.fetched(fetch, ids))
+    assert(jobs == 1, s"expected 1 fetch job, got $jobs")
+    assert(vecs.map(_._1).sorted == ids.toSeq)
     val plan = fetch.queryExecution.executedPlan
     val all = nodes(plan)
     assert(!all.exists(n => n.isInstanceOf[ShuffleExchangeExec] ||
       n.isInstanceOf[WindowExecBase]), s"shuffle or window in the fetch:\n$plan")
-    assert(all.collect { case j: BroadcastHashJoinExec => j.joinType } == Seq(LeftSemi),
-      s"expected one broadcast semi-join to the candidate ids:\n$plan")
+    assert(plan.toString.replaceAll("\\s", "").contains("In(vec_id"),
+      s"candidate ids not pushed to the vecs scan:\n$plan")
   }
 
   test("ivf_top_lists compiles to ONE call of the shared kernel " +
@@ -488,30 +519,25 @@ class PlanSpec extends SparkSpec {
         .filter(_.toString.contains("codes"))
         .map(_.metrics("numOutputRows").value).sum
     }
-    def search() = {
-      import graft.similarity.Similarity
-      Similarity.scored(Similarity.Ann.opened(spark, s"$dir/index", m = 2,
-        dims = 4, divisor = 7),
-        Similarity.queryRows(Similarity.prefixQueries(big, 10)), nprobe = 4,
-        excludeSelf = true)
-    }
+    // the relation the search's one ADC job scans, and what it ranks
+    val qs = Similarity.queryRows(Similarity.prefixQueries(big, 10))
+    def search() = probedCodes(s"$dir/index", divisor = 7, qs, nprobe = 4)
+    def ranked() = Similarity.ranked(Similarity.Ann.opened(spark,
+      s"$dir/index", m = 2, dims = 4, divisor = 7), qs, nprobe = 4,
+      excludeSelf = true, k = 4000).rows.toSet
     val key = "spark.sql.parquet.pushdown.inFilterThreshold"
     val prior = spark.conf.get(key, "10")
     try {
       // ideal single-IN reference: threshold far above the probed count
       spark.conf.set(key, "10000")
-      val ideal = search()
-      val idealRows = ideal.collect().map(r =>
-        (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      val idealRows = ranked()
       val idealScanned = scanned(search())
       // the cliff regime: ~40 distinct probed lists over a threshold of
       // 16 — pre-chunking this degraded the pushed In to one [min,max]
       // range spanning most of the key domain
       spark.conf.set(key, "16")
       val chunked = search()
-      val chunkedRows = chunked.collect().map(r =>
-        (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(chunkedRows == idealRows)
+      assert(ranked() == idealRows)
       val plan = chunked.queryExecution.executedPlan.toString
       assert(plan.contains("Union"), s"expected chunked-union scans:\n$plan")
       val pushedIns = "In\\(list_id".r.findAllIn(plan.replaceAll("\\s", "")).size
@@ -534,10 +560,8 @@ class PlanSpec extends SparkSpec {
       // the ~40 probed lists at > 2×16, forcing the cover path.
       spark.conf.set(key, "2")
       val covered = search()
-      val coveredRows = covered.collect().map(r =>
-        (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(coveredRows == idealRows,
-        "range-cover scan changed the candidate relation")
+      assert(ranked() == idealRows,
+        "range-cover scan changed the search result")
       val coverPlan = covered.queryExecution.executedPlan.toString
       assert(!coverPlan.contains("Union"),
         s"cover regime still built a chunk union:\n$coverPlan")
@@ -952,35 +976,6 @@ class PlanSpec extends SparkSpec {
     case q: QueryStageExec => q +: singleChildChain(q.plan)
     case _ if p.children.size == 1 => p +: singleChildChain(p.children.head)
     case _ => Seq(p)
-  }
-
-  test("persisted ANN top-k: ONE exchange above the scored relation, " +
-    "bounded by a Partial WindowGroupLimit below it") {
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.window.{Partial, WindowGroupLimitExec}
-    val big = spark.range(60L).select(col("id").as("vec_id"),
-      transform(sequence(lit(0), lit(3)),
-        d => (((col("id") * 13 + d * 11) % 29) + (col("id") % 5) + 1)
-          .cast("float"))
-        .as("embedding"))
-    val dir = java.nio.file.Files.createTempDirectory("planspec_topk").toString
-    graft.similarity.Similarity.ivfPqWriteIndex(big, s"$dir/index",
-      numFiles = 3, m = 2, dims = 4, centroidMod = 7, coarseMod = 20)
-    val out = graft.similarity.Similarity.ivfPqSearchPersisted(spark,
-      s"$dir/index", big, nQueries = 5, k = 3, m = 2, dims = 4,
-      centroidMod = 7, nprobe = 2)
-    assert(out.count() > 0)
-    // the top-k tail: the single-child chain from the root down to the
-    // scored relation's broadcast join
-    val tail = singleChildChain(out.queryExecution.executedPlan)
-    val exchanges = tail.collect { case e: ShuffleExchangeExec => e }
-    assert(exchanges.size == 1,
-      s"expected 1 exchange in the top-k tail, got ${exchanges.size}:\n" +
-        tail.map(_.nodeName).mkString(" <- "))
-    assert(singleChildChain(exchanges.head.child).exists {
-      case w: WindowGroupLimitExec => w.mode == Partial
-      case _ => false
-    }, s"no Partial WindowGroupLimit below the exchange:\n${exchanges.head}")
   }
 
   test("Bm25.searchPersisted: no salt, one window, partial aggregation " +

@@ -18,15 +18,20 @@ class PqSpec extends SparkSpec {
     (2L, Seq(0f, 1f, 1f, 0f)),
     (3L, Seq(0.9f, 0.1f, 0.1f, 0.9f))) // both subs ~ v0
 
-  /** The in-plan subset IVF+PQ search's candidate relation before
-    * top-k (m = 2, dims = 4), queries vec_id < nQueries. */
+  /** The (query, codes row) pairs the in-plan subset IVF+PQ search
+    * scores (m = 2, dims = 4), queries vec_id < nQueries. */
   private def inPlanScored(vecs: org.apache.spark.sql.DataFrame,
       nQueries: Int, centroidMod: Int, coarseMod: Int, nprobe: Int,
-      residual: Boolean = false) =
-    Similarity.scored(Similarity.Ann.built(vecs, m = 2, dims = 4,
+      residual: Boolean = false): Long =
+    Similarity.ranked(inPlanAnn(vecs, centroidMod, coarseMod, residual),
+      Similarity.queryRows(Similarity.prefixQueries(vecs, nQueries)),
+      nprobe, excludeSelf = true, k = 1).pairs
+
+  private def inPlanAnn(vecs: org.apache.spark.sql.DataFrame,
+      centroidMod: Int, coarseMod: Int, residual: Boolean) =
+    Similarity.Ann.built(vecs, m = 2, dims = 4,
       Some(Similarity.Subset(coarseMod)), Similarity.Subset(centroidMod),
-      residual), Similarity.queryRows(Similarity.prefixQueries(vecs, nQueries)),
-      nprobe, excludeSelf = true)
+      residual)
 
   private def codesOf(m: Int = 2): Map[Long, Seq[Long]] =
     Similarity.pqEncode(e, m = m, dims = 4, centroidMod = 2).collect()
@@ -118,7 +123,7 @@ class PqSpec extends SparkSpec {
     // and pruning is real: the candidate relation (pre-top-k) scans a
     // strict subset of the 5 × 59 pairs a full ADC scan scores
     val scanned = inPlanScored(big, nQueries = 5, centroidMod = 7,
-      coarseMod = 20, nprobe = 1).count()
+      coarseMod = 20, nprobe = 1)
     assert(scanned < 5L * 59L, s"scanned $scanned of ${5 * 59} pairs")
   }
 
@@ -190,15 +195,35 @@ class PqSpec extends SparkSpec {
     "quantization ties it with non-duplicates, and broadcasts the " +
     "candidate set (corpus never shuffled for the fetch-back)") {
     // the fetch-back runs at call time (the result is a local
-    // relation): read the plans of the call's own actions
-    val (out, plans) = org.apache.spark.sql.PlansOf(spark) {
-      Similarity.ivfPqRerank(bigWithDup, nQueries = 5, k = 3,
+    // relation): the candidate ids ride in the fetch job's broadcast
+    // task binary, so every job the call runs is a single stage — no
+    // job shuffles the corpus
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = stages.add(
+        (String.valueOf(js.properties.getProperty("spark.jobGroup.id")),
+          js.stageInfos.size))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val out = try {
+      sc.setJobGroup("rerank-probe", "ivfPqRerank")
+      val out = Similarity.ivfPqRerank(bigWithDup, nQueries = 5, k = 3,
         rerankR = 10, m = 2, dims = 4, centroidMod = 7, coarseMod = 20,
         nprobe = 2)
+      sc.setJobGroup("rerank-sentinel", "sentinel")
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!stages.toArray.exists(_ == (("rerank-sentinel", 1))) &&
+        System.nanoTime() < deadline) Thread.sleep(10)
+      out
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
     }
-    val plan = plans.map(_.toString).mkString("\n")
-    assert(plans.last.toString.contains("BroadcastHashJoin"), plan)
-    assert(!plan.contains("CartesianProduct"), plan)
+    val jobs = stages.toArray.toSeq.collect { case ("rerank-probe", n: Int) => n }
+    assert(jobs.nonEmpty && jobs.forall(_ == 1), s"stages per job: $jobs")
     val q1 = out.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
       .filter(_._1 == 1L).sortBy(_._3)
@@ -219,7 +244,7 @@ class PqSpec extends SparkSpec {
       coarseMod = 20, nprobe = 4, residual = true)
     // 4 lists exist (centroids 0, 20, 40, 60); probing all of them =
     // every (query, neighbor != query) pair
-    assert(scanned.count() == 5L * 61L)
+    assert(scanned == 5L * 61L)
   }
 
   test("residual codes differ from raw codes (the codebook is trained " +
@@ -233,16 +258,15 @@ class PqSpec extends SparkSpec {
     assert(res.keySet == raw.keySet)
     assert(res.exists { case (id, codes) => codes != raw(id) },
       "residual training produced byte-identical codes to raw training")
-    val scored = inPlanScored(bigWithDup, nQueries = 5, centroidMod = 7,
-      coarseMod = 20, nprobe = 2, residual = true)
-    val plan = scored.queryExecution.executedPlan.toString
-    // the corpus-side scan is an equi-join on list_id (broadcast hash);
-    // a CartesianProduct would mean an unpruned all-pairs scan. The
-    // metadata-sized crossJoin(broadcast(...)) steps (query x centroids,
-    // codebook x subspaces) legitimately plan as BroadcastNestedLoopJoin
-    // over bounded relations, so BNLJ presence is NOT asserted against.
-    assert(plan.contains("BroadcastHashJoin"), plan)
-    assert(!plan.contains("CartesianProduct"), plan)
+    // the kernel scores exactly the rows the relational equi-join of
+    // the codes to the (query, probed list) tables on list_id yields —
+    // a strict subset of the 5 × 61 pairs of an unpruned scan
+    val qs = Similarity.queryRows(Similarity.prefixQueries(bigWithDup, 5))
+    val scored = Similarity.ranked(ri, qs, nprobe = 2, excludeSelf = true,
+      k = 1).pairs
+    assert(scored == AdcReference.scan(ri, qs, nprobe = 2,
+      excludeSelf = true).count())
+    assert(scored < 5L * 61L, s"scored $scored of ${5 * 61} pairs")
   }
 
   // --- Persisted IVF+PQ index -------------------------------------------
@@ -534,12 +558,11 @@ class PqSpec extends SparkSpec {
     assert(searchPersisted() == rebuilt)
     // the appended duplicate of vec 1 (id 70) is searchable and sits at
     // query 1's ADC floor — identical vector, identical frozen codes
-    val scored = Similarity.scored(Similarity.Ann.opened(spark,
+    val scored = Similarity.ranked(Similarity.Ann.opened(spark,
       s"$dir/index", m = 2, dims = 4, divisor = 1),
       Similarity.queryRows(Similarity.prefixQueries(union, 2)), nprobe = 2,
-      excludeSelf = true)
-      .where(col("query_id") === 1L).collect()
-      .map(r => r.getLong(1) -> r.getLong(2)).toMap
+      excludeSelf = true, k = 1000).rows
+      .collect { case (1L, n, _, d) => n -> d }.toMap
     assert(scored.contains(70L), scored.toString)
     assert(scored(70L) == scored.values.min)
   }

@@ -624,6 +624,107 @@ class PropertySpec extends SparkSpec {
     assert(spillRes.passed, org.scalacheck.util.Pretty.pretty(spillRes))
   }
 
+  test("property: the one-job ADC kernel ranks bit-equal to the relational " +
+    "scan and engine top-k, scoring as many pairs as the scan has rows") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    import org.scalacheck.rng.Seed
+    import graft.similarity.Similarity
+    type Vec = List[Double]
+    // few distinct small-integer vectors, so codes repeat and adc_dist ties
+    def vec(dims: Int): Gen[Vec] = Gen.listOfN(dims, Gen.choose(-4, 4))
+      .map(v => v.map(_.toDouble)).map(v => if (v.forall(_ == 0.0)) 1.0 :: v.tail else v)
+    val caseGen = for {
+      m <- Gen.choose(1, 2)
+      subDim <- Gen.choose(1, 2)
+      dims = m * subDim
+      n <- Gen.choose(8, 24)
+      pool <- Gen.listOfN(6, vec(dims))
+      picks <- Gen.listOfN(n, Gen.choose(0, 5))
+      cmod <- Gen.oneOf(2, 3)
+      coarseMod <- Gen.oneOf(4, 5)
+      dupPick <- Gen.choose(0, 100)
+      nq <- Gen.choose(1, 3)
+      // a query is a corpus row (its id a neighbor_id, for excludeSelf)
+      // or a pool vector under an id outside the corpus
+      qPicks <- Gen.listOfN(nq, Gen.either(Gen.choose(0, n - 1), Gen.choose(0, 5)))
+      nprobe <- Gen.choose(1, 3)
+      excludeSelf <- Gen.oneOf(false, true)
+      k <- Gen.oneOf(1, 3, 100)
+      spill <- Gen.oneOf(1, 2)
+      // a coarse list no row is assigned to, probed by an added query
+      away <- Gen.oneOf(false, true)
+    } yield {
+      val corpus = (0 until n).map(i => (i.toLong, pool(picks(i))))
+      // a repeated row: neither a book nor a coarse centroid row
+      val eligible = (1 until n).filter(i => i % cmod != 0 && i % coarseMod != 0)
+      val dup = corpus(eligible(dupPick % eligible.length))
+      val qs = qPicks.zipWithIndex.map {
+        case (Left(i), _) => corpus(i)
+        case (Right(p), j) => (1000L + j, pool(p))
+      }.distinctBy(_._1)
+      (m, dims, corpus :+ dup, qs, cmod, coarseMod, nprobe, excludeSelf, k,
+        spill, away)
+    }
+    val star = List(-7.0, 5.0, -7.0, 5.0)
+    val seen = scala.collection.mutable.Set.empty[String]
+    def quantized(qs: Seq[(Long, Vec)]) =
+      qs.map { case (q, v) => (q, v.map(_ * 1000.0).toArray) }
+    // `ann` with one more coarse centroid (id 999, no rows) in direction `d`
+    def withEmptyList(ann: Similarity.Ann, d: Array[Double]) =
+      ann.copy(coarse = ann.coarse.map { c =>
+        Similarity.cents(c.ids.indices.map(i => (c.ids(i), c.vs(i), c.cn(i))) :+
+          ((999L, d, d.map(x => x * x).sum)))
+      })
+    val prop = Prop.forAllNoShrink(caseGen) {
+      case (m, dims, corpus, qs0, cmod, coarseMod, nprobe, excludeSelf, k,
+          spill, away) =>
+        val vecs = spark.createDataFrame(corpus.map { case (i, v) =>
+          (i, v.map(_.toFloat)) }).toDF("vec_id", "embedding")
+        val dir = java.nio.file.Files.createTempDirectory("adcprop").toString
+        Similarity.ivfPqWriteIndex(vecs.dropDuplicates("vec_id"), s"$dir/index",
+          numFiles = 2, m = m, dims = dims, centroidMod = cmod,
+          coarseMod = coarseMod, spillG = spill)
+        val d = star.take(dims).map(_ * 1000.0).toArray
+        val qs = quantized(qs0) ++ (if (away) Seq((2000L, d.map(_ * 2))) else Nil)
+        def sub(mod: Int) = Similarity.Subset(mod)
+        val built = Seq(
+          "flat" -> Similarity.Ann.built(vecs, m, dims, None, sub(cmod)),
+          "raw" -> Similarity.Ann.built(vecs, m, dims, Some(sub(coarseMod)),
+            sub(cmod)),
+          "residual" -> Similarity.Ann.built(vecs, m, dims,
+            Some(sub(coarseMod)), sub(cmod), residual = true))
+        val opened = "opened" -> Similarity.Ann.opened(spark, s"$dir/index",
+          m, dims, cmod)
+        val anns = (built :+ opened).map { case (name, a) =>
+          name -> (if (away && a.coarse.nonEmpty) withEmptyList(a, d) else a)
+        }
+        anns.forall { case (name, ann) =>
+          val got = Similarity.ranked(ann, qs, nprobe, excludeSelf, k)
+          val want = AdcReference.adcTopK(AdcReference.scored(ann, qs, nprobe,
+            excludeSelf), k).collect()
+            .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
+          val pairs = AdcReference.scan(ann, qs, nprobe, excludeSelf).count()
+          val rows = got.rows
+          seen += name += s"excludeSelf=$excludeSelf"
+          if (ann.spilled) seen += "spilled"
+          if (rows.groupBy(r => (r._1, r._4)).exists(_._2.length > 1)) seen += "tie"
+          if (!ann.spilled && rows.groupBy(r => (r._1, r._2)).exists(_._2.length > 1))
+            seen += "repeat"
+          val perQuery = rows.groupBy(_._1).map { case (q, r) => q -> r.length }
+          if (perQuery.values.exists(_ < k)) seen += "k>n"
+          if (ann.coarse.nonEmpty && qs.exists(q => !perQuery.contains(q._1)))
+            seen += "empty"
+          rows.sorted == want.toSeq.sorted && got.pairs == pairs
+        }
+    }
+    val res = Check.check(Check.Parameters.default
+      .withMinSuccessfulTests(14).withInitialSeed(Seed(10L)), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+    val want = Set("flat", "raw", "residual", "opened", "excludeSelf=true",
+      "excludeSelf=false", "spilled", "tie", "repeat", "k>n", "empty")
+    assert(want.subsetOf(seen), s"generator missed ${want -- seen}")
+  }
+
   test("property: the driver RRF fold equals the relational fusion bit " +
     "for bit") {
     import org.scalacheck.{Gen, Prop, Test => Check}
