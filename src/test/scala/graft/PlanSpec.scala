@@ -342,8 +342,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("persisted IVF+PQ search runs one job per steady-state call: a " +
-    "local-relation result, the caller's queries absent, at most k rows " +
-    "per query shipped by each task") {
+    "local-relation result, the caller's queries absent") {
     import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
     val big = spark.range(60L).select(col("id").as("vec_id"),
       transform(sequence(lit(0), lit(3)),
@@ -376,6 +375,28 @@ class PlanSpec extends SparkSpec {
     val (rows, jobs) = jobsIn(search(local).collect())
     assert(jobs == 1, s"expected 1 job per steady-state call, got $jobs")
     assert(rows.map(_.toSeq).toSet == out.collect().map(_.toSeq).toSet)
+  }
+
+  test("persisted ANN top-k: each task ships at most k rows per query, " +
+    "the driver merges them into a local relation") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val big = spark.range(60L).select(col("id").as("vec_id"),
+      transform(sequence(lit(0), lit(3)),
+        d => (((col("id") * 13 + d * 11) % 29) + (col("id") % 5) + 1)
+          .cast("float"))
+        .as("embedding"))
+    val dir = java.nio.file.Files.createTempDirectory("planspec_topk").toString
+    // 3 files, so the ADC job runs several tasks
+    Similarity.ivfPqWriteIndex(big, s"$dir/index",
+      numFiles = 3, m = 2, dims = 4, centroidMod = 7, coarseMod = 20)
+    val out = Similarity.ivfPqSearchPersisted(spark, s"$dir/index", big,
+      nQueries = 5, k = 3, m = 2, dims = 4, centroidMod = 7, nprobe = 2)
+    assert(out.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+      s"not a local relation:\n${out.queryExecution.optimizedPlan}")
+    val perQuery = out.collect().groupBy(_.getAs[Long]("query_id"))
+    assert(perQuery.nonEmpty && perQuery.values.forall(_.length <= 3),
+      s"more than k rows for a query: ${perQuery.map { case (q, r) =>
+        q -> r.length }}")
     // each task ships at most k rows per query, whatever its rows
     val qs = Similarity.queryRows(Similarity.prefixQueries(big, 5))
     val ann = Similarity.Ann.opened(spark, s"$dir/index", m = 2, dims = 4,
